@@ -204,7 +204,7 @@ object Bench {
     // additionally APPENDED (with a timestamp) to a history sidecar so
     // each driver/builder run leaves a durable trace even within one
     // configuration.
-    val sfName = sfDir.reverse.takeWhile(_ != '/').reverse
+    val sfName = java.nio.file.Paths.get(sfDir).getFileName.toString
     val cfgFile = s"bench_medians_c${cpus}_${sfName}_$suiteTag.json"
     writeFile(cfgFile, resultLine)
     try {

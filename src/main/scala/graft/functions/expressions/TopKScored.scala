@@ -27,13 +27,15 @@ import org.apache.spark.sql.types._
   * aggregate evaluates its children straight off the InternalRow, so
   * the pair stream stays inside codegen until the partial aggregate.
   *
-  * Semantics are IDENTICAL to TopKByScore: keep the k best rows by
-  * (score desc, id asc); ties cannot arise beyond exact (score, id)
-  * duplicates, whose retention is content-identical either way. The
-  * result is a total order, so output is independent of arrival and
-  * merge order — partial aggregation and AQE cannot change it. Null
-  * score/id inputs are skipped (the typed path dropped them in the
-  * encoder); upstream plans never produce them.
+  * Contract: keep the k best rows by (score desc, id asc); ties cannot
+  * arise beyond exact (score, id) duplicates, whose retention is
+  * content-identical either way. The result is a total order, so
+  * output is independent of arrival and merge order — partial
+  * aggregation and AQE cannot change it. Rows with a null score, a
+  * null id or a NaN score are SKIPPED: they never enter the result,
+  * and a group whose every row is skipped yields an empty array. This
+  * is where it departs from TopKByScore, which ranked NaN through
+  * `java.lang.Double.compare` (see `update`).
   */
 case class TopKScored(
     left: Expression, // score

@@ -53,14 +53,15 @@ object Cluster {
     // degrades gracefully instead of evicting execution memory.
     val base = baseOf(emb, idCol, vecCol)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val init: Map[Int, Array[Double]] =
-        base.orderBy("id").limit(k).collect()
-          .map(_.getSeq[Double](1).toArray).zipWithIndex
-          .map { case (v, i) => i -> v }.toMap
-      lloyd(base, init, iters)
-    } finally { base.unpersist(); () }
+    try lloyd(base, firstK(base, k), iters)
+    finally { base.unpersist(); () }
   }
+
+  // init = the k lowest-id vectors, cluster ids 0..k-1 in id order
+  private def firstK(base: DataFrame, k: Int): Map[Int, Array[Double]] =
+    base.orderBy("id").limit(k).collect()
+      .map(_.getSeq[Double](1).toArray).zipWithIndex
+      .map { case (v, i) => i -> v }.toMap
 
   // null vectors carry no signal and would diverge engines at the
   // struct-min argmin (NULL-dist semantics differ) — drop them
@@ -70,11 +71,8 @@ object Cluster {
       .where(col("id").isNotNull && col("v").isNotNull)
 
   private def lloyd(base: DataFrame, init: Map[Int, Array[Double]],
-                    iters: Int): Map[Int, Array[Double]] = {
-    var centroids = init
-    for (_ <- 0 until iters) centroids = lloydUpdate(base, centroids)
-    centroids
-  }
+                    iters: Int): Map[Int, Array[Double]] =
+    FixedPoint.runLocal(init, iters)(lloydUpdate(base, _))._1
 
   /** One Lloyd round: argmin assignment against the literal centroids,
     * then 6-decimal-requantized per-cluster coordinate means. The
@@ -102,22 +100,20 @@ object Cluster {
     * (the documented bounded scalar), so the shift probe is a driver-
     * side array comparison — no extra Spark job, no extra exchange.
     *
-    * Stop rules, chosen so early-stopping is INDISTINGUISHABLE from
-    * running the remaining rounds (what makes `tol = 0.0`
-    * oracle-checkable against a fixed-`maxIters` replay):
+    * Stop rules — the [[FixedPoint]] driver's, which also states why
+    * early-stopping at `tol = 0.0` is INDISTINGUISHABLE from running
+    * the remaining rounds (what makes it oracle-checkable against a
+    * fixed-`maxIters` replay):
     *   - fixed point: the new map equals the old EXACTLY (same
-    *     surviving clusters, identical 6-decimal coordinates) — every
-    *     later round reproduces it, so stopping loses nothing;
+    *     surviving clusters, identical 6-decimal coordinates);
     *   - `tol > 0` (production): stop when every surviving cluster
     *     moved less than tol in L2 and no cluster emptied — the usual
     *     relative-movement stop, NOT cold-equivalent (document the
     *     knob, don't oracle it);
-    *   - period-2 cycle: quantized Lloyd can in principle oscillate
-    *     between two assignments the way the quantized graph
-    *     contractions measurably do; an EXACT revisit of the
-    *     two-rounds-back map is accepted only with an even remaining
-    *     budget, where the final state of a full run is bit-identical
-    *     to the revisited one.
+    *   - period-2 cycle: an EXACT revisit of the two-rounds-back map,
+    *     accepted only with an even remaining budget (quantized Lloyd
+    *     can in principle oscillate the way the quantized graph
+    *     contractions measurably do).
     *
     * `init` = warm start (the [[kmeansAssignWarm]] contract: centroids
     * derive from a prior assignment, which IS the next Lloyd update) —
@@ -135,29 +131,20 @@ object Cluster {
     // (id, v); one cache fills on round 1 and every later round reads it.
     val base = baseOf(emb, idCol, vecCol)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // An exact repeat reads 0; at tol > 0 a shift below tol reads as
+    // tol itself, which passes the driver's d1 <= tol stop but is no
+    // exact period-2 revisit.
+    val moved = (a: Map[Int, Array[Double]], b: Map[Int, Array[Double]]) =>
+      if (sameCentroids(a, b)) 0.0
+      else if (tol > 0.0 && shiftBelow(a, b, tol)) tol
+      else Double.PositiveInfinity
     try {
-      var cur: Map[Int, Array[Double]] = init match {
+      val cents0 = init match {
         case Some(assign) => centroidsOf(emb, idCol, vecCol, assign)
-        case None =>
-          base.orderBy("id").limit(k).collect()
-            .map(_.getSeq[Double](1).toArray).zipWithIndex
-            .map { case (v, i) => i -> v }.toMap
+        case None => firstK(base, k)
       }
-      var prevPrev: Option[Map[Int, Array[Double]]] = None
-      var rounds = 0
-      var stop = false
-      while (rounds < maxIters && !stop) {
-        val next = lloydUpdate(base, cur)
-        rounds += 1
-        val remaining = maxIters - rounds
-        if (sameCentroids(cur, next)) stop = true
-        else if (tol > 0.0 && shiftBelow(cur, next, tol)) stop = true
-        else if (remaining % 2 == 0 && prevPrev.exists(sameCentroids(_, next)))
-          stop = true
-        prevPrev = Some(cur)
-        cur = next
-      }
-      (cur, rounds)
+      FixedPoint.runLocal(cents0, maxIters,
+        Some(FixedPoint.LocalWatch(tol, moved)))(lloydUpdate(base, _))
     } finally { base.unpersist(); () }
   }
 

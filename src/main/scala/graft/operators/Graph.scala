@@ -405,48 +405,39 @@ object Graph {
     * the same plan per round. */
   def pageRank(edges: DataFrame, damping: Double = 0.85, iters: Int = 5,
                quantBits: Int = 30): DataFrame =
-    pageRankLoop(edges, damping, iters, watchTol = None, quantBits)._1
+    pageRankLoop(edges, weighted = false, damping, iters, watchTol = None,
+      quantBits)._1
 
   /** Convergence-watched PageRank — the 100 TB production mode the
     * fixed-round tier's scaladoc promises: iterate until the L1 delta
     * `sum(|rank' - rank|)` falls to `tol` or `maxIters` rounds, whichever
-    * first. The delta is a 1-row aggregate over the two (checkpointed)
-    * consecutive rank tables — one extra cheap job per round, never a
-    * per-node driver loop. Returns (ranks, roundsRun).
+    * first, on the shared [[FixedPoint]] driver — at `tol = 0.0` the
+    * delta rides each round's checkpoint job (no probe job), otherwise
+    * one aggregate scan per round, never a per-node driver loop.
+    * Returns (ranks, roundsRun).
     *
-    * `tol = 0.0` runs to the EXACT fixed point of the quantized update:
-    * on the 2^-quantBits grid a round that changes nothing is truly
-    * stable, so stopping there is indistinguishable from running the
-    * remaining rounds — which is what makes the watched variant
-    * oracle-checkable against a fixed-`maxIters` replay (early-stop at
-    * the fixed point and the full-length run produce the identical
-    * table, converged or not). Fixed-round [[pageRank]] stays the
+    * `tol = 0.0` runs to the EXACT fixed point of the quantized update,
+    * with the driver's period-2 cycle stop on an even remaining budget
+    * (measured on the 1.6k-node supplier-customer graph: delta1 parks
+    * at 3 grid cells from round 31 on while state(r) == state(r-2)
+    * exactly); [[FixedPoint]] states why the result then equals the
+    * fixed-`maxIters` run, converged or not — what makes the watched
+    * variant oracle-checkable. Fixed-round [[pageRank]] stays the
     * oracle tier for graph_pagerank itself.
-    *
-    * PERIOD-2 CYCLES: the quantized contraction can settle into an
-    * adjacent-cell 2-cycle instead of a fixed point (measured on the
-    * 1.6k-node supplier-customer graph: delta1 parks at 3 grid cells
-    * from round 31 on while state(r) == state(r-2) exactly), which
-    * would defeat a pure delta1 watch forever. The loop therefore also
-    * watches the two-rounds-back L1 delta and stops on an exact cycle
-    * — but ONLY when the remaining round budget is EVEN: a period-2
-    * state revisits itself every 2 rounds, so with an even remainder
-    * the returned state is bit-identical to what running out the full
-    * `maxIters` would produce, preserving the fixed-round-replay
-    * oracle equality unconditionally.
     *
     * `init` (incremental mode): seed from a prior (id, rank) table
     * instead of uniform — the production re-run path when edges change
     * incrementally. New nodes get uniform mass, departed nodes drop,
-    * and the seed RENORMALIZES to total mass 1 (one O(1) driver
-    * scalar): the update would self-correct mass on its own, but only
-    * geometrically, and a grown graph's ~1/n seed-mass excess decaying
-    * to tol floors the round count at log(1/(n*tol)) — measured 15
-    * rounds where the perturbation alone needed ~5. The division can
-    * shift grid cells by one, so an unchanged graph confirms in at
-    * most TWO rounds rather than exactly one; a perturbed graph
-    * converges in the rounds the PERTURBATION needs, not the
-    * cold-start count. Caveat, inherent to grid dynamics: the
+    * prior rows with a null id, a null rank or a negative rank are
+    * ignored, and the seed RENORMALIZES to total mass 1 (one O(1)
+    * driver scalar): the update would self-correct mass on its own, but
+    * only geometrically, and a grown graph's ~1/n seed-mass excess
+    * decaying to tol floors the round count at log(1/(n*tol)) —
+    * measured 15 rounds where the perturbation alone needed ~5. The
+    * division can shift grid cells by one, so an unchanged graph
+    * confirms in at most TWO rounds rather than exactly one; a
+    * perturbed graph converges in the rounds the PERTURBATION needs,
+    * not the cold-start count. Caveat, inherent to grid dynamics: the
     * quantized map can admit ADJACENT-CELL fixed points, so a warm run
     * may settle within a few 2^-quantBits cells of the cold result
     * rather than bit-identically on it (the unquantized fixed point is
@@ -457,94 +448,57 @@ object Graph {
                       maxIters: Int = 50, tol: Double = 0.0,
                       quantBits: Int = 30,
                       init: Option[DataFrame] = None): (DataFrame, Int) =
-    pageRankLoop(edges, damping, maxIters, watchTol = Some(tol), quantBits,
-      init)
+    pageRankLoop(edges, weighted = false, damping, maxIters,
+      watchTol = Some(tol), quantBits, init)
 
-
-  private def pageRankLoop(edges: DataFrame, damping: Double, iters: Int,
+  /** The PageRank tiers, plain and weighted. Plain reads (src, dst),
+    * keeps self-loops, spreads `rank / outdeg` and redistributes
+    * dangling mass; weighted reads (src, dst, w), drops self-loops and
+    * weights <= 0 ([[weightedEdges]]), spreads `rank * w / outw` and
+    * refuses dangling nodes. */
+  private def pageRankLoop(edges: DataFrame, weighted: Boolean,
+                           damping: Double, iters: Int,
                            watchTol: Option[Double], quantBits: Int,
                            init: Option[DataFrame] = None): (DataFrame, Int) = {
     // Persist the raw edge list FIRST: deg, nodes, eout and the
     // dangling probe all derive from it, and an upstream edge source
     // can itself be expensive (the kNN graph) — without this cache
     // each derivation would re-run that upstream plan.
-    val e = edges.select(col("src").cast("long").as("src"),
-        col("dst").cast("long").as("dst"))
+    val e = (if (weighted) weightedEdges(edges) else srcDst(edges))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val deg = e.groupBy("src").agg(count(lit(1)).cast("double").as("outdeg"))
-    // loop-invariant: the edge list already joined to its out-degree —
-    // materialized once instead of re-joined every round
-    // NOT pre-partitioned by src (r16 tested-and-reverted): hash-
-    // clustering the cache by the per-round join key removes the
-    // per-round edge exchange from the STATIC plan, but it also removes
-    // the query-stage boundary AQE needs to convert each round's join
-    // into a broadcast hash join of the (much smaller) rank side —
-    // measured +30-45% per watched row at sf0.1 (SMJ sort+merge every
-    // round instead of a broadcast probe of the in-place cache). With
-    // the plain cache AQE picks per round from runtime sizes: broadcast
-    // while ranks fit, sort-merge with the edge exchange when they
-    // don't — the right call at every scale without a hand-rolled
-    // threshold.
-    val eout = e.join(deg, "src")
-      .select(col("src"), col("dst"), col("outdeg"))
+    val (deg, term) =
+      if (weighted) (e.groupBy("src").agg(sum("w").as("outw")),
+        col("rank") * col("w") / col("outw"))
+      else (e.groupBy("src").agg(count(lit(1)).cast("double").as("outdeg")),
+        col("rank") / col("outdeg"))
+    val eout = outEdges(e, deg)
+    val nodes = e.select(col("src").as("id"))
+      .union(e.select(col("dst").as("id"))).distinct()
       .persist(StorageLevel.MEMORY_AND_DISK)
     try {
-      val nodes = e.select(col("src").as("id"))
-        .union(e.select(col("dst").as("id"))).distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
       // Two one-time driver scalars (the nprobe stance): n sizes the
       // teleport term; hasDangling decides ONCE whether the per-round
       // dangling-mass subplan exists at all — a symmetrized similarity
       // graph never has dangling nodes, and dropping the subplan saves
-      // two stages per round. Arithmetic is identical either way: the
-      // no-dangling branch adds the same literal 0.0 the dangling
-      // branch's empty aggregate produces.
+      // two stages per round.
       val n = nodes.count().toDouble
       val hasDangling = nodes
         .join(deg.withColumnRenamed("src", "id"), Seq("id"), "left_anti")
         .limit(1).count() > 0
+      require(!(weighted && hasDangling),
+        "pageRankWeighted expects every node to carry outgoing weight " +
+          "(a symmetrizeWeighted graph); dangling nodes would leak walk " +
+          "mass — use pageRank's dangling redistribution instead")
       val teleport = (1.0 - damping) / n
-      // Warm start (incremental mode): seed from prior ranks instead of
-      // uniform — an unchanged graph confirms within two rounds (one
-      // confirming round, plus one settling round when the
-      // renormalizing division shifts a grid cell); a perturbed graph
-      // converges in the rounds the perturbation needs, not the
-      // cold-start count. The init is LEFT-joined onto the CURRENT
-      // node set (new nodes get the uniform mass, departed nodes drop)
-      // so rank stays a distribution whatever the caller hands in. A
-      // warm start is a different trajectory, so it belongs to the
-      // watched tier only — the fixed-round oracle tier always starts
-      // cold.
-      //
       // State schema (r16): (id, rank, p1, p2) — the previous and
       // two-rounds-back ranks ride INSIDE the checkpointed state, so
-      // the per-round watch probe is one aggregate scan of the frame
-      // the round just materialized instead of a 3-way join of three
-      // checkpoints (guide §2.4: the probe's two id-keyed exchanges
-      // per round are gone; the rank arithmetic is untouched and the
-      // final select drops the watch columns).
+      // the watch terms are per-row columns of the frame each round
+      // materializes (see FixedPoint), and the final select drops them.
       val noPrev = lit(null).cast("double")
-      // tol = 0 fast path (r16, the connectedComponents accumulator
-      // discipline): the ONLY question the probe answers at tol = 0 is
-      // "is the L1 delta (or the two-rounds-back delta) EXACTLY zero?",
-      // and a sum of non-negative |differences| bumped by an
-      // accumulator DURING the checkpoint materialization answers that
-      // with zero extra jobs per round — task retry/speculation can
-      // only over-count a non-zero sum, never fabricate a zero, so the
-      // ==0 decision is re-execution-safe (the same monotone argument
-      // markChg makes). tol > 0 keeps the separate aggregate probe: an
-      // inflated sum could wrongly miss `delta <= tol` and change the
-      // stopping round.
-      val accTol0 = watchTol.contains(0.0)
-      val acc1 = edges.sparkSession.sparkContext.doubleAccumulator("pr_d1")
-      val acc2 = edges.sparkSession.sparkContext.doubleAccumulator("pr_d2")
-      val markDelta = udf { (r: Double, p1: java.lang.Double, p2: java.lang.Double) =>
-        if (p1 != null) acc1.add(math.abs(r - p1))
-        if (p2 != null) acc2.add(math.abs(r - p2))
-        true
-      }.asNondeterministic()
-      var rank = init match {
+      val rank0 = init match {
         case Some(r0) =>
+          // Warm start (scaladoc): LEFT-joined onto the CURRENT node set
+          // so rank stays a distribution whatever the caller hands in.
           val seeded = nodes.join(
             r0.select(col("id").cast("long").as("id"),
               col("rank").cast("double").as("r0"))
@@ -553,15 +507,9 @@ object Graph {
             Seq("id"), "left")
             .select(col("id"), coalesce(col("r0"), lit(1.0 / n)).as("r0"))
           // RENORMALIZE to total mass 1 (one O(1) driver scalar, the
-          // n/hasDangling stance; refuses an all-zero seed loudly).
-          // The update would self-correct mass on its own (teleport
-          // injects (1 - damping) per round), but only geometrically:
-          // an un-renormalized seed over a grown graph carries a ~1/n
-          // mass excess whose decay to tol floors the round count at
-          // log(1/(n*tol)) — measured 15 rounds where the perturbation
-          // alone needed ~5 — defeating the whole point of warm
-          // starting. The division's cell-shift cost is one extra
-          // confirming round when the seed was already the fixed point.
+          // n/hasDangling stance; refuses an all-zero seed loudly) — the
+          // division's cell-shift cost is one extra confirming round
+          // when the seed was already the fixed point.
           val t = seeded.agg(sum(col("r0"))).head().getDouble(0)
           require(t > 0, "pageRank warm start needs positive total mass")
           seeded.select(col("id"),
@@ -572,9 +520,9 @@ object Graph {
           quant(lit(1.0 / n), quantBits).as("rank"),
           noPrev.as("p1"), noPrev.as("p2"))
       }
-      var rounds = 0
-      var converged = false
-      while (rounds < iters && !converged) {
+      val watch = watchTol.map(FixedPoint.Watch(_,
+        abs(col("rank") - col("p1")), abs(col("rank") - col("p2"))))
+      val (rank, rounds) = FixedPoint.run(rank0, iters, watch) { rank =>
         // Union-fused update (r17, guide §2.4 "two operations keyed the
         // same way can share one exchange"): the contribution aggregate
         // and the state join are BOTH id-keyed, so the state rows ride
@@ -585,80 +533,61 @@ object Graph {
         // aggregates cannot change it; the state columns pass through
         // as max() over exactly one non-null value per id (the state
         // has one row per node). Row set: contrib ids ⊆ nodes = state
-        // ids, so the grouped set is exactly the node set — identical
-        // to the old LEFT join from the state.
-        val nullD = lit(null).cast("double")
+        // ids, so the grouped set is exactly the node set.
         val terms = eout
           .join(rank.select(col("id").as("src"), col("rank")), "src")
-          .select(col("dst").as("id"),
-            termQuant(col("rank") / col("outdeg")).as("c"),
-            nullD.as("r0"), nullD.as("q1"))
-        val stateRows = rank.select(col("id"), nullD.as("c"),
+          .select(col("dst").as("id"), termQuant(term).as("c"),
+            noPrev.as("r0"), noPrev.as("q1"))
+        val stateRows = rank.select(col("id"), noPrev.as("c"),
           col("rank").as("r0"), col("p1").as("q1"))
         val agg = terms.union(stateRows).groupBy("id")
           .agg(sum(col("c")).as("contrib"), max(col("r0")).as("pr1"),
             max(col("q1")).as("pr2"))
-        val withDm =
+        val contrib = coalesce(col("contrib"), lit(0.0))
+        val (withDm, mass) =
           if (hasDangling) {
             val dangling = rank.select(col("id"), col("rank"))
               .join(deg.withColumnRenamed("src", "id"), Seq("id"), "left_anti")
               .agg(coalesce(sum("rank"), lit(0.0)).as("dm"))
-            agg.crossJoin(broadcast(dangling))
-          } else {
-            agg.withColumn("dm", lit(0.0))
-          }
-        val updated = withDm
-          .select(col("id"),
-            quant(lit(teleport) + lit(damping) *
-              (coalesce(col("contrib"), lit(0.0)) + col("dm") / lit(n)),
-              quantBits).as("rank"),
-            col("pr1").as("p1"), col("pr2").as("p2"))
-        acc1.reset(); acc2.reset()
-        val next = (if (accTol0)
-            // tol = 0: both watch sums ride the materialization job as
-            // accumulator bumps (scaladoc above) — zero probe jobs
-            updated.withColumn("_chg",
-              markDelta(col("rank"), col("p1"), col("p2")))
-          else updated)
-          // eager, not lazy: each round materializes against the cached
-          // edge table (measured fastest of the four checkpoint
-          // placements — lazy variants either re-optimize a deep plan
-          // or race the finally-block unpersist of their upstream)
-          .ckptSer()
-        // the probe only decides whether to CONTINUE — on the final
-        // round there is nothing left to decide, so skip it
-        // (mirrored in the labelSpread/ppr loops)
-        if (rounds + 1 < iters) watchTol.foreach { t =>
-          val (delta, delta2) =
-            if (accTol0)
-              // acc2 carries signal only once a two-rounds-back state
-              // exists (p2 is null through round 1)
-              (acc1.value.doubleValue,
-                if (rounds >= 1) acc2.value.doubleValue else -1.0)
-            else {
-              // tol > 0: one aggregate scan of the just-checkpointed
-              // frame — no joins, p1/p2 are columns of the state.
-              // sum() skips null p2 rows; read null as "no signal".
-              val r = next
-                .agg(sum(abs(col("rank") - col("p1"))).as("d1"),
-                  sum(abs(col("rank") - col("p2"))).as("d2"))
-                .head()
-              (r.getDouble(0), if (r.isNullAt(1)) -1.0 else r.getDouble(1))
-            }
-          if (delta <= t) converged = true
-          // period-2 cycle watch: exact revisit of the state two
-          // rounds back, stop only on an EVEN remaining budget so the
-          // result equals the full fixed-round run (scaladoc)
-          else if (delta2 == 0.0 && (iters - (rounds + 1)) % 2 == 0)
-            converged = true
-        }
-        rank = next
-        rounds += 1
+            (agg.crossJoin(broadcast(dangling)), contrib + col("dm") / lit(n))
+          } else (agg, contrib)
+        withDm.select(col("id"),
+          quant(lit(teleport) + lit(damping) * mass, quantBits).as("rank"),
+          col("pr1").as("p1"), col("pr2").as("p2"))
       }
-      nodes.unpersist()
       (rank.select(col("id"), col("rank")), rounds)
-    } finally { eout.unpersist(); e.unpersist(); () }
+    } finally { nodes.unpersist(); eout.unpersist(); e.unpersist(); () }
   }
+
+  /** (src, dst) as longs: the edge list every unweighted loop reads. */
+  private def srcDst(edges: DataFrame): DataFrame =
+    edges.select(col("src").cast("long").as("src"),
+      col("dst").cast("long").as("dst"))
+
+  /** (src, dst, w) with self-loops and null, zero or negative weights
+    * dropped — they carry no walk mass and no vote. */
+  private def weightedEdges(edges: DataFrame): DataFrame =
+    edges.select(col("src").cast("long").as("src"),
+        col("dst").cast("long").as("dst"), col("w").cast("double").as("w"))
+      .filter(col("src") =!= col("dst") && col("w").isNotNull && col("w") > 0)
+
+  /** The loop-invariant edge table of the rank loops: each edge joined
+    * to its source's out-degree (or out-weight) row, materialized once
+    * instead of re-joined every round.
+    *
+    * NOT pre-partitioned by src (r16 tested-and-reverted): hash-
+    * clustering the cache by the per-round join key removes the
+    * per-round edge exchange from the STATIC plan, but it also removes
+    * the query-stage boundary AQE needs to convert each round's join
+    * into a broadcast hash join of the (much smaller) rank side —
+    * measured +30-45% per watched row at sf0.1 (SMJ sort+merge every
+    * round instead of a broadcast probe of the in-place cache). With
+    * the plain cache AQE picks per round from runtime sizes: broadcast
+    * while ranks fit, sort-merge with the edge exchange when they
+    * don't — the right call at every scale without a hand-rolled
+    * threshold. */
+  private def outEdges(e: DataFrame, deg: DataFrame): DataFrame =
+    e.join(deg, "src").persist(StorageLevel.MEMORY_AND_DISK)
 
   /** Symmetrize a (id, nb) neighbor table into a distinct directed edge
     * list carrying both directions — the adjacency a cosine kNN graph
@@ -903,16 +832,15 @@ object Graph {
     * use [[pageRank]]'s dangling redistribution for those. */
   def pageRankWeighted(edges: DataFrame, damping: Double = 0.85,
                        iters: Int = 5, quantBits: Int = 30): DataFrame =
-    pageRankWeightedLoop(edges, damping, iters, watchTol = None,
+    pageRankLoop(edges, weighted = true, damping, iters, watchTol = None,
       quantBits)._1
 
   /** Convergence-watched WEIGHTED PageRank — [[pageRankWatched]]'s
-    * contract (L1-delta watch, period-2 cycle watch on an even
-    * remaining budget, warm `init` with mass renormalization) over
+    * contract (the [[FixedPoint]] L1 and period-2 watch, warm `init`
+    * with the same input checks and mass renormalization) over
     * [[pageRankWeighted]]'s rank·w/outw update, closing the family
     * asymmetry where the 100 TB watched mode stopped at the unweighted
-    * tier. `tol = 0.0` runs to the exact fixed point of the quantized
-    * update, so early-stop is indistinguishable from running out
+    * tier. `tol = 0.0` returns exactly the fixed-round run at
     * `maxIters` — the fixed-round-replay oracle equality. The same
     * no-weighted-dangling refusal applies (symmetrized inputs).
     * Returns (ranks, roundsRun). */
@@ -921,126 +849,8 @@ object Graph {
                               quantBits: Int = 30,
                               init: Option[DataFrame] = None)
       : (DataFrame, Int) =
-    pageRankWeightedLoop(edges, damping, maxIters, watchTol = Some(tol),
-      quantBits, init)
-
-  private def pageRankWeightedLoop(edges: DataFrame, damping: Double,
-                                   iters: Int, watchTol: Option[Double],
-                                   quantBits: Int,
-                                   init: Option[DataFrame] = None)
-      : (DataFrame, Int) = {
-    val e = edges.select(col("src").cast("long").as("src"),
-        col("dst").cast("long").as("dst"), col("w").cast("double").as("w"))
-      .filter(col("src") =!= col("dst") && col("w").isNotNull && col("w") > 0)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val outw = e.groupBy("src").agg(sum("w").as("outw"))
-    // not pre-partitioned by src — see pageRankLoop's eout note (r16)
-    val eout = e.join(outw, "src")
-      .select(col("src"), col("dst"), col("w"), col("outw"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      val nodes = e.select(col("src").as("id"))
-        .union(e.select(col("dst").as("id"))).distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      try {
-        val n = nodes.count().toDouble
-        val dangling = nodes
-          .join(outw.withColumnRenamed("src", "id"), Seq("id"), "left_anti")
-          .limit(1).count()
-        require(dangling == 0,
-          "pageRankWeighted expects every node to carry outgoing weight " +
-            "(a symmetrizeWeighted graph); dangling nodes would leak walk " +
-            "mass — use pageRank's dangling redistribution instead")
-        val teleport = (1.0 - damping) / n
-        // watch columns ride inside the state (the r16 pageRankLoop
-        // restructure): (id, rank, p1, p2), probe = accumulator bumps
-        // fused into the materialization job at tol = 0 (re-execution-
-        // safe for ==0 decisions, see pageRankLoop), one aggregate scan
-        // otherwise — no joins either way
-        val noPrev = lit(null).cast("double")
-        val accTol0 = watchTol.contains(0.0)
-        val acc1 = edges.sparkSession.sparkContext.doubleAccumulator("prw_d1")
-        val acc2 = edges.sparkSession.sparkContext.doubleAccumulator("prw_d2")
-        val markDelta = udf { (r: Double, p1: java.lang.Double, p2: java.lang.Double) =>
-          if (p1 != null) acc1.add(math.abs(r - p1))
-          if (p2 != null) acc2.add(math.abs(r - p2))
-          true
-        }.asNondeterministic()
-        var rank = init match {
-          case Some(prior) =>
-            // warm start: prior ranks where known, uniform mass for new
-            // nodes, RENORMALIZED to total mass 1 (the pageRankLoop
-            // rule — without it a grown graph's seed-mass excess decays
-            // only geometrically and floors the round count)
-            val seeded = nodes.join(
-                prior.select(col("id").cast("long").as("id"),
-                  col("rank").cast("double").as("r0")), Seq("id"), "left")
-              .select(col("id"),
-                coalesce(col("r0"), lit(1.0 / n)).as("r0"))
-            val t = seeded.agg(sum(col("r0"))).head().getDouble(0)
-            require(t > 0,
-              "pageRankWeighted warm start needs positive total mass")
-            seeded.select(col("id"),
-                quant(col("r0") / lit(t), quantBits).as("rank"),
-                noPrev.as("p1"), noPrev.as("p2"))
-              .ckptSer()
-          case None => nodes.select(col("id"),
-            quant(lit(1.0 / n), quantBits).as("rank"),
-            noPrev.as("p1"), noPrev.as("p2"))
-        }
-        var rounds = 0
-        var converged = false
-        while (rounds < iters && !converged) {
-          // Union-fused update (r17): state rows ride the contribution
-          // groupBy's exchange instead of a second id-keyed join per
-          // round — see pageRankLoop; terms stay on the 2^-48 grid so
-          // the shared aggregation is exact and order-independent.
-          val nullD = lit(null).cast("double")
-          val terms = eout
-            .join(rank.select(col("id").as("src"), col("rank")), "src")
-            .select(col("dst").as("id"),
-              termQuant(col("rank") * col("w") / col("outw")).as("c"),
-              nullD.as("r0"), nullD.as("q1"))
-          val stateRows = rank.select(col("id"), nullD.as("c"),
-            col("rank").as("r0"), col("p1").as("q1"))
-          val updated = terms.union(stateRows).groupBy("id")
-            .agg(sum(col("c")).as("contrib"), max(col("r0")).as("pr1"),
-              max(col("q1")).as("pr2"))
-            .select(col("id"),
-              quant(lit(teleport) + lit(damping) *
-                coalesce(col("contrib"), lit(0.0)), quantBits).as("rank"),
-              col("pr1").as("p1"), col("pr2").as("p2"))
-          acc1.reset(); acc2.reset()
-          val next = (if (accTol0)
-              updated.withColumn("_chg",
-                markDelta(col("rank"), col("p1"), col("p2")))
-            else updated)
-            .ckptSer() // eager — see [[pageRank]]
-          // one fused L1+cycle probe per round, skipped on the final
-          // round (the pageRankLoop discipline)
-          if (rounds + 1 < iters) watchTol.foreach { t =>
-            val (delta, delta2) =
-              if (accTol0)
-                (acc1.value.doubleValue,
-                  if (rounds >= 1) acc2.value.doubleValue else -1.0)
-              else {
-                val r = next
-                  .agg(sum(abs(col("rank") - col("p1"))).as("d1"),
-                    sum(abs(col("rank") - col("p2"))).as("d2"))
-                  .head()
-                (r.getDouble(0), if (r.isNullAt(1)) -1.0 else r.getDouble(1))
-              }
-            if (delta <= t) converged = true
-            else if (delta2 == 0.0 && (iters - (rounds + 1)) % 2 == 0)
-              converged = true
-          }
-          rank = next
-          rounds += 1
-        }
-        (rank.select(col("id"), col("rank")), rounds)
-      } finally { nodes.unpersist(); () }
-    } finally { eout.unpersist(); e.unpersist(); () }
-  }
+    pageRankLoop(edges, weighted = true, damping, maxIters,
+      watchTol = Some(tol), quantBits, init)
 
   /** [[symmetrize]] with the edge weight carried along: both directions
     * unioned, duplicate (src, dst) rows collapsed to the MAX weight —
@@ -1072,18 +882,16 @@ object Graph {
     * w > 0 — zero/negative/null-weight edges are dropped up front since
     * they carry no vote). */
   def labelPropagationWeighted(edges: DataFrame, iters: Int = 5): DataFrame =
-    lpaWeightedLoop(edges, iters, watched = false)._1
+    lpaLoop(edges, weighted = true, iters, watched = false)._1
 
   /** Convergence-watched WEIGHTED LPA — [[labelPropagationWatched]]'s
     * contract over [[labelPropagationWeighted]]'s vote rule, closing
     * the family asymmetry where the 100 TB watched mode stopped at the
     * unweighted tier. Labels are integers and the 2^-48-floored vote
-    * sums are exact, so the probes are the same exact set+value
-    * comparisons (full outer joins — node-set drift counts as change),
-    * and the stop rules (true fixed point, or an exact period-2
-    * revisit on an even remaining budget) make
-    * `watched(maxIters) == labelPropagationWeighted(maxIters)` at any
-    * knobs — the oracle contract the unweighted twin carries.
+    * sums are exact, so the watch counts changed labels exactly (a node
+    * that loses every vote counts as changed), and the [[FixedPoint]]
+    * stop rules make `watched(maxIters) == labelPropagationWeighted(maxIters)`
+    * at any knobs — the oracle contract the unweighted twin carries.
     *
     * `init` = warm start (the family's incremental mode): round 0
     * labels from a prior (id, label) assignment; new nodes enter as
@@ -1093,93 +901,7 @@ object Graph {
                                       maxIters: Int = 50,
                                       init: Option[DataFrame] = None)
       : (DataFrame, Int) =
-    lpaWeightedLoop(edges, maxIters, watched = true, init)
-
-  private def lpaWeightedLoop(edges: DataFrame, iters: Int,
-                              watched: Boolean,
-                              init: Option[DataFrame] = None)
-      : (DataFrame, Int) = {
-    require(iters >= 1, s"iters must be >= 1, got $iters")
-    val e = edges.select(col("src").cast("long").as("src"),
-        col("dst").cast("long").as("dst"), col("w").cast("double").as("w"))
-      .filter(col("src") =!= col("dst") && col("w").isNotNull && col("w") > 0)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      val nodes = e.select(col("src").as("id")).distinct()
-      val nullL = lit(null).cast("long")
-      val base = init match {
-        case Some(prior) =>
-          // warm start: prior labels where known, own id for new nodes;
-          // departed ids drop via the node-set join (the lpaLoop rule)
-          nodes.join(prior.select(col("id").cast("long").as("id"),
-              col("label").cast("long").as("pl")), Seq("id"), "left")
-            .select(col("id"), coalesce(col("pl"), col("id")).as("label"))
-        case None => nodes.withColumn("label", col("id"))
-      }
-      // watched state carries (label, p1, p2) + exact count tracking —
-      // the lpaLoop r17 probe restructure; see the proof there (the
-      // voted set shrinks monotonically for arbitrary inputs, so drops
-      // are exactly the row-count delta)
-      var labels =
-        if (watched) base.select(col("id"), col("label"),
-          nullL.as("p1"), nullL.as("p2"))
-        else base
-      var cntPrev = if (watched && iters > 1) labels.count() else 0L
-      var cntPrev2 = 0L
-      var rounds = 0
-      var converged = false
-      while (rounds < iters && !converged) {
-        val votes = e
-          .join(labels.select(col("id").as("dst"), col("label").as("nl")),
-            "dst")
-          .groupBy(col("src").as("id"), col("nl"))
-          .agg(sum(termQuant(col("w"))).as("wv"))
-        // watched: state rows ride the same id-keyed exchange as the
-        // struct-min (union fusion, guide §2.4) to carry p1/p2; ids
-        // with no votes aggregate to a null struct-min and are
-        // filtered — the unwatched tier's exact row set
-        val next = (if (watched) {
-            val voteRows = votes.select(col("id"),
-              struct((-col("wv")).as("nw"), col("nl").as("l")).as("p"),
-              nullL.as("l1"), nullL.as("l2"))
-            val stateRows = labels.select(col("id"),
-              lit(null).cast("struct<nw:double,l:bigint>").as("p"),
-              col("label").as("l1"), col("p1").as("l2"))
-            voteRows.union(stateRows).groupBy("id")
-              .agg(min(col("p")).as("p"), max(col("l1")).as("pl1"),
-                max(col("l2")).as("pl2"))
-              .filter(col("p").isNotNull)
-              .select(col("id"), col("p.l").as("label"),
-                col("pl1").as("p1"), col("pl2").as("p2"))
-          } else votes.groupBy("id")
-            .agg(min(struct((-col("wv")).as("nw"), col("nl").as("l"))).as("p"))
-            .select(col("id"), col("p.l").as("label")))
-          .ckptSer() // eager — see [[pageRank]]
-        // probe only decides whether to CONTINUE — skipped on the
-        // final round (the family convention); one aggregate scan of
-        // the carried columns + dropped-row counting (see lpaLoop)
-        if (watched && rounds + 1 < iters) {
-          val r = next.agg(
-            coalesce(sum(when(col("label") <=> col("p1"), 0L)
-              .otherwise(1L)), lit(0L)).as("c1"),
-            coalesce(sum(when(col("label") <=> col("p2"), 0L)
-              .otherwise(1L)), lit(0L)).as("c2"),
-            count(lit(1)).as("n")).head()
-          val cnt = r.getLong(2)
-          val d1 = r.getLong(0) + (cntPrev - cnt)
-          val d2 = if (rounds >= 1) r.getLong(1) + (cntPrev2 - cnt) else -1L
-          if (d1 == 0L) converged = true
-          else if (d2 == 0L && (iters - (rounds + 1)) % 2 == 0)
-            converged = true
-          cntPrev2 = cntPrev
-          cntPrev = cnt
-        }
-        labels = next
-        rounds += 1
-      }
-      (labels.select(col("id"), col("label")), rounds)
-    } finally { e.unpersist(); () }
-  }
+    lpaLoop(edges, weighted = true, maxIters, watched = true, init)
 
   /** Unsupervised community detection by SYNCHRONOUS label propagation
     * (Raghavan et al. 2007) over an undirected (src, dst) edge list:
@@ -1213,7 +935,7 @@ object Graph {
     * appears as src. Returns (id, label), label = a member id of the
     * community. */
   def labelPropagation(edges: DataFrame, iters: Int = 5): DataFrame =
-    lpaLoop(edges, iters, watched = false)._1
+    lpaLoop(edges, weighted = false, iters, watched = false)._1
 
   /** Convergence-watched LPA — the 100 TB community-detection mode.
     *
@@ -1222,23 +944,17 @@ object Graph {
     * single undirected edge — the two endpoints swap labels forever),
     * so a naive fixpoint watch may never fire and the loop would run
     * to its cap on exactly the structures that converged-in-spirit
-    * first. The watched family's PERIOD-2 CYCLE rule closes that gap:
-    * stop on a true fixed point (zero labels changed — every later
-    * round reproduces the state), or on an EXACT revisit of the state
-    * two rounds back when the remaining budget is even (a 2-cycle
-    * revisits itself every 2 rounds, so the returned state is
-    * bit-identical to the full fixed-round run). Both rules make
-    * early-stopping indistinguishable from running the remaining
-    * rounds: watched(maxIters) == labelPropagation(maxIters) at ANY
-    * knobs — the oracle contract.
+    * first. The [[FixedPoint]] driver's period-2 cycle rule closes that
+    * gap: stop on a true fixed point (zero labels changed), or on an
+    * EXACT revisit of the state two rounds back when the remaining
+    * budget is even — watched(maxIters) == labelPropagation(maxIters)
+    * at ANY knobs, the oracle contract (proof in [[FixedPoint]]).
     *
-    * Labels are integers, so the probes are exact set+value
-    * comparisons (no tol, no quantization): one aggregate job per
-    * round over FULL outer joins (a node present on one side only
-    * counts as changed, so a node-set drift on a non-symmetrized
-    * input can never masquerade as convergence), skipped on the final
-    * round like the rest of the family. Returns ((id, label), rounds
-    * run).
+    * Labels are integers, so the watch is an exact changed-label count
+    * (no tol, no quantization) that rides each round's checkpoint job.
+    * A node that loses every vote (possible only on a non-symmetrized
+    * input) counts as changed, so a node-set drift can never
+    * masquerade as convergence. Returns ((id, label), rounds run).
     *
     * `init` = WARM START (the family's incremental mode, cf.
     * [[pageRankWatched]]/[[kmeansAssignWarm]]): round 0 labels come
@@ -1253,16 +969,18 @@ object Graph {
   def labelPropagationWatched(edges: DataFrame,
                               maxIters: Int = 50,
                               init: Option[DataFrame] = None): (DataFrame, Int) =
-    lpaLoop(edges, maxIters, watched = true, init)
+    lpaLoop(edges, weighted = false, maxIters, watched = true, init)
 
-  private def lpaLoop(edges: DataFrame, iters: Int,
+  /** The LPA tiers; `weighted` votes `sum(termQuant(w))` over
+    * [[weightedEdges]] instead of counting neighbors. */
+  private def lpaLoop(edges: DataFrame, weighted: Boolean, iters: Int,
                       watched: Boolean,
                       init: Option[DataFrame] = None): (DataFrame, Int) = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
-    val e = edges.select(col("src").cast("long").as("src"),
-        col("dst").cast("long").as("dst"))
-      .filter(col("src") =!= col("dst"))
+    val e = (if (weighted) weightedEdges(edges)
+      else srcDst(edges).filter(col("src") =!= col("dst")))
       .persist(StorageLevel.MEMORY_AND_DISK)
+    val vote = if (weighted) sum(termQuant(col("w"))) else count(lit(1))
     try {
       val nodes = e.select(col("src").as("id")).distinct()
       val nullL = lit(null).cast("long")
@@ -1276,83 +994,54 @@ object Graph {
         case None => nodes.withColumn("label", col("id"))
       }
       // Watched state carries (label, p1, p2) — the previous and
-      // two-rounds-back labels ride the checkpoint as columns (r17,
-      // the r16 pageRankLoop discipline): the probe becomes ONE
-      // aggregate scan of the frame the round just materialized
-      // instead of two chained full-outer joins per round. The old
-      // probe's "set drift counts as change" semantics survive via
-      // exact row-count tracking: the voted set only SHRINKS
-      // (votes_r ids = {src with a dst in labels_{r-1}} ⊆ labels_{r-1},
-      // by induction from labels_0 = ALL srcs — true for arbitrary
-      // directed inputs, warm starts included), so rows absent from a
-      // prior state cannot exist, and rows dropped FROM it are exactly
-      // the row-count difference, counted below as changed.
-      var labels =
+      // two-rounds-back labels ride the checkpoint as columns (r17), so
+      // the watch is a per-row changed-label term (see FixedPoint). A
+      // node that loses every vote keeps its row with a NULL label
+      // while p1 or p2 still holds its last label, so its drop counts
+      // as a change against both. The voted set only SHRINKS (votes_r
+      // ids = {src with a dst labelled in round r-1} ⊆ the ids labelled
+      // in round r-1, by induction from labels_0 = ALL srcs — true for
+      // arbitrary directed inputs, warm starts included), so no id
+      // ever returns, and a row whose label, p1 and p2 are all NULL is
+      // dropped.
+      val labels0 =
         if (watched) base.select(col("id"), col("label"),
           nullL.as("p1"), nullL.as("p2"))
         else base
-      // exact prior row counts for the probe (one count job up front
-      // replaces two probe joins per round)
-      var cntPrev = if (watched && iters > 1) labels.count() else 0L
-      var cntPrev2 = 0L
-      var rounds = 0
-      var converged = false
-      while (rounds < iters && !converged) {
-        val counts = e
-          .join(labels.select(col("id").as("dst"), col("label").as("nl")),
-            "dst")
+      val changed = (prev: String) =>
+        when(col("label") <=> col(prev), 0.0).otherwise(1.0)
+      val watch =
+        Option.when(watched)(FixedPoint.Watch(0.0, changed("p1"), changed("p2")))
+      val (labels, rounds) = FixedPoint.run(labels0, iters, watch) { labels =>
+        val votes = e
+          .join(labels.where(col("label").isNotNull)
+            .select(col("id").as("dst"), col("label").as("nl")), "dst")
           .groupBy(col("src").as("id"), col("nl"))
-          .agg(count(lit(1)).as("c"))
-        // (max count, then min label) via one struct-min: -c sorts the
-        // count descending, the label ascends on ties — no window, no
-        // second shuffle over the counts. On the watched tier the state
+          .agg(vote.as("v"))
+        // (max vote, then min label) via one struct-min: -v sorts the
+        // vote descending, the label ascends on ties — no window, no
+        // second shuffle over the votes. On the watched tier the state
         // rows ride the same id-keyed exchange (union fusion, guide
-        // §2.4) to carry p1/p2; ids with no votes aggregate to a null
-        // struct-min and are filtered — exactly the voted row set the
-        // unwatched tier produces.
-        val next = (if (watched) {
-            val voteRows = counts.select(col("id"),
-              struct((-col("c")).as("nc"), col("nl").as("l")).as("p"),
-              nullL.as("l1"), nullL.as("l2"))
-            val stateRows = labels.select(col("id"),
-              lit(null).cast("struct<nc:bigint,l:bigint>").as("p"),
-              col("label").as("l1"), col("p1").as("l2"))
-            voteRows.union(stateRows).groupBy("id")
-              .agg(min(col("p")).as("p"), max(col("l1")).as("pl1"),
-                max(col("l2")).as("pl2"))
-              .filter(col("p").isNotNull)
-              .select(col("id"), col("p.l").as("label"),
-                col("pl1").as("p1"), col("pl2").as("p2"))
-          } else counts.groupBy("id")
-            .agg(min(struct((-col("c")).as("nc"), col("nl").as("l"))).as("p"))
-            .select(col("id"), col("p.l").as("label")))
-          .ckptSer() // eager — see [[pageRank]]
-        // the probe only decides whether to CONTINUE — skip its job on
-        // the final round (the family convention)
-        if (watched && rounds + 1 < iters) {
-          // one aggregate scan: changed labels vs the carried p1/p2,
-          // plus the exact row count; dropped rows (set shrink) are
-          // cntPrev − cnt, each counting as changed like the old
-          // full-outer did
-          val r = next.agg(
-            coalesce(sum(when(col("label") <=> col("p1"), 0L)
-              .otherwise(1L)), lit(0L)).as("c1"),
-            coalesce(sum(when(col("label") <=> col("p2"), 0L)
-              .otherwise(1L)), lit(0L)).as("c2"),
-            count(lit(1)).as("n")).head()
-          val cnt = r.getLong(2)
-          val d1 = r.getLong(0) + (cntPrev - cnt)
-          val d2 = if (rounds >= 1) r.getLong(1) + (cntPrev2 - cnt) else -1L
-          if (d1 == 0L) converged = true
-          else if (d2 == 0L && (iters - (rounds + 1)) % 2 == 0)
-            converged = true
-          cntPrev2 = cntPrev
-          cntPrev = cnt
-        }
-        labels = next
-        rounds += 1
+        // §2.4) to carry p1/p2.
+        val best = struct((-col("v")).as("nv"), col("nl").as("l"))
+        if (watched) {
+          val voteRows = votes.select(col("id"), best.as("p"),
+            nullL.as("l1"), nullL.as("l2"))
+          val stateRows = labels.select(col("id"),
+            lit(null).cast(voteRows.schema("p").dataType).as("p"),
+            col("label").as("l1"), col("p1").as("l2"))
+          voteRows.union(stateRows).groupBy("id")
+            .agg(min(col("p")).as("p"), max(col("l1")).as("pl1"),
+              max(col("l2")).as("pl2"))
+            .filter(col("p").isNotNull || col("pl1").isNotNull ||
+              col("pl2").isNotNull)
+            .select(col("id"), col("p.l").as("label"),
+              col("pl1").as("p1"), col("pl2").as("p2"))
+        } else votes.groupBy("id").agg(min(best).as("p"))
+          .select(col("id"), col("p.l").as("label"))
       }
-      (labels.select(col("id"), col("label")), rounds)
+      (labels.where(col("label").isNotNull).select(col("id"), col("label")),
+        rounds)
     } finally { e.unpersist(); () }
   }
 
@@ -1447,23 +1136,24 @@ object Graph {
     *
     * Update: r'(v) = quant(damping * sum_{u->v} r(u)/outdeg(u)
     * + (1 - damping) * [v in seeds]/|S|) — the seed term re-injected
-    * every round via a full-outer join (the [[labelSpread]] pattern),
-    * per-round binary-grid requantization, cached edge+degree, eager
-    * per-round checkpoints. Dangling nodes are rejected up front: in
-    * proper PPR their mass returns to the seeds, a variant nothing
-    * here needs — a symmetrized similarity graph has none, and
-    * silently leaking mass instead would skew every rank. */
+    * every round (the [[labelSpread]] pattern), per-round binary-grid
+    * requantization, cached edge+degree, eager per-round checkpoints.
+    * Dangling nodes are rejected up front: in proper PPR their mass
+    * returns to the seeds, a variant nothing here needs — a
+    * symmetrized similarity graph has none, and silently leaking mass
+    * instead would skew every rank. */
   def personalizedPageRank(edges: DataFrame, seeds: DataFrame,
                            damping: Double = 0.85, iters: Int = 5,
                            quantBits: Int = 30): DataFrame =
     pprLoop(edges, seeds, damping, iters, watchTol = None, quantBits)._1
 
   /** Convergence-watched personalized PageRank (the [[pageRankWatched]]
-    * stance, over PPR's SPARSE rank state): iterate until the
-    * full-outer L1 delta falls to `tol` or `maxIters`; tol = 0 runs to
-    * the exact grid fixed point, with the same parity-preserving
-    * period-2 cycle stop, so the watched result is always identical to
-    * the fixed-`maxIters` run. Returns (ranks, roundsRun).
+    * stance, over PPR's SPARSE rank state): iterate until the L1 delta
+    * — rows absent from the previous state read as rank 0 — falls to
+    * `tol` or `maxIters`; tol = 0 runs to the exact grid fixed point,
+    * with the [[FixedPoint]] period-2 cycle stop, so the watched result
+    * is always identical to the fixed-`maxIters` run. Returns (ranks,
+    * roundsRun).
     *
     * `init` (incremental mode — completes the watched family's
     * daily-increment coverage; reference analog: the incremental
@@ -1474,13 +1164,13 @@ object Graph {
     * CURRENT node set (a departed node's row would re-inject mass no
     * edge can drain) and the kept mass renormalizes to total 1 (the
     * same O(1) driver scalar; refuses an all-zero/disjoint seed
-    * loudly). NEW seeds need no explicit row: the per-round full-outer
-    * seed-term join injects their teleport mass from round one, so a
-    * changed seed set self-corrects — old-seed mass decays
-    * geometrically, new-seed mass builds — in the rounds the CHANGE
-    * needs, not the cold-start count. Warm starts follow a different
-    * trajectory, so they exist only on this watched tier; the
-    * fixed-round oracle tier always starts cold. */
+    * loudly). NEW seeds need no explicit row: the per-round seed term
+    * injects their teleport mass from round one, so a changed seed set
+    * self-corrects — old-seed mass decays geometrically, new-seed mass
+    * builds — in the rounds the CHANGE needs, not the cold-start count.
+    * Warm starts follow a different trajectory, so they exist only on
+    * this watched tier; the fixed-round oracle tier always starts
+    * cold. */
   def personalizedPageRankWatched(edges: DataFrame, seeds: DataFrame,
                                   damping: Double = 0.85,
                                   maxIters: Int = 50, tol: Double = 0.0,
@@ -1494,27 +1184,12 @@ object Graph {
                       watchTol: Option[Double],
                       quantBits: Int,
                       init: Option[DataFrame] = None): (DataFrame, Int) = {
-    val e = edges.select(col("src").cast("long").as("src"),
-        col("dst").cast("long").as("dst"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val e = srcDst(edges).persist(StorageLevel.MEMORY_AND_DISK)
     val sd = seeds.select(col("id").cast("long").as("id")).distinct()
       .where(col("id").isNotNull)
       .persist(StorageLevel.MEMORY_AND_DISK)
     val deg = e.groupBy("src").agg(count(lit(1)).cast("double").as("outdeg"))
-    // NOT pre-partitioned by src (r16 tested-and-reverted): hash-
-    // clustering the cache by the per-round join key removes the
-    // per-round edge exchange from the STATIC plan, but it also removes
-    // the query-stage boundary AQE needs to convert each round's join
-    // into a broadcast hash join of the (much smaller) rank side —
-    // measured +30-45% per watched row at sf0.1 (SMJ sort+merge every
-    // round instead of a broadcast probe of the in-place cache). With
-    // the plain cache AQE picks per round from runtime sizes: broadcast
-    // while ranks fit, sort-merge with the edge exchange when they
-    // don't — the right call at every scale without a hand-rolled
-    // threshold.
-    val eout = e.join(deg, "src")
-      .select(col("src"), col("dst"), col("outdeg"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val eout = outEdges(e, deg)
     try {
       val nodes = e.select(col("src").as("id"))
         .union(e.select(col("dst").as("id"))).distinct()
@@ -1526,32 +1201,21 @@ object Graph {
       require(nSeeds > 0, "personalizedPageRank needs at least one seed")
       val seedTerm = sd.select(col("id"),
         lit((1.0 - damping) / nSeeds).as("seed"))
-      // Watch columns ride inside the sparse state (r16, the
-      // pageRankLoop restructure): (id, rank, p1, p2) with p1/p2
-      // attached by a LEFT join of the previous state onto the new
-      // row set. Sound because the reached set GROWS MONOTONICALLY on
-      // the (required) symmetrized dangling-free graph: state_t =
+      // Watch columns ride inside the sparse state (r16): (id, rank,
+      // p1, p2), carried from the previous state's row of the same id.
+      // Sound because the reached set GROWS MONOTONICALLY on the
+      // (required) symmetrized dangling-free graph: state_t =
       // N(state_{t-1}) ∪ seeds ⊇ state_{t-1} by induction, so no row
-      // ever drops and the left join loses no delta mass — newly
-      // reached rows enter with p1/p2 null, which the probe reads as
-      // prior rank 0 (exactly the old full-outer's semantics).
-      // tol = 0 additionally fuses both L1 sums into the checkpoint
-      // job as accumulator bumps (re-execution-safe for ==0, see
-      // pageRankLoop); tol > 0 keeps a no-join aggregate scan.
-      val accTol0 = watchTol.contains(0.0)
-      val acc1 = edges.sparkSession.sparkContext.doubleAccumulator("ppr_d1")
-      val acc2 = edges.sparkSession.sparkContext.doubleAccumulator("ppr_d2")
-      val markDelta = udf { (r: Double, p1: java.lang.Double, p2: java.lang.Double) =>
-        acc1.add(math.abs(r - (if (p1 == null) 0.0 else p1.doubleValue)))
-        acc2.add(math.abs(r - (if (p2 == null) 0.0 else p2.doubleValue)))
-        true
-      }.asNondeterministic()
-      var rank = init match {
+      // ever drops and the carry loses no delta mass — newly reached
+      // rows enter with p1/p2 null, which the watch reads as prior
+      // rank 0.
+      val nullD = lit(null).cast("double")
+      val rank0 = init match {
         case Some(r0) =>
           // sparse warm start (scaladoc above): keep only prior rows
           // whose node still exists, renormalize the kept mass to 1.
-          // New seeds carry no row — the full-outer seed term below
-          // injects their teleport mass every round regardless.
+          // New seeds carry no row — the seed term below injects their
+          // teleport mass every round regardless.
           val kept = r0.select(col("id").cast("long").as("id"),
               col("rank").cast("double").as("r0"))
             .where(col("id").isNotNull && col("r0").isNotNull &&
@@ -1564,30 +1228,25 @@ object Graph {
               "on the current node set")
           kept.select(col("id"),
               quant(col("r0") / lit(t), quantBits).as("rank"),
-              lit(null).cast("double").as("p1"),
-              lit(null).cast("double").as("p2"))
+              nullD.as("p1"), nullD.as("p2"))
             .ckptSer()
         case None => sd.select(col("id"),
           quant(lit(1.0 / nSeeds), quantBits).as("rank"),
-          lit(null).cast("double").as("p1"),
-          lit(null).cast("double").as("p2"))
+          nullD.as("p1"), nullD.as("p2"))
       }
-      var rounds = 0
-      var converged = false
-      while (rounds < iters && !converged) {
+      val moved = (prev: String) =>
+        abs(col("rank") - coalesce(col(prev), lit(0.0)))
+      val watch = watchTol.map(FixedPoint.Watch(_, moved("p1"), moved("p2")))
+      val (rank, rounds) = FixedPoint.run(rank0, iters, watch) { rank =>
         // Union-fused update (r17, see pageRankLoop): the contribution
-        // aggregate, the seed-term re-injection (formerly a full-outer
-        // join) and — on the watched tier — the watch-column carry
-        // (formerly a left join) are ALL id-keyed, so seed and state
-        // rows ride the contribution groupBy's exchange. Row set is
-        // unchanged: grouped ids = contrib ∪ seed ∪ (watched) state
-        // ids, and the filter below drops state-only ids — which the
-        // monotone-frontier argument (scaladoc above) proves cannot
-        // exist on the required dangling-free graph, so the filter is
-        // an unconditional row-set-equality guarantee, not a behavior
-        // change. Newly reached rows enter with null p1/p2 exactly as
-        // the left-join carry produced.
-        val nullD = lit(null).cast("double")
+        // aggregate, the seed-term re-injection and — on the watched
+        // tier — the watch-column carry are ALL id-keyed, so seed and
+        // state rows ride the contribution groupBy's exchange. Grouped
+        // ids = contrib ∪ seed ∪ (watched) state ids, and the filter
+        // below drops state-only ids — which the monotone-frontier
+        // argument above proves cannot exist on the required
+        // dangling-free graph, so the filter is an unconditional
+        // row-set guarantee, not a behavior change.
         val terms = eout
           .join(rank.select(col("id").as("src"), col("rank")), "src")
           .select(col("dst").as("id"),
@@ -1597,48 +1256,18 @@ object Graph {
           col("seed").as("sd0"), nullD.as("r0"), nullD.as("q1"))
         val newRank = quant(lit(damping) * coalesce(col("contrib"), lit(0.0))
           + coalesce(col("seed"), lit(0.0)), quantBits)
-        val updated =
-          if (watchTol.isDefined) {
-            val stateRows = rank.select(col("id"), nullD.as("c"),
-              nullD.as("sd0"), col("rank").as("r0"), col("p1").as("q1"))
-            terms.union(seedRows).union(stateRows).groupBy("id")
-              .agg(sum(col("c")).as("contrib"), max(col("sd0")).as("seed"),
-                max(col("r0")).as("pc1"), max(col("q1")).as("pc2"))
-              .filter(col("contrib").isNotNull || col("seed").isNotNull)
-              .select(col("id"), newRank.as("rank"),
-                col("pc1").as("p1"), col("pc2").as("p2"))
-          } else terms.union(seedRows).groupBy("id")
-            .agg(sum(col("c")).as("contrib"), max(col("sd0")).as("seed"))
-            .select(col("id"), newRank.as("rank"))
-        acc1.reset(); acc2.reset()
-        val next = (if (accTol0)
-            updated.withColumn("_chg",
-              markDelta(col("rank"), col("p1"), col("p2")))
-          else updated)
-          .ckptSer() // eager — see [[pageRank]]
-        if (rounds + 1 < iters) watchTol.foreach { t =>
-          // sparse-state deltas: absent-prior rows read as 0 (null
-          // p1/p2 -> 0, the old full-outer's semantics); d2 carries
-          // signal only once a two-rounds-back state exists
-          val (delta, delta2) =
-            if (accTol0)
-              (acc1.value.doubleValue,
-                if (rounds >= 1) acc2.value.doubleValue else -1.0)
-            else {
-              val r = next
-                .agg(coalesce(sum(abs(col("rank")
-                  - coalesce(col("p1"), lit(0.0)))), lit(0.0)).as("d1"),
-                  coalesce(sum(abs(col("rank")
-                    - coalesce(col("p2"), lit(0.0)))), lit(0.0)).as("d2"))
-                .head()
-              (r.getDouble(0), if (rounds >= 1) r.getDouble(1) else -1.0)
-            }
-          if (delta <= t) converged = true
-          else if (delta2 == 0.0 && (iters - (rounds + 1)) % 2 == 0)
-            converged = true // period-2 cycle, even remainder
-        }
-        rank = next
-        rounds += 1
+        if (watchTol.isDefined) {
+          val stateRows = rank.select(col("id"), nullD.as("c"),
+            nullD.as("sd0"), col("rank").as("r0"), col("p1").as("q1"))
+          terms.union(seedRows).union(stateRows).groupBy("id")
+            .agg(sum(col("c")).as("contrib"), max(col("sd0")).as("seed"),
+              max(col("r0")).as("pc1"), max(col("q1")).as("pc2"))
+            .filter(col("contrib").isNotNull || col("seed").isNotNull)
+            .select(col("id"), newRank.as("rank"),
+              col("pc1").as("p1"), col("pc2").as("p2"))
+        } else terms.union(seedRows).groupBy("id")
+          .agg(sum(col("c")).as("contrib"), max(col("sd0")).as("seed"))
+          .select(col("id"), newRank.as("rank"))
       }
       (rank.select(col("id"), col("rank")), rounds)
     } finally { eout.unpersist(); sd.unpersist(); e.unpersist(); () }
@@ -1679,12 +1308,13 @@ object Graph {
 
   /** Convergence-watched label spreading (the [[pageRankWatched]]
     * stance): iterate until the L1 delta over the sparse (id, label)
-    * state falls to `tol` or `maxIters`. The delta join is FULL OUTER
-    * with missing scores read as 0 — the state grows as the diffusion
+    * state falls to `tol` or `maxIters`. The delta is FULL OUTER, with
+    * missing scores read as 0 — the state grows as the diffusion
     * reaches new (node, label) cells, and a newly-reached cell IS delta
-    * mass. `tol = 0.0` runs to the exact grid fixed point, making the
-    * watched result identical to a fixed-`maxIters` run whether or not
-    * it converges early. Returns (state, roundsRun).
+    * mass, as is a cell that dies. `tol = 0.0` runs to the exact grid
+    * fixed point, making the watched result identical to a
+    * fixed-`maxIters` run whether or not it converges early (the
+    * [[FixedPoint]] stop rules). Returns (state, roundsRun).
     *
     * `init` (incremental mode, the [[pageRankWatched]] stance): seed
     * the diffusion state from a prior run's (id, label, score) output
@@ -1706,109 +1336,75 @@ object Graph {
                               watchTol: Option[Double],
                               quantBits: Int,
                               init: Option[DataFrame] = None): (DataFrame, Int) = {
-    val e = edges.select(col("src").cast("long").as("src"),
-        col("dst").cast("long").as("dst"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val e = srcDst(edges).persist(StorageLevel.MEMORY_AND_DISK)
     val sd = seeds.select(col("id").cast("long").as("id"),
         col("label").cast("int").as("label"))
       .where(col("id").isNotNull && col("label").isNotNull)
       .persist(StorageLevel.MEMORY_AND_DISK)
     val deg = e.groupBy("src").agg(count(lit(1)).cast("double").as("outdeg"))
-    // NOT pre-partitioned by src (r16 tested-and-reverted): hash-
-    // clustering the cache by the per-round join key removes the
-    // per-round edge exchange from the STATIC plan, but it also removes
-    // the query-stage boundary AQE needs to convert each round's join
-    // into a broadcast hash join of the (much smaller) rank side —
-    // measured +30-45% per watched row at sf0.1 (SMJ sort+merge every
-    // round instead of a broadcast probe of the in-place cache). With
-    // the plain cache AQE picks per round from runtime sizes: broadcast
-    // while ranks fit, sort-merge with the edge exchange when they
-    // don't — the right call at every scale without a hand-rolled
-    // threshold.
-    val eout = e.join(deg, "src")
-      .select(col("src"), col("dst"), col("outdeg"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val eout = outEdges(e, deg)
     try {
       val nullD = lit(null).cast("double")
       val seedTerm = sd.select(col("id"), col("label"),
         lit(1.0 - alpha).as("seed"))
-      var state = init match {
-        case Some(s0) => s0.select(col("id").cast("long").as("id"),
+      // Watched state carries (score, p1, p2) per (id, label) cell, the
+      // previous and two-rounds-back scores (see FixedPoint). With a
+      // warm `init` the reached set is NOT monotone (stale cells can
+      // shed for several rounds), so a cell that dies stays two more
+      // rounds with a NULL score: the full-outer deltas then count its
+      // mass against p1 and p2 as rows of the round's own frame.
+      val carry = if (watchTol.isDefined) Seq(nullD.as("p1"), nullD.as("p2"))
+        else Nil
+      val state0 = init match {
+        case Some(s0) => s0.select(Seq(col("id").cast("long").as("id"),
             col("label").cast("int").as("label"),
-            col("score").cast("double").as("score"))
+            col("score").cast("double").as("score")) ++ carry: _*)
           .where(col("id").isNotNull && col("label").isNotNull &&
             col("score").isNotNull && col("score") >= 0)
           .ckptSer()
         case None =>
-          sd.select(col("id"), col("label"), lit(1.0).as("score"))
+          sd.select(Seq(col("id"), col("label"), lit(1.0).as("score")) ++
+            carry: _*)
       }
-      var prev: DataFrame = null // two-rounds-back state (cycle watch)
-      var rounds = 0
-      var converged = false
-      while (rounds < iters && !converged) {
+      val moved = (prev: String) => abs(coalesce(col("score"), lit(0.0)) -
+        coalesce(col(prev), lit(0.0)))
+      val watch = watchTol.map(FixedPoint.Watch(_, moved("p1"), moved("p2")))
+      val (state, rounds) = FixedPoint.run(state0, iters, watch) { state =>
         // Union-fused update (r17, see pageRankLoop): the contribution
-        // aggregate and the clamped seed re-injection (formerly a
-        // full-outer join) both key on (id, label), so seed rows ride
-        // the contribution groupBy's exchange instead of a separate
-        // join per round. Terms stay on the 2^-48 grid — the shared
-        // sum is exact and order-independent — and the grouped cell
-        // set is contrib ∪ seed, exactly the old full-outer's. The
-        // watch probe keeps its full-outer shape: with a warm `init`
-        // the reached set is NOT monotone (stale cells can shed for
-        // several rounds), and the probe must count each dying cell's
-        // mass — the carry-column shortcut the PageRank loops use
-        // would miss it (their node sets are round-invariant; this
-        // sparse tier's is not under init).
+        // aggregate and the clamped seed re-injection both key on
+        // (id, label), so seed rows — and on the watched tier the state
+        // rows carrying p1/p2 — ride the contribution groupBy's
+        // exchange. Terms stay on the 2^-48 grid — the shared sum is
+        // exact and order-independent — and the live cell set is
+        // contrib ∪ seed.
         val terms = eout
-          .join(state.select(col("id").as("src"), col("label"),
-            col("score")), "src")
+          .join(state.where(col("score").isNotNull).select(
+            col("id").as("src"), col("label"), col("score")), "src")
           .select(col("dst").as("id"), col("label"),
             termQuant(col("score") / col("outdeg")).as("c"),
             nullD.as("sd0"))
         val seedRows = seedTerm.select(col("id"), col("label"),
           nullD.as("c"), col("seed").as("sd0"))
-        val next = terms.union(seedRows)
+        val live = col("contrib").isNotNull || col("seed").isNotNull
+        val score = quant(lit(alpha) * coalesce(col("contrib"), lit(0.0))
+          + coalesce(col("seed"), lit(0.0)), quantBits)
+        if (watchTol.isDefined) {
+          val stateRows = state.select(col("id"), col("label"),
+            col("score").as("r0"), col("p1").as("q1"))
+          terms.union(seedRows).unionByName(stateRows, allowMissingColumns = true)
+            .groupBy("id", "label")
+            .agg(sum(col("c")).as("contrib"), max(col("sd0")).as("seed"),
+              max(col("r0")).as("pc1"), max(col("q1")).as("pc2"))
+            .filter(live || col("pc1").isNotNull || col("pc2").isNotNull)
+            .select(col("id"), col("label"), when(live, score).as("score"),
+              col("pc1").as("p1"), col("pc2").as("p2"))
+        } else terms.union(seedRows)
           .groupBy("id", "label")
           .agg(sum(col("c")).as("contrib"), max(col("sd0")).as("seed"))
-          .select(col("id"), col("label"),
-            quant(lit(alpha) * coalesce(col("contrib"), lit(0.0))
-              + coalesce(col("seed"), lit(0.0)), quantBits).as("score"))
-          .ckptSer() // eager — see [[pageRank]]
-        if (rounds + 1 < iters) watchTol.foreach { t =>
-          // sparse state: full-outer deltas, absent cells read as 0 —
-          // both watch probes (vs last round, vs two back) in one
-          // chained-full-outer aggregate job per round
-          val (delta, delta2) =
-            if (prev != null) {
-              val r = next.select(col("id"), col("label"), col("score"))
-                .join(state.select(col("id"), col("label"),
-                  col("score").as("p1")), Seq("id", "label"), "full_outer")
-                .join(prev.select(col("id"), col("label"),
-                  col("score").as("p2")), Seq("id", "label"), "full_outer")
-                .agg(coalesce(sum(abs(coalesce(col("score"), lit(0.0))
-                  - coalesce(col("p1"), lit(0.0)))), lit(0.0)).as("d1"),
-                  coalesce(sum(abs(coalesce(col("score"), lit(0.0))
-                    - coalesce(col("p2"), lit(0.0)))), lit(0.0)).as("d2"))
-                .head()
-              (r.getDouble(0), r.getDouble(1))
-            } else {
-              val r = next.select(col("id"), col("label"), col("score"))
-                .join(state.select(col("id"), col("label"),
-                  col("score").as("p1")), Seq("id", "label"), "full_outer")
-                .agg(coalesce(sum(abs(coalesce(col("score"), lit(0.0))
-                  - coalesce(col("p1"), lit(0.0)))), lit(0.0)).as("d1"))
-                .head()
-              (r.getDouble(0), -1.0)
-            }
-          if (delta <= t) converged = true
-          else if (delta2 == 0.0 && (iters - (rounds + 1)) % 2 == 0)
-            converged = true // period-2 cycle, even remainder — see pageRankWatched
-        }
-        prev = state
-        state = next
-        rounds += 1
+          .select(col("id"), col("label"), score.as("score"))
       }
-      (state, rounds)
+      (state.where(col("score").isNotNull)
+        .select(col("id"), col("label"), col("score")), rounds)
     } finally { eout.unpersist(); sd.unpersist(); e.unpersist(); () }
   }
 }

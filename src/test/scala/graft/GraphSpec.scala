@@ -569,6 +569,14 @@ class GraphSpec extends SparkSpec {
     val cm = cold.as[(Long, Int, Double)].collect()
       .map(r => (r._1, r._2) -> r._3).toMap
     assert(wm == cm)
+    // a prior cell whose node left the graph dies in round 1; its mass
+    // is delta, so the watch confirms one round later
+    val stale = cold.union(Seq((999L, 0, 0.5)).toDF("id", "label", "score"))
+    val (warm2, warm2Rounds) = Graph.labelSpreadWatched(g, seeds,
+      alpha = 0.5, maxIters = 60, tol = 0.0, init = Some(stale))
+    assert(warm2Rounds == 2, s"stale-cell re-spread took $warm2Rounds rounds")
+    assert(warm2.as[(Long, Int, Double)].collect()
+      .map(r => (r._1, r._2) -> r._3).toMap == cm)
   }
 
   test("knnGraphLsh plan: no vector column crosses the bucket or dedup exchanges") {
@@ -910,6 +918,36 @@ class GraphSpec extends SparkSpec {
       assert(math.abs(r - watched(id)) <= 4 * cell,
         s"node $id drifted: $r vs ${watched(id)}")
     }
+  }
+
+  test("pageRankWeightedWatched warm start ignores negative prior ranks") {
+    // the plain tier's input checks: a negative prior row is dropped
+    // and its node seeded like a node missing from the prior
+    val sym = Graph.symmetrizeWeighted(Seq((1L, 2L, 0.5), (2L, 3L, 1.0),
+      (1L, 3L, 0.25), (3L, 4L, 2.0)).toDF("id_a", "id_b", "w"),
+      "id_a", "id_b", "w")
+    val prior = Seq((1L, 0.3), (2L, 0.3), (3L, 0.2)).toDF("id", "rank")
+    def warm(init: org.apache.spark.sql.DataFrame) = {
+      val (df, rounds) = Graph.pageRankWeightedWatched(sym, damping = 0.5,
+        maxIters = 2, init = Some(init))
+      (df.as[(Long, Double)].collect().toMap, rounds)
+    }
+    assert(warm(prior.union(Seq((4L, -0.5)).toDF("id", "rank"))) == warm(prior))
+  }
+
+  test("labelPropagationWatched: a node losing every vote counts as a change") {
+    // a settling clique plus a directed chain 10 -> 11 -> 12 -> 13 whose
+    // end is never a src: 12, 11 and 10 lose every vote in rounds 1-3
+    // while the clique is already stable from round 2, so the watch
+    // must read round 3's drop as a change and stop after round 4
+    val edges = (Seq((1L, 2L), (2L, 1L), (1L, 3L), (3L, 1L), (2L, 3L),
+      (3L, 2L)) ++ Seq((10L, 11L), (11L, 12L), (12L, 13L))).toDF("src", "dst")
+    val (watched, rounds) = Graph.labelPropagationWatched(edges, maxIters = 12)
+    assert(rounds == 4)
+    val fixed = Graph.labelPropagation(edges, iters = 12)
+      .as[(Long, Long)].collect().toMap
+    assert(watched.as[(Long, Long)].collect().toMap == fixed)
+    assert(fixed == Map(1L -> 1L, 2L -> 1L, 3L -> 1L))
   }
 
   test("pageRank hubs rank above peripheral nodes on a star") {

@@ -1,0 +1,123 @@
+package graft.operators
+
+import java.util.UUID
+import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger}
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.functions._
+
+import graft.SparkSpec
+
+/** The shared round driver alone, over synthetic steps: one row per id
+  * carrying value `v` and its previous (`p1`) and two-rounds-back
+  * (`p2`) values, watched by the L1 terms |v - p1| and |v - p2|. */
+class FixedPointSpec extends SparkSpec {
+  import spark.implicits._
+
+  private def state(vs: Double*): DataFrame =
+    vs.zipWithIndex.map { case (v, i) => (i.toLong, v) }.toDF("id", "v")
+      .select(col("id"), col("v"), lit(null).cast("double").as("p1"),
+        lit(null).cast("double").as("p2"))
+
+  private def step(f: Column => Column): DataFrame => DataFrame =
+    s => s.select(col("id"), f(col("v")).as("v"), col("v").as("p1"),
+      col("p1").as("p2"))
+
+  private def watch(tol: Double) = Some(FixedPoint.Watch(tol,
+    abs(col("v") - col("p1")), abs(col("v") - col("p2"))))
+
+  private def values(df: DataFrame): Seq[Double] =
+    df.orderBy("id").select("v").as[Double].collect().toSeq
+
+  private def loop(init: DataFrame, maxIters: Int, tol: Option[Double])
+                  (f: Column => Column): (DataFrame, Int) =
+    FixedPoint.run(init, maxIters, tol.flatMap(watch))(step(f))
+
+  private def run(init: DataFrame, maxIters: Int, tol: Option[Double])
+                 (f: Column => Column): (Seq[Double], Int) = {
+    val (df, rounds) = loop(init, maxIters, tol)(f)
+    (values(df), rounds)
+  }
+
+  private def local(maxIters: Int)(f: Double => Double): (Double, Int) =
+    FixedPoint.runLocal(0.0, maxIters, Some(FixedPoint.LocalWatch[Double](0.0,
+      (a, b) => math.abs(a - b))))(f)
+
+  /** Spark jobs `body` starts, counted by a listener; a tagged marker
+    * job drains the listener bus before the count is read. */
+  private def jobsOf[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val (group, marker) = (UUID.randomUUID().toString, UUID.randomUUID().toString)
+    val jobs = new AtomicInteger
+    val drained = new AtomicBoolean
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`group`) => jobs.incrementAndGet()
+          case Some(`marker`) => drained.set(true)
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "fixed-point spec")
+      val out = try body finally sc.clearJobGroup()
+      sc.setJobGroup(marker, "listener drain")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30000000000L
+      while (!drained.get && System.nanoTime() < deadline) Thread.sleep(5)
+      assert(drained.get, "listener bus did not drain")
+      (out, jobs.get)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("stops at a fixed point with the fixed-round result") {
+    val settle = (v: Column) => least(v + 1, lit(3.0))
+    // 0 -> 1 -> 2 -> 3 -> 3: the fourth round moves nothing
+    assert(run(state(0.0, 2.0), 10, Some(0.0))(settle) == ((Seq(3.0, 3.0), 4)))
+    assert(run(state(0.0, 2.0), 10, None)(settle) == ((Seq(3.0, 3.0), 10)))
+    assert(local(10)(v => math.min(v + 1, 3.0)) == ((3.0, 4)))
+  }
+
+  test("a period-2 cycle stops only on an even remaining budget") {
+    // 0 -> 1 -> 0 -> ...: d1 is never 0, d2 is 0 from the second round
+    val flip = (v: Column) => lit(1.0) - v
+    for ((cap, stop) <- Seq(10 -> 2, 9 -> 3)) {
+      val (fixed, _) = run(state(0.0), cap, None)(flip)
+      assert(run(state(0.0), cap, Some(0.0))(flip) == ((fixed, stop)), s"cap $cap")
+      assert(local(cap)(1.0 - _) == ((fixed.head, stop)), s"cap $cap")
+    }
+  }
+
+  test("tol > 0 stops in the aggregate-probe arm") {
+    // two rows halving from 1.0: d1 after round r is 2^-r, first <= 0.1 at r = 4
+    val halve = (v: Column) => v / 2
+    val ((df, rounds), jobs) = jobsOf(loop(state(1.0, 1.0), 50, Some(0.1))(halve))
+    assert(rounds == 5 && values(df) == Seq(0.03125, 0.03125))
+    // at tol = 0 the same loop never reaches an exact fixed point
+    assert(run(state(1.0, 1.0), 8, Some(0.0))(halve)._2 == 8)
+    // every round paid a probe job on top of its checkpoint job
+    val (_, fixedJobs) = jobsOf(loop(state(1.0, 1.0), 5, None)(halve))
+    assert(jobs >= fixedJobs + rounds, s"$jobs jobs vs $fixedJobs unwatched")
+  }
+
+  test("no probe on the final round") {
+    var probes = 0
+    val (v, rounds) = FixedPoint.runLocal(0.0, 3, Some(FixedPoint.LocalWatch[Double](
+      0.0, (a, b) => { probes += 1; math.abs(a - b) })))(_ + 1)
+    // round 0 reads d1, round 1 reads d1 and d2, round 2 is the last
+    assert((v, rounds, probes) == ((3.0, 3, 3)))
+    val grow = (v: Column) => v + 1
+    val (_, watchedJobs) = jobsOf(loop(state(0.0), 1, Some(0.5))(grow))
+    val (_, fixedJobs) = jobsOf(loop(state(0.0), 1, None)(grow))
+    assert(watchedJobs == fixedJobs)
+  }
+
+  test("tol = 0: exactly one Spark job per round") {
+    val ((df, rounds), jobs) =
+      jobsOf(loop(state(0.0, 5.0), 6, Some(0.0))(v => v + 1))
+    assert(values(df) == Seq(6.0, 11.0) && rounds == 6)
+    assert(jobs == rounds, s"$jobs jobs for $rounds rounds")
+  }
+}
