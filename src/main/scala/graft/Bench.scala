@@ -40,6 +40,23 @@ import org.apache.spark.sql.SparkSession
   * how a long-lived session would behave.
   */
 object Bench {
+  /** The per-configuration record's file name, keyed by (cpus, sf,
+    * suite). A subset run's suite part also carries the first 8 hex
+    * digits of the md5 of its sorted, comma-joined query names, so
+    * records of different subsets never overwrite each other. */
+  private[graft] def recordFile(cpus: String, sfDir: String, suiteTag: String,
+                                names: Seq[String]): String = {
+    val sfName = java.nio.file.Paths.get(sfDir).getFileName.toString
+    val suite =
+      if (suiteTag != "subset") suiteTag
+      else {
+        val md5 = java.security.MessageDigest.getInstance("MD5")
+          .digest(names.sorted.mkString(",").getBytes(java.nio.charset.StandardCharsets.UTF_8))
+        "subset_" + md5.take(4).map(b => f"${b & 0xff}%02x").mkString
+      }
+    s"bench_medians_c${cpus}_${sfName}_$suite.json"
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -204,8 +221,7 @@ object Bench {
     // additionally APPENDED (with a timestamp) to a history sidecar so
     // each driver/builder run leaves a durable trace even within one
     // configuration.
-    val sfName = java.nio.file.Paths.get(sfDir).getFileName.toString
-    val cfgFile = s"bench_medians_c${cpus}_${sfName}_$suiteTag.json"
+    val cfgFile = recordFile(cpus, sfDir, suiteTag, names)
     writeFile(cfgFile, resultLine)
     try {
       java.nio.file.Files.write(

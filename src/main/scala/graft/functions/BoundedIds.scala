@@ -14,7 +14,7 @@ final case class IdsAcc(ids: Seq[Long], n: Long)
   * aggregation.
   *
   * Why this exists next to `collect_list`: the df-capped inverted-index
-  * operators (jaccardPairs, winnowPairs) only ever consume posting
+  * pair counter (Dedup.pairCounts) only ever consumes posting
   * lists of groups with `n <= max` — but a plain
   * `collect_list` + `filter(count <= max)` plan materializes and
   * shuffles the FULL list of every hot key first, which on a boilerplate

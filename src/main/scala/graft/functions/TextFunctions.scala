@@ -34,12 +34,14 @@ object TextFunctions {
   def tokenizeString(s: String): Seq[String] =
     "[a-z0-9]+".r.findAllIn(s.toLowerCase).filter(_.length > 1).toSeq
 
-  /** Word n-gram shingles over the token array (space-joined), used by
-    * n-gram Jaccard / MinHash dedup. Empty when the doc has < n tokens —
-    * guarded because Spark's `sequence(1, x)` with x <= 0 would count
-    * *down*, not return an empty array. */
-  def shingles(text: Column, n: Int): Column = {
-    val toks = tokens(text)
+  /** Word k-grams of a token array, space-joined, in position order
+    * (duplicates kept). Empty when there are < n tokens — guarded
+    * because Spark's `sequence(1, x)` with x <= 0 would count *down*,
+    * not return an empty array. `toks` is referenced once per gram
+    * word, so pass a column reference (a materialized token array), not
+    * a `tokens(...)` expression, on hot paths: an inlined tokenizer
+    * re-runs its regex split per `element_at` (measured 4-5x slower). */
+  def kgrams(toks: Column, n: Int): Column = {
     val count = size(toks) - (n - 1)
     when(count >= 1,
       transform(sequence(lit(1), greatest(count, lit(1))),
@@ -47,8 +49,8 @@ object TextFunctions {
     ).otherwise(array().cast("array<string>"))
   }
 
-  /** Distinct shingles (set semantics, as Jaccard requires). */
-  def shingleSet(text: Column, n: Int): Column = array_distinct(shingles(text, n))
+  /** Word n-gram shingles of a text (see [[kgrams]]). */
+  def shingles(text: Column, n: Int): Column = kgrams(tokens(text), n)
 
   /** Whitespace-word count (the cheap "token count" a pipeline reports). */
   def wordCount(text: Column): Column =

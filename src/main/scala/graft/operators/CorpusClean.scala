@@ -185,17 +185,9 @@ object CorpusClean {
     * [[Dedup.shingleTable]], which dedups — repetition rules need the
     * multiset). Token array materialized behind a projection boundary. */
   private def gramOccurrences(docs: DataFrame, idCol: String,
-      textCol: String, n: Int): DataFrame = {
-    val toksDf = docs.select(col(idCol).as("doc_id"),
-      tokens(col(textCol)).as("toks"))
-    val cnt = size(col("toks")) - (n - 1)
-    val g = when(cnt >= 1,
-      transform(sequence(lit(1), greatest(cnt, lit(1))),
-        i => concat_ws(" ", (0 until n).map(o =>
-          element_at(col("toks"), i + o)): _*))
-    ).otherwise(array().cast("array<string>"))
-    toksDf.select(col("doc_id"), explode(g).as("g"))
-  }
+      textCol: String, n: Int): DataFrame =
+    docs.select(col(idCol).as("doc_id"), tokens(col(textCol)).as("toks"))
+      .select(col("doc_id"), explode(kgrams(col("toks"), n)).as("g"))
 
   /** Gopher repetition rules (Rae et al. 2021 appendix A1.1, the
     * within-document repetition subset — [[gopherFlags]] covers the

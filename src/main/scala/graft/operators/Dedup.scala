@@ -76,15 +76,9 @@ object Dedup {
     * transform would re-evaluate the regex split once per `element_at`
     * reference (measured 4-5x slower at sf0.1). CollapseProject keeps the
     * boundary because the alias is non-cheap and multiply-referenced. */
-  def shingleTable(docs: DataFrame, idCol: String, textCol: String, n: Int): DataFrame = {
-    val toksDf = docs.select(col(idCol).as("id"), tokens(col(textCol)).as("toks"))
-    val count = size(col("toks")) - (n - 1)
-    val sh = when(count >= 1,
-      transform(sequence(lit(1), greatest(count, lit(1))),
-        i => concat_ws(" ", (0 until n).map(o => element_at(col("toks"), i + o)): _*))
-    ).otherwise(array().cast("array<string>"))
-    toksDf.select(col("id"), explode(array_distinct(sh)).as("sh"))
-  }
+  def shingleTable(docs: DataFrame, idCol: String, textCol: String, n: Int): DataFrame =
+    docs.select(col(idCol).as("id"), tokens(col(textCol)).as("toks"))
+      .select(col("id"), explode(array_distinct(kgrams(col("toks"), n))).as("sh"))
 
   /** Shingle-set sizes per doc. */
   private def shingleSizes(sh: DataFrame): DataFrame =
@@ -100,88 +94,98 @@ object Dedup {
       .groupBy("id_a", "id_b")
       .agg(count(lit(1)).as("inter"))
 
-  /** Attach |A|,|B| set sizes and compute thresholded Jaccard. */
-  private def verifyJaccard(inter: DataFrame, sh: DataFrame, minJ: Double): DataFrame = {
-    val sz = shingleSizes(sh)
+  /** Attach |A|,|B| set sizes to (id_a, id_b, ...) pairs. */
+  private def withSizes(inter: DataFrame, sz: DataFrame): DataFrame =
     inter
       .join(sz.select(col("id").as("id_a"), col("sz").as("sz_a")), "id_a")
       .join(sz.select(col("id").as("id_b"), col("sz").as("sz_b")), "id_b")
+
+  /** Thresholded Jaccard from intersection counts and set sizes. */
+  private def verifyJaccard(inter: DataFrame, sz: DataFrame, minJ: Double): DataFrame =
+    withSizes(inter, sz)
       .select(col("id_a"), col("id_b"),
         round(col("inter") / (col("sz_a") + col("sz_b") - col("inter")), 6).as("jaccard"))
       .filter(col("jaccard") >= minJ)
+
+  /** The inverted-index pair counter behind [[jaccardPairs]],
+    * [[containmentPairs]] and [[winnowPairs]]. Input: a DISTINCT
+    * `(id, <key>)` table. Output: `(id_a, id_b, <cnt>)` for every
+    * id_a < id_b sharing a retained key, and the per-id retained set
+    * sizes `(id, sz)` (lazy — a caller that ignores them pays nothing).
+    * `cap > 0` drops keys held by more than `cap` ids from BOTH outputs
+    * (boilerplate shingles, the quadratic hot-key corner), so a score
+    * built from the two is the consistent one over the retained set
+    * (capped intersections over full-set sizes would underestimate).
+    *
+    * The tier follows the inputs; each holds its intermediates under
+    * `"<op>.<tier>"` registry keys, so every operator keeps its own
+    * slots:
+    *  - `cap <= 0`, "selfjoin": the table cached once (it feeds both
+    *    join sides and the sizes agg), then the key self-join.
+    *  - `cap > 0` with an integral id, "postings": ONE corpus-scale
+    *    exchange — the key groupBy through [[graft.functions.BoundedIds]]
+    *    (partial buffers bounded at cap+1 ids, so boilerplate keys never
+    *    materialize posting lists) — then pairs expand map-side from the
+    *    cached postings (O(cap^2) rows per key) and sizes come from the
+    *    same lists. The earlier df-count agg + keep-set join + two
+    *    self-join sides paid five key-scale passes for this answer (the
+    *    r13 sf1p sweep: 9.2× on 10× data vs the postings' 3.9×).
+    *  - `cap > 0` with any other id type, "dffilter": keys over the cap
+    *    leave through a df-count left-anti join, then the self-join.
+    *
+    * Id contract, for every caller: any id column type works at any
+    * cap, with the same pairs. BoundedIds binds a Long encoder, so only
+    * Long/Int/Short/Byte ids take the posting tier (and come out as
+    * Long); string ids (the CLI's corpora) take the df-filter tier. */
+  private def pairCounts(t: DataFrame, key: String, cnt: String, cap: Long,
+                         op: String): (DataFrame, DataFrame) = {
+    import org.apache.spark.sql.types._
+    require(cap <= Int.MaxValue,
+      s"$op: the df cap must fit in Int (posting lists are cap-bounded in memory): $cap")
+    val integralId = t.schema("id").dataType match {
+      case LongType | IntegerType | ShortType | ByteType => true
+      case _ => false
+    }
+    def selfJoin(kept: DataFrame): (DataFrame, DataFrame) =
+      (kept.select(col(key), col("id").as("id_a"))
+        .join(kept.select(col(key), col("id").as("id_b")), key)
+        .filter(col("id_a") < col("id_b"))
+        .groupBy("id_a", "id_b").agg(count(lit(1)).as(cnt)),
+        shingleSizes(kept))
+    if (cap <= 0) selfJoin(holdCached(s"$op.selfjoin", t))
+    else if (integralId) {
+      val boundedIds = udaf(new graft.functions.BoundedIds(cap.toInt),
+        org.apache.spark.sql.Encoders.scalaLong)
+      val posting = holdCached(s"$op.postings",
+        t.groupBy(key).agg(boundedIds(col("id")).as("acc"))
+          .filter(col("acc.n") <= cap)
+          .select(col("acc.ids").as("ids")))
+      (posting
+        .select(explode(col("ids")).as("id_a"), col("ids"))
+        .select(col("id_a"), explode(col("ids")).as("id_b"))
+        .filter(col("id_a") < col("id_b"))
+        .groupBy("id_a", "id_b").agg(count(lit(1)).as(cnt)),
+        posting.select(explode(col("ids")).as("id"))
+          .groupBy("id").agg(count(lit(1)).as("sz")))
+    } else {
+      val all = holdCached(s"$op.selfjoin", t)
+      selfJoin(holdCached(s"$op.dffilter",
+        all.join(all.groupBy(key).agg(count(lit(1)).as("shdf"))
+            .filter(col("shdf") > cap).select(key),
+          Seq(key), "left_anti")))
+    }
   }
 
-  /** All (id_a < id_b) pairs and intersection counts from a cached
-    * posting-list table (`ids` per key, every list complete and
-    * cap-bounded): pair expansion is a map-side double explode —
-    * O(cap^2) rows per key — so the only corpus-scale exchanges are the
-    * single groupBy that built the postings and the pair aggregation. */
-  private def postingPairCounts(posting: DataFrame, cntCol: String): DataFrame =
-    posting
-      .select(explode(col("ids")).as("id_a"), col("ids"))
-      .select(col("id_a"), explode(col("ids")).as("id_b"))
-      .filter(col("id_a") < col("id_b"))
-      .groupBy("id_a", "id_b")
-      .agg(count(lit(1)).as(cntCol))
-
-  /** Pairs with n-gram Jaccard >= minJ, via inverted-index self-join.
-    * `maxShingleDf` drops shingles shared by more than that many docs
-    * (0 = keep all); when active, intersections *and* set sizes both
-    * come from the capped set, so the reported value is the consistent
-    * Jaccard over retained shingles (mixing capped intersections with
-    * full-set sizes would systematically underestimate).
-    *
-    * Plan shape with the cap on: ONE corpus-scale exchange — the
-    * shingle groupBy through [[graft.functions.BoundedIds]] (partial
-    * buffers bounded at cap+1 ids, so boilerplate shingles never
-    * materialize posting lists) — then pair expansion map-side from the
-    * cached postings and two report-scale aggregations. The previous
-    * formulation (df-count agg + keep-set join + two self-join sides +
-    * sizes agg over the capped table) paid five shingle-scale passes
-    * for the same answer.
-    *
-    * Capped-tier id contract: the [[graft.functions.BoundedIds]]
-    * aggregator binds `idCol` to a LONG encoder, so `maxShingleDf > 0`
-    * requires a numeric id column (non-numeric ids fail analysis; use
-    * the uncapped tier or dense-rank string ids to Long first). */
+  /** Pairs with n-gram Jaccard >= minJ, from the [[pairCounts]]
+    * inverted index over [[shingleTable]]. `maxShingleDf` drops
+    * shingles shared by more than that many docs (0 = keep all) from
+    * intersections AND sizes, so the reported value is the consistent
+    * Jaccard over retained shingles. Ids: see [[pairCounts]]. */
   def jaccardPairs(docs: DataFrame, idCol: String, textCol: String,
                    n: Int, minJ: Double, maxShingleDf: Long = 0L): DataFrame = {
-    require(maxShingleDf <= Int.MaxValue,
-      s"maxShingleDf must fit in Int (posting lists are cap-bounded in memory): $maxShingleDf")
-    if (maxShingleDf <= 0) {
-      // Uncapped (oracle/small-corpus tier): classic self-join, shingle
-      // table materialized once via the deferred-release registry (it
-      // feeds both join sides plus the sizes agg; a bare persist with
-      // no matching unpersist would outlive the query and accumulate
-      // blocks across a long-lived session).
-      val sh = holdCached("jaccardPairs.shingles",
-        shingleTable(docs, idCol, textCol, n))
-      val a = sh.select(col("sh"), col("id").as("id_a"))
-      val b = sh.select(col("sh"), col("id").as("id_b"))
-      val inter = a.join(b, "sh")
-        .filter(col("id_a") < col("id_b"))
-        .groupBy("id_a", "id_b")
-        .agg(count(lit(1)).as("inter"))
-      verifyJaccard(inter, sh, minJ)
-    } else {
-      val boundedIds = org.apache.spark.sql.functions.udaf(
-        new graft.functions.BoundedIds(maxShingleDf.toInt),
-        org.apache.spark.sql.Encoders.scalaLong)
-      val posting = holdCached("jaccardPairs.postings",
-        shingleTable(docs, idCol, textCol, n)
-          .groupBy("sh").agg(boundedIds(col("id")).as("acc"))
-          .filter(col("acc.n") <= maxShingleDf)
-          .select(col("acc.ids").as("ids")))
-      val inter = postingPairCounts(posting, "inter")
-      val sz = posting.select(explode(col("ids")).as("id"))
-        .groupBy("id").agg(count(lit(1)).as("sz"))
-      inter
-        .join(sz.select(col("id").as("id_a"), col("sz").as("sz_a")), "id_a")
-        .join(sz.select(col("id").as("id_b"), col("sz").as("sz_b")), "id_b")
-        .select(col("id_a"), col("id_b"),
-          round(col("inter") / (col("sz_a") + col("sz_b") - col("inter")), 6).as("jaccard"))
-        .filter(col("jaccard") >= minJ)
-    }
+    val (inter, sz) = pairCounts(shingleTable(docs, idCol, textCol, n),
+      "sh", "inter", maxShingleDf, "jaccardPairs")
+    verifyJaccard(inter, sz, minJ)
   }
 
   /** Asymmetric CONTAINMENT pairs: for each candidate pair, c_a =
@@ -191,102 +195,33 @@ object Dedup {
     * long aggregator page swallowing a short doc whole scores
     * jaccard ≈ |B|/|A| → 0 as the wrapper grows, while c_b stays 1.0
     * (the [[sourceOverlap]] asymmetry argument at DOC grain — the
-    * contained side is the redundant one). Same shingle grammar and
-    * capped-SET semantics as [[jaccardPairs]] (shingles shared by more
-    * than `maxShingleDf` docs drop from intersections AND sizes), but
-    * candidate generation must stay inverted-index (NOT MinHash
+    * contained side is the redundant one). Same shingle grammar,
+    * capped-SET semantics and [[pairCounts]] tiers as [[jaccardPairs]],
+    * but candidate generation must stay inverted-index (NOT MinHash
     * banding: banding approximates JACCARD, and the asymmetric pairs
     * this operator exists for — tiny doc inside a huge wrapper — have
-    * jaccard → 0, so banding would structurally miss exactly them).
-    * Plan shape mirrors [[jaccardPairs]] tier for tier: the capped
-    * tier's one corpus-scale exchange is the shingle groupBy through
-    * the cap-bounded [[graft.functions.BoundedIds]] aggregator (the
-    * r13 sf1p sweep measured the previous left_anti + self-join
-    * formulation at 9.2× on 10× data vs the posting jaccard's 3.9× —
-    * same answer, two extra shingle-scale exchanges). BoundedIds binds
-    * a Long encoder, so the posting tier engages only for integral id
-    * columns; non-numeric ids (the CLI's string-keyed corpora) keep
-    * the capped df-filter + self-join, same semantics. */
+    * jaccard → 0, so banding would structurally miss exactly them). */
   def containmentPairs(docs: DataFrame, idCol: String, textCol: String,
                        n: Int, minC: Double,
                        maxShingleDf: Long = 0L): DataFrame = {
-    require(maxShingleDf <= Int.MaxValue,
-      s"maxShingleDf must fit in Int (posting lists are cap-bounded in memory): $maxShingleDf")
-    val integralId = {
-      import org.apache.spark.sql.types._
-      docs.schema(idCol).dataType match {
-        case LongType | IntegerType | ShortType | ByteType => true
-        case _ => false
-      }
-    }
-    val (inter, sz) =
-      if (maxShingleDf <= 0 || !integralId) {
-        val shAll = holdCached("containmentPairs.sh0",
-          shingleTable(docs, idCol, textCol, n))
-        val sh =
-          if (maxShingleDf <= 0) shAll
-          else holdCached("containmentPairs.shingles",
-            shAll.join(shAll.groupBy("sh").agg(count(lit(1)).as("shdf"))
-                .filter(col("shdf") > maxShingleDf).select("sh"),
-              Seq("sh"), "left_anti"))
-        val a = sh.select(col("sh"), col("id").as("id_a"))
-        val b = sh.select(col("sh"), col("id").as("id_b"))
-        (a.join(b, "sh")
-          .filter(col("id_a") < col("id_b"))
-          .groupBy("id_a", "id_b")
-          .agg(count(lit(1)).as("inter")),
-          shingleSizes(sh))
-      } else {
-        val boundedIds = org.apache.spark.sql.functions.udaf(
-          new graft.functions.BoundedIds(maxShingleDf.toInt),
-          org.apache.spark.sql.Encoders.scalaLong)
-        val posting = holdCached("containmentPairs.postings",
-          shingleTable(docs, idCol, textCol, n)
-            .groupBy("sh").agg(boundedIds(col("id")).as("acc"))
-            .filter(col("acc.n") <= maxShingleDf)
-            .select(col("acc.ids").as("ids")))
-        (postingPairCounts(posting, "inter"),
-          posting.select(explode(col("ids")).as("id"))
-            .groupBy("id").agg(count(lit(1)).as("sz")))
-      }
-    inter
-      .join(sz.select(col("id").as("id_a"), col("sz").as("sz_a")), "id_a")
-      .join(sz.select(col("id").as("id_b"), col("sz").as("sz_b")), "id_b")
+    val (inter, sz) = pairCounts(shingleTable(docs, idCol, textCol, n),
+      "sh", "inter", maxShingleDf, "containmentPairs")
+    withSizes(inter, sz)
       .select(col("id_a"), col("id_b"),
         round(col("inter") / col("sz_a"), 6).as("c_a"),
         round(col("inter") / col("sz_b"), 6).as("c_b"))
       .filter(greatest(col("c_a"), col("c_b")) >= minC)
   }
 
-  /** Universal-hash family over the shingle's md5-derived base hash:
-    * seed s maps h to ((h mod P) * (2s+1) + s + 1) mod P with the
-    * Mersenne prime P = 2^31 - 1. One md5 per shingle (instead of one
-    * per shingle x seed), pure integer ops for the family — portable to
-    * the SQL oracle and ~3x cheaper than hashing per seed. */
-  private val minhashExpr =
-    "((h % 2147483647) * (2 * seed + 1) + seed + 1) % 2147483647"
-
-  /** MinHash signatures: minimum seeded hash over the doc's shingle
-    * set. One row per (id, seed). */
-  def minhashSignatures(docs: DataFrame, idCol: String, textCol: String,
-                        n: Int, numHashes: Int): DataFrame =
-    minhashSignaturesFromShingles(
-      shingleTable(docs, idCol, textCol, n), numHashes)
-
-  private def minhashSignaturesFromShingles(sh: DataFrame, numHashes: Int): DataFrame = {
-    val seeds = sh.sparkSession.range(numHashes).select(col("id").cast("int").as("seed"))
-    sh.withColumn("h", md5Hash64(col("sh")))
-      .crossJoin(broadcast(seeds))
-      .groupBy("id", "seed")
-      .agg(min(expr(minhashExpr)).as("minh"))
-  }
-
-  /** Wide-form signatures: one row per doc, one `m<s>` column per seed.
-    * All seed hashes are computed per shingle row and min-aggregated in
-    * a single groupBy — no seed cross join, so the shuffle carries
-    * |shingles| rows instead of |shingles| x numHashes. This is the
-    * formulation that matters at corpus scale; the long form above is
-    * the API-compatible view (same values, `minhashExpr` family). */
+  /** Wide-form MinHash signatures: one row per id, one `m<s>` column
+    * per seed. The family is universal hashing over the shingle's
+    * md5-derived base hash: seed s maps h to ((h mod P) * (2s+1) + s +
+    * 1) mod P with the Mersenne prime P = 2^31 - 1 — one md5 per
+    * shingle (not per shingle x seed), pure integer ops for the family,
+    * portable to the SQL oracle. All seed hashes are computed per
+    * shingle row and min-aggregated in a single groupBy — no seed cross
+    * join, so the shuffle carries |shingles| rows instead of |shingles|
+    * x numHashes. */
   private[graft] def minhashSignaturesWide(sh: DataFrame, numHashes: Int): DataFrame = {
     val withH = sh.withColumn("h", md5Hash64(col("sh")))
     val aggs = (0 until numHashes).map { s =>
@@ -295,38 +230,23 @@ object Dedup {
     withH.groupBy("id").agg(aggs.head, aggs.tail: _*)
   }
 
-  /** LSH candidate pairs: docs sharing any band of the signature.
-    * Band key = (band index, min/max of the band's hashes) — order-free
-    * and engine-portable. */
-  def minhashCandidates(sigs: DataFrame, bandSize: Int): DataFrame = {
-    val bands = sigs
-      .groupBy(col("id"), floor(col("seed") / bandSize).as("band"))
-      .agg(min("minh").as("b_lo"), max("minh").as("b_hi"))
-    selfJoinPairs(bands, Seq("band", "b_lo", "b_hi"))
-  }
-
-  /** MinHash-LSH near-dup detection: banded candidates verified with the
-    * true n-gram Jaccard (>= minJ). Verification joins the shingle table
-    * against the (small) candidate pair set only — never the all-pairs
-    * inverted-index blowup — so the cost is O(candidates x shingles per
-    * doc), independent of corpus-wide shingle collisions. */
-  def minhashDedup(docs: DataFrame, idCol: String, textCol: String,
-                   n: Int, numHashes: Int, bandSize: Int, minJ: Double): DataFrame = {
-    // deferred-release persist — see jaccardPairs (unpersist hygiene)
-    val sh = holdCached("minhashDedup.shingles",
-      shingleTable(docs, idCol, textCol, n))
-    // Signatures via the single-pass MinHashSig expression: a pure map
-    // over the docs scan (zero shuffle), where the aggregation
-    // formulation (minhashSignaturesWide — kept as the parity oracle in
-    // DedupSpec) shuffles every (doc, shingle) row. Banded (lo,hi) keys
-    // stack via posexplode: |docs| x bands rows, tiny next to the corpus.
+  /** MinHash LSH band keys `(idOut, band, b_lo, b_hi)`: one row per
+    * (doc, band), the key being the band's min/max hash — order-free
+    * and engine-portable. Signatures come from the single-pass
+    * [[graft.functions.expressions.MinHashSig]] expression, a pure map
+    * over the docs scan (zero shuffle; the aggregation formulation,
+    * [[minhashSignaturesWide]], stays the parity oracle in DedupSpec);
+    * the bands stack via posexplode: |docs| x bands rows, tiny next to
+    * the corpus. Docs without a shingle have no signature and no band. */
+  private def minhashBands(df: DataFrame, id: String, text: String, idOut: String,
+                           n: Int, numHashes: Int, bandSize: Int): DataFrame = {
     import org.apache.spark.sql.GraftColumnBridge
-    val numBands = numHashes / bandSize
-    val wide = docs.select(col(idCol).as("id"),
+    require(numHashes % bandSize == 0, "numHashes must divide into bands")
+    val wide = df.select(col(id).as(idOut),
         GraftColumnBridge.column(graft.functions.expressions.MinHashSig(
-          GraftColumnBridge.expression(col(textCol)), n, numHashes)).as("sig"))
+          GraftColumnBridge.expression(col(text)), n, numHashes)).as("sig"))
       .filter(col("sig").isNotNull)
-    val bandStructs = (0 until numBands).map { b =>
+    val bandStructs = (0 until numHashes / bandSize).map { b =>
       val cols = (b * bandSize until (b + 1) * bandSize)
         .map(s => element_at(col("sig"), s + 1))
       // least/greatest require >= 2 args; a 1-hash band is its own key
@@ -335,30 +255,28 @@ object Dedup {
         else (least(cols: _*), greatest(cols: _*))
       struct(lo.as("b_lo"), hi.as("b_hi"))
     }
-    val bands = wide.select(col("id"),
-      posexplode(array(bandStructs: _*)).as(Seq("band", "bs")))
-      .select(col("id"), col("band"), col("bs.b_lo"), col("bs.b_hi"))
-    val cands = selfJoinPairs(bands, Seq("band", "b_lo", "b_hi"))
-    verifyJaccard(pairIntersections(cands, sh), sh, minJ)
+    wide.select(col(idOut), posexplode(array(bandStructs: _*)).as(Seq("band", "bs")))
+      .select(col(idOut), col("band"), col("bs.b_lo"), col("bs.b_hi"))
   }
 
-  /** Fuzzy decontamination: corpus documents NEAR-duplicating an eval/
-    * benchmark document (cross-corpus MinHash-LSH + true-Jaccard
-    * verify). [[graft.operators.CorpusClean.decontaminate]] catches
-    * exact n-gram overlap (the GPT-3 appendix-C pass); this tier
-    * catches the paraphrased/truncated/reformatted leakage that exact
-    * grams miss — the overlap audit newer model reports run against
-    * their pretraining corpora.
-    *
-    * Plan shape: signatures on BOTH sides are the zero-shuffle
-    * [[graft.functions.expressions.MinHashSig]] map; the band join
-    * BROADCASTS the bench side (eval suites are MBs against a 100 TB
-    * corpus — the corpus never shuffles by band); verification
-    * restricts the corpus shingle table to candidate docs with a semi-
-    * join before the (broadcast) bench-shingle intersection join, so
-    * post-candidate cost is O(candidate docs), not O(corpus).
-    *
-    * Returns (id_a = corpus doc, id_b = bench doc, jaccard >= minJ). */
+  /** MinHash-LSH near-dup detection: banded candidates verified with the
+    * true n-gram Jaccard (>= minJ). Verification joins the shingle table
+    * against the (small) candidate pair set only — never the all-pairs
+    * inverted-index blowup — so the cost is O(candidates x shingles per
+    * doc), independent of corpus-wide shingle collisions. `numHashes`
+    * must be a multiple of `bandSize`. */
+  def minhashDedup(docs: DataFrame, idCol: String, textCol: String,
+                   n: Int, numHashes: Int, bandSize: Int, minJ: Double): DataFrame = {
+    val cands = selfJoinPairs(
+      minhashBands(docs, idCol, textCol, "id", n, numHashes, bandSize),
+      Seq("band", "b_lo", "b_hi"))
+    // deferred-release persist: the shingle table feeds both
+    // verification joins and the sizes agg
+    val sh = holdCached("minhashDedup.shingles",
+      shingleTable(docs, idCol, textCol, n))
+    verifyJaccard(pairIntersections(cands, sh), shingleSizes(sh), minJ)
+  }
+
   /** Cross-SOURCE n-gram containment matrix: for every ordered source
     * pair (A, B), `shared` = |distinct shingles of A ∩ B| and
     * `containment` = shared / |distinct shingles of A| — the
@@ -370,7 +288,7 @@ object Dedup {
     * join semantics): absence reads as zero overlap.
     *
     * Scale shape: ONE corpus-scale exchange — the shingle-keyed
-    * `collect_set(source)` aggregation. `shingleSet` is already
+    * `collect_set(source)` aggregation. [[shingleTable]] is already
     * per-doc distinct, and the cross-doc dedup happens INSIDE that
     * aggregation (set union is the map-side-combinable partial), so
     * the separate distinct-(source, shingle) exchange a naive
@@ -382,7 +300,7 @@ object Dedup {
     * both consumers; pair expansion is map-side and the final
     * aggregates have at most S² keys. For corpora where even the
     * distinct shingle table is too hot, the sketch path is per-source
-    * MinHash signatures ([[minhashSignatures]]) — this exact tier is
+    * MinHash signatures ([[sourceOverlapSketch]]) — this exact tier is
     * the oracle anchor. */
   def sourceOverlap(docs: DataFrame, textCol: String, srcCol: String,
                     n: Int = 3, maxSources: Int = 1000): DataFrame = {
@@ -451,14 +369,22 @@ object Dedup {
       docs.where(col(srcCol).isNotNull && col(textCol).isNotNull),
       srcCol, textCol, n)
     val sigs = minhashSignaturesWide(sh, numHashes) // one row per SOURCE
-    val a = sigs.select(col("id").as("src_a") +:
-      (0 until numHashes).map(s => col(s"m$s").as(s"a$s")): _*)
-    val b = sigs.select(col("id").as("src_b") +:
-      (0 until numHashes).map(s => col(s"m$s").as(s"b$s")): _*)
+    jaccardEstimates(sigs, numHashes)((a, b) =>
+      a.crossJoin(b).filter(col("src_a") < col("src_b")))
+  }
+
+  /** `(src_a, src_b, j_est)` over wide signatures: `pairUp` joins the
+    * two signature sides (`src_a, a<s>...` and `src_b, b<s>...`) into
+    * the pairs to estimate, and j_est = matching seeds / numHashes,
+    * rounded to 6. */
+  private def jaccardEstimates(sigs: DataFrame, numHashes: Int)(
+      pairUp: (DataFrame, DataFrame) => DataFrame): DataFrame = {
+    def side(p: String) = sigs.select(col("id").as(s"src_$p") +:
+      (0 until numHashes).map(s => col(s"m$s").as(s"$p$s")): _*)
     val matches = (0 until numHashes)
       .map(s => when(col(s"a$s") === col(s"b$s"), 1).otherwise(0))
       .reduce(_ + _)
-    a.crossJoin(b).filter(col("src_a") < col("src_b"))
+    pairUp(side("a"), side("b"))
       .select(col("src_a"), col("src_b"),
         round(matches.cast("double") / numHashes, 6).as("j_est"))
   }
@@ -473,7 +399,7 @@ object Dedup {
     * Membership is EXACT, not sampled: a pair is emitted iff the two
     * sources agree on EVERY hash of at least one band (the full
     * ordered band as the join key — not the min/max compression
-    * [[minhashCandidates]] uses — so the emitted set is a pure
+    * [[minhashBands]] uses — so the emitted set is a pure
     * function of the signatures, replayable in SQL), and its `j_est`
     * is bit-identical to the sketch tier's. Banding is the standard
     * recall trade: P[emit] = 1 − (1 − J^bandSize)^numBands (~0.97 at
@@ -512,47 +438,36 @@ object Dedup {
         Seq("band", "bk"))
       .filter(col("src_a") < col("src_b"))
       .select("src_a", "src_b").distinct()
-    val a = sigs.select(col("id").as("src_a") +:
-      (0 until numHashes).map(s => col(s"m$s").as(s"a$s")): _*)
-    val b = sigs.select(col("id").as("src_b") +:
-      (0 until numHashes).map(s => col(s"m$s").as(s"b$s")): _*)
-    val matches = (0 until numHashes)
-      .map(s => when(col(s"a$s") === col(s"b$s"), 1).otherwise(0))
-      .reduce(_ + _)
-    cands.join(a, "src_a").join(b, "src_b")
-      .select(col("src_a"), col("src_b"),
-        round(matches.cast("double") / numHashes, 6).as("j_est"))
+    jaccardEstimates(sigs, numHashes)((a, b) =>
+      cands.join(a, "src_a").join(b, "src_b"))
   }
 
+  /** Fuzzy decontamination: corpus documents NEAR-duplicating an eval/
+    * benchmark document (cross-corpus MinHash-LSH + true-Jaccard
+    * verify). [[graft.operators.CorpusClean.decontaminate]] catches
+    * exact n-gram overlap (the GPT-3 appendix-C pass); this tier
+    * catches the paraphrased/truncated/reformatted leakage that exact
+    * grams miss — the overlap audit newer model reports run against
+    * their pretraining corpora.
+    *
+    * Plan shape: signatures on BOTH sides are the zero-shuffle
+    * [[graft.functions.expressions.MinHashSig]] map; the band join
+    * BROADCASTS the bench side (eval suites are MBs against a 100 TB
+    * corpus — the corpus never shuffles by band); verification
+    * restricts the corpus shingle table to candidate docs with a semi-
+    * join before the (broadcast) bench-shingle intersection join, so
+    * post-candidate cost is O(candidate docs), not O(corpus).
+    *
+    * Returns (id_a = corpus doc, id_b = bench doc, jaccard >= minJ). */
   def minhashDecontaminate(corpus: DataFrame, corpusId: String, corpusText: String,
       bench: DataFrame, benchId: String, benchText: String,
       n: Int = 3, numHashes: Int = 16, bandSize: Int = 4,
       minJ: Double = 0.5): DataFrame = {
-    import org.apache.spark.sql.GraftColumnBridge
-    require(numHashes % bandSize == 0, "numHashes must divide into bands")
-    val numBands = numHashes / bandSize
-    def bandsOf(df: DataFrame, id: String, text: String, idOut: String): DataFrame = {
-      val wide = df.select(col(id).as(idOut),
-          GraftColumnBridge.column(graft.functions.expressions.MinHashSig(
-            GraftColumnBridge.expression(col(text)), n, numHashes)).as("sig"))
-        .filter(col("sig").isNotNull)
-      val bandStructs = (0 until numBands).map { b =>
-        val cols = (b * bandSize until (b + 1) * bandSize)
-          .map(s => element_at(col("sig"), s + 1))
-        // least/greatest require >= 2 args; a 1-hash band is its own key
-        val (lo, hi) =
-          if (cols.size == 1) (cols.head, cols.head)
-          else (least(cols: _*), greatest(cols: _*))
-        struct(lo.as("b_lo"), hi.as("b_hi"))
-      }
-      wide.select(col(idOut), posexplode(array(bandStructs: _*)).as(Seq("band", "bs")))
-        .select(col(idOut), col("band"), col("bs.b_lo"), col("bs.b_hi"))
-    }
-    val cands = bandsOf(corpus, corpusId, corpusText, "id_a")
-      .join(broadcast(bandsOf(bench, benchId, benchText, "id_b")),
+    val cands = minhashBands(corpus, corpusId, corpusText, "id_a", n, numHashes, bandSize)
+      .join(broadcast(minhashBands(bench, benchId, benchText, "id_b", n, numHashes, bandSize)),
         Seq("band", "b_lo", "b_hi"))
       .select("id_a", "id_b").distinct()
-    // deferred-release persists — see jaccardPairs (unpersist hygiene)
+    // deferred-release persists — see holdCached
     val candsC = holdCached("minhashDecontaminate.cands", cands)
     // Corpus DOCS restricted to candidate ids BEFORE shingling: the
     // semi-join sits below the explode, so the verification pass
@@ -1030,6 +945,26 @@ object Dedup {
       .filter(col("cosine") >= tau)
   }
 
+  /** Winnowing window INSTANCES: one row per full w-window of k-gram
+    * hashes, carrying the window's start position (0-based shingle =
+    * token index) and its min hash. [[winnowFingerprints]] is the
+    * distinct (id, fp) view; [[removeSharedSpans]] needs the positions. */
+  private[graft] def winnowWindows(docs: DataFrame, idCol: String,
+      textCol: String, k: Int, w: Int): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    // token array behind a projection boundary (see kgrams)
+    val sh = docs.select(col(idCol).as("id"), tokens(col(textCol)).as("toks"))
+      .select(col("id"), posexplode(kgrams(col("toks"), k)).as(Seq("pos", "s")))
+      .select(col("id"), col("pos"), md5Hash64(col("s")).as("h"))
+    val win = Window.partitionBy("id").orderBy("pos")
+      .rowsBetween(Window.currentRow, w - 1)
+    sh.select(col("id"), col("pos"),
+        min("h").over(win).as("fp"),
+        count(lit(1)).over(win).as("wn"))
+      .filter(col("wn") === w) // full windows only
+      .select("id", "pos", "fp")
+  }
+
   /** Winnowing document fingerprints (Schleimer, Wilkerson & Aiken
     * 2003, "Winnowing: Local Algorithms for Document Fingerprinting" —
     * the MOSS algorithm): hash every word k-gram, slide a w-window
@@ -1045,33 +980,6 @@ object Dedup {
     * set; here they don't) — min is associative and engine-portable.
     * Plan: shingle hashes behind a projection boundary, ONE doc-keyed
     * window pass (sliding min, frame state = w rows), distinct. */
-  /** Winnowing window INSTANCES: one row per full w-window of k-gram
-    * hashes, carrying the window's start position (0-based shingle =
-    * token index) and its min hash. [[winnowFingerprints]] is the
-    * distinct (id, fp) view; [[removeSharedSpans]] needs the positions. */
-  private[graft] def winnowWindows(docs: DataFrame, idCol: String,
-      textCol: String, k: Int, w: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    // Token array materialized behind a projection boundary, like
-    // shingleTable: inlining tokens(text) into the transform would
-    // re-run the regex split per element_at (measured 4x here).
-    val toksDf = docs.select(col(idCol).as("id"), tokens(col(textCol)).as("toks"))
-    val cnt = size(col("toks")) - (k - 1)
-    val grams = when(cnt >= 1,
-      transform(sequence(lit(1), greatest(cnt, lit(1))),
-        i => concat_ws(" ", (0 until k).map(o => element_at(col("toks"), i + o)): _*))
-    ).otherwise(array().cast("array<string>"))
-    val sh = toksDf.select(col("id"), posexplode(grams).as(Seq("pos", "s")))
-      .select(col("id"), col("pos"), md5Hash64(col("s")).as("h"))
-    val win = Window.partitionBy("id").orderBy("pos")
-      .rowsBetween(Window.currentRow, w - 1)
-    sh.select(col("id"), col("pos"),
-        min("h").over(win).as("fp"),
-        count(lit(1)).over(win).as("wn"))
-      .filter(col("wn") === w) // full windows only
-      .select("id", "pos", "fp")
-  }
-
   def winnowFingerprints(docs: DataFrame, idCol: String, textCol: String,
                          k: Int = 3, w: Int = 4): DataFrame =
     winnowWindows(docs, idCol, textCol, k, w).select("id", "fp").distinct()
@@ -1183,45 +1091,22 @@ object Dedup {
   }
 
   /** Pairs sharing at least `minShared` winnow fingerprints — partial-
-    * overlap candidates. Same inverted-index join shape (and hot-key
-    * cap) as [[jaccardPairs]]: the shuffle carries posting lists, never
-    * the all-pairs product; `maxFpDf > 0` drops fingerprints appearing
-    * in more docs than that (boilerplate runs, the quadratic corner).
-    * Capped-tier id contract: same as [[jaccardPairs]] — `maxFpDf > 0`
-    * requires a numeric (Long-castable) id column. */
+    * overlap candidates, counted by the [[pairCounts]] inverted index
+    * over [[winnowFingerprints]]: the shuffle carries posting lists,
+    * never the all-pairs product; `maxFpDf > 0` drops fingerprints
+    * appearing in more docs than that (boilerplate runs, the quadratic
+    * corner). Ids: see [[pairCounts]]. */
   def winnowPairs(docs: DataFrame, idCol: String, textCol: String,
                   k: Int = 3, w: Int = 4, minShared: Long = 2,
-                  maxFpDf: Int = 0): DataFrame = {
-    if (maxFpDf <= 0) {
-      // deferred-release persist — see jaccardPairs (unpersist hygiene)
-      val fps = holdCached("winnowPairs.fps",
-        winnowFingerprints(docs, idCol, textCol, k, w))
-      val a = fps.select(col("fp"), col("id").as("id_a"))
-      val b = fps.select(col("fp"), col("id").as("id_b"))
-      a.join(b, "fp")
-        .filter(col("id_a") < col("id_b"))
-        .groupBy("id_a", "id_b").agg(count(lit(1)).as("shared"))
-        .filter(col("shared") >= minShared)
-    } else {
-      // Capped tier: one bounded posting-list groupBy + map-side pair
-      // expansion (see jaccardPairs — same plan shape, same reason).
-      val boundedIds = org.apache.spark.sql.functions.udaf(
-        new graft.functions.BoundedIds(maxFpDf),
-        org.apache.spark.sql.Encoders.scalaLong)
-      val posting = holdCached("winnowPairs.postings",
-        winnowFingerprints(docs, idCol, textCol, k, w)
-          .groupBy("fp").agg(boundedIds(col("id")).as("acc"))
-          .filter(col("acc.n") <= maxFpDf)
-          .select(col("acc.ids").as("ids")))
-      postingPairCounts(posting, "shared")
-        .filter(col("shared") >= minShared)
-    }
-  }
+                  maxFpDf: Int = 0): DataFrame =
+    pairCounts(winnowFingerprints(docs, idCol, textCol, k, w),
+      "fp", "shared", maxFpDf, "winnowPairs")._1
+      .filter(col("shared") >= minShared)
 
   /** Top-N most-similar embedding pairs within a blocking column (label
     * or IVF centroid id): the scale-safe cosine near-dup report.
-    * Requires a numeric (Long-castable) id column (the capped-tier id
-    * contract of [[jaccardPairs]]).
+    * Requires a numeric (Long-castable) id column: ids are cast to
+    * Long for the bounded smallest-ids aggregate.
     *
     * Duplicate-flood posture (see [[embeddingLshPairs]]): identical
     * (block, vector) rows collapse to one CLASS before the block

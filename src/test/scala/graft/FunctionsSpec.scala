@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.embedding.{HashEmbedder, ModelRegistry}
@@ -278,6 +279,13 @@ class DedupSpec extends SparkSpec {
     assert(d.contains((0L, 1L, 1.0)))
   }
 
+  test("minhashDedup refuses hashes that do not fill whole bands") {
+    // 9 hashes in bands of 2 would leave the ninth hash in no band
+    intercept[IllegalArgumentException] {
+      Dedup.minhashDedup(docs, "doc_id", "text", 3, 9, 2, 0.9)
+    }
+  }
+
   test("containment catches the near-superset pair jaccard misses") {
     // B's 6 tokens (4 shingles) sit verbatim inside A's 18-token
     // wrapper (16 shingles): jaccard = 4/16 = 0.25 — invisible at any
@@ -303,14 +311,29 @@ class DedupSpec extends SparkSpec {
       .as[(Long, Long, Double, Double)].collect().toSet
     assert(capped == cont, s"capped tier must agree: $capped vs $cont")
     // string ids route the capped tier through the df-filtered
-    // self-join (BoundedIds is Long-bound) — same pairs, string keys
-    val cappedStr = Dedup.containmentPairs(
-        sup.selectExpr("concat('d', doc_id) as doc_id", "text"),
-        "doc_id", "text", n = 3, minC = 0.9, maxShingleDf = 10)
-      .as[(String, String, Double, Double)].collect().toSet
-    assert(cappedStr.map(t => (t._1, t._2)) ==
-      capped.map(t => (s"d${t._1}", s"d${t._2}")),
-      s"string-id capped tier must agree: $cappedStr")
+    // self-join (BoundedIds is Long-bound) — same pairs, string keys,
+    // for every operator on the shared pair counter
+    val supStr = sup.selectExpr("concat('d', doc_id) as doc_id", "text")
+    def ids(df: DataFrame) = df.select("id_a", "id_b").collect()
+      .map(r => (r.get(0).toString, r.get(1).toString)).toSet
+    def agree(op: String, long: DataFrame, str: DataFrame): Unit = {
+      val want = ids(long)
+      assert(want.nonEmpty, s"$op: the fixture must produce a pair")
+      val got = ids(str)
+      assert(got == want.map { case (a, b) => (s"d$a", s"d$b") },
+        s"string-id capped $op must agree: $got vs $want")
+    }
+    agree("containment",
+      Dedup.containmentPairs(sup, "doc_id", "text", n = 3, minC = 0.9, maxShingleDf = 10),
+      Dedup.containmentPairs(supStr, "doc_id", "text", n = 3, minC = 0.9, maxShingleDf = 10))
+    // the superset pair scores jaccard 4/16 = 0.25
+    agree("jaccard",
+      Dedup.jaccardPairs(sup, "doc_id", "text", n = 3, minJ = 0.2, maxShingleDf = 10),
+      Dedup.jaccardPairs(supStr, "doc_id", "text", n = 3, minJ = 0.2, maxShingleDf = 10))
+    // the swallowed 6-token run (= w + k - 1) shares a fingerprint
+    agree("winnow",
+      Dedup.winnowPairs(sup, "doc_id", "text", minShared = 1, maxFpDf = 10),
+      Dedup.winnowPairs(supStr, "doc_id", "text", minShared = 1, maxFpDf = 10))
   }
 
   test("dedup operators leave no unbounded SQL-cache growth (r6 ADVICE fix)") {
