@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextFunctions
+import graft.functions.VectorFunctions.round6
 
 /** BM25 keyword search and hybrid score fusion as DataFrame plans.
   *
@@ -24,17 +25,6 @@ import graft.functions.TextFunctions
   * reference uses f32; the DuckDB oracle fixes Double as the contract).
   */
 object BM25 {
-  /** File-local shadow of `org.apache.spark.sql.functions.round`: every
-    * per-row score here rounds a DOUBLE column at scale 6, where the
-    * built-in pays BigDecimal per value (~430 ns — 1.7 s of the n²
-    * knn_graph row alone). Routes through the exact-equivalent fast
-    * HALF_UP expression (see [[graft.functions.expressions.RoundHalfUp]]
-    * and RoundHalfUpSpec's brute-forced equivalence). */
-  private def round(c: org.apache.spark.sql.Column, scale: Int): org.apache.spark.sql.Column = {
-    require(scale == 6, s"file-local fast round is scale-6 only (got $scale)")
-    graft.functions.VectorFunctions.round6(c)
-  }
-
   val K1 = 1.2
   val B = 0.75
 
@@ -98,7 +88,7 @@ object BM25 {
     * tie-break on id. */
   def topK(docs: DataFrame, idCol: String, textCol: String, query: String, k: Int): DataFrame =
     scores(docs, idCol, textCol, query)
-      .select(col("id"), round(col("score"), 6).as("score"))
+      .select(col("id"), round6(col("score")).as("score"))
       .orderBy(desc("score"), col("id"))
       .limit(k)
 
@@ -123,7 +113,7 @@ object BM25 {
     // bmAll feeds three consumers (top-k, fusion join, min/max stats)
     val bmAll = docs.select(col("doc_id").as("id"))
       .join(scores(docs, "doc_id", "text", query), Seq("id"), "left")
-      .select(col("id"), round(coalesce(col("score"), lit(0.0)), 6).as("bscore"))
+      .select(col("id"), round6(coalesce(col("score"), lit(0.0))).as("bscore"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val bmTop = bmAll.filter(col("bscore") > 0)
       .orderBy(desc("bscore"), col("id")).limit(fetchK)
@@ -136,11 +126,10 @@ object BM25 {
       .join(bmAll, Seq("id"), "left")
       .crossJoin(broadcast(vstats))
       .crossJoin(broadcast(bstats))
-      .select(col("id"), round(
+      .select(col("id"), round6(
         lit(alpha) * (col("vscore") - col("vmin")) / greatest(col("vmax") - col("vmin"), lit(1e-6)) +
           lit(1.0 - alpha) * (coalesce(col("bscore"), lit(0.0)) - col("bmin")) /
-            greatest(col("bmax") - col("bmin"), lit(1e-6)),
-        6).as("score"))
+            greatest(col("bmax") - col("bmin"), lit(1e-6))).as("score"))
     fused.orderBy(desc("score"), col("id")).limit(k)
   }
 }

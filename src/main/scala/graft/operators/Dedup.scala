@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.TextFunctions._
 import graft.functions.VectorFunctions
+import graft.functions.VectorFunctions.round6
 import graft.operators.Ckpt.CkptOps
 
 /** Deduplication operators for large-scale training-data pipelines:
@@ -27,18 +28,6 @@ import graft.operators.Ckpt.CkptOps
   * so every operator here is DuckDB-oracle-checkable.
   */
 object Dedup {
-  /** File-local shadow of `org.apache.spark.sql.functions.round`: every
-    * per-row score here rounds a DOUBLE column at scale 6, where the
-    * built-in pays BigDecimal per value (~430 ns — 1.7 s of the n²
-    * knn_graph row alone). Routes through the exact-equivalent fast
-    * HALF_UP expression (see [[graft.functions.expressions.RoundHalfUp]]
-    * and RoundHalfUpSpec's brute-forced equivalence). */
-  private def round(c: org.apache.spark.sql.Column, scale: Int): org.apache.spark.sql.Column = {
-    require(scale == 6, s"file-local fast round is scale-6 only (got $scale)")
-    graft.functions.VectorFunctions.round6(c)
-  }
-
-
   /** Deferred-release persist for intermediates that must stay lazy
     * (they back a returned frame, so an in-function try/finally would
     * unpersist before the caller's action runs) but whose plan loses
@@ -104,7 +93,7 @@ object Dedup {
   private def verifyJaccard(inter: DataFrame, sz: DataFrame, minJ: Double): DataFrame =
     withSizes(inter, sz)
       .select(col("id_a"), col("id_b"),
-        round(col("inter") / (col("sz_a") + col("sz_b") - col("inter")), 6).as("jaccard"))
+        round6(col("inter") / (col("sz_a") + col("sz_b") - col("inter"))).as("jaccard"))
       .filter(col("jaccard") >= minJ)
 
   /** The inverted-index pair counter behind [[jaccardPairs]],
@@ -208,8 +197,8 @@ object Dedup {
       "sh", "inter", maxShingleDf, "containmentPairs")
     withSizes(inter, sz)
       .select(col("id_a"), col("id_b"),
-        round(col("inter") / col("sz_a"), 6).as("c_a"),
-        round(col("inter") / col("sz_b"), 6).as("c_b"))
+        round6(col("inter") / col("sz_a")).as("c_a"),
+        round6(col("inter") / col("sz_b")).as("c_b"))
       .filter(greatest(col("c_a"), col("c_b")) >= minC)
   }
 
@@ -328,7 +317,7 @@ object Dedup {
     pairs
       .join(sizes, "src_a")
       .select(col("src_a"), col("src_b"), col("shared"),
-        round(col("shared") / col("sz"), 6).as("containment"))
+        round6(col("shared") / col("sz")).as("containment"))
   }
 
   /** Both overlap tiers assume S is SOURCE-count-sized (dozens to
@@ -386,7 +375,7 @@ object Dedup {
       .reduce(_ + _)
     pairUp(side("a"), side("b"))
       .select(col("src_a"), col("src_b"),
-        round(matches.cast("double") / numHashes, 6).as("j_est"))
+        round6(matches.cast("double") / numHashes).as("j_est"))
   }
 
   /** Domain-cardinality overlap tier: [[sourceOverlapSketch]]'s
@@ -492,7 +481,7 @@ object Dedup {
       .join(szA.select(col("id").as("id_a"), col("sz").as("sz_a")), "id_a")
       .join(broadcast(szB.select(col("id").as("id_b"), col("sz").as("sz_b"))), "id_b")
       .select(col("id_a"), col("id_b"),
-        round(col("inter") / (col("sz_a") + col("sz_b") - col("inter")), 6).as("jaccard"))
+        round6(col("inter") / (col("sz_a") + col("sz_b") - col("inter"))).as("jaccard"))
       .filter(col("jaccard") >= minJ)
   }
 
@@ -856,8 +845,8 @@ object Dedup {
       .filter(col("rep_a") < col("rep_b") ||
         (col("rep_a") === col("rep_b") && col("cnt_b") >= 2))
       .select(col("rep_a"), col("rep_b"),
-        round(VectorFunctions.dot(col("v_a"), col("v_b")) /
-          (col("n_a") * col("n_b")), 6).as("cosine"))
+        round6(VectorFunctions.dot(col("v_a"), col("v_b")) /
+          (col("n_a") * col("n_b"))).as("cosine"))
       .filter(col("cosine") >= minCosine)
     // expand verified class pairs to member pairs: disjoint member sets
     // give each unordered pair exactly once (intra keeps ia < ib)
@@ -911,8 +900,8 @@ object Dedup {
       col("v").as("v_b"), col("n").as("n_b"))
     val dupIds = base.join(earlier, "blk")
       .filter(col("id_b") < col("id"))
-      .filter(round(VectorFunctions.dot(col("v"), col("v_b")) /
-        (col("n") * col("n_b")), 6) >= tau)
+      .filter(round6(VectorFunctions.dot(col("v"), col("v_b")) /
+        (col("n") * col("n_b"))) >= tau)
       .select("id").distinct()
       .withColumn("is_dup", lit(true))
     base.select("cluster", "id")
@@ -940,8 +929,8 @@ object Dedup {
     base.join(other, "blk")
       .filter(col("id") < col("id_b"))
       .select(col("id").as("id_a"), col("id_b"),
-        round(VectorFunctions.dot(col("v"), col("v_b")) /
-          (col("n") * col("n_b")), 6).as("cosine"))
+        round6(VectorFunctions.dot(col("v"), col("v_b")) /
+          (col("n") * col("n_b"))).as("cosine"))
       .filter(col("cosine") >= tau)
   }
 
@@ -1148,8 +1137,8 @@ object Dedup {
       .filter(col("rep_a") < col("rep_b") ||
         (col("rep_a") === col("rep_b") && col("cnt_b") >= 2))
       .select(col("rep_a"), col("rep_b"),
-        round(VectorFunctions.dot(col("v_a"), col("v_b")) /
-          (col("n_a") * col("n_b")), 6).as("cosine"))
+        round6(VectorFunctions.dot(col("v_a"), col("v_b")) /
+          (col("n_a") * col("n_b"))).as("cosine"))
     // top-N class pairs by (cosine desc, smallest member pair asc)
     val topCls = classPairs
       .join(smallIds.select(col("rep").as("rep_a"), col("ids").as("ids_a")),

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
-import graft.functions.VectorFunctions.{asDouble, cosine, dot}
+import graft.functions.VectorFunctions.{asDouble, cosine, dot, round6}
 import graft.operators.Ckpt.CkptOps
 
 /** Similarity-graph operators for corpus curation.
@@ -22,18 +22,6 @@ import graft.operators.Ckpt.CkptOps
   * [[Dedup.connectedComponents]].
   */
 object Graph {
-  /** File-local shadow of `org.apache.spark.sql.functions.round`: every
-    * per-row score here rounds a DOUBLE column at scale 6, where the
-    * built-in pays BigDecimal per value (~430 ns — 1.7 s of the n²
-    * knn_graph row alone). Routes through the exact-equivalent fast
-    * HALF_UP expression (see [[graft.functions.expressions.RoundHalfUp]]
-    * and RoundHalfUpSpec's brute-forced equivalence). */
-  private def round(c: org.apache.spark.sql.Column, scale: Int): org.apache.spark.sql.Column = {
-    require(scale == 6, s"file-local fast round is scale-6 only (got $scale)")
-    graft.functions.VectorFunctions.round6(c)
-  }
-
-
   /** Exact k-nearest-neighbor graph over an embedding column: for every
     * vector, the `k` most cosine-similar OTHER vectors, as
     * (id, nb, rnk, score) with score rounded to 6 decimals and ties
@@ -80,7 +68,7 @@ object Graph {
     val scored = a.repartition(col("id")).crossJoin(b.repartition(col("nb")))
       .filter(col("id") =!= col("nb"))
       .select(col("id"), col("nb"),
-        round(dot(col("va"), col("vb")) / (col("na") * col("nb_n")), 6)
+        round6(dot(col("va"), col("vb")) / (col("na") * col("nb_n")))
           .as("score"))
     topKPerNode(scored, k)
   }
@@ -293,14 +281,14 @@ object Graph {
       .join(crep.select(col("id").as("nb"), col("v").as("vb"),
         col("n").as("nb_n")), "nb")
       .select(col("id").as("rep_a"), col("nb").as("rep_b"),
-        round(dot(col("va"), col("vb")) / (col("na") * col("nb_n")), 6)
+        round6(dot(col("va"), col("vb")) / (col("na") * col("nb_n")))
           .as("score"))
     // Members of a multi-member class are mutual neighbors at the
     // self-cosine (identical vectors share every bucket, so the
     // id-level formulation always paired them).
     val intra = classes.filter(col("cnt") >= 2)
       .select(col("rep").as("rep_a"), col("rep").as("rep_b"),
-        round(dot(col("v"), col("v")) / (col("n") * col("n")), 6)
+        round6(dot(col("v"), col("v")) / (col("n") * col("n")))
           .as("score"))
     // window 1: top-(k+1) neighbor classes per class. The kept id is
     // the neighbor's rep = its min member id, exactly the tie-break the
@@ -644,8 +632,8 @@ object Graph {
         .select(col("id"), col("degree"),
           coalesce(col("triangles"), lit(0L)).as("triangles"),
           when(col("degree") < 2, lit(0.0)).otherwise(
-            round(lit(2.0) * coalesce(col("triangles"), lit(0L)) /
-              (col("degree") * (col("degree") - 1)), 6)).as("clustering"))
+            round6(lit(2.0) * coalesce(col("triangles"), lit(0L)) /
+              (col("degree") * (col("degree") - 1)))).as("clustering"))
     } finally { e.unpersist(); () }
   }
 
@@ -700,9 +688,8 @@ object Graph {
     val total = per.agg(sum("ends").as("rows2m"))
     per.crossJoin(broadcast(total))
       .select(col("label"), col("internal_ends"), col("ends"),
-        round(col("internal_ends") / col("rows2m") -
-          (col("ends") / col("rows2m")) * (col("ends") / col("rows2m")),
-          6).as("q"))
+        round6(col("internal_ends") / col("rows2m") -
+          (col("ends") / col("rows2m")) * (col("ends") / col("rows2m"))).as("q"))
   }
 
   /** k-core: the maximal subgraph in which every surviving node keeps
@@ -1121,8 +1108,8 @@ object Graph {
           .select(col("id"), col("degree"),
             coalesce(col("triangles"), lit(0.0)).as("triangles"),
             when(col("degree") < 2, lit(0.0)).otherwise(
-              round(lit(2.0) * coalesce(col("triangles"), lit(0.0)) /
-                (col("degree") * (col("degree") - 1)), 6)).as("clustering"))
+              round6(lit(2.0) * coalesce(col("triangles"), lit(0.0)) /
+                (col("degree") * (col("degree") - 1)))).as("clustering"))
       } finally { fwd.unpersist(); () }
     } finally { e.unpersist(); () }
   }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.functions.VectorFunctions._
+import graft.functions.expressions.RoundHalfUp
 
 /** Exact and pruned top-k similarity search over an embeddings table
   * (`vec_id BIGINT, embedding ARRAY<FLOAT>, label INT`).
@@ -30,18 +31,6 @@ import graft.functions.VectorFunctions._
   * top-k set is deterministic across engines (ties broken by `vec_id`).
   */
 object Knn {
-  /** File-local shadow of `org.apache.spark.sql.functions.round`: every
-    * per-row score here rounds a DOUBLE column at scale 6, where the
-    * built-in pays BigDecimal per value (~430 ns — 1.7 s of the n²
-    * knn_graph row alone). Routes through the exact-equivalent fast
-    * HALF_UP expression (see [[graft.functions.expressions.RoundHalfUp]]
-    * and RoundHalfUpSpec's brute-forced equivalence). */
-  private def round(c: org.apache.spark.sql.Column, scale: Int): org.apache.spark.sql.Column = {
-    require(scale == 6, s"file-local fast round is scale-6 only (got $scale)")
-    graft.functions.VectorFunctions.round6(c)
-  }
-
-
   /** Internal block key from an optional user blocking column. Null
     * block values coalesce into ONE shared sentinel block (the column
     * is cast to string first so the sentinel types against any block
@@ -69,7 +58,7 @@ object Knn {
 
   private def scored(emb: DataFrame, query: DataFrame, score: (Column, Column) => Column): DataFrame =
     emb.crossJoin(broadcast(query))
-      .select(col("vec_id"), round(score(col("embedding"), col("qv")), 6).as("score"))
+      .select(col("vec_id"), round6(score(col("embedding"), col("qv"))).as("score"))
 
   /** Exact top-k by inner product (the reference's metric,
     * `src/backend/hnsw.rs:45`). */
@@ -112,7 +101,7 @@ object Knn {
     val centroidScores = centroidsByPos(emb, clusterCol)
       .join(broadcast(query), expr("true"))
       .groupBy(col("cluster"))
-      .agg(round(sum(col("cv") * element_at(col("qv"), col("pos") + 1)), 6).as("cscore"))
+      .agg(round6(sum(col("cv") * element_at(col("qv"), col("pos") + 1))).as("cscore"))
     val probed = centroidScores
       .orderBy(desc("cscore"), col("cluster"))
       .limit(nprobe)
@@ -158,7 +147,7 @@ object Knn {
     import org.apache.spark.sql.expressions.Window
     val scoredAll = emb.join(broadcast(queries))
       .select(col("qid"), col("vec_id"),
-        round(dot(col("embedding"), col("qv")), 6).as("score"))
+        round6(dot(col("embedding"), col("qv"))).as("score"))
     val w = Window.partitionBy("qid").orderBy(desc("score"), col("vec_id"))
     scoredAll.withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
@@ -175,7 +164,7 @@ object Knn {
       emb.join(broadcast(queries))
         .select(col("qid"),
           col("vec_id").as("id"),
-          round(dot(col("embedding"), col("qv")), 6).as("score")),
+          round6(dot(col("embedding"), col("qv"))).as("score")),
       k)
 
   /** Batched IVF top-k: the production ANN ladder's probe-then-scan,
@@ -199,7 +188,7 @@ object Knn {
     import spark.implicits._
     val cscore = centroidsByPos(emb, clusterCol).join(broadcast(queries))
       .groupBy(col("qid"), col("cluster"))
-      .agg(round(sum(col("cv") * element_at(col("qv"), col("pos") + 1)), 6)
+      .agg(round6(sum(col("cv") * element_at(col("qv"), col("pos") + 1)))
         .as("cscore"))
     // Q x K rows: the window is NOT a scale concern here (it ranks
     // centroids, not the corpus)
@@ -211,7 +200,7 @@ object Knn {
     topKPerQuery(
       emb.join(broadcast(probes), col(clusterCol) === col("cluster"))
         .select(col("qid"), col("vec_id").as("id"),
-          round(dot(col("embedding"), col("qv")), 6).as("score")),
+          round6(dot(col("embedding"), col("qv"))).as("score")),
       k)
   }
 
@@ -283,9 +272,8 @@ object Knn {
     val scored = a.join(cls, "blk")
       .filter(col("lbl_a") =!= col("lbl_c"))
       .select(col("id_a"), col("rep"),
-        round(dot(col("v_a"), col("v_c")) /
-          (col("n_a") * col("n_c")),
-          6).as("cosine"))
+        round6(dot(col("v_a"), col("v_c")) /
+          (col("n_a") * col("n_c"))).as("cosine"))
     // per-anchor top-k classes, expanded through each class's k
     // smallest ids, then the final bounded member-level top-k
     // (native TopKScored, r16 — same order/ties, no typed boundary)
@@ -319,7 +307,7 @@ object Knn {
       .select(col(groupCol).as("grp"), col("qid"),
         dot(col("embedding"), col("qv")).as("sim"))
       .groupBy("grp", "qid").agg(max("sim").as("best"))
-      .groupBy("grp").agg(round(sum("best"), 6).as("maxsim_score"))
+      .groupBy("grp").agg(round6(sum("best")).as("maxsim_score"))
       .orderBy(desc("maxsim_score"), col("grp"))
       .limit(k)
 
@@ -360,7 +348,7 @@ object Knn {
       .select("vec_id")
     emb.join(broadcast(cand), Seq("vec_id"), "left_semi")
       .select(col("vec_id"),
-        round(dot(col("embedding"), typedLit(q.toSeq)), 6).as("score"))
+        round6(dot(col("embedding"), typedLit(q.toSeq))).as("score"))
       .orderBy(desc("score"), col("vec_id"))
       .limit(k)
   }
@@ -431,13 +419,11 @@ object Knn {
       "10000-candidate bound (raise k-bounded retrieval upstream instead)")
     val spark = emb.sparkSession
     import spark.implicits._
-    def r6(d: Double): Double =
-      BigDecimal(d).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
     // distributed part: top-fetchK by rel, vectors carried through
     val cands: Array[(Long, Double, Array[Double])] = emb
       .crossJoin(broadcast(query))
       .select(col("vec_id"),
-        round(dot(col("embedding"), col("qv")), 6).as("rel"),
+        round6(dot(col("embedding"), col("qv"))).as("rel"),
         asDouble(col("embedding")).as("v"))
       .orderBy(desc("rel"), col("vec_id")).limit(fetchK)
       .as[(Long, Double, Seq[Double])].collect()
@@ -451,7 +437,7 @@ object Knn {
       var s = 0.0
       var i = 0
       while (i < nv(a).length) { s += nv(a)(i) * nv(b)(i); i += 1 }
-      r6(s)
+      RoundHalfUp.round(s, 6)
     }
     val n = cands.length
     val maxSimToSel = Array.fill(n)(Double.NegativeInfinity)
@@ -469,13 +455,12 @@ object Knn {
         }
         i += 1
       }
-      val next = (0 until n).filter(!taken(_))
-        .minBy(i => (-r6(lambda * cands(i)._2 - (1.0 - lambda) * maxSimToSel(i)),
-          cands(i)._1))
+      def mmr(i: Int): Double =
+        RoundHalfUp.round(lambda * cands(i)._2 - (1.0 - lambda) * maxSimToSel(i), 6)
+      val next = (0 until n).filter(!taken(_)).minBy(i => (-mmr(i), cands(i)._1))
       taken(next) = true
       last = next
-      out += ((rank, cands(next)._1,
-        r6(lambda * cands(next)._2 - (1.0 - lambda) * maxSimToSel(next))))
+      out += ((rank, cands(next)._1, mmr(next)))
     }
     out.toSeq.toDF("rank", "vec_id", "score")
   }

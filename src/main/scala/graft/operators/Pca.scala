@@ -6,6 +6,7 @@ import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 
 import graft.functions.VectorFunctions.{asDouble, dot}
+import graft.functions.expressions.RoundHalfUp
 
 /** Distributed PCA over an embedding column — the dimensionality-
   * reduction step in front of ANN compression (a PCA-rotated space
@@ -67,7 +68,7 @@ object Pca {
     val g = Array.ofDim[Double](d, d)
     var idx = 0
     for (i <- 0 until d; j <- i until d) {
-      val v = round6(tri(idx))
+      val v = RoundHalfUp.round(tri(idx), 6)
       g(i)(j) = v
       g(j)(i) = v
       idx += 1
@@ -78,7 +79,7 @@ object Pca {
     var cur = g
     for (_ <- 0 until numComponents) {
       val e = finalizeComponent(done, powerIterate(cur, powerIters))
-      val lam = round6(rayleigh(cur, e))
+      val lam = RoundHalfUp.round(rayleigh(cur, e), 6)
       comps += e
       done = done :+ e
       lams += lam
@@ -122,7 +123,7 @@ object Pca {
       while (i < d) { nrm += gw(i) * gw(i); i += 1 }
       nrm = math.sqrt(nrm)
       require(nrm > 0, "power iteration collapsed to zero — degenerate scatter")
-      w = gw.map(x => round9(x / nrm))
+      w = gw.map(x => RoundHalfUp.round(x / nrm, 9))
     }
     w
   }
@@ -148,7 +149,7 @@ object Pca {
       "component collapsed under orthogonalization — spectrum rank < numComponents")
     val fi = o.indexWhere(x => math.abs(x) > 1e-12)
     val sgn = if (fi >= 0 && o(fi) < 0) -1.0 else 1.0
-    o.map(x => round6(sgn * x / nrm))
+    o.map(x => RoundHalfUp.round(sgn * x / nrm, 6))
   }
 
   private def rayleigh(g: Array[Array[Double]], e: Array[Double]): Double = {
@@ -168,21 +169,8 @@ object Pca {
   private def deflate(g: Array[Array[Double]], e: Array[Double],
                       lam: Double): Array[Array[Double]] =
     Array.tabulate(g.length, g.length) { (i, j) =>
-      round6(g(i)(j) - lam * e(i) * e(j))
+      RoundHalfUp.round(g(i)(j) - lam * e(i) * e(j), 6)
     }
-
-  /** HALF_UP at 6 decimals — the same tie rule as Spark's `round`
-    * and DuckDB's `round` (half away from zero), NOT `math.rint`'s
-    * half-to-even, so driver-side values agree with both engines. */
-  private def round6(x: Double): Double = {
-    val r = BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-    if (r == 0.0) 0.0 else r // normalize -0.0
-  }
-
-  private def round9(x: Double): Double = {
-    val r = BigDecimal(x).setScale(9, BigDecimal.RoundingMode.HALF_UP).toDouble
-    if (r == 0.0) 0.0 else r
-  }
 
   /** Upper-triangle centered scatter aggregator: buffer = d(d+1)/2
     * running sums of (v_i - mu_i)(v_j - mu_j). Map-side combine keeps

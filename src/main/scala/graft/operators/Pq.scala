@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.functions.VectorFunctions
-import graft.functions.VectorFunctions.asDouble
+import graft.functions.VectorFunctions.{asDouble, round6}
 
 /** Product quantization (PQ) for vector search at the 100 TB tier
   * (Jégou et al. 2011): split each `m·dsub`-dim vector into `m`
@@ -29,15 +29,6 @@ import graft.functions.VectorFunctions.asDouble
   * reproduces encode + ADC bit-for-bit from the seed codebooks.
   */
 object Pq {
-  /** File-local shadow of `org.apache.spark.sql.functions.round`:
-    * per-row DOUBLE scores at scale 6 route through the fast HALF_UP
-    * expression (exact-equivalent; see RoundHalfUp / RoundHalfUpSpec). */
-  private def round(c: org.apache.spark.sql.Column, scale: Int): org.apache.spark.sql.Column = {
-    require(scale == 6, s"file-local fast round is scale-6 only (got $scale)")
-    graft.functions.VectorFunctions.round6(c)
-  }
-
-
   /** Trained PQ model: `cents(sub)(code)` is a `dsub`-dim centroid. */
   case class Codebooks(m: Int, k: Int, dsub: Int,
       cents: Array[Array[Array[Double]]]) {
@@ -158,7 +149,7 @@ object Pq {
   def adcTopK(encoded: DataFrame, idCol: String, codesCol: String,
       cb: Codebooks, q: Array[Double], k: Int): DataFrame =
     encoded.select(col(idCol),
-        round(adcScore(col(codesCol), adcLut(cb, q)), 6).as("adc_score"))
+        round6(adcScore(col(codesCol), adcLut(cb, q))).as("adc_score"))
       .orderBy(desc("adc_score"), col(idCol))
       .limit(k)
 
@@ -203,7 +194,7 @@ object Pq {
     val probed = cents
       .join(broadcast(qdf), expr("true"))
       .groupBy("__cl")
-      .agg(round(sum(col("cv") * element_at(col("qv"), col("pos") + 1)), 6).as("cscore"))
+      .agg(round6(sum(col("cv") * element_at(col("qv"), col("pos") + 1))).as("cscore"))
       .orderBy(desc("cscore"), col("__cl")).limit(nprobe)
       .select(col("__cl"))
     val pruned = assigned
@@ -220,7 +211,7 @@ object Pq {
     // 3. exact re-rank of the candidate set
     assigned.join(broadcast(candidates), Seq(idCol), "left_semi")
       .select(col(idCol),
-        round(VectorFunctions.dot(col(vecCol), typedLit(q.toSeq)), 6).as("score"))
+        round6(VectorFunctions.dot(col(vecCol), typedLit(q.toSeq))).as("score"))
       .orderBy(desc("score"), col(idCol))
       .limit(k)
   }

@@ -8,6 +8,7 @@ import org.apache.spark.sql.functions._
 import graft.embedding.{EmbeddingProvider, ModelRegistry}
 import graft.filter.MetadataFilterDsl
 import graft.functions.VectorFunctions
+import graft.functions.VectorFunctions.round6
 import graft.model.{Chunk, IndexMeta}
 import graft.operators.{BM25, SmartChunker}
 
@@ -38,15 +39,6 @@ import graft.operators.{BM25, SmartChunker}
   * per-query).
   */
 object Index {
-  /** File-local shadow of `org.apache.spark.sql.functions.round`:
-    * per-row DOUBLE scores at scale 6 route through the fast HALF_UP
-    * expression (exact-equivalent; see RoundHalfUp / RoundHalfUpSpec). */
-  private def round(c: org.apache.spark.sql.Column, scale: Int): org.apache.spark.sql.Column = {
-    require(scale == 6, s"file-local fast round is scale-6 only (got $scale)")
-    graft.functions.VectorFunctions.round6(c)
-  }
-
-
   /** Pool for submitting independent Spark jobs concurrently (writes of
     * unrelated tables). Spark schedules jobs from multiple threads fine;
     * on a busy cluster this overlaps the small jobs' scheduling + commit
@@ -549,7 +541,7 @@ object Index {
       .join(passages.select("id"), Seq("id"), "left_semi")
     val scored = emb.crossJoin(broadcast(qdf))
       .select(col("id"),
-        round(VectorFunctions.dot(col("embedding"), col("qv")), 6).as("vscore"))
+        round6(VectorFunctions.dot(col("embedding"), col("qv"))).as("vscore"))
 
     val ranked =
       if (!hybrid) scored.orderBy(desc("vscore"), col("id"))
@@ -561,7 +553,7 @@ object Index {
         val bmScores = bm25ScoresFromStats(spark, dir, tf, query)
         val bmAll = passages.select(col("id"))
           .join(bmScores, Seq("id"), "left")
-          .select(col("id"), round(coalesce(col("score"), lit(0.0)), 6).as("bscore"))
+          .select(col("id"), round6(coalesce(col("score"), lit(0.0))).as("bscore"))
         val bmTop = bmAll.filter(col("bscore") > 0)
           .orderBy(desc("bscore"), col("id")).limit(fetchK).select("id")
         val cand = vec.join(bmTop, Seq("id"), "full_outer")
@@ -570,11 +562,11 @@ object Index {
         val bstats = bmAll.agg(min("bscore").as("bmin"), max("bscore").as("bmax"))
         cand.join(bmAll, Seq("id"), "left")
           .crossJoin(broadcast(vstats)).crossJoin(broadcast(bstats))
-          .select(col("id"), round(
+          .select(col("id"), round6(
             lit(alpha) * (col("vscore") - col("vmin")) /
               greatest(col("vmax") - col("vmin"), lit(1e-6)) +
             lit(1.0 - alpha) * (coalesce(col("bscore"), lit(0.0)) - col("bmin")) /
-              greatest(col("bmax") - col("bmin"), lit(1e-6)), 6).as("score"))
+              greatest(col("bmax") - col("bmin"), lit(1e-6))).as("score"))
           .orderBy(desc("score"), col("id")).limit(topK)
       }
 
@@ -633,7 +625,7 @@ object Index {
     import spark.implicits._
     val tf = spark.read.parquet(s"$dir/bm25_tf")
     val topIds = bm25ScoresFromStats(spark, dir, tf, query)
-      .select(col("id"), round(col("score"), 6).as("score"))
+      .select(col("id"), round6(col("score")).as("score"))
       .orderBy(desc("score"), col("id")).limit(fromTopK)
       .select("id")
     val texts = spark.read.parquet(s"$dir/passages")
@@ -723,7 +715,7 @@ object Index {
     val base = spark.read.parquet(s"$dir/embeddings_ivf")
     filter.fold(base)(base.filter)
       .select(col(idCol),
-        round(VectorFunctions.dot(col("embedding"), qv), 6).as("score"))
+        round6(VectorFunctions.dot(col("embedding"), qv)).as("score"))
       .orderBy(desc("score"), col(idCol))
       .limit(k)
   }
@@ -740,7 +732,7 @@ object Index {
     val probed = spark.read.parquet(s"$dir/centroids")
       .join(broadcast(qdf), expr("true"))
       .groupBy("centroid_id")
-      .agg(round(sum(col("cv") * element_at(col("qv"), col("pos") + 1)), 6).as("cscore"))
+      .agg(round6(sum(col("cv") * element_at(col("qv"), col("pos") + 1))).as("cscore"))
       .orderBy(desc("cscore"), col("centroid_id"))
       .limit(nprobe)
       .select("centroid_id")
@@ -749,7 +741,7 @@ object Index {
       .filter(col("centroid_id").isin(probed.map(Integer.valueOf).toSeq: _*))
     pruned.crossJoin(broadcast(qdf))
       .select(col(idCol),
-        round(VectorFunctions.dot(col("embedding"), col("qv")), 6).as("score"))
+        round6(VectorFunctions.dot(col("embedding"), col("qv"))).as("score"))
       .orderBy(desc("score"), col(idCol))
       .limit(k)
   }
@@ -884,7 +876,7 @@ object Index {
       Some(spark.read.parquet(s"$dir/centroids")
         .join(broadcast(qdf), expr("true"))
         .groupBy("centroid_id")
-        .agg(round(sum(col("cv") * element_at(col("qv"), col("pos") + 1)), 6).as("cscore"))
+        .agg(round6(sum(col("cv") * element_at(col("qv"), col("pos") + 1))).as("cscore"))
         .orderBy(desc("cscore"), col("centroid_id"))
         .limit(nprobe)
         .collect().map(_.getInt(0)).toSeq)
@@ -906,7 +898,7 @@ object Index {
       if (haveIvf) s"$dir/embeddings_ivf" else s"$dir/embeddings"))
     vectors.join(broadcast(candidates), Seq(idCol), "left_semi")
       .select(col(idCol),
-        round(VectorFunctions.dot(col("embedding"), typedLit(q.toSeq)), 6).as("score"))
+        round6(VectorFunctions.dot(col("embedding"), typedLit(q.toSeq))).as("score"))
       .orderBy(desc("score"), col(idCol))
       .limit(k)
   }
@@ -959,7 +951,7 @@ object Index {
     spark.read.parquet(if (haveIvf) s"$dir/embeddings_ivf" else s"$dir/embeddings")
       .join(broadcast(cand), Seq(idCol), "left_semi")
       .select(col(idCol),
-        round(VectorFunctions.dot(col("embedding"), typedLit(q.toSeq)), 6).as("score"))
+        round6(VectorFunctions.dot(col("embedding"), typedLit(q.toSeq))).as("score"))
       .orderBy(desc("score"), col(idCol))
       .limit(k)
   }

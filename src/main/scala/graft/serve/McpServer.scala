@@ -34,40 +34,11 @@ final class McpServer(spark: SparkSession, warehouse: String,
 
   // Warm tier (opt-in, the SearchServer stance): one driver-resident
   // layout per index, loaded on FIRST use (MCP requests name their
-  // index per call, unlike the single-index HTTP server). None after a
-  // failed load = that index stays on the Spark path (over the RAM
-  // budget / no persisted embeddings / corrupt table) — a routing
-  // decision surfaced on stderr, never a protocol error, so ANY load
-  // failure is caught (NonFatal), not just argument checks.
-  //
-  // Staleness contract: entries are keyed by the directory's content
-  // FINGERPRINT (a stat walk per call, microseconds). An index rebuilt
-  // or updated on disk reloads instead of serving the stale snapshot,
-  // and an index that failed to load but later gains persisted
-  // embeddings gets a fresh load attempt rather than being pinned to
-  // the Spark path for the session.
-  private val warmCache =
-    scala.collection.mutable.HashMap.empty[String, (Long, Option[WarmIndex])]
-  private def warmFor(dir: String): Option[WarmIndex] = {
-    if (!warm) return None
-    val fp = WarmIndex.fingerprint(dir)
-    warmCache.get(dir) match {
-      case Some((cachedFp, cached)) if cachedFp == fp => cached
-      case stale =>
-        if (stale.isDefined)
-          System.err.println(s"[warm] $dir changed on disk — reloading")
-        val loaded =
-          try Some(WarmIndex.load(spark, dir, provider))
-          catch {
-            case scala.util.control.NonFatal(e) =>
-              System.err.println(
-                s"[warm] $dir stays on the Spark path: ${e.getMessage}")
-              None
-          }
-        warmCache.put(dir, (fp, loaded))
-        loaded
-    }
-  }
+  // index per call, unlike the single-index HTTP server). A failed load
+  // keeps that index on the Spark path until it changes on disk — a
+  // routing decision surfaced on stderr, never a protocol error (see
+  // [[Router]]).
+  private val router = new Router(spark, provider, warm)
 
   /** Protocol revisions whose initialize/tools surface we implement;
     * an unknown requested version gets our latest supported one back
@@ -130,6 +101,15 @@ final class McpServer(spark: SparkSession, warehouse: String,
     "instructions" -> ("Graft vector database MCP server. Use 'search' to find " +
       "relevant documents and 'list_indexes' to see available indexes."))
 
+  /** The `search` tool's argument schema; also the keys
+    * [[doSearch]] passes to the request parser. */
+  private val searchProperties: Map[String, Any] = Map(
+    "query" -> Map("type" -> "string", "description" -> "The search query text"),
+    "index" -> Map("type" -> "string", "description" -> "Name of the index to search"),
+    "top_k" -> Map("type" -> "integer", "description" -> "Number of results to return", "default" -> 5L),
+    "filter" -> Map("type" -> "string", "description" -> "Metadata filter expression"),
+    "hybrid" -> Map("type" -> "boolean", "description" -> "Enable hybrid vector + BM25 search", "default" -> false))
+
   /** Tool descriptors with input schemas, mirroring `SearchInput` /
     * `ListIndexesInput` (`mcp.rs:42-75`). */
   private def toolList: List[Map[String, Any]] = List(
@@ -139,12 +119,7 @@ final class McpServer(spark: SparkSession, warehouse: String,
         "semantic similarity. Returns relevant passages with scores and source metadata."),
       "inputSchema" -> Map(
         "type" -> "object",
-        "properties" -> Map(
-          "query" -> Map("type" -> "string", "description" -> "The search query text"),
-          "index" -> Map("type" -> "string", "description" -> "Name of the index to search"),
-          "top_k" -> Map("type" -> "integer", "description" -> "Number of results to return", "default" -> 5L),
-          "filter" -> Map("type" -> "string", "description" -> "Metadata filter expression"),
-          "hybrid" -> Map("type" -> "boolean", "description" -> "Enable hybrid vector + BM25 search", "default" -> false)),
+        "properties" -> searchProperties,
         "required" -> List("query"))),
     Map(
       "name" -> "list_indexes",
@@ -186,35 +161,19 @@ final class McpServer(spark: SparkSession, warehouse: String,
   /** `search` tool: resolve index, run the full read path, format as the
     * reference's markdown (`mcp.rs:200-227`). */
   private def doSearch(args: Map[String, Any]): String = {
-    val query = args.get("query").map(String.valueOf).getOrElse(
-      throw new IllegalArgumentException("missing required argument 'query'"))
-    val indexName = args.get("index").map(String.valueOf).orElse(defaultIndex)
+    // the HTTP-only fields (ann, nprobe, rerank, hybrid_alpha) are not
+    // in the schema and keep their defaults here
+    val req = SearchRequest.parse(args.filter { case (k, _) => searchProperties.contains(k) })
+      .fold(msg => throw new IllegalArgumentException(msg), identity)
+    val indexName = req.index.orElse(defaultIndex)
       .getOrElse(throw new IllegalArgumentException(
         "No index specified. Use --index or provide 'index' in the request."))
     val dir = Index.locate(warehouse, indexName).getOrElse(
       throw new IllegalArgumentException(s"no index '$indexName' in $warehouse"))
-    val topK = args.get("top_k") match {
-      case Some(n: Long) => n.toInt
-      case Some(d: Double) => d.toInt
-      case _ => 5
-    }
-    val hybrid = args.get("hybrid").contains(true)
-    val filter = args.get("filter").map(String.valueOf)
-    // warm path for plain/filtered/hybrid requests — results pinned
-    // identical to the Spark path (the ServerSpec parity contract);
-    // filters evaluate in-process over the resident metadata
-    val rows: Seq[(String, Double, String, String)] = warmFor(dir) match {
-      case Some(wi) if !hybrid || wi.hasBm25 =>
-        if (hybrid) wi.searchHybrid(query, topK, filterStr = filter)
-        else wi.search(query, topK, filterStr = filter)
-      case _ => Index.search(spark, dir, query, provider,
-          topK = topK, filterStr = filter, hybrid = hybrid).collect()
-        .map(r => (r.getString(0), r.getDouble(1),
-          r.getString(2), r.getString(3))).toSeq
-    }
+    val (rows, _) = router.search(dir, req)
 
     val b = new StringBuilder
-    b ++= s"## Search Results for \"$query\"\n\n"
+    b ++= s"## Search Results for \"${req.query}\"\n\n"
     b ++= s"Found ${rows.length} results in index '$indexName'.\n\n"
     rows.zipWithIndex.foreach { case ((_, score, text, source), i) =>
       b ++= f"### Result ${i + 1} (score: $score%.4f)\n\n"

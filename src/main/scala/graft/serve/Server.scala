@@ -8,6 +8,7 @@ import org.apache.spark.sql.SparkSession
 
 import graft.embedding.EmbeddingProvider
 import graft.pipeline.Index
+import graft.util.Json
 
 /** Thin HTTP front end over the query layer — the reference's `serve`
   * surface (`src/cli/serve.rs:90-96,222-311`) re-expressed as a handler
@@ -15,11 +16,9 @@ import graft.pipeline.Index
   *
   *   POST /search   {"query": "...", "top_k": 5, "filter": "...",
   *                   "hybrid": true, "hybrid_alpha": 0.7}
-  *
-  * `hybrid_alpha` is the reference's request field name
-  * (`src/cli/serve.rs:232-233`); `alpha` is accepted as an alias for
-  * earlier clients of this server, with `hybrid_alpha` winning when
-  * both are present.
+  *                  or, on the PQ tier, {"query": "...", "ann": true,
+  *                   "nprobe": 4, "rerank": 50}; field checks in
+  *                  [[SearchRequest]], a request error is a 400
   *   GET  /health   {"status":"ok"}
   *   GET  /info     index meta JSON
   *   GET  /indexes  names under the warehouse root
@@ -48,63 +47,15 @@ final class SearchServer(spark: SparkSession, warehouse: String, indexName: Stri
     .getOrElse(throw new IllegalArgumentException(s"no index '$indexName' in $warehouse"))
 
   // Warm tier (opt-in): the index layout loaded into driver arrays so
-  // vector/hybrid/filtered requests run zero Spark jobs — the
-  // per-request latency answer to the reference's in-process walk (see
-  // [[WarmIndex]]). The initial load fails loudly (index too big for
-  // the driver-RAM bound, no persisted embeddings) at CONSTRUCTION,
-  // not first request.
-  @volatile private var warmIndex: Option[WarmIndex] =
-    if (warm) Some(WarmIndex.load(spark, indexDir, provider)) else None
-
-  // Staleness contract: WarmIndex is an immutable snapshot, but the
-  // index DIRECTORY can move under a long-lived server (Index.update /
-  // appendIvf) — serving the snapshot then means silently stale
-  // results. Every warm-routed request probes the directory
-  // fingerprint (a stat walk, microseconds) and RELOADS on drift; a
-  // reload that now fails (index grew past the driver budget, table
-  // mid-write) routes this and subsequent requests to the Spark path —
-  // loud on stderr, never stale.
-  private def currentWarm(): Option[WarmIndex] = warmIndex match {
-    case None => None
-    case some @ Some(wi) =>
-      val fp = WarmIndex.fingerprint(indexDir)
-      if (fp == wi.fingerprint) some
-      else synchronized {
-        // re-check under the lock: another request may have reloaded
-        val cur = warmIndex
-        if (cur.exists(_.fingerprint == fp)) cur
-        else {
-          System.err.println(s"[warm] $indexDir changed on disk — reloading")
-          try {
-            val fresh = WarmIndex.load(spark, indexDir, provider)
-            warmIndex = Some(fresh)
-            warmIndex
-          } catch {
-            case scala.util.control.NonFatal(e) =>
-              System.err.println(
-                s"[warm] reload failed, serving from the Spark path: ${e.getMessage}")
-              warmIndex = None
-              None
-          }
-        }
-      }
-  }
+  // requests run zero Spark jobs — the per-request latency answer to
+  // the reference's in-process walk (see [[WarmIndex]]; staleness and
+  // reload policy in [[Router]]). The initial load fails loudly (index
+  // too big for the driver-RAM bound, no persisted embeddings) at
+  // CONSTRUCTION, not first request.
+  private val router = new Router(spark, provider, warm)
+  if (warm) router.preload(indexDir)
 
   def boundPort: Int = server.getAddress.getPort
-
-  // minimal JSON field pulls for the flat request object
-  private def jsonStr(body: String, k: String): Option[String] =
-    ("\"" + k + "\"\\s*:\\s*\"((?:[^\"\\\\]|\\\\.)*)\"").r
-      .findFirstMatchIn(body).map(_.group(1).replace("\\\"", "\""))
-  private def jsonNum(body: String, k: String): Option[Double] =
-    ("\"" + k + "\"\\s*:\\s*(-?[0-9.]+)").r.findFirstMatchIn(body).map(_.group(1).toDouble)
-  private def jsonBool(body: String, k: String): Option[Boolean] =
-    ("\"" + k + "\"\\s*:\\s*(true|false)").r.findFirstMatchIn(body).map(_.group(1) == "true")
-
-  private def q(s: String): String = "\"" + s.flatMap {
-    case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
-  } + "\""
 
   private def respond(ex: HttpExchange, code: Int, body: String): Unit = {
     val bytes = body.getBytes(StandardCharsets.UTF_8)
@@ -114,6 +65,9 @@ final class SearchServer(spark: SparkSession, warehouse: String, indexName: Stri
     ex.close()
   }
 
+  private def error(ex: HttpExchange, code: Int, msg: String): Unit =
+    respond(ex, code, Json.write(Map("error" -> msg)))
+
   server.createContext("/health", (ex: HttpExchange) =>
     respond(ex, 200, """{"status":"ok"}"""))
 
@@ -121,83 +75,40 @@ final class SearchServer(spark: SparkSession, warehouse: String, indexName: Stri
     respond(ex, 200, Index.readMeta(indexDir).toJson))
 
   server.createContext("/indexes", (ex: HttpExchange) =>
-    respond(ex, 200, Index.listIndexes(warehouse)
-      .map { case (n, m) => s"""{"name":${q(n)},"passage_count":${m.passageCount}}""" }
-      .mkString("[", ",", "]")))
+    respond(ex, 200, Json.write(Index.listIndexes(warehouse)
+      .map { case (n, m) => Map("name" -> n, "passage_count" -> m.passageCount) })))
 
   server.createContext("/search", (ex: HttpExchange) => {
-    if (ex.getRequestMethod != "POST") respond(ex, 405, """{"error":"POST only"}""")
+    if (ex.getRequestMethod != "POST") error(ex, 405, "POST only")
     else try {
       val body = new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)
-      jsonStr(body, "query") match {
-        case None => respond(ex, 400, """{"error":"missing query"}""")
-        case Some(query) =>
+      val parsed =
+        try SearchRequest.parse(Json.parseObject(body))
+        catch { case e: Exception => Left(s"bad request body: ${e.getMessage}") }
+      parsed match {
+        case Left(msg) => error(ex, 400, msg)
+        case Right(req) =>
           try {
-            val topK = jsonNum(body, "top_k").map(_.toInt).getOrElse(5)
-            val filterStr = jsonStr(body, "filter")
-            val hybrid = jsonBool(body, "hybrid").getOrElse(false)
             val t0 = System.nanoTime()
-            // warm tier serves the plain vector path, the FILTERED
-            // path (in-process DSL evaluation over resident metadata)
-            // AND — when the index persisted its bm25 tables within
-            // the driver budget — the hybrid path, all with zero Spark
-            // jobs; results are pinned identical to the Spark path
-            // (ServerSpec).
-            val alpha = jsonNum(body, "hybrid_alpha")
-              .orElse(jsonNum(body, "alpha")).getOrElse(0.7)
-            val nprobeReq = jsonNum(body, "nprobe").map(_.toInt)
-            // "ann": true routes to the PQ tier (warm ADC + exact
-            // re-rank in-process when resident; Index.searchAnn
-            // otherwise) — the compressed-index serving mode. ANN has
-            // no hybrid arm on either tier, so the combination is a
-            // request error, not a silent drop of one flag.
-            val ann = jsonBool(body, "ann").getOrElse(false)
-            if (ann && hybrid)
-              respond(ex, 400, """{"error":"ann has no hybrid tier"}""")
-            else {
-            val rerankReq = jsonNum(body, "rerank").map(_.toInt)
-            def rows(rs: Seq[(String, Double, String, String)]): String =
-              rs.map { case (id, score, text, source) =>
-                s"""{"id":${q(id)},"score":$score,""" +
-                  s""""text":${q(text)},"source":${q(source)}}"""
-              }.mkString("[", ",", "]")
-            def sparkRows(df: org.apache.spark.sql.DataFrame): String =
-              df.collect().map { r =>
-                s"""{"id":${q(r.getString(0))},"score":${r.getDouble(1)},""" +
-                  s""""text":${q(r.getString(2))},"source":${q(r.getString(3))}}"""
-              }.mkString("[", ",", "]")
-            val (results, tier) = currentWarm() match {
-              case Some(wi) if ann && wi.hasPq =>
-                (rows(wi.searchAnn(query, topK, nprobeReq.getOrElse(4),
-                  rerankReq.getOrElse(50), filterStr)), "warm")
-              case _ if ann =>
-                (sparkRows(Index.searchAnn(spark, indexDir, query, provider,
-                  topK = topK, nprobe = nprobeReq.getOrElse(4),
-                  rerank = rerankReq.getOrElse(50), filterStr = filterStr)),
-                  "spark")
-              case Some(wi) if !hybrid || wi.hasBm25 =>
-                val nprobe = nprobeReq.getOrElse(Int.MaxValue)
-                (rows(if (hybrid)
-                    wi.searchHybrid(query, topK, alpha, nprobe, filterStr)
-                  else wi.search(query, topK, nprobe, filterStr)), "warm")
-              case _ =>
-                (sparkRows(Index.search(spark, indexDir, query, provider,
-                  topK = topK, filterStr = filterStr, hybrid = hybrid,
-                  alpha = alpha)), "spark")
-            }
+            val (rows, tier) = router.search(indexDir, req)
             val tookMs = (System.nanoTime() - t0) / 1e6
+            // scores print through Double.toString, not Json.write (which
+            // writes whole doubles as integers)
+            val results = rows.map { case (id, score, text, source) =>
+              s"""{"id":${Json.write(id)},"score":$score,""" +
+                s""""text":${Json.write(text)},"source":${Json.write(source)}}"""
+            }.mkString("[", ",", "]")
             // nprobe only prunes on the warm tier for PLAIN requests
             // (the ANN path honors it on both tiers); a Spark-path
             // response to a request that asked for it says so instead
             // of silently serving exact results under a pruning knob
             val note =
-              if (tier == "spark" && nprobeReq.isDefined && !ann)
+              if (tier == "spark" && req.nprobe.isDefined && !req.ann)
                 s""","note":"nprobe_ignored"""" else ""
             respond(ex, 200,
-              s"""{"results":$results,"took_ms":$tookMs,"tier":${q(tier)}$note}""")
-            }
+              s"""{"results":$results,"took_ms":$tookMs,"tier":"$tier"$note}""")
           } catch {
-            case e: Exception => respond(ex, 500, s"""{"error":${q(String.valueOf(e.getMessage))}}""")
+            case e: Exception => error(ex, 500, String.valueOf(e.getMessage))
           }
       }
     } finally {

@@ -1,44 +1,12 @@
 package graft.serve
 
-import java.math.{BigDecimal => JBigDecimal, RoundingMode}
-
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 
 import graft.embedding.EmbeddingProvider
+import graft.functions.expressions.RoundHalfUp
 import graft.pipeline.Index
 
-/** Driver-resident warm serving tier — the per-request LATENCY answer
-  * to the reference's in-process index walk (`src/index/searcher.rs`:
-  * the whole HNSW lives in one process's RAM and a query is a few
-  * thousand distance evaluations, no scheduler in the path). The
-  * batch-parity [[graft.pipeline.Index.search]] plan is correct but
-  * pays Spark's per-job floor (~100s of ms) per request; this tier
-  * loads the index ONCE into driver arrays and serves each request
-  * with zero Spark jobs:
-  *
-  *   - centroid ranking is a driver-side loop over the (<= C, dims)
-  *     centroid matrix (the same rank-then-prune [[Index.searchIvf]]
-  *     runs as a plan),
-  *   - the nprobe winning buckets are scanned in-process (flat-major
-  *     float arrays, one fused multiply-add loop per vector),
-  *   - passages resolve from a driver HashMap.
-  *
-  * Parity is EXACT, not approximate-by-reimplementation: scores are
-  * the same left-to-right Double summation as the codegen'd
-  * [[graft.functions.expressions.DotProduct]] with the same
-  * `round(_, 6)` (java BigDecimal.valueOf — Spark's Round semantics
-  * for doubles) and the same (score desc, id asc) tie-break, so at
-  * `nprobe >= numClusters` (or a flat layout) the results equal
-  * [[Index.search]]'s non-hybrid unfiltered path row for row —
-  * ServerSpec pins that equality through the HTTP surface.
-  *
-  * This is deliberately a BOUNDED tier, the reference's own regime (a
-  * RAM-resident single-node index): [[WarmIndex.load]] refuses
-  * loudly above `maxVectors` instead of silently OOMing the driver —
-  * indexes past the bound stay on the Spark path, which scales with
-  * the cluster. Loading pays one Spark collect of the embeddings +
-  * passages tables; every request after is scheduler-free. */
 /** Driver-resident BM25 statistics for [[WarmIndex]]'s hybrid path:
   * the persisted bm25_tf/dl/df/g tables as in-memory postings — the
   * same RAM-resident shape the reference's scorer holds
@@ -62,6 +30,68 @@ private[serve] final class WarmPq(
     val cb: graft.operators.Pq.Codebooks,
     val bucketCodes: Array[Array[Int]])
 
+/** One ranked row; `bucket`/`row` locate its vector for the ANN
+  * re-rank (-1 where unused). */
+private[serve] final case class Hit(id: String, score: Double, bucket: Int, row: Int)
+
+/** Bounded top-k in (score desc, id asc) order — [[Index.search]]'s
+  * `orderBy(desc(score), id).limit(k)` — the one ranking every warm path
+  * uses. The heap root is the WORST kept row. */
+private[serve] final class TopK(k: Int) {
+  private val worstFirst: java.util.Comparator[Hit] = (a, b) => {
+    val c = java.lang.Double.compare(a.score, b.score)
+    if (c != 0) c else b.id.compareTo(a.id)
+  }
+  private val heap = new java.util.PriorityQueue[Hit](worstFirst)
+
+  def offer(id: String, score: Double, bucket: Int = -1, row: Int = -1): Unit = {
+    val h = Hit(id, score, bucket, row)
+    if (heap.size < k) heap.add(h)
+    else if (!heap.isEmpty && worstFirst.compare(h, heap.peek()) > 0) {
+      heap.poll(); heap.add(h)
+    }
+  }
+
+  /** The kept rows, best first; empties the heap. */
+  def drain(): Array[Hit] = {
+    val out = new Array[Hit](heap.size)
+    var i = out.length - 1
+    while (i >= 0) { out(i) = heap.poll(); i -= 1 }
+    out
+  }
+}
+
+/** Driver-resident warm serving tier — the per-request LATENCY answer
+  * to the reference's in-process index walk (`src/index/searcher.rs`:
+  * the whole HNSW lives in one process's RAM and a query is a few
+  * thousand distance evaluations, no scheduler in the path). The
+  * batch-parity [[graft.pipeline.Index.search]] plan is correct but
+  * pays Spark's per-job floor (~100s of ms) per request; this tier
+  * loads the index ONCE into driver arrays and serves each request
+  * with zero Spark jobs:
+  *
+  *   - centroid ranking is a driver-side loop over the (<= C, dims)
+  *     centroid matrix (the same rank-then-prune [[Index.searchIvf]]
+  *     runs as a plan),
+  *   - the nprobe winning buckets are scanned in-process (flat-major
+  *     float arrays, one fused multiply-add loop per vector),
+  *   - passages resolve from a driver HashMap.
+  *
+  * Parity is EXACT, not approximate-by-reimplementation: scores are
+  * the same left-to-right Double summation as the codegen'd
+  * [[graft.functions.expressions.DotProduct]] with the same HALF_UP
+  * round to 6 ([[RoundHalfUp.round]], the function the Spark path's
+  * expression evaluates) and the same (score desc, id asc) tie-break
+  * ([[TopK]]), so at `nprobe >= numClusters` (or a flat layout) the
+  * results equal [[Index.search]]'s non-hybrid unfiltered path row for
+  * row — ServerSpec pins that equality through the HTTP surface.
+  *
+  * This is deliberately a BOUNDED tier, the reference's own regime (a
+  * RAM-resident single-node index): [[WarmIndex.load]] refuses
+  * loudly above `maxVectors` instead of silently OOMing the driver —
+  * indexes past the bound stay on the Spark path, which scales with
+  * the cluster. Loading pays one Spark collect of the embeddings +
+  * passages tables; every request after is scheduler-free. */
 final class WarmIndex private (
     val dims: Int,
     centroids: Array[Array[Double]],
@@ -82,65 +112,47 @@ final class WarmIndex private (
   def hasBm25: Boolean = bm25.isDefined
   def hasPq: Boolean = pq.isDefined
 
-  // Spark Round semantics for DoubleType: BigDecimal.valueOf (the
-  // Double.toString form, NOT the DECIMAL128 constructor) + HALF_UP
-  private def round6(v: Double): Double =
-    JBigDecimal.valueOf(v).setScale(6, RoundingMode.HALF_UP).doubleValue()
-
-  // "better" = higher score, ties to the SMALLER id; heap root = the
-  // worst kept row (so the root comparator is the reverse)
-  private val ord = new java.util.Comparator[(String, Double)] {
-    def compare(a: (String, Double), b: (String, Double)): Int = {
-      val c = java.lang.Double.compare(a._2, b._2)
-      if (c != 0) c else b._1.compareTo(a._1)
-    }
+  /** Left-to-right dot of the resident float vector at `base` with `qv`. */
+  private def dotAt(vecs: Array[Float], base: Int, qv: Array[Double]): Double = {
+    var s = 0.0
+    var i = 0
+    while (i < dims) { s += vecs(base + i).toDouble * qv(i); i += 1 }
+    s
   }
 
-  /** Top-k (id, round6(dot)) over the probed buckets, (score desc, id
-    * asc) — the [[Index.search]] `scored.orderBy.limit` semantics.
-    * `allowed` (null = unfiltered) restricts the scan to a filter's
-    * surviving ids, mirroring the Spark path's pre-scoring semi-join. */
+  /** The buckets a request scans: all of them, or the `nprobe` best
+    * centroids by round6(dot) desc, centroid id asc — the ranked-centroid
+    * selection of [[Index.searchIvf]] and [[Index.searchPq]], so the
+    * probe CHOICE matches the Spark plan's. Bucket positions are in
+    * centroid id order. */
+  private def probe(qv: Array[Double], nprobe: Int): Seq[Int] =
+    if (nprobe >= numClusters || centroids.isEmpty) bucketIds.indices
+    else bucketIds.indices.map { c =>
+        var s = 0.0
+        var i = 0
+        val cv = centroids(c)
+        while (i < dims) { s += cv(i) * qv(i); i += 1 }
+        (c, RoundHalfUp.round(s, 6))
+      }.sortBy { case (c, s) => (-s, c) }.take(nprobe).map(_._1)
+
+  /** Top-k (id, round6(dot)) over the probed buckets — the
+    * [[Index.search]] `scored.orderBy.limit` semantics. `allowed` (null
+    * = unfiltered) restricts the scan to a filter's surviving ids,
+    * mirroring the Spark path's pre-scoring semi-join. */
   private def topVec(qv: Array[Double], k: Int, nprobe: Int,
-                     allowed: java.util.HashSet[String] = null): Seq[(String, Double)] = {
-    val probe: Seq[Int] =
-      if (nprobe >= numClusters || centroids.isEmpty) bucketIds.indices
-      else {
-        // rank centroids by dot desc, centroid id ascending on ties —
-        // the searchIvf ordering
-        bucketIds.indices
-          .map { c =>
-            var s = 0.0; var i = 0
-            val cv = centroids(c)
-            while (i < dims) { s += cv(i) * qv(i); i += 1 }
-            (c, s)
-          }
-          .sortBy { case (c, s) => (-s, c) }
-          .take(nprobe).map(_._1)
-      }
-    val heap = new java.util.PriorityQueue[(String, Double)](k max 1, ord)
-    probe.foreach { c =>
+                     allowed: java.util.HashSet[String] = null): Array[Hit] = {
+    val top = new TopK(k)
+    probe(qv, nprobe).foreach { c =>
       val ids = bucketIds(c)
       val vecs = bucketVecs(c)
       var r = 0
       while (r < ids.length) {
-        if (allowed == null || allowed.contains(ids(r))) {
-          var s = 0.0
-          var i = 0
-          val base = r * dims
-          while (i < dims) { s += vecs(base + i).toDouble * qv(i); i += 1 }
-          val scored = (ids(r), round6(s))
-          if (heap.size < k) heap.add(scored)
-          else if (ord.compare(scored, heap.peek()) > 0) {
-            heap.poll(); heap.add(scored)
-          }
-        }
+        if (allowed == null || allowed.contains(ids(r)))
+          top.offer(ids(r), RoundHalfUp.round(dotAt(vecs, r * dims, qv), 6))
         r += 1
       }
     }
-    val out = new Array[(String, Double)](heap.size)
-    var i = out.length - 1
-    while (i >= 0) { out(i) = heap.poll(); i -= 1 }
-    scala.collection.immutable.ArraySeq.unsafeWrapArray(out)
+    top.drain()
   }
 
   private def embed(query: String): Array[Double] = {
@@ -151,12 +163,11 @@ final class WarmIndex private (
     qv
   }
 
-  private def resolve(ranked: Seq[(String, Double)]): Seq[(String, Double, String, String)] =
-    ranked.map { case (id, score) =>
-      val p = passages.get(id)
-      if (p == null) (id, score, "", "")
-      else (id, score, p(0), p(1))
-    }
+  private def resolve(ranked: Array[Hit]): Seq[(String, Double, String, String)] =
+    scala.collection.immutable.ArraySeq.unsafeWrapArray(ranked.map { h =>
+      val p = passages.get(h.id)
+      if (p == null) (h.id, h.score, "", "") else (h.id, h.score, p(0), p(1))
+    })
 
   /** Evaluate a metadata-filter AST over the resident flat passage
     * rows (id, text, metadata.*) — the Spark path's pre-scoring
@@ -214,10 +225,7 @@ final class WarmIndex private (
   /** In-process ANN over the resident PQ tier — the warm analog of
     * [[Index.searchAnn]], stage for stage:
     *
-    *   1. probe: rank centroids by round6(dot) desc, centroid id asc
-    *      (the [[Index.searchIvf]]/[[Index.searchPq]] ranked-centroid
-    *      selection — unlike [[search]]'s raw-dot probe, this one
-    *      rounds, so probe CHOICE matches the Spark plan's);
+    *   1. probe: the shared ranked-centroid selection ([[probe]]);
     *   2. ADC: one m×k lookup table per request ([[graft.operators.Pq
     *      .adcLut]] — identical arithmetic), then each probed bucket's
     *      codes score as m table lookups summed mi-ascending (the
@@ -247,28 +255,12 @@ final class WarmIndex private (
     val qv = embed(query)
     val fetchK = topK * overFetch
     val fetchRerank = rerank * overFetch
-    val probe: Seq[Int] =
-      if (nprobe >= numClusters || centroids.isEmpty) bucketIds.indices
-      else bucketIds.indices.map { c =>
-          var s = 0.0
-          var i = 0
-          val cv = centroids(c)
-          while (i < dims) { s += cv(i) * qv(i); i += 1 }
-          (c, round6(s))
-        }.sortBy { case (c, s) => (-s, c) }.take(nprobe).map(_._1)
     val lut = graft.operators.Pq.adcLut(wpq.cb, qv)
     val m = wpq.cb.m
-    // heap root = worst kept candidate; entries carry (bucket, row) so
-    // the re-rank never needs an id lookup structure
-    val annOrd = new java.util.Comparator[(String, Double, Int, Int)] {
-      def compare(a: (String, Double, Int, Int), b: (String, Double, Int, Int)): Int = {
-        val c = java.lang.Double.compare(a._2, b._2)
-        if (c != 0) c else b._1.compareTo(a._1)
-      }
-    }
-    val heap = new java.util.PriorityQueue[(String, Double, Int, Int)](
-      fetchRerank max 1, annOrd)
-    probe.foreach { c =>
+    // candidates carry (bucket, row) so the re-rank never needs an id
+    // lookup structure
+    val cands = new TopK(fetchRerank)
+    probe(qv, nprobe).foreach { c =>
       val ids = bucketIds(c)
       val codes = wpq.bucketCodes(c)
       var r = 0
@@ -277,30 +269,17 @@ final class WarmIndex private (
         var mi = 0
         val base = r * m
         while (mi < m) { s += lut(mi)(codes(base + mi)); mi += 1 }
-        val e = (ids(r), round6(s), c, r)
-        if (heap.size < fetchRerank) heap.add(e)
-        else if (annOrd.compare(e, heap.peek()) > 0) { heap.poll(); heap.add(e) }
+        cands.offer(ids(r), RoundHalfUp.round(s, 6), c, r)
         r += 1
       }
     }
-    val cand = new Array[(String, Double)](heap.size)
-    var i = 0
-    val it = heap.iterator()
-    while (it.hasNext) {
-      val (id, _, c, r) = it.next()
-      val vecs = bucketVecs(c)
-      var s = 0.0
-      var j = 0
-      val base = r * dims
-      while (j < dims) { s += vecs(base + j).toDouble * qv(j); j += 1 }
-      cand(i) = (id, round6(s))
-      i += 1
+    val exact = new TopK(fetchK)
+    cands.drain().foreach { h =>
+      exact.offer(h.id, RoundHalfUp.round(dotAt(bucketVecs(h.bucket), h.row * dims, qv), 6))
     }
-    val ranked = cand.sortBy { case (id, s) => (-s, id) }
-      .take(fetchK)
-      .filter { case (id, _) => allowed == null || allowed.contains(id) }
-      .take(topK)
-    resolve(scala.collection.immutable.ArraySeq.unsafeWrapArray(ranked))
+    resolve(exact.drain()
+      .filter(h => allowed == null || allowed.contains(h.id))
+      .take(topK))
   }
 
   /** Hybrid (vector + BM25 min-max fusion) in-process — the reference's
@@ -360,52 +339,37 @@ final class WarmIndex private (
     val bscore = new java.util.HashMap[String, Double](passages.size() * 2)
     passages.keySet().forEach { id =>
       if (allowed == null || allowed.contains(id)) {
-        val sc = round6(acc.getOrDefault(id, 0.0))
+        val sc = RoundHalfUp.round(acc.getOrDefault(id, 0.0), 6)
         bscore.put(id, sc)
         if (sc < bmin) bmin = sc
         if (sc > bmax) bmax = sc
       }
     }
     // BM25 top-fetchK of the positive scores, (bscore desc, id asc)
-    val bheap = new java.util.PriorityQueue[(String, Double)](fetchK max 1, ord)
-    bscore.forEach { (id, sc) =>
-      if (sc > 0) {
-        val e = (id, sc)
-        if (bheap.size < fetchK) bheap.add(e)
-        else if (ord.compare(e, bheap.peek()) > 0) { bheap.poll(); bheap.add(e) }
-      }
-    }
-    val bmTop = new scala.collection.mutable.HashSet[String]
-    while (!bheap.isEmpty) bmTop += bheap.poll()._1
+    val bheap = new TopK(fetchK)
+    bscore.forEach { (id, sc) => if (sc > 0) bheap.offer(id, sc) }
     // candidate union: vector top rows keep their vscore, BM25-only
     // rows enter at 0.0
-    val vmap = vec.toMap
-    val candIds = vmap.keySet ++ bmTop
+    val vmap = vec.iterator.map(h => h.id -> h.score).toMap
+    val candIds = vmap.keySet ++ bheap.drain().map(_.id)
     if (candIds.isEmpty) return Seq.empty // filter matched nothing
     val vmin = candIds.iterator.map(id => vmap.getOrElse(id, 0.0)).min
     val vmax = candIds.iterator.map(id => vmap.getOrElse(id, 0.0)).max
     val vrange = math.max(vmax - vmin, 1e-6)
     val brange = math.max(bmax - bmin, 1e-6)
-    val fused = candIds.toSeq.map { id =>
+    val fused = new TopK(topK)
+    candIds.foreach { id =>
       val vs = vmap.getOrElse(id, 0.0)
       val bs = bscore.get(id)
-      (id, round6(alpha * (vs - vmin) / vrange +
-        (1.0 - alpha) * (bs - bmin) / brange))
-    }.sortBy { case (id, s) => (-s, id) }.take(topK)
-    resolve(fused)
+      fused.offer(id, RoundHalfUp.round(alpha * (vs - vmin) / vrange +
+        (1.0 - alpha) * (bs - bmin) / brange, 6))
+    }
+    resolve(fused.drain())
   }
 }
 
 object WarmIndex {
 
-  /** Load an index's layout into driver memory. Prefers the
-    * cluster-partitioned `embeddings_ivf` + `centroids` pair (so
-    * `nprobe` prunes buckets exactly as [[Index.searchIvf]]'s
-    * partition filter does); a plain `embeddings` table loads as one
-    * flat bucket (every search is the exact scan). Refuses loudly
-    * above `maxVectors` — the driver-RAM budget is this tier's
-    * contract, and silently OOMing a serving driver is worse than
-    * falling back to the Spark path. */
   /** Content fingerprint of an index directory: a 64-bit mix of every
     * file's (relative path, mtime, length), walked recursively in
     * sorted order. A pure stat walk — no reads — so probing it per
@@ -436,6 +400,14 @@ object WarmIndex {
       })
     }.toMap
 
+  /** Load an index's layout into driver memory. Prefers the
+    * cluster-partitioned `embeddings_ivf` + `centroids` pair (so
+    * `nprobe` prunes buckets exactly as [[Index.searchIvf]]'s
+    * partition filter does); a plain `embeddings` table loads as one
+    * flat bucket (every search is the exact scan). Refuses loudly
+    * above `maxVectors` — the driver-RAM budget is this tier's
+    * contract, and silently OOMing a serving driver is worse than
+    * falling back to the Spark path. */
   def load(spark: SparkSession, dir: String, provider: EmbeddingProvider,
            maxVectors: Int = 1000000,
            maxPostings: Long = 5000000L): WarmIndex = {

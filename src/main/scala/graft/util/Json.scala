@@ -1,8 +1,8 @@
 package graft.util
 
-/** Minimal JSON parser/writer for the serving layer (MCP requests are
-  * nested — `params.arguments.query` — so the flat regex field pulls of
-  * [[SearchServer]] don't suffice). Values map to plain Scala types:
+/** Minimal JSON parser/writer for the serving layer: the HTTP search
+  * body, MCP's nested JSON-RPC frames (`params.arguments.query`), and
+  * the JSON both servers write back. Values map to plain Scala types:
   * `Map[String, Any]`, `List[Any]`, `String`, `Long` (integral numbers,
   * so JSON-RPC ids round-trip exactly), `Double`, `Boolean`, `null`.
   * No dependencies; objects preserve insertion order via `VectorMap`.
@@ -17,8 +17,10 @@ object Json {
     v
   }
 
-  def parseObject(s: String): Map[String, Any] =
-    parse(s).asInstanceOf[Map[String, Any]]
+  def parseObject(s: String): Map[String, Any] = parse(s) match {
+    case m: Map[String, Any] @unchecked => m
+    case _ => throw new IllegalArgumentException("expected a JSON object")
+  }
 
   def write(v: Any): String = {
     val b = new StringBuilder

@@ -121,6 +121,25 @@ class McpServerSpec extends SparkSpec {
       s"warm MCP cache served a stale snapshot after an on-disk update: $after")
   }
 
+  test("search arguments go through the shared request parser") {
+    def res(args: String): Map[String, Any] =
+      call("""{"jsonrpc":"2.0","id":12,"method":"tools/call",""" +
+        s""""params":{"name":"search","arguments":$args}}""")("result")
+        .asInstanceOf[Map[String, Any]]
+    def text(r: Map[String, Any]): String =
+      r("content").asInstanceOf[List[Map[String, Any]]].head("text").asInstanceOf[String]
+    for (bad <- Seq("""{"query":"spark","top_k":0}""", """{"query":"spark","top_k":"2"}""",
+        """{"query":7}""")) {
+      val r = res(bad)
+      assert(r("isError") == true && text(r).startsWith("Search error:"), s"$bad -> $r")
+    }
+    // keys outside the tool schema never reach the parser: an HTTP-only
+    // count of 0 is ignored, not refused, and the result is unchanged
+    val plain = res("""{"query":"spark","top_k":2}""")
+    val extra = res("""{"query":"spark","top_k":2,"rerank":0,"ann":true}""")
+    assert(plain("isError") == false && text(extra) == text(plain))
+  }
+
   test("tools/call search honors a metadata filter") {
     val resp = call("""{"jsonrpc":"2.0","id":4,"method":"tools/call",""" +
       """"params":{"name":"search","arguments":{"query":"spark","top_k":3,""" +

@@ -45,15 +45,24 @@ class RoundHalfUpSpec extends SparkSpec {
       Double.MinPositiveValue, -Double.MinPositiveValue, 1e-300, -1e-300,
       0.0, -0.0, 1000.0000004999, -1000.0000004999)
     check(edge, "edges")
-    // driver-side raw-bit agreement (SQL <=> treats -0.0 == 0.0)
-    for (x <- edge ++ Seq(Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity)) {
-      val fast = RoundHalfUp.round(x, 6)
+    // driver-side raw-bit agreement (SQL <=> treats -0.0 == 0.0), at
+    // scale 6 and at PCA's scale 9 (unit-vector components, ties at the
+    // 10th decimal)
+    val rnd = new scala.util.Random(9)
+    val scale9 = Seq(0.1234567895, -0.1234567895, 0.9999999995, -0.9999999995,
+      0.0000000005, -0.0000000005, 0.5, 1e-10, -1e-10) ++
+      (0 until 2000).map(i => (i * 10 + 5) * 1e-10) ++
+      Seq.fill(20000)(rnd.nextDouble() * 2 - 1)
+    val nonFinite = Seq(Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity)
+    for ((scale, xs) <- Seq(6 -> (edge ++ nonFinite), 9 -> (edge ++ nonFinite ++ scale9));
+         x <- xs) {
+      val fast = RoundHalfUp.round(x, scale)
       val exact =
         if (x.isNaN || x.isInfinite) x
-        else RoundHalfUp.exact(x, 6)
+        else RoundHalfUp.exact(x, scale)
       assert(java.lang.Double.doubleToLongBits(fast) ==
         java.lang.Double.doubleToLongBits(exact),
-        s"bit mismatch at $x: fast=$fast exact=$exact")
+        s"bit mismatch at $x (scale $scale): fast=$fast exact=$exact")
     }
   }
 

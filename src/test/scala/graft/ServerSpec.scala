@@ -278,6 +278,143 @@ class ServerSpec extends SparkSpec {
     } finally hot.stop()
   }
 
+  /** The ranked rows of a 200 search response: the text between
+    * `"results"` and `,"took_ms"`. */
+  private def results(port: Int, body: String): String = {
+    val (code, resp) = http("POST", s"http://127.0.0.1:$port/search", Some(body))
+    assert(code == 200, s"$body -> $resp")
+    resp.substring(resp.indexOf("\"results\""), resp.indexOf(",\"took_ms\""))
+  }
+
+  test("search request fields are read as JSON: escapes, exponents, types") {
+    val wh = Files.createTempDirectory("graft-serve-json").toString
+    val provider = new HashEmbedder(16)
+    Index.build((1 to 12).map(i => (s"café number $i serves topic ${i % 4}", s"c$i.md"))
+      .toDF("text", "source"), s"$wh/main", provider, strategy = "simple")
+    val srv = new SearchServer(spark, wh, "main", provider, warm = true)
+    srv.start()
+    val port = srv.boundPort
+    try {
+      // Python's json.dumps escapes non-ASCII text by default
+      assert(results(port, "{\"query\":\"caf\\u00e9 topic\",\"top_k\":4}") ==
+        results(port, """{"query":"café topic","top_k":4}"""))
+      assert(results(port, """{"query":"café","top_k":4,"hybrid":true,"hybrid_alpha":5e-1}""") ==
+        results(port, """{"query":"café","top_k":4,"hybrid":true,"hybrid_alpha":0.5}"""))
+      val base = s"http://127.0.0.1:$port/search"
+      assert(http("POST", base, Some("""["query","café"]"""))._1 == 400)
+      val (code, resp) = http("POST", base, Some("""{"query":"café","top_k":"3"}"""))
+      assert(code == 400 && resp.contains("top_k"), resp)
+    } finally srv.stop()
+  }
+
+  test("count fields below 1 are request errors on both tiers") {
+    val wh = Files.createTempDirectory("graft-serve-counts").toString
+    val provider = new HashEmbedder(16)
+    Index.build(Seq(("count fields", "a.md"), ("are checked", "b.md"))
+      .toDF("text", "source"), s"$wh/main", provider, strategy = "simple")
+    val cold = new SearchServer(spark, wh, "main", provider)
+    val hot = new SearchServer(spark, wh, "main", provider, warm = true)
+    cold.start(); hot.start()
+    try {
+      for (srv <- Seq(cold, hot);
+           body <- Seq("""{"query":"count","top_k":0}""", """{"query":"count","top_k":-2}""",
+             """{"query":"count","nprobe":0}""", """{"query":"count","ann":true,"rerank":0}""")) {
+        val (code, resp) = http("POST", s"http://127.0.0.1:${srv.boundPort}/search", Some(body))
+        assert(code == 400 && resp.contains(">= 1"), s"$body -> $code $resp")
+      }
+    } finally { cold.stop(); hot.stop() }
+  }
+
+  test("warm tier: a server returns to the warm tier once a failed reload heals") {
+    val wh = Files.createTempDirectory("graft-serve-heal").toString
+    val provider = new HashEmbedder(16)
+    Index.build(Seq(("healing index one", "a.md"), ("healing index two", "b.md"))
+      .toDF("text", "source"), s"$wh/main", provider, strategy = "simple")
+    val emb = java.nio.file.Paths.get(Index.locate(wh, "main").get, "embeddings")
+    val aside = java.nio.file.Paths.get(wh, "embeddings.aside")
+    val hot = new SearchServer(spark, wh, "main", provider, warm = true)
+    hot.start()
+    val base = s"http://127.0.0.1:${hot.boundPort}/search"
+    val body = """{"query":"healing","top_k":2}"""
+    def tier(): String = {
+      val (code, resp) = http("POST", base, Some(body))
+      assert(code == 200, resp)
+      "\"tier\":\"(\\w+)\"".r.findFirstMatchIn(resp).get.group(1)
+    }
+    try {
+      assert(tier() == "warm")
+      val warmRows = results(hot.boundPort, body)
+      // without its embeddings table the index no longer loads warm; the
+      // Spark path recomputes the embeddings and answers the same
+      Files.move(emb, aside)
+      assert(tier() == "spark")
+      assert(results(hot.boundPort, body) == warmRows)
+      Files.move(aside, emb)
+      assert(tier() == "warm", "the server must reload once the index heals")
+      assert(results(hot.boundPort, body) == warmRows)
+    } finally hot.stop()
+  }
+
+  test("warm tier: the centroid probe ranks by round6(dot), then centroid id (searchIvf order)") {
+    val wh = Files.createTempDirectory("graft-serve-probe").toString
+    val provider = new HashEmbedder(16)
+    Index.build((1 to 30).map(i => (s"probe passage $i on theme ${i % 6}", s"q$i.md"))
+      .toDF("text", "source"), s"$wh/main", provider, strategy = "simple")
+    val dir = Index.locate(wh, "main").get
+    Index.buildIvf(spark, dir, numClusters = 2)
+    val query = "probe theme"
+    val qv = provider.embedWithTemplate(Seq(query), Index.readMeta(dir).queryPromptTemplate).head
+    val qq = qv.map(x => x.toDouble * x).sum
+    // centroid 0 scores 0.1000001 and centroid 1 scores 0.1000004: equal
+    // after round6, so centroid 0 wins; a raw-dot probe picks centroid 1
+    Seq(0 -> 0.1000001, 1 -> 0.1000004)
+      .flatMap { case (c, t) => qv.indices.map(p => (c, p, qv(p) * t / qq)) }
+      .toDF("centroid_id", "pos", "cv")
+      .write.mode("overwrite").parquet(s"$dir/centroids")
+    val ivf = spark.read.parquet(s"$dir/embeddings_ivf")
+    assert(ivf.select("centroid_id").distinct().count() == 2)
+    val spark1 = Index.searchIvf(spark, dir, qv, nprobe = 1, k = 4).collect()
+      .map(r => (r.get(0).toString, r.getDouble(1))).toSeq
+    val bucket0 = ivf.filter("centroid_id = 0").select("id").collect().map(_.get(0).toString).toSet
+    assert(spark1.nonEmpty && spark1.forall(r => bucket0(r._1)), spark1)
+    val warm = graft.serve.WarmIndex.load(spark, dir, provider)
+      .search(query, 4, nprobe = 1).map(r => (r._1, r._2))
+    assert(warm == spark1)
+  }
+
+  test("warm tier: concurrent mixed requests answer as the same requests sent serially") {
+    val wh = Files.createTempDirectory("graft-serve-concurrent").toString
+    val provider = new HashEmbedder(16)
+    Index.build((1 to 60).map(i => (s"concurrent passage $i on area ${i % 9} and theme ${i % 4}",
+      s"r${i % 5}/p$i.md")).toDF("text", "source"), s"$wh/main", provider, strategy = "simple")
+    val dir = Index.locate(wh, "main").get
+    Index.buildIvf(spark, dir, numClusters = 4)
+    Index.buildPq(spark, dir, m = 4, k = 4)
+    val hot = new SearchServer(spark, wh, "main", provider, warm = true)
+    hot.start()
+    try {
+      val bodies = for (q <- Seq("area 3 theme", "passage 17", "concurrent", "theme 2 area 5");
+                        extra <- Seq("", ""","filter":"source^r1"""", ""","hybrid":true""",
+                          ""","hybrid":true,"filter":"source^r2"""", ""","ann":true""",
+                          ""","ann":true,"nprobe":2,"filter":"source^r3""""))
+        yield s"""{"query":"$q","top_k":5$extra}"""
+      val serial = bodies.map(b => b -> results(hot.boundPort, b)).toMap
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
+      try {
+        val calls = (1 to 8).map { t =>
+          val order = new scala.util.Random(t).shuffle(bodies)
+          val call: java.util.concurrent.Callable[Seq[(String, String)]] =
+            () => order.map(b => b -> results(hot.boundPort, b))
+          call
+        }
+        import scala.jdk.CollectionConverters._
+        pool.invokeAll(calls.asJava).asScala.flatMap(_.get).foreach { case (b, r) =>
+          assert(r == serial(b), s"concurrent answer diverged for $b")
+        }
+      } finally pool.shutdown()
+    } finally hot.stop()
+  }
+
   test("warm tier: refuses an over-budget index loudly") {
     val wh = Files.createTempDirectory("graft-serve-warmcap").toString
     val provider = new HashEmbedder(8)
