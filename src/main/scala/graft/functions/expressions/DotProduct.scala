@@ -35,21 +35,8 @@ case class DotProduct(left: Expression, right: Expression)
 
   override def dataType: DataType = DoubleType
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val n = x.numElements()
-    if (n != y.numElements()) {
-      throw DotProduct.dimMismatch(n, y.numElements())
-    }
-    var sum = 0.0
-    var i = 0
-    while (i < n) {
-      sum += x.getDouble(i) * y.getDouble(i)
-      i += 1
-    }
-    sum
-  }
+  override def nullSafeEval(a: Any, b: Any): Any =
+    DotProduct.of(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (a, b) => {
@@ -76,6 +63,22 @@ case class DotProduct(left: Expression, right: Expression)
 }
 
 object DotProduct {
+  /** The loop the generated code runs, for callers holding the arrays
+    * themselves (the interpreted path and Lloyd's partition kernel). */
+  def of(x: ArrayData, y: ArrayData): Double = {
+    val n = x.numElements()
+    if (n != y.numElements()) {
+      throw dimMismatch(n, y.numElements())
+    }
+    var sum = 0.0
+    var i = 0
+    while (i < n) {
+      sum += x.getDouble(i) * y.getDouble(i)
+      i += 1
+    }
+    sum
+  }
+
   /** Dimension mismatch is a configuration bug (wrong embedder for the
     * index); fail fast like DuckDB's list_inner_product rather than
     * silently truncating to the shorter vector. Called from generated

@@ -93,10 +93,12 @@ case class RoundHalfUp(child: Expression, scale: Int)
 object RoundHalfUp {
 
   /** The reference semantic: exactly what Spark's `Round` does for
-    * DOUBLE — decimal HALF_UP on the shortest decimal representation.
-    * Public because generated code calls it. */
+    * DOUBLE — NaN and infinities pass through, anything else is decimal
+    * HALF_UP on the shortest decimal representation. Public because
+    * generated code calls it. */
   def exact(x: Double, scale: Int): Double =
-    java.math.BigDecimal.valueOf(x)
+    if (x.isNaN || x.isInfinite) x
+    else java.math.BigDecimal.valueOf(x)
       .setScale(scale, java.math.RoundingMode.HALF_UP)
       .doubleValue()
 

@@ -1,9 +1,17 @@
 package graft.operators
 
+import scala.collection.mutable
+
+import org.apache.spark.rdd.{PartitionCoalescer, PartitionGroup, RDD}
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+import org.apache.spark.sql.catalyst.util.{ArrayData, SQLOrderingUtil}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 import graft.functions.VectorFunctions.{asDouble, dot}
+import graft.functions.expressions.{DotProduct, RoundHalfUp}
 
 /** Deterministic Lloyd's k-means over an embedding column.
   *
@@ -28,16 +36,25 @@ import graft.functions.VectorFunctions.{asDouble, dot}
   *   - the distance is spelled `v.v - 2*(v.c) + c.c` with `c.c`
   *     precomputed sequentially — the exact shape the SQL replay uses.
   *
-  * Scale posture: assignment is zero-shuffle (codegen'd dot products
-  * against literal centroids); the update is one posexplode + two-phase
-  * avg per round, whose exchange carries O(partitions * k * dims)
-  * partial sums — never n*dims rows. The k*dims centroid matrix is the
-  * documented bounded driver scalar (the nprobe/MMR stance): k <= a few
-  * thousand at any realistic layout. A cluster that loses every member
-  * drops for subsequent rounds (matching the SQL replay, where an empty
-  * group simply produces no centroid row).
+  * Scale posture: a Lloyd round is ONE Spark job over the cached
+  * (id, v) rows, planned and code-generated once per call, not once per
+  * round. Each task assigns its vectors in Scala with the arithmetic of
+  * the [[nearest]] expression and returns per-cluster coordinate sums
+  * and non-null counts; the driver merges them in partition-index order
+  * (a fixed summation order) and rounds each mean to 6 decimals. The
+  * rows are coalesced, without a shuffle, into at most
+  * `defaultParallelism` contiguous partition ranges, so a round brings
+  * at most parallelism * k * dims partial sums to the driver — never
+  * n*dims values. The k*dims centroid matrix is the documented bounded
+  * driver scalar (the nprobe/MMR stance): k <= a few thousand at any
+  * realistic layout. A cluster that loses every member drops for
+  * subsequent rounds (matching the SQL replay, where an empty group
+  * simply produces no centroid row). The final assignment stays a
+  * zero-shuffle DataFrame over literal centroids.
   */
 object Cluster {
+
+  private type Centroids = Map[Int, Array[Double]]
 
   /** Fit centroids by `iters` fixed Lloyd rounds; returns
     * (clusterId -> centroid), possibly missing ids whose clusters
@@ -46,19 +63,11 @@ object Cluster {
   def fitCentroids(emb: DataFrame, idCol: String, vecCol: String,
                    k: Int, iters: Int): Map[Int, Array[Double]] = {
     require(k >= 1 && iters >= 0, s"need k >= 1, iters >= 0; got $k, $iters")
-    // Persisted for the loop's lifetime (r16, guide §5): every Lloyd
-    // round is one pass over (id, v) — unpersisted, each round re-reads
-    // the source and re-casts the vectors; at corpus scale that is
-    // `iters` redundant scans. Disk-backed so a corpus-scale base
-    // degrades gracefully instead of evicting execution memory.
-    val base = baseOf(emb, idCol, vecCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try lloyd(base, firstK(base, k), iters)
-    finally { base.unpersist(); () }
+    lloyd(emb, idCol, vecCol, iters, None)(firstK(_, k))._1
   }
 
   // init = the k lowest-id vectors, cluster ids 0..k-1 in id order
-  private def firstK(base: DataFrame, k: Int): Map[Int, Array[Double]] =
+  private def firstK(base: DataFrame, k: Int): Centroids =
     base.orderBy("id").limit(k).collect()
       .map(_.getSeq[Double](1).toArray).zipWithIndex
       .map { case (v, i) => i -> v }.toMap
@@ -70,23 +79,132 @@ object Cluster {
       asDouble(col(vecCol)).as("v"))
       .where(col("id").isNotNull && col("v").isNotNull)
 
-  private def lloyd(base: DataFrame, init: Map[Int, Array[Double]],
-                    iters: Int): Map[Int, Array[Double]] =
-    FixedPoint.runLocal(init, iters)(lloydUpdate(base, _))._1
+  /** Lloyd rounds from `init(base)` under the [[FixedPoint]] driver.
+    * The (id, v) base is persisted for the loop's lifetime (r16, guide
+    * §5): every round is one pass over it — unpersisted, each round
+    * would re-read the source and re-cast the vectors. Disk-backed so a
+    * corpus-scale base degrades gracefully instead of evicting execution
+    * memory; `init` runs against it, so its first job fills the cache. */
+  private def lloyd(emb: DataFrame, idCol: String, vecCol: String, maxIters: Int,
+                    watch: Option[FixedPoint.LocalWatch[Centroids]])
+                   (init: DataFrame => Centroids): (Centroids, Int) = {
+    val base = baseOf(emb, idCol, vecCol).persist(StorageLevel.MEMORY_AND_DISK)
+    try {
+      val step = lloydStep(base)
+      FixedPoint.runLocal(init(base), maxIters, watch)(step)
+    } finally { base.unpersist(); () }
+  }
 
-  /** One Lloyd round: argmin assignment against the literal centroids,
-    * then 6-decimal-requantized per-cluster coordinate means. The
-    * returned map is the ONLY corpus-derived driver state — k*dims
-    * doubles, the documented bounded scalar. */
-  private def lloydUpdate(base: DataFrame,
-                          centroids: Map[Int, Array[Double]]): Map[Int, Array[Double]] =
-    base.withColumn("cluster", nearest(col("v"), centroids).getField("cl"))
-      .select(col("cluster"), posexplode(col("v")).as(Seq("pos", "val")))
-      .groupBy("cluster", "pos").agg(round(avg("val"), 6).as("cm"))
-      .collect()
-      .map(r => (r.getInt(0), r.getInt(1), r.getDouble(2)))
-      .groupBy(_._1)
-      .map { case (cl, rows) => cl -> rows.sortBy(_._2).map(_._3) }
+  /** One Lloyd round over an (id, v) frame, planned once: every call of
+    * the returned step is a single job over the same physical rows —
+    * argmin against the given centroids, then 6-decimal-requantized
+    * per-cluster coordinate means. The returned map is the ONLY
+    * corpus-derived driver state — k*dims doubles, the documented
+    * bounded scalar. */
+  private[graft] def lloydStep(base: DataFrame): Centroids => Centroids = {
+    val rows = rowsOf(base)
+    centroids => {
+      require(centroids.nonEmpty, "all clusters emptied — lower k")
+      val ids = centroids.keys.toArray.sorted
+      val cs = ids.map(centroids)
+      val cc = cs.map(selfDot)
+      meansOf(rows.mapPartitions { it =>
+        val us: Array[ArrayData] = cs.map(UnsafeArrayData.fromPrimitiveArray)
+        val sums = new Sums
+        it.foreach { r =>
+          val v = r.getArray(1)
+          sums.add(ids(nearestIndex(v, us, cc)), v)
+        }
+        Iterator.single(sums)
+      })
+    }
+  }
+
+  /** The [[nearest]] argmin for one vector, bit for bit: the same
+    * sequential dot products, `(v.v - 2*(v.c)) + c.c` rounded as Spark's
+    * `round(_, 6)`, compared under Spark's double ordering (NaN largest,
+    * -0.0 == 0.0), equal distances keeping the earlier — smaller —
+    * cluster id. Returns the index into `cs`. */
+  private def nearestIndex(v: ArrayData, cs: Array[ArrayData], cc: Array[Double]): Int = {
+    val vv = DotProduct.of(v, v)
+    var best = 0
+    var bestD = 0.0
+    var j = 0
+    while (j < cs.length) {
+      val d = RoundHalfUp.exact((vv - 2.0 * DotProduct.of(v, cs(j))) + cc(j), 6)
+      if (j == 0 || SQLOrderingUtil.compareDoubles(d, bestD) < 0) { best = j; bestD = d }
+      j += 1
+    }
+    best
+  }
+
+  /** Per-cluster coordinate sums and non-null counts — the `avg`
+    * buffers of one partition, or of several merged in order. A null
+    * element is skipped, as `avg` skips it. A cluster's buffers take the
+    * length of its first vector; a vector of another length is refused
+    * as the dot product refuses it. */
+  private final class Sums extends Serializable {
+    private val acc = mutable.HashMap.empty[Int, (Array[Double], Array[Long])]
+
+    private def buffers(cl: Int, n: Int): (Array[Double], Array[Long]) = {
+      val b = acc.getOrElseUpdate(cl, (new Array[Double](n), new Array[Long](n)))
+      if (b._1.length != n) throw DotProduct.dimMismatch(n, b._1.length)
+      b
+    }
+
+    def add(cl: Int, v: ArrayData): Unit = {
+      val n = v.numElements()
+      val (s, c) = buffers(cl, n)
+      var i = 0
+      while (i < n) {
+        if (!v.isNullAt(i)) { s(i) += v.getDouble(i); c(i) += 1 }
+        i += 1
+      }
+    }
+
+    def merge(o: Sums): Sums = {
+      o.acc.foreach { case (cl, (s2, c2)) =>
+        val (s, c) = buffers(cl, s2.length)
+        var i = 0
+        while (i < s2.length) { s(i) += s2(i); c(i) += c2(i); i += 1 }
+      }
+      this
+    }
+
+    def means: Centroids = acc.map { case (cl, (s, c)) =>
+      cl -> Array.tabulate(s.length) { i =>
+        if (c(i) == 0) throw new IllegalArgumentException(
+          s"k-means: cluster $cl has no non-null value at position $i")
+        RoundHalfUp.exact(s(i) / c(i), 6)
+      }
+    }.toMap
+  }
+
+  // one Sums per partition, merged in partition-index order
+  private def meansOf(partials: RDD[Sums]): Centroids =
+    partials.collect().foldLeft(new Sums)(_ merge _).means
+
+  // the physical rows of `df` in at most defaultParallelism partitions
+  private def rowsOf(df: DataFrame): RDD[InternalRow] = {
+    val rdd = df.queryExecution.toRdd
+    rdd.coalesce(rdd.sparkContext.defaultParallelism, shuffle = false, Some(Contiguous))
+  }
+
+  /** Groups a parent's partitions into contiguous index ranges, so each
+    * coalesced partition reads its rows in parent-partition order and
+    * the merge order never depends on where the blocks live. */
+  private object Contiguous extends PartitionCoalescer with Serializable {
+    def coalesce(maxPartitions: Int, parent: RDD[_]): Array[PartitionGroup] = {
+      val ps = parent.partitions
+      val n = math.min(maxPartitions, ps.length)
+      Array.tabulate(n) { i =>
+        val g = new PartitionGroup(None)
+        g.partitions ++= ps.slice((i.toLong * ps.length / n).toInt,
+          ((i + 1).toLong * ps.length / n).toInt)
+        g
+      }
+    }
+  }
 
   /** Convergence-watched Lloyd — the 100 TB fit mode (the
     * [[graft.operators.Graph.pageRankWatched]] discipline applied to
@@ -126,26 +244,16 @@ object Cluster {
                           init: Option[DataFrame] = None): (Map[Int, Array[Double]], Int) = {
     require(k >= 1 && maxIters >= 0 && tol >= 0.0,
       s"need k >= 1, maxIters >= 0, tol >= 0; got $k, $maxIters, $tol")
-    // Persisted for the loop's lifetime (r16, the [[fitCentroids]]
-    // rationale): the watched fit pays up to `maxIters` passes over
-    // (id, v); one cache fills on round 1 and every later round reads it.
-    val base = baseOf(emb, idCol, vecCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // An exact repeat reads 0; at tol > 0 a shift below tol reads as
     // tol itself, which passes the driver's d1 <= tol stop but is no
     // exact period-2 revisit.
-    val moved = (a: Map[Int, Array[Double]], b: Map[Int, Array[Double]]) =>
+    val moved = (a: Centroids, b: Centroids) =>
       if (sameCentroids(a, b)) 0.0
       else if (tol > 0.0 && shiftBelow(a, b, tol)) tol
       else Double.PositiveInfinity
-    try {
-      val cents0 = init match {
-        case Some(assign) => centroidsOf(emb, idCol, vecCol, assign)
-        case None => firstK(base, k)
-      }
-      FixedPoint.runLocal(cents0, maxIters,
-        Some(FixedPoint.LocalWatch(tol, moved)))(lloydUpdate(base, _))
-    } finally { base.unpersist(); () }
+    lloyd(emb, idCol, vecCol, maxIters, Some(FixedPoint.LocalWatch(tol, moved))) { base =>
+      init.fold(firstK(base, k))(centroidsOf(emb, idCol, vecCol, _))
+    }
   }
 
   /** Watched assignment: [[fitCentroidsWatched]] then one zero-shuffle
@@ -163,16 +271,14 @@ object Cluster {
 
   // exact equality of two quantized centroid maps (coordinates are
   // exact 6-decimal-rounded doubles, so == is well-defined)
-  private def sameCentroids(a: Map[Int, Array[Double]],
-                            b: Map[Int, Array[Double]]): Boolean =
+  private def sameCentroids(a: Centroids, b: Centroids): Boolean =
     a.keySet == b.keySet && a.forall { case (cl, v) =>
       java.util.Arrays.equals(v, b(cl))
     }
 
   // production-tol stop: no cluster emptied and every centroid moved
   // < tol in L2
-  private def shiftBelow(a: Map[Int, Array[Double]],
-                         b: Map[Int, Array[Double]], tol: Double): Boolean =
+  private def shiftBelow(a: Centroids, b: Centroids, tol: Double): Boolean =
     a.keySet == b.keySet && a.forall { case (cl, v) =>
       val w = b(cl)
       var s = 0.0
@@ -190,15 +296,17 @@ object Cluster {
     * no centroid; they re-enter at the next assignment's argmin. */
   def centroidsOf(emb: DataFrame, idCol: String, vecCol: String,
                   assign: DataFrame): Map[Int, Array[Double]] =
-    baseOf(emb, idCol, vecCol)
+    meansOf(rowsOf(baseOf(emb, idCol, vecCol)
       .join(assign.select(col("id").cast("long").as("id"),
         col("cluster").cast("int").as("cluster")), "id")
-      .select(col("cluster"), posexplode(col("v")).as(Seq("pos", "val")))
-      .groupBy("cluster", "pos").agg(round(avg("val"), 6).as("cm"))
-      .collect()
-      .map(r => (r.getInt(0), r.getInt(1), r.getDouble(2)))
-      .groupBy(_._1)
-      .map { case (cl, rows) => cl -> rows.sortBy(_._2).map(_._3) }
+      .select("cluster", "v")).mapPartitions { it =>
+      val sums = new Sums
+      it.foreach { r =>
+        require(!r.isNullAt(0), "k-means: an assignment row has a null cluster")
+        sums.add(r.getInt(0), r.getArray(1))
+      }
+      Iterator.single(sums)
+    })
 
   /** Assign every vector to its nearest fitted centroid:
     * (id, cluster, dist) with dist = the 6-decimal-rounded squared L2
@@ -221,13 +329,11 @@ object Cluster {
     * join at the first argmin; clusters that lost every member drop,
     * matching the fit loop's empty-group rule. */
   def kmeansAssignWarm(emb: DataFrame, idCol: String, vecCol: String,
-                       init: DataFrame, iters: Int): DataFrame = {
-    val base = baseOf(emb, idCol, vecCol)
-    assignWith(base, lloyd(base, centroidsOf(emb, idCol, vecCol, init), iters))
-  }
+                       init: DataFrame, iters: Int): DataFrame =
+    assignWith(baseOf(emb, idCol, vecCol),
+      lloyd(emb, idCol, vecCol, iters, None)(_ => centroidsOf(emb, idCol, vecCol, init))._1)
 
-  private def assignWith(base: DataFrame,
-                         centroids: Map[Int, Array[Double]]): DataFrame =
+  private def assignWith(base: DataFrame, centroids: Centroids): DataFrame =
     base.withColumn("b", nearest(col("v"), centroids))
       .select(col("id"), col("b.cl").as("cluster"), col("b.d").as("dist"))
 
@@ -236,8 +342,7 @@ object Cluster {
     * comparison is lexicographic, so equal distances break to the
     * smaller cluster id. Entirely codegen'd expressions; no shuffle,
     * no UDF. */
-  private def nearest(vecCol: Column,
-                      centroids: Map[Int, Array[Double]]): Column = {
+  private def nearest(vecCol: Column, centroids: Centroids): Column = {
     require(centroids.nonEmpty, "all clusters emptied — lower k")
     val structs = centroids.toSeq.sortBy(_._1).map { case (cl, c) =>
       val cc = selfDot(c)

@@ -83,11 +83,11 @@ private[serve] final class Router(spark: SparkSession, provider: EmbeddingProvid
       val cur = snapshots.get(dir)
       if (cur != null && cur._1 == fp) cur._2
       else {
-        if (cur != null) System.err.println(s"[warm] $dir changed on disk — reloading")
+        if (cur != null) WarmIndex.log(dir, "changed on disk, reloading")
         val loaded =
           try Some(WarmIndex.load(spark, dir, provider))
           catch { case NonFatal(e) =>
-            System.err.println(s"[warm] $dir stays on the Spark path: ${e.getMessage}")
+            WarmIndex.log(dir, s"stays on the Spark path: ${e.getMessage}")
             None
           }
         snapshots.put(dir, (fp, loaded))

@@ -370,6 +370,11 @@ final class WarmIndex private (
 
 object WarmIndex {
 
+  /** The serving tier's one stderr line format, `[warm] <dir>: <message>`,
+    * kept ASCII so it reads the same under any default charset. */
+  private[serve] def log(dir: String, msg: String): Unit =
+    System.err.println(s"[warm] $dir: $msg")
+
   /** Content fingerprint of an index directory: a 64-bit mix of every
     * file's (relative path, mtime, length), walked recursively in
     * sorted order. A pure stat walk — no reads — so probing it per
@@ -514,9 +519,8 @@ object WarmIndex {
         val tfDf = spark.read.parquet(s"$dir/bm25_tf")
         val nPost = tfDf.count()
         if (nPost > maxPostings) {
-          System.err.println(
-            s"[warm] bm25_tf has $nPost postings > maxPostings " +
-              s"$maxPostings — hybrid requests will use the Spark path")
+          log(dir, s"bm25_tf has $nPost postings > maxPostings $maxPostings, " +
+            "hybrid requests will use the Spark path")
           None
         } else {
           val posts = new java.util.HashMap[String, Array[(String, Long)]]()
@@ -574,14 +578,13 @@ object WarmIndex {
           pos += 1
         }
         if (!complete) {
-          System.err.println(s"[warm] pq_codes under $dir is missing rows " +
-            "for resident ids — ANN requests will use the Spark path")
+          log(dir, "pq_codes is missing rows for resident ids, " +
+            "ANN requests will use the Spark path")
           None
         } else Some(new WarmPq(cb, bucketCodes))
       } catch {
         case scala.util.control.NonFatal(e) =>
-          System.err.println(
-            s"[warm] PQ tier load failed, ANN stays on the Spark path: ${e.getMessage}")
+          log(dir, s"PQ tier load failed, ANN stays on the Spark path: ${e.getMessage}")
           None
       }
     new WarmIndex(dims, centroids, bucketIds, bucketVecs, passages,

@@ -1,7 +1,15 @@
 package graft
 
-import org.apache.spark.sql.functions._
+import scala.util.{Failure, Success, Try}
 
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DoubleType, LongType, StructField, StructType}
+import org.scalacheck.{Gen, Prop, Test => PropTest}
+import org.scalacheck.Prop.propBoolean
+
+import graft.functions.VectorFunctions.dot
+import graft.functions.expressions.{DotProduct, RoundHalfUp}
 import graft.operators.Cluster
 
 class ClusterSpec extends SparkSpec {
@@ -9,6 +17,49 @@ class ClusterSpec extends SparkSpec {
 
   private def toDf(vs: Seq[(Long, Seq[Double])]) =
     vs.toDF("vec_id", "embedding")
+
+  // The DataFrame Lloyd round the operator ran before its partition
+  // kernel (argmin over literal centroids, then posexplode + avg), kept
+  // as the kernel's reference.
+  private def refUpdate(base: DataFrame,
+                        centroids: Map[Int, Array[Double]]): Map[Int, Array[Double]] =
+    base.withColumn("cluster", refNearest(col("v"), centroids).getField("cl"))
+      .select(col("cluster"), posexplode(col("v")).as(Seq("pos", "val")))
+      .groupBy("cluster", "pos").agg(round(avg("val"), 6).as("cm"))
+      .collect()
+      .map(r => (r.getInt(0), r.getInt(1), r.getDouble(2)))
+      .groupBy(_._1)
+      .map { case (cl, rows) => cl -> rows.sortBy(_._2).map(_._3) }
+
+  private def refNearest(vecCol: Column, centroids: Map[Int, Array[Double]]): Column = {
+    require(centroids.nonEmpty, "all clusters emptied")
+    val structs = centroids.toSeq.sortBy(_._1).map { case (cl, c) =>
+      val d = round(dot(vecCol, vecCol) - lit(2) * dot(vecCol, typedLit(c.toSeq))
+        + lit(selfDot(c)), 6)
+      struct(d.as("d"), lit(cl).as("cl"))
+    }
+    if (structs.size == 1) structs.head else least(structs: _*)
+  }
+
+  private def selfDot(c: Seq[Double]): Double = c.foldLeft(0.0)((s, x) => s + x * x)
+
+  private val vecSchema = StructType(Seq(StructField("id", LongType),
+    StructField("v", ArrayType(DoubleType, containsNull = true))))
+
+  // an (id, v) base in exactly `parts` input partitions; None is a null element
+  private def baseOf(vs: Seq[Seq[Option[Double]]], parts: Int): DataFrame =
+    spark.createDataFrame(spark.sparkContext.parallelize(
+      vs.zipWithIndex.map { case (v, i) => Row(i.toLong, v.map(_.fold[Any](null)(identity))) }, parts), vecSchema)
+
+  private def sameBits(a: Map[Int, Array[Double]], b: Map[Int, Array[Double]]): Boolean =
+    a.keySet == b.keySet && a.forall { case (cl, v) => java.util.Arrays.equals(v, b(cl)) }
+
+  private def show(m: Map[Int, Array[Double]]): String =
+    m.toSeq.sortBy(_._1).map { case (cl, v) => s"$cl -> ${v.mkString("[", ",", "]")}" }
+      .mkString("{", "; ", "}")
+
+  private def causes(e: Throwable): Iterator[Throwable] =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
 
   test("separable blobs: members group with their blob, centroids converge") {
     // three tight blobs around (0,0), (10,0), (0,10); ids interleaved so
@@ -144,5 +195,126 @@ class ClusterSpec extends SparkSpec {
         k = 2, iters = 1)
       .select("cluster").distinct().as[Int].collect().toSeq
     assert(asg == Seq(0))
+  }
+
+  test("Lloyd kernel == the DataFrame round on generated inputs") {
+    // halves make exact distance ties; uniform values, NaN and null
+    // elements ride along. Centroids are drawn from the grid or copied
+    // from a vector (duplicates tie everywhere and leave a cluster
+    // empty); half the samples mirror two centroids around one vector at
+    // a tenths offset, so its two distances differ only in float noise
+    // and tie after round6.
+    val coord: Gen[Option[Double]] = Gen.frequency(
+      5 -> Gen.choose(-4, 4).map(i => Some(i / 2.0)),
+      4 -> Gen.choose(-10, 10).map(i => Some(i / 10.0)),
+      3 -> Gen.choose(-1.0, 1.0).map(Some(_)),
+      1 -> Gen.const(Some(Double.NaN)),
+      1 -> Gen.const(None))
+    val sample = for {
+      d <- Gen.choose(1, 3)
+      n <- Gen.choose(1, 14)
+      vs <- Gen.listOfN(n, Gen.listOfN(d, coord))
+      k <- Gen.choose(1, 4)
+      ids <- Gen.pick(k, 0 to 6)
+      cs <- Gen.listOfN(k, Gen.oneOf(
+        Gen.listOfN(d, coord.map(_.getOrElse(0.0))),
+        Gen.oneOf(vs).map(_.map(_.getOrElse(0.0)))))
+      mirrored <- Gen.oneOf(true, false)
+      x <- Gen.oneOf(vs).map(_.map(_.getOrElse(0.0)))
+      off <- Gen.listOfN(d, Gen.choose(-10, 10).map(_ / 10.0))
+      parts <- Gen.choose(1, 6)
+    } yield {
+      val pair = List(x.zip(off).map(p => p._1 + p._2), x.zip(off).map(p => p._1 - p._2))
+      val all = if (mirrored && k >= 2) pair ++ cs.drop(2) else cs
+      (vs, ids.sorted.zip(all.map(_.toArray)).toMap, parts)
+    }
+
+    var (emptied, tiedAfterRound, nulls, nans, multi, refused) = (0, 0, 0, 0, 0, 0)
+    val prop = Prop.forAllNoShrink(sample) { case (vs, cents, parts) =>
+      val base = baseOf(vs, parts)
+      (Try(refUpdate(base, cents)), Try(Cluster.lloydStep(base)(cents))) match {
+        case (Success(want), Success(got)) =>
+          if (got.size < cents.size) emptied += 1
+          if (vs.exists(_.exists(_.isEmpty))) nulls += 1
+          if (vs.exists(_.exists(_.exists(_.isNaN)))) nans += 1
+          if (parts > 1 && vs.size > 1) multi += 1
+          if (vs.exists { v =>
+            val x = v.map(_.getOrElse(0.0))
+            val raw = cents.values.map(c => (selfDot(x) - 2.0 * x.zip(c).map(p => p._1 * p._2)
+              .foldLeft(0.0)(_ + _)) + selfDot(c.toSeq)).toSeq
+            raw.combinations(2).exists { case Seq(a, b) =>
+              a != b && RoundHalfUp.exact(a, 6) == RoundHalfUp.exact(b, 6) }
+          }) tiedAfterRound += 1
+          sameBits(want, got) :| s"reference ${show(want)} kernel ${show(got)}"
+        case (Failure(_), Failure(k)) =>
+          // a coordinate null in every member of a cluster: avg is NULL,
+          // which the reference's getDouble refuses; the kernel names it
+          refused += 1
+          (k.getMessage != null && k.getMessage.contains("no non-null value")) :| s"kernel: $k"
+        case (want, got) => false :| s"reference $want kernel $got"
+      }
+    }
+    val r = PropTest.check(PropTest.Parameters.default.withMinSuccessfulTests(200), prop)
+    assert(r.passed, r.status.toString)
+    val seen = Map("emptied" -> emptied, "tiedAfterRound" -> tiedAfterRound, "nulls" -> nulls,
+      "nans" -> nans, "multiPartition" -> multi, "refused" -> refused)
+    assert(seen.values.forall(_ > 0), s"generator missed a case: $seen")
+    info(s"cases seen: $seen")
+  }
+
+  test("mixed vector dimensions are refused with DotProduct's message") {
+    val pts = Seq[(Long, Seq[Double])](
+      (0L, Seq(1.0, 0.0)), (1L, Seq(0.0, 1.0, 0.5)), (2L, Seq(1.0, 1.0)))
+    val msgs = Set(DotProduct.dimMismatch(2, 3), DotProduct.dimMismatch(3, 2)).map(_.getMessage)
+    def refused(body: => Any): Boolean = {
+      val e = intercept[Exception](body)
+      causes(e).exists(t => t.isInstanceOf[IllegalArgumentException] && msgs(t.getMessage))
+    }
+    val base = baseOf(pts.map(_._2.map(Some(_))), 2)
+    val cents = Map(0 -> Array(1.0, 0.0), 1 -> Array(0.0, 1.0, 0.5))
+    assert(refused(refUpdate(base, cents)))
+    assert(refused(Cluster.lloydStep(base)(cents)))
+    assert(refused(Cluster.fitCentroids(toDf(pts), "vec_id", "embedding", k = 2, iters = 2)))
+    // centroids from an assignment that puts both lengths in one cluster
+    assert(refused(Cluster.kmeansAssignWarm(toDf(pts), "vec_id", "embedding",
+      Seq((0L, 0), (1L, 0), (2L, 0)).toDF("id", "cluster"), iters = 1).count()))
+  }
+
+  test("watched k-means costs one Spark job per Lloyd round") {
+    // 40 points on a line from ids 0 and 1: the boundary creeps right
+    // one step a round and settles only at round 7
+    val line = toDf((0 until 40).map(i => (i.toLong, Seq(i.toDouble))))
+    def fit(maxIters: Int) = jobsOf(Cluster.fitCentroidsWatched(
+      line, "vec_id", "embedding", k = 2, maxIters = maxIters))
+    val ((_, r2), j2) = fit(2)
+    val ((_, r3), j3) = fit(3)
+    assert(r2 == 2 && r3 == 3, s"the input must not converge by the cap: $r2, $r3 rounds")
+    assert(j3 == j2 + 1, s"$j2 jobs at 2 rounds, $j3 at 3")
+    assert(Cluster.fitCentroidsWatched(line, "vec_id", "embedding", k = 2, maxIters = 20)._2 == 7)
+  }
+
+  test("the Lloyd loop releases its cache on return and on failure") {
+    val sc = spark.sparkContext
+    spark.catalog.clearCache()
+    def released(body: => Any): Unit = {
+      val before = sc.getPersistentRDDs.keySet
+      Try(body)
+      assert((sc.getPersistentRDDs.keySet -- before).isEmpty, "a persisted RDD outlived the call")
+      assert(spark.sharedState.cacheManager.isEmpty, "a cached plan outlived the call")
+    }
+    val pts = toDf(Seq((0L, Seq(0.0, 0.0)), (1L, Seq(1.0, 0.0)), (2L, Seq(0.9, 0.0))))
+    released(Cluster.fitCentroidsWatched(pts, "vec_id", "embedding", k = 2, maxIters = 5))
+    released(Cluster.fitCentroids(pts, "vec_id", "embedding", k = 2, iters = 2))
+    released(Cluster.kmeansAssignWarm(pts, "vec_id", "embedding",
+      Seq((0L, 0), (1L, 1), (2L, 1)).toDF("id", "cluster"), iters = 2).count())
+    // every vector null: the base is empty, so round 1 has no centroid
+    val empty = pts.withColumn("embedding", lit(null).cast("array<double>"))
+    val e = intercept[IllegalArgumentException](
+      Cluster.fitCentroidsWatched(empty, "vec_id", "embedding", k = 2, maxIters = 3))
+    assert(e.getMessage.contains("all clusters emptied"))
+    released(Cluster.fitCentroidsWatched(empty, "vec_id", "embedding", k = 2, maxIters = 3))
+    // a task failure after the cache filled
+    val mixed = toDf(Seq((0L, Seq(0.0, 0.0)), (1L, Seq(1.0, 0.0, 1.0))))
+    released(Cluster.fitCentroidsWatched(mixed, "vec_id", "embedding", k = 2, maxIters = 3))
   }
 }

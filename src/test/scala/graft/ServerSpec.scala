@@ -355,6 +355,32 @@ class ServerSpec extends SparkSpec {
     } finally hot.stop()
   }
 
+  test("warm tier: the reload line on stderr is ASCII, [warm] <dir>: <message>") {
+    val wh = Files.createTempDirectory("graft-serve-log").toString
+    val provider = new HashEmbedder(16)
+    Index.build(Seq(("logged index one", "a.md"), ("logged index two", "b.md"))
+      .toDF("text", "source"), s"$wh/main", provider, strategy = "simple")
+    val dir = java.nio.file.Paths.get(Index.locate(wh, "main").get)
+    val hot = new SearchServer(spark, wh, "main", provider, warm = true)
+    hot.start()
+    val captured = new java.io.ByteArrayOutputStream
+    val err = System.err
+    try {
+      System.setErr(new java.io.PrintStream(captured, true, StandardCharsets.UTF_8))
+      // a newer mtime on any file under the index moves its fingerprint
+      val f = Files.walk(dir).filter(Files.isRegularFile(_)).findFirst().get
+      Files.setLastModifiedTime(f, java.nio.file.attribute.FileTime.fromMillis(
+        Files.getLastModifiedTime(f).toMillis + 10000))
+      val (code, resp) = http("POST", s"http://127.0.0.1:${hot.boundPort}/search",
+        Some("""{"query":"logged","top_k":1}"""))
+      assert(code == 200 && resp.contains("\"tier\":\"warm\""), resp)
+    } finally { System.setErr(err); hot.stop() }
+    val lines = new String(captured.toByteArray, StandardCharsets.UTF_8)
+      .linesIterator.filter(_.startsWith("[warm]")).toSeq
+    assert(lines.exists(_.endsWith(": changed on disk, reloading")), lines)
+    assert(lines.forall(_.forall(_ < 128)), s"non-ASCII log line: $lines")
+  }
+
   test("warm tier: the centroid probe ranks by round6(dot), then centroid id (searchIvf order)") {
     val wh = Files.createTempDirectory("graft-serve-probe").toString
     val provider = new HashEmbedder(16)

@@ -1,9 +1,5 @@
 package graft.operators
 
-import java.util.UUID
-import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger}
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -43,34 +39,6 @@ class FixedPointSpec extends SparkSpec {
   private def local(maxIters: Int)(f: Double => Double): (Double, Int) =
     FixedPoint.runLocal(0.0, maxIters, Some(FixedPoint.LocalWatch[Double](0.0,
       (a, b) => math.abs(a - b))))(f)
-
-  /** Spark jobs `body` starts, counted by a listener; a tagged marker
-    * job drains the listener bus before the count is read. */
-  private def jobsOf[T](body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val (group, marker) = (UUID.randomUUID().toString, UUID.randomUUID().toString)
-    val jobs = new AtomicInteger
-    val drained = new AtomicBoolean
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
-          case Some(`group`) => jobs.incrementAndGet()
-          case Some(`marker`) => drained.set(true)
-          case _ =>
-        }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "fixed-point spec")
-      val out = try body finally sc.clearJobGroup()
-      sc.setJobGroup(marker, "listener drain")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      val deadline = System.nanoTime() + 30000000000L
-      while (!drained.get && System.nanoTime() < deadline) Thread.sleep(5)
-      assert(drained.get, "listener bus did not drain")
-      (out, jobs.get)
-    } finally sc.removeSparkListener(listener)
-  }
 
   test("stops at a fixed point with the fixed-round result") {
     val settle = (v: Column) => least(v + 1, lit(3.0))
