@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 import graft.embedding.{EmbeddingProvider, HashEmbedder}
+import graft.operators.Stop
 import graft.pipeline.Index
 import graft.serve.SearchServer
 import graft.sources.FileIngest
@@ -50,7 +51,7 @@ import graft.sources.FileIngest
   *   graft.Cli analyze (--embeddings <parquet> | --edges <parquet>) --out <dir>
   *                    --op knn|pagerank|ppr|triangles|components|communities|kcore|modularity|spread|degrees|kmeans|pca
   *                    [--k 3] [--lsh] [--weighted] [--clusters 8] [--iters n] [--tol t] [--init p]
-  *                    [--seeds <parquet>]
+  *                    [--seeds <parquet>] [--labels <parquet>] [--min-degree 3] [--max-degree d]
   *   graft.Cli ann-build <name> [--clusters 16] [--pq-m 8] [--pq-k 16]
   *   graft.Cli ann-search <name> <query> [--top-k 5] [--nprobe 4] [--rerank 50] [--filter dsl]
   *   graft.Cli export <name> --out <dir> [--format jsonl|parquet|native]
@@ -144,7 +145,7 @@ object Cli {
   }
 
   /** Flag parsing: (positional args, --key value / --bool flags). */
-  private def parse(args: Seq[String]): (Seq[String], Map[String, String]) = {
+  private[graft] def parse(args: Seq[String]): (Seq[String], Map[String, String]) = {
     val pos = Seq.newBuilder[String]
     var flags = Map.empty[String, String]
     var i = 0
@@ -270,6 +271,37 @@ object Cli {
         s"unknown text dedup method '$other' (exact|minhash|simhash|containment)")
     }
   }
+
+  private val analyzeGraphOps = Set("pagerank", "ppr", "triangles", "components",
+    "kcore", "modularity", "communities", "spread", "degrees")
+
+  /** The `analyze` flags that only some ops read, with the ops that read
+    * them. A flag passed to any other op is refused, not silently
+    * ignored. */
+  private val analyzeFlagOps: Seq[(String, Set[String])] = {
+    val loops = Set("pagerank", "ppr", "communities", "spread", "kmeans")
+    Seq(
+      // --edges replaces the kNN build; knn/kmeans/pca need the vectors
+      "edges" -> analyzeGraphOps,
+      // warm starts exist only where an incremental re-run is defined
+      "init" -> (loops + "components"),
+      "tol" -> loops,
+      "weighted" -> Set("pagerank", "communities"))
+  }
+
+  /** The refusal message for an `analyze` flag combination that would
+    * be silently ignored, or None when every flag is read. */
+  private[graft] def analyzeFlagError(op: String, flags: Map[String, String]): Option[String] =
+    if (op == "kmeans" && flags.contains("k"))
+      Some("--k sets the kNN-graph degree and is ignored by --op kmeans; " +
+        "use --clusters <n> for the k-means cluster count")
+    else if (op == "kmeans" && flags.contains("init") && flags.contains("clusters"))
+      Some("--clusters is ignored by --op kmeans with --init: warm k-means " +
+        "takes its clusters from the prior assignment")
+    else analyzeFlagOps.collectFirst {
+      case (flag, ops) if flags.contains(flag) && !ops(op) =>
+        s"--$flag applies to --op ${ops.toSeq.sorted.mkString("|")}, not --op $op"
+    }
 
   def main(args: Array[String]): Unit = {
     // TCP_NODELAY for any HttpServer this process creates (serve/mcp):
@@ -865,9 +897,9 @@ object Cli {
                   bits = flags.get("bits").map(_.toInt).getOrElse(16),
                   minCosine = flags.get("min-cosine").map(_.toDouble).getOrElse(0.95))
               } else {
-                val asg = graft.operators.Cluster.kmeansAssign(docs, idCol, vecCol,
+                val (asg, _) = graft.operators.Cluster.kmeansAssign(docs, idCol, vecCol,
                   k = flags.get("clusters").map(_.toInt).getOrElse(8),
-                  iters = flags.get("iters").map(_.toInt).getOrElse(5))
+                  Stop.Rounds(flags.get("iters").map(_.toInt).getOrElse(5)))
                 val withCl = docs.join(
                   asg.select(col("id").as(idCol + "_asg"), col("cluster")),
                   col(idCol).cast("long") === col(idCol + "_asg"))
@@ -941,23 +973,15 @@ object Cli {
           "[--survivors-of <curate/dedup out parquet>] " +
           "--op knn|pagerank|ppr|triangles|components|communities|kcore|modularity|spread|degrees|kmeans|pca [--id-col vec_id] " +
           "[--vec-col embedding] [--k 3] [--lsh] [--weighted] [--bits auto] [--tables 4] [--block-col <col>] " +
-          "[--clusters 8] [--iters <n>] [--tol <t>] [--init <parquet>] [--max-degree <d>] [--seeds <parquet>]"
+          "[--clusters 8] [--iters <n>] [--tol <t>] [--init <parquet>] [--max-degree <d>] [--seeds <parquet>] " +
+          "[--labels <parquet>] [--min-degree 3]"
         val out = flags.getOrElse("out", fail("--out <dir> required"))
         val op = flags.getOrElse("op", fail("--op required; " + usage))
         val idCol = flags.getOrElse("id-col", "vec_id")
         val vecCol = flags.getOrElse("vec-col", "embedding")
         val k = flags.get("k").map(_.toInt).getOrElse(3)
-        val graphOp = Set("pagerank", "ppr", "triangles", "components", "kcore", "modularity",
-          "communities", "spread", "degrees")(op)
-        // --k sizes the kNN graph; kmeans reads --clusters. Passing --k
-        // to kmeans is an easy misuse that silently did nothing — fail
-        // loudly instead.
-        if (op == "kmeans" && flags.contains("k")) fail(
-          "--k sets the kNN-graph degree and is ignored by --op kmeans; " +
-            "use --clusters <n> for the k-means cluster count")
-        if (flags.contains("edges") && !graphOp) fail(
-          s"--edges applies to graph ops " +
-            s"(pagerank|ppr|triangles|components|communities|kcore|modularity|spread|degrees), not --op $op")
+        val graphOp = analyzeGraphOps(op)
+        analyzeFlagError(op, flags).foreach(fail)
         // At scale the kNN-graph build is hours and the analytics
         // minutes: --edges lets the graph ops consume a persisted
         // neighbor/pair table — `analyze --op knn` output (id, nb, ...)
@@ -1059,70 +1083,43 @@ object Cli {
                 blockCol = flags.get("block-col"))
             } else G.knnGraph(emb, idCol, vecCol, k)
         }
-        // --tol switches pagerank/spread/kmeans to the convergence-
-        // watched variants (iterate until the L1 delta / centroid
-        // shift <= tol, --iters as the round cap — the 100 TB mode);
-        // without it, fixed rounds.
-        val tol = flags.get("tol").map(_.toDouble)
-        // Warm starts exist only where an incremental re-run is
-        // well-defined; everywhere else a passed --init must fail, not
-        // be silently ignored (dropping the flag would look like a
-        // warm start that "worked").
-        val initOps = Set("pagerank", "ppr", "communities", "spread",
-          "kmeans", "components")
-        if (flags.contains("init") && !initOps(op)) fail(
-          s"--init (warm start) is not supported by --op $op " +
-            s"(supported: ${initOps.toSeq.sorted.mkString("|")})")
+        // --tol switches the iterative ops to the convergence-watched
+        // tier (iterate until the L1 delta / centroid shift <= tol,
+        // --iters as the round cap, 50 by default — the 100 TB mode);
+        // without it, --iters fixed rounds (default per op).
+        val iters = flags.get("iters").map(_.toInt)
+        def stop(fixedDefault: Int): Stop =
+          try flags.get("tol").map(_.toDouble)
+            .fold[Stop](Stop.Rounds(iters.getOrElse(fixedDefault)))(
+              Stop.Converge(iters.getOrElse(50), _))
+          catch { case e: IllegalArgumentException => fail(e.getMessage) }
+        // --init <parquet>: warm-start from a prior run's output of the
+        // same op — the incremental re-run mode
+        lazy val init = flags.get("init").map(p => spark.read.parquet(p))
+        // --weighted: the edge similarity (score) weights the surfer's
+        // steps / the votes
+        val weighted = flags.contains("weighted")
+        def loopGraph(): org.apache.spark.sql.DataFrame =
+          if (weighted) {
+            val g = graph()
+            if (!g.columns.contains("score")) fail(
+              "--weighted needs edge weights: use the kNN build (it " +
+                "carries score) or an --edges table with a score/w column")
+            G.symmetrizeWeighted(g.select(col("id"), col("nb"), col("score")),
+              "id", "nb", "score")
+          } else G.symmetrize(graph())
         var roundsNote = ""
+        def looped(r: (org.apache.spark.sql.DataFrame, Int)) = {
+          if (flags.contains("tol")) roundsNote = s", converged in ${r._2} rounds"
+          r._1
+        }
         val result = op match {
           case "knn" =>
             // the raw neighbor table itself — the substrate the other
             // graph ops consume, exportable for external tooling
             graph()
           case "pagerank" =>
-            tol match {
-              case Some(t) =>
-                // --init <parquet>: warm-start from a prior run's
-                // (id, rank) output — the incremental re-run mode
-                if (flags.contains("weighted")) {
-                  val g = graph()
-                  if (!g.columns.contains("score")) fail(
-                    "--weighted needs edge weights: use the kNN build or " +
-                      "an --edges table with a score/w column")
-                  val (r, rounds) = G.pageRankWeightedWatched(
-                    G.symmetrizeWeighted(g.select(col("id"), col("nb"),
-                      col("score")), "id", "nb", "score"),
-                    maxIters = flags.get("iters").map(_.toInt).getOrElse(50),
-                    tol = t,
-                    init = flags.get("init").map(p => spark.read.parquet(p)))
-                  roundsNote = s", converged in $rounds rounds"
-                  r
-                } else {
-                val (r, rounds) = G.pageRankWatched(G.symmetrize(graph()),
-                  maxIters = flags.get("iters").map(_.toInt).getOrElse(50),
-                  tol = t,
-                  init = flags.get("init").map(p => spark.read.parquet(p)))
-                roundsNote = s", converged in $rounds rounds"
-                r
-                }
-              case None =>
-                if (flags.contains("init")) fail(
-                  "--init (warm start) requires --tol: the fixed-round " +
-                    "tier always starts cold (it is the oracle tier)")
-                if (flags.contains("weighted")) {
-                  // similarity-weighted surfer: follows edges in
-                  // proportion to score (Graph.pageRankWeighted)
-                  val g = graph()
-                  if (!g.columns.contains("score")) fail(
-                    "--weighted needs edge weights: use the kNN build or " +
-                      "an --edges table with a score/w column")
-                  G.pageRankWeighted(
-                    G.symmetrizeWeighted(g.select(col("id"), col("nb"),
-                      col("score")), "id", "nb", "score"),
-                    iters = flags.get("iters").map(_.toInt).getOrElse(5))
-                } else G.pageRank(G.symmetrize(graph()),
-                  iters = flags.get("iters").map(_.toInt).getOrElse(5))
-            }
+            looped(G.pageRank(loopGraph(), stop(5), weighted, init = init))
           case "ppr" =>
             // personalized PageRank: retrieval expansion from a seed
             // id set (--seeds parquet with an `id` column).
@@ -1133,24 +1130,8 @@ object Cli {
             val seeds = scoped(spark.read.parquet(
               flags.getOrElse("seeds", fail("--seeds <parquet> required for ppr"))),
               "id")
-            tol match {
-              case Some(t) =>
-                // --init <parquet>: warm-start from a prior run's
-                // sparse (id, rank) output — the daily-increment mode
-                val (r, rounds) = G.personalizedPageRankWatched(
-                  G.symmetrize(graph()), seeds,
-                  maxIters = flags.get("iters").map(_.toInt).getOrElse(50),
-                  tol = t,
-                  init = flags.get("init").map(p => spark.read.parquet(p)))
-                roundsNote = s", converged in $rounds rounds"
-                r
-              case None =>
-                if (flags.contains("init")) fail(
-                  "--init (warm start) requires --tol: the fixed-round " +
-                    "tier always starts cold (it is the oracle tier)")
-                G.personalizedPageRank(G.symmetrize(graph()), seeds,
-                  iters = flags.get("iters").map(_.toInt).getOrElse(5))
-            }
+            looped(G.personalizedPageRank(G.symmetrize(graph()), seeds, stop(5),
+              init = init))
           case "triangles" =>
             // --max-degree engages the sampled unbiased estimator —
             // required protection when --edges supplies an arbitrary
@@ -1172,9 +1153,8 @@ object Cli {
             // result as a cold run over the full pair union
             val pairs = graph()
               .select(col("id").as("id_a"), col("nb").as("id_b"))
-            flags.get("init") match {
-              case Some(p) => graft.operators.Dedup.connectedComponentsWarm(
-                pairs, spark.read.parquet(p))
+            init match {
+              case Some(prior) => graft.operators.Dedup.connectedComponentsWarm(pairs, prior)
               case None => graft.operators.Dedup.connectedComponents(pairs)
             }
           case "modularity" =>
@@ -1209,99 +1189,24 @@ object Cli {
             // density-based community discovery (synchronous LPA,
             // deterministic max-count/min-label tie rule): splits what
             // components merges — a bridge edge joins clusters for CC
-            // but cannot outvote a dense block's majority here.
-            // --weighted: votes carry the edge similarity (score) so a
-            // strong neighbor outvotes several weak ones
-            val cIters = flags.get("iters").map(_.toInt).getOrElse(5)
-            if (flags.contains("weighted")) {
-              val g = graph()
-              if (!g.columns.contains("score")) fail(
-                "--weighted needs edge weights: use the kNN build (it " +
-                  "carries score) or an --edges table with a score/w column")
-              val sym = G.symmetrizeWeighted(g.select(col("id"), col("nb"),
-                col("score")), "id", "nb", "score")
-              if (tol.isDefined) {
-                // watched weighted tier: integer labels, so tol's value
-                // is ignored (exact stop rules) — --iters is the cap;
-                // --init warm-starts from a prior (id, label) output
-                val (r, rounds) = G.labelPropagationWeightedWatched(sym,
-                  maxIters = flags.get("iters").map(_.toInt).getOrElse(50),
-                  init = flags.get("init").map(p => spark.read.parquet(p)))
-                roundsNote = s", converged in $rounds rounds"
-                r
-              } else {
-                if (flags.contains("init")) fail(
-                  "--init (warm start) requires --tol: the fixed-round " +
-                    "tier always starts cold (it is the oracle tier)")
-                G.labelPropagationWeighted(sym, iters = cIters)
-              }
-            } else if (tol.isDefined) {
-              // --tol switches to the convergence-watched LPA; labels
-              // are integers so the value is ignored (the stop rules
-              // are exact fixed point / even-remainder 2-cycle) —
-              // --iters is the round cap. --init <parquet> warm-starts
-              // from a prior run's (id, label) output (the incremental
-              // community mode).
-              val (r, rounds) = G.labelPropagationWatched(
-                G.symmetrize(graph()),
-                maxIters = flags.get("iters").map(_.toInt).getOrElse(50),
-                init = flags.get("init").map(p => spark.read.parquet(p)))
-              roundsNote = s", converged in $rounds rounds"
-              r
-            } else {
-              if (flags.contains("init")) fail(
-                "--init (warm start) requires --tol: the fixed-round " +
-                  "tier always starts cold (it is the oracle tier)")
-              G.labelPropagation(G.symmetrize(graph()), iters = cIters)
-            }
+            // but cannot outvote a dense block's majority here. The
+            // watched tier's stop is exact (integer labels), so --tol's
+            // value is ignored; --iters is the round cap.
+            looped(G.labelPropagation(loopGraph(), stop(5), weighted, init = init))
           case "spread" =>
             // seeds scoped like ppr's: a non-survivor labeled seed
             // would re-assert its label into the scoped graph
             val seeds = scoped(spark.read.parquet(
               flags.getOrElse("seeds", fail("--seeds <parquet> required for spread"))),
               "id")
-            tol match {
-              case Some(t) =>
-                val (r, rounds) = G.labelSpreadWatched(G.symmetrize(graph()),
-                  seeds, maxIters = flags.get("iters").map(_.toInt).getOrElse(50),
-                  tol = t,
-                  init = flags.get("init").map(p => spark.read.parquet(p)))
-                roundsNote = s", converged in $rounds rounds"
-                r
-              case None =>
-                if (flags.contains("init")) fail(
-                  "--init (warm start) requires --tol: the fixed-round " +
-                    "tier always starts cold (it is the oracle tier)")
-                G.labelSpread(G.symmetrize(graph()), seeds,
-                  iters = flags.get("iters").map(_.toInt).getOrElse(4))
-            }
+            looped(G.labelSpread(G.symmetrize(graph()), seeds, stop(4), init = init))
           case "kmeans" =>
-            (tol, flags.get("init")) match {
-              case (Some(t), init) =>
-                // --tol: convergence-watched Lloyd (iterate until the
-                // requantized centroids stop moving; --iters caps).
-                // With --init this is the daily-increment mode: resume
-                // from yesterday's assignment, stop when stable.
-                val (asg, rounds) = graft.operators.Cluster.kmeansAssignWatched(
-                  emb, idCol, vecCol,
-                  k = flags.get("clusters").map(_.toInt).getOrElse(8),
-                  maxIters = flags.get("iters").map(_.toInt).getOrElse(50),
-                  tol = t,
-                  init = init.map(p => spark.read.parquet(p)))
-                roundsNote = s", converged in $rounds rounds"
-                asg
-              case (None, Some(p)) =>
-                // warm start from a prior run's (id, cluster) output:
-                // resume Lloyd from the centroids it implies — lands on
-                // the cold trajectory exactly (Cluster.kmeansAssignWarm)
-                graft.operators.Cluster.kmeansAssignWarm(emb, idCol, vecCol,
-                  init = spark.read.parquet(p),
-                  iters = flags.get("iters").map(_.toInt).getOrElse(1))
-              case (None, None) =>
-                graft.operators.Cluster.kmeansAssign(emb, idCol, vecCol,
-                  k = flags.get("clusters").map(_.toInt).getOrElse(8),
-                  iters = flags.get("iters").map(_.toInt).getOrElse(5))
-            }
+            // deterministic Lloyd; --init resumes from a prior run's
+            // (id, cluster) output — on the fixed tier it lands on the
+            // cold trajectory exactly (one further round by default)
+            looped(graft.operators.Cluster.kmeansAssign(emb, idCol, vecCol,
+              k = flags.get("clusters").map(_.toInt).getOrElse(8),
+              stop(if (init.isDefined) 1 else 5), init))
           case "pca" =>
             val model = graft.operators.Pca.fit(emb, vecCol)
             graft.operators.Pca.transform(emb, idCol, vecCol, model)

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.filter.MetadataFilterDsl
-import graft.operators.{BM25, Dedup, Expansion, Graph, Knn}
+import graft.operators.{BM25, Dedup, Expansion, Graph, Knn, Stop}
 
 /** Train-export rows: mixtures, sampling, packing, curriculum, BPE.
   *
@@ -29,7 +29,7 @@ private[graft] object EntryExport {
     // as tokenize_pack / curriculum_pack.
     "sample_cluster_balanced" -> ((s, dir) => {
       val clusters = graft.operators.Cluster.kmeansAssign(
-        Tables.embeddings(s, dir), "vec_id", "embedding", k = 4, iters = 3)
+        Tables.embeddings(s, dir), "vec_id", "embedding", k = 4, Stop.Rounds(3))._1
       graft.operators.TrainExport.stratifiedSample(
           clusters, "id", "cluster", n = 30, seed = "r10")
         .select("id", "cluster").orderBy("id")

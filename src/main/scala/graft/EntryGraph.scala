@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.filter.MetadataFilterDsl
-import graft.operators.{BM25, Dedup, Expansion, Graph, Knn}
+import graft.operators.{BM25, Dedup, Expansion, Graph, Knn, Stop}
 
 /** Graph-analytics + clustering rows: kNN graph, PageRank/PPR/LPA/k-core, k-means, PCA.
   *
@@ -43,7 +43,7 @@ private[graft] object EntryGraph {
     // contribution sum EXACT in doubles and thus order-independent
     // (engine-portable determinism — see Graph.quant/termQuant).
     "graph_pagerank" -> ((s, dir) => {
-      Graph.pageRank(graphEdges(s, dir), damping = 0.85, iters = 5)
+      Graph.pageRank(graphEdges(s, dir), Stop.Rounds(5), damping = 0.85)._1
         .orderBy("id")
     }),
 
@@ -113,7 +113,7 @@ private[graft] object EntryGraph {
       val seeds = Tables.embeddings(s, dir)
         .filter(col("vec_id") % 50 === 0)
         .select(col("vec_id").as("id"))
-      Graph.personalizedPageRank(graphEdges(s, dir), seeds, iters = 5)
+      Graph.personalizedPageRank(graphEdges(s, dir), seeds, Stop.Rounds(5))._1
         .orderBy(desc("rank"), col("id")).limit(50)
     }),
 
@@ -138,8 +138,8 @@ private[graft] object EntryGraph {
       // stops early (fixed point / even-remainder cycle) the extra CTE
       // rounds are no-ops, if it runs the cap both sides computed the
       // same 6 rounds — so the cheaper cap buys suite time for free
-      Graph.personalizedPageRankWatched(edges, seeds, damping = 0.5,
-          maxIters = 6, tol = 0.0, quantBits = 26)._1
+      Graph.personalizedPageRank(edges, seeds, Stop.Converge(6, tol = 0.0),
+          damping = 0.5, quantBits = 26)._1
         .orderBy(desc("rank"), col("id")).limit(50)
     }),
 
@@ -193,7 +193,7 @@ private[graft] object EntryGraph {
           col("doc_id") < 199)
         .select(col("doc_id").as("a"), (col("doc_id") + 1).as("b"))
       Graph.labelPropagation(
-        Graph.symmetrize(cliques.union(bridges), "a", "b"), iters = 4)
+        Graph.symmetrize(cliques.union(bridges), "a", "b"), Stop.Rounds(4))._1
         .orderBy("id")
     }),
 
@@ -213,8 +213,8 @@ private[graft] object EntryGraph {
       val bridges = ids.filter(col("doc_id") % 8 === 7 &&
           col("doc_id") < 199)
         .select(col("doc_id").as("a"), (col("doc_id") + 1).as("b"))
-      Graph.labelPropagationWatched(
-        Graph.symmetrize(cliques.union(bridges), "a", "b"), maxIters = 8)._1
+      Graph.labelPropagation(
+        Graph.symmetrize(cliques.union(bridges), "a", "b"), Stop.Converge(8))._1
         .orderBy("id")
     }),
 
@@ -234,7 +234,7 @@ private[graft] object EntryGraph {
           col("doc_id") < 199)
         .select(col("doc_id").as("a"), (col("doc_id") + 1).as("b"))
       val sym = Graph.symmetrize(cliques.union(bridges), "a", "b")
-      Graph.modularity(sym, Graph.labelPropagation(sym, iters = 4))
+      Graph.modularity(sym, Graph.labelPropagation(sym, Stop.Rounds(4))._1)
         .orderBy("label")
     }),
 
@@ -258,9 +258,9 @@ private[graft] object EntryGraph {
           col("doc_id") < 199)
         .select(col("doc_id").as("a"), (col("doc_id") + 1).as("b"),
           lit(2.5).as("w"))
-      Graph.labelPropagationWeighted(
+      Graph.labelPropagation(
         Graph.symmetrizeWeighted(cliques.union(bridges), "a", "b", "w"),
-        iters = 4)
+        Stop.Rounds(4), weighted = true)._1
         .orderBy("id")
     }),
 
@@ -282,9 +282,9 @@ private[graft] object EntryGraph {
           col("doc_id") < 199)
         .select(col("doc_id").as("a"), (col("doc_id") + 1).as("b"),
           lit(2.5).as("w"))
-      Graph.labelPropagationWeightedWatched(
+      Graph.labelPropagation(
         Graph.symmetrizeWeighted(cliques.union(bridges), "a", "b", "w"),
-        maxIters = 8)._1
+        Stop.Converge(8), weighted = true)._1
         .orderBy("id")
     }),
 
@@ -304,9 +304,9 @@ private[graft] object EntryGraph {
           col("doc_id") < 199)
         .select(col("doc_id").as("a"), (col("doc_id") + 1).as("b"),
           lit(2.5).as("w"))
-      Graph.pageRankWeightedWatched(
+      Graph.pageRank(
         Graph.symmetrizeWeighted(cliques.union(bridges), "a", "b", "w"),
-        maxIters = 10, tol = 0.0)._1
+        Stop.Converge(10, tol = 0.0), weighted = true)._1
         .orderBy("id")
     }),
 
@@ -327,9 +327,9 @@ private[graft] object EntryGraph {
           col("doc_id") < 199)
         .select(col("doc_id").as("a"), (col("doc_id") + 1).as("b"),
           lit(2.5).as("w"))
-      Graph.pageRankWeighted(
+      Graph.pageRank(
         Graph.symmetrizeWeighted(cliques.union(bridges), "a", "b", "w"),
-        iters = 5)
+        Stop.Rounds(5), weighted = true)._1
         .orderBy("id")
     }),
 
@@ -343,7 +343,7 @@ private[graft] object EntryGraph {
       val seeds = emb.filter(col("vec_id") % 5 === 0)
         .select(col("vec_id").as("id"), col("label"))
       val spread = Graph.labelSpread(graphEdges(s, dir), seeds,
-        alpha = 0.85, iters = 4)
+        Stop.Rounds(4), alpha = 0.85)._1
       val w = Window.partitionBy("id").orderBy(desc("score"), col("label"))
       spread.withColumn("rn", row_number().over(w))
         .filter(col("rn") === 1)
@@ -359,7 +359,7 @@ private[graft] object EntryGraph {
     "cluster_kmeans" -> ((s, dir) => {
       graft.operators.Cluster.kmeansAssign(
           Tables.embeddings(s, dir), "vec_id", "embedding",
-          k = 4, iters = 3)
+          k = 4, Stop.Rounds(3))._1
         .orderBy("id")
     }),
 
@@ -373,9 +373,9 @@ private[graft] object EntryGraph {
     "cluster_kmeans_warm" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
       val prior = graft.operators.Cluster.kmeansAssign(
-        emb, "vec_id", "embedding", k = 4, iters = 3)
-      graft.operators.Cluster.kmeansAssignWarm(
-          emb, "vec_id", "embedding", prior, iters = 0)
+        emb, "vec_id", "embedding", k = 4, Stop.Rounds(3))._1
+      graft.operators.Cluster.kmeansAssign(
+          emb, "vec_id", "embedding", k = 4, Stop.Rounds(0), init = Some(prior))._1
         .orderBy("id")
     }),
 
@@ -795,7 +795,7 @@ private[graft] object EntryGraph {
     // the full 8-round cap (lpaRounds) — valid at any knobs because
     // the watch stops only at an exact fixed point or an even-
     // remainder 2-cycle revisit, where the remaining rounds change
-    // nothing (Graph.labelPropagationWatched scaladoc).
+    // nothing (Graph.labelPropagation scaladoc).
     // LPA (the graph_communities 4-round replay via lpaRounds) + the
     // modularity aggregates: per community, directed edge-ends and
     // internal ends, Q = internal/rows − (ends/rows)².

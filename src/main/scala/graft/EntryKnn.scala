@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.filter.MetadataFilterDsl
-import graft.operators.{BM25, Dedup, Expansion, Graph, Knn}
+import graft.operators.{BM25, Dedup, Expansion, Graph, Knn, Stop}
 
 /** Vector-search rows: exact/IVF/PQ/Hamming ladders, MMR, batch, retrieval eval.
   *
@@ -177,7 +177,7 @@ private[graft] object EntryKnn {
       import graft.functions.VectorFunctions
       val emb = Tables.embeddings(s, dir)
       val asg = graft.operators.Cluster.kmeansAssign(emb, "vec_id",
-          "embedding", k = 8, iters = 3)
+          "embedding", k = 8, Stop.Rounds(3))._1
         .select(col("id").as("vec_id"), col("cluster").as("kc"))
       val embC = emb.join(asg, "vec_id")
       val queries = emb.filter(col("vec_id") % 20 === 0)

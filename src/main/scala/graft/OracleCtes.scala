@@ -7,7 +7,7 @@ package graft
 private[graft] object OracleCtes {
   /** [[lpaRounds]] with weighted votes: sum(w) instead of count(*),
     * same (wv DESC, nl) row_number pick — the
-    * [[graft.operators.Graph.labelPropagationWeighted]] update. */
+    * weighted [[graft.operators.Graph.labelPropagation]] update. */
   def lpaWeightedRounds(n: Int): String =
     (1 to n).map { i =>
       s"""c$i AS (SELECT e.s AS id, n.label AS nl, sum(e.w) AS wv

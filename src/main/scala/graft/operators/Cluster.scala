@@ -56,14 +56,72 @@ object Cluster {
 
   private type Centroids = Map[Int, Array[Double]]
 
-  /** Fit centroids by `iters` fixed Lloyd rounds; returns
-    * (clusterId -> centroid), possibly missing ids whose clusters
-    * emptied. Init = the `k` lowest-id vectors, cluster ids 0..k-1 in
-    * id order. */
-  def fitCentroids(emb: DataFrame, idCol: String, vecCol: String,
-                   k: Int, iters: Int): Map[Int, Array[Double]] = {
-    require(k >= 1 && iters >= 0, s"need k >= 1, iters >= 0; got $k, $iters")
-    lloyd(emb, idCol, vecCol, iters, None)(firstK(_, k))._1
+  /** Fit centroids by Lloyd rounds under the [[FixedPoint]] driver;
+    * returns ((clusterId -> centroid), rounds run), possibly missing ids
+    * whose clusters emptied. Cold init = the `k` lowest-id vectors,
+    * cluster ids 0..k-1 in id order.
+    *
+    * `stop`:
+    *   - `Stop.Rounds(n)`: exactly `n` Lloyd rounds, the oracle tier.
+    *   - `Stop.Converge(maxIters, tol)`: the 100 TB fit mode (the
+    *     [[Graph.pageRank]] watched discipline applied to clustering):
+    *     iterate until the requantized centroid map stops moving,
+    *     instead of paying a fixed worst-case round count on a corpus
+    *     that usually stabilizes in a handful of rounds. Unlike the
+    *     graph family, the watch here is FREE: the k*dims centroid
+    *     matrix is already collected to the driver every round (the
+    *     documented bounded scalar), so the shift probe is a driver-side
+    *     array comparison — no extra Spark job, no extra exchange. Stop
+    *     rules — the [[FixedPoint]] driver's, which also states why
+    *     early-stopping at `tol = 0.0` is INDISTINGUISHABLE from running
+    *     the remaining rounds (what makes it oracle-checkable against
+    *     the `Rounds(maxIters)` replay):
+    *     - fixed point: the new map equals the old EXACTLY (same
+    *       surviving clusters, identical 6-decimal coordinates);
+    *     - `tol > 0` (production): stop when every surviving cluster
+    *       moved less than tol in L2 and no cluster emptied — the usual
+    *       relative-movement stop, NOT cold-equivalent (document the
+    *       knob, don't oracle it);
+    *     - period-2 cycle: an EXACT revisit of the two-rounds-back map,
+    *       accepted only with an even remaining budget (quantized Lloyd
+    *       can in principle oscillate the way the quantized graph
+    *       contractions measurably do).
+    *
+    * `init` = warm start, on either tier: round 0's centroids derive
+    * from a prior (id, cluster) assignment ([[centroidsOf]]), which IS
+    * the next Lloyd update, and `k` is then ignored. With `Rounds(j)`
+    * this is the incremental re-cluster mode with an EXACT
+    * cold-equivalence contract: warm(cold(i), j) == cold(i + 1 + j)
+    * (see [[kmeansAssign]]). With `Converge` it is the daily-increment
+    * mode: yesterday's structure enters as round 0, an unchanged corpus
+    * confirms in 1 round, a locally perturbed one converges in rounds
+    * proportional to the perturbation, never the cold-start distance.
+    *
+    * The (id, v) base is persisted for the loop's lifetime (r16, guide
+    * §5): every round is one pass over it — unpersisted, each round
+    * would re-read the source and re-cast the vectors. Disk-backed so a
+    * corpus-scale base degrades gracefully instead of evicting execution
+    * memory; the init runs against it, so its first job fills the
+    * cache. */
+  def fitCentroids(emb: DataFrame, idCol: String, vecCol: String, k: Int,
+                   stop: Stop, init: Option[DataFrame] = None)
+      : (Map[Int, Array[Double]], Int) = {
+    require(k >= 1, s"need k >= 1; got $k")
+    // An exact repeat reads 0; at tol > 0 a shift below tol reads as
+    // tol itself, which passes the driver's d1 <= tol stop but is no
+    // exact period-2 revisit.
+    val watch = stop.watchTol.map { tol =>
+      FixedPoint.LocalWatch[Centroids](tol, (a, b) =>
+        if (sameCentroids(a, b)) 0.0
+        else if (tol > 0.0 && shiftBelow(a, b, tol)) tol
+        else Double.PositiveInfinity)
+    }
+    val base = baseOf(emb, idCol, vecCol).persist(StorageLevel.MEMORY_AND_DISK)
+    try {
+      val step = lloydStep(base)
+      val c0 = init.fold(firstK(base, k))(centroidsOf(emb, idCol, vecCol, _))
+      FixedPoint.runLocal(c0, stop.maxIters, watch)(step)
+    } finally { base.unpersist(); () }
   }
 
   // init = the k lowest-id vectors, cluster ids 0..k-1 in id order
@@ -78,22 +136,6 @@ object Cluster {
     emb.select(col(idCol).cast("long").as("id"),
       asDouble(col(vecCol)).as("v"))
       .where(col("id").isNotNull && col("v").isNotNull)
-
-  /** Lloyd rounds from `init(base)` under the [[FixedPoint]] driver.
-    * The (id, v) base is persisted for the loop's lifetime (r16, guide
-    * §5): every round is one pass over it — unpersisted, each round
-    * would re-read the source and re-cast the vectors. Disk-backed so a
-    * corpus-scale base degrades gracefully instead of evicting execution
-    * memory; `init` runs against it, so its first job fills the cache. */
-  private def lloyd(emb: DataFrame, idCol: String, vecCol: String, maxIters: Int,
-                    watch: Option[FixedPoint.LocalWatch[Centroids]])
-                   (init: DataFrame => Centroids): (Centroids, Int) = {
-    val base = baseOf(emb, idCol, vecCol).persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      val step = lloydStep(base)
-      FixedPoint.runLocal(init(base), maxIters, watch)(step)
-    } finally { base.unpersist(); () }
-  }
 
   /** One Lloyd round over an (id, v) frame, planned once: every call of
     * the returned step is a single job over the same physical rows —
@@ -206,69 +248,6 @@ object Cluster {
     }
   }
 
-  /** Convergence-watched Lloyd — the 100 TB fit mode (the
-    * [[graft.operators.Graph.pageRankWatched]] discipline applied to
-    * clustering): iterate until the requantized centroid map stops
-    * moving, instead of paying a fixed worst-case round count on a
-    * corpus that usually stabilizes in a handful of rounds. Returns
-    * (centroids, roundsRun).
-    *
-    * Unlike the graph family, the watch here is FREE: the k*dims
-    * centroid matrix is already collected to the driver every round
-    * (the documented bounded scalar), so the shift probe is a driver-
-    * side array comparison — no extra Spark job, no extra exchange.
-    *
-    * Stop rules — the [[FixedPoint]] driver's, which also states why
-    * early-stopping at `tol = 0.0` is INDISTINGUISHABLE from running
-    * the remaining rounds (what makes it oracle-checkable against a
-    * fixed-`maxIters` replay):
-    *   - fixed point: the new map equals the old EXACTLY (same
-    *     surviving clusters, identical 6-decimal coordinates);
-    *   - `tol > 0` (production): stop when every surviving cluster
-    *     moved less than tol in L2 and no cluster emptied — the usual
-    *     relative-movement stop, NOT cold-equivalent (document the
-    *     knob, don't oracle it);
-    *   - period-2 cycle: an EXACT revisit of the two-rounds-back map,
-    *     accepted only with an even remaining budget (quantized Lloyd
-    *     can in principle oscillate the way the quantized graph
-    *     contractions measurably do).
-    *
-    * `init` = warm start (the [[kmeansAssignWarm]] contract: centroids
-    * derive from a prior assignment, which IS the next Lloyd update) —
-    * warm+watched is the daily-increment mode: yesterday's structure
-    * enters as round 0, an unchanged corpus confirms in 1 round, a
-    * locally perturbed one converges in rounds proportional to the
-    * perturbation, never the cold-start distance. */
-  def fitCentroidsWatched(emb: DataFrame, idCol: String, vecCol: String,
-                          k: Int, maxIters: Int, tol: Double = 0.0,
-                          init: Option[DataFrame] = None): (Map[Int, Array[Double]], Int) = {
-    require(k >= 1 && maxIters >= 0 && tol >= 0.0,
-      s"need k >= 1, maxIters >= 0, tol >= 0; got $k, $maxIters, $tol")
-    // An exact repeat reads 0; at tol > 0 a shift below tol reads as
-    // tol itself, which passes the driver's d1 <= tol stop but is no
-    // exact period-2 revisit.
-    val moved = (a: Centroids, b: Centroids) =>
-      if (sameCentroids(a, b)) 0.0
-      else if (tol > 0.0 && shiftBelow(a, b, tol)) tol
-      else Double.PositiveInfinity
-    lloyd(emb, idCol, vecCol, maxIters, Some(FixedPoint.LocalWatch(tol, moved))) { base =>
-      init.fold(firstK(base, k))(centroidsOf(emb, idCol, vecCol, _))
-    }
-  }
-
-  /** Watched assignment: [[fitCentroidsWatched]] then one zero-shuffle
-    * argmin pass — same (id, cluster, dist) schema as [[kmeansAssign]],
-    * and bit-identical to it at `tol = 0.0` by the stop rules above.
-    * Returns (assignment, roundsRun); `k` is ignored when `init` is
-    * given (centroids derive from the prior assignment). */
-  def kmeansAssignWatched(emb: DataFrame, idCol: String, vecCol: String,
-                          k: Int, maxIters: Int, tol: Double = 0.0,
-                          init: Option[DataFrame] = None): (DataFrame, Int) = {
-    val (cents, rounds) =
-      fitCentroidsWatched(emb, idCol, vecCol, k, maxIters, tol, init)
-    (assignWith(baseOf(emb, idCol, vecCol), cents), rounds)
-  }
-
   // exact equality of two quantized centroid maps (coordinates are
   // exact 6-decimal-rounded doubles, so == is well-defined)
   private def sameCentroids(a: Centroids, b: Centroids): Boolean =
@@ -290,8 +269,8 @@ object Cluster {
   /** The Lloyd update step computed FROM a persisted (id, cluster)
     * assignment instead of an in-loop argmin: per-cluster coordinate
     * means, 6-decimal-rounded — bit-identical to what the fit loop
-    * would produce from the same assignment, which is what makes
-    * [[kmeansAssignWarm]]'s cold-equivalence contract exact. Vectors
+    * would produce from the same assignment, which is what makes the
+    * warm [[kmeansAssign]]'s cold-equivalence contract exact. Vectors
     * absent from `assign` (new data since the prior run) contribute to
     * no centroid; they re-enter at the next assignment's argmin. */
   def centroidsOf(emb: DataFrame, idCol: String, vecCol: String,
@@ -308,30 +287,38 @@ object Cluster {
       Iterator.single(sums)
     })
 
-  /** Assign every vector to its nearest fitted centroid:
-    * (id, cluster, dist) with dist = the 6-decimal-rounded squared L2
-    * distance used for the argmin. */
-  def kmeansAssign(emb: DataFrame, idCol: String, vecCol: String,
-                   k: Int, iters: Int): DataFrame =
-    assignWith(baseOf(emb, idCol, vecCol),
-      fitCentroids(emb, idCol, vecCol, k, iters))
+  /** Assign every vector to its nearest centroid fitted by
+    * [[fitCentroids]] under the same `stop` and `init`, in one
+    * zero-shuffle argmin pass: returns ((id, cluster, dist), rounds
+    * run) with dist = the 6-decimal-rounded squared L2 distance used for
+    * the argmin. `Stop.Converge(maxIters)` at `tol = 0.0` is
+    * bit-identical to `Stop.Rounds(maxIters)` by the stop rules.
+    *
+    * Warm start (`init` = a prior (id, cluster) assignment; `k` is
+    * ignored): resume Lloyd from the centroids the prior assignment
+    * implies, run the further update rounds, and re-assign — the
+    * incremental re-cluster mode (a grown corpus re-clusters from
+    * yesterday's structure in 0-1 rounds instead of a cold fit). EXACT
+    * cold-equivalence contract, because deriving centroids from an
+    * assignment IS the next Lloyd update: warm(cold(i), j) ==
+    * cold(i + 1 + j), i.e. `kmeansAssign(emb, …, Rounds(j),
+    * init = Some(kmeansAssign(emb, …, k, Rounds(i))._1))` equals
+    * `kmeansAssign(emb, …, k, Rounds(i + 1 + j))` bit-for-bit on
+    * unchanged data (spec-pinned, and hash-gated against a cold
+    * cluster_kmeans oracle replay with the extra round). New vectors
+    * missing from `init` join at the first argmin; clusters that lost
+    * every member drop, matching the fit loop's empty-group rule. */
+  def kmeansAssign(emb: DataFrame, idCol: String, vecCol: String, k: Int,
+                   stop: Stop, init: Option[DataFrame] = None): (DataFrame, Int) = {
+    val (cents, rounds) = fitCentroids(emb, idCol, vecCol, k, stop, init)
+    (assignWith(baseOf(emb, idCol, vecCol), cents), rounds)
+  }
 
-  /** Warm-start assignment: resume Lloyd from the centroids a prior
-    * (id, cluster) assignment implies, run `iters` further update
-    * rounds, and re-assign — the incremental re-cluster mode (a grown
-    * corpus re-clusters from yesterday's structure in 0-1 rounds
-    * instead of a cold fit). EXACT cold-equivalence contract, because
-    * deriving centroids from an assignment IS the next Lloyd update:
-    * `kmeansAssignWarm(emb, kmeansAssign(emb, k, i), j)` equals
-    * `kmeansAssign(emb, k, i + 1 + j)` bit-for-bit on unchanged data
-    * (spec-pinned, and hash-gated against a cold cluster_kmeans oracle
-    * replay with the extra round). New vectors missing from `init`
-    * join at the first argmin; clusters that lost every member drop,
-    * matching the fit loop's empty-group rule. */
-  def kmeansAssignWarm(emb: DataFrame, idCol: String, vecCol: String,
-                       init: DataFrame, iters: Int): DataFrame =
-    assignWith(baseOf(emb, idCol, vecCol),
-      lloyd(emb, idCol, vecCol, iters, None)(_ => centroidsOf(emb, idCol, vecCol, init))._1)
+  /** [[kmeansAssign]] on the watched tier. */
+  def kmeansAssignWatched(emb: DataFrame, idCol: String, vecCol: String,
+                          k: Int, maxIters: Int, tol: Double = 0.0,
+                          init: Option[DataFrame] = None): (DataFrame, Int) =
+    kmeansAssign(emb, idCol, vecCol, k, Stop.Converge(maxIters, tol), init)
 
   private def assignWith(base: DataFrame, centroids: Centroids): DataFrame =
     base.withColumn("b", nearest(col("v"), centroids))

@@ -7,6 +7,37 @@ import org.apache.spark.sql.functions.{coalesce, lit, sum, udf}
 
 import graft.operators.Ckpt.CkptOps
 
+/** When an iterative operator ([[Graph]]'s PageRank, PPR, LPA and label
+  * spreading, [[Cluster]]'s Lloyd k-means) stops: its one policy
+  * argument. Each policy checks its own fields once, at construction. */
+sealed trait Stop {
+  /** The round cap. */
+  def maxIters: Int
+
+  /** The watch tolerance of the watched tier; None on the fixed tier. */
+  private[operators] def watchTol: Option[Double] = this match {
+    case Stop.Rounds(_) => None
+    case Stop.Converge(_, tol) => Some(tol)
+  }
+}
+
+object Stop {
+  /** The fixed-round oracle tier: exactly `n` rounds, no probe. */
+  final case class Rounds(n: Int) extends Stop {
+    require(n >= 0, s"Stop.Rounds needs n >= 0, got $n")
+    def maxIters: Int = n
+  }
+
+  /** The watched tier: at most `maxIters` rounds, stopping early by the
+    * [[FixedPoint]] stop rule at `tol`. `tol = 0.0` returns exactly what
+    * `Rounds(maxIters)` returns. A NaN or negative tol could never meet
+    * `d1 <= tol` (a probe every round for nothing), so it is refused. */
+  final case class Converge(maxIters: Int, tol: Double = 0.0) extends Stop {
+    require(maxIters >= 0, s"Stop.Converge needs maxIters >= 0, got $maxIters")
+    require(tol >= 0.0, s"Stop.Converge needs tol >= 0 (not NaN), got $tol")
+  }
+}
+
 /** The round loop shared by the iterative operators (PageRank, PPR,
   * LPA and label spreading in [[Graph]], Lloyd k-means in [[Cluster]]).
   * An operator supplies its update step and, on its watched tier, how a

@@ -362,9 +362,9 @@ object Graph {
     * 2^-30 state grid. */
   private def termQuant(c: Column): Column = quant(c, 48)
 
-  /** PageRank by fixed-round power iteration over a directed edge list
-    * (src, dst) — undirected graphs pass both directions. Returns
-    * (id, rank) over nodes = distinct(src union dst).
+  /** PageRank by power iteration over a directed edge list (src, dst)
+    * — undirected graphs pass both directions. Returns ((id, rank) over
+    * nodes = distinct(src union dst), rounds run).
     *
     * Engine-portable determinism (the repo-wide oracle stance): ranks
     * quantize onto the 2^-quantBits grid ([[quant]]) after EVERY
@@ -387,31 +387,42 @@ object Graph {
     * in-heap object array, ~3.5x the serialized bytes; node-scale
     * state on a billion-node graph hits the same cliff kCore's
     * edge-scale state hit at the 100x sweep).
-    * Fixed `iters` (not convergence-tested) keeps the round count — and
-    * thus the oracle's recursion depth — identical across engines; at
-    * 100 TB use [[pageRankWatched]], which watches the L1 delta with
-    * the same plan per round. */
-  def pageRank(edges: DataFrame, damping: Double = 0.85, iters: Int = 5,
-               quantBits: Int = 30): DataFrame =
-    pageRankLoop(edges, weighted = false, damping, iters, watchTol = None,
-      quantBits)._1
-
-  /** Convergence-watched PageRank — the 100 TB production mode the
-    * fixed-round tier's scaladoc promises: iterate until the L1 delta
-    * `sum(|rank' - rank|)` falls to `tol` or `maxIters` rounds, whichever
-    * first, on the shared [[FixedPoint]] driver — at `tol = 0.0` the
-    * delta rides each round's checkpoint job (no probe job), otherwise
-    * one aggregate scan per round, never a per-node driver loop.
-    * Returns (ranks, roundsRun).
     *
-    * `tol = 0.0` runs to the EXACT fixed point of the quantized update,
-    * with the driver's period-2 cycle stop on an even remaining budget
-    * (measured on the 1.6k-node supplier-customer graph: delta1 parks
-    * at 3 grid cells from round 31 on while state(r) == state(r-2)
-    * exactly); [[FixedPoint]] states why the result then equals the
-    * fixed-`maxIters` run, converged or not — what makes the watched
-    * variant oracle-checkable. Fixed-round [[pageRank]] stays the
-    * oracle tier for graph_pagerank itself.
+    * `weighted` = similarity-WEIGHTED PageRank over a (src, dst, w)
+    * edge list: the random surfer follows edges in proportion to their
+    * weight (contribution = rank · w / outgoing-weight-sum), so
+    * centrality concentrates along STRONG similarity paths — on a kNN
+    * graph, a hub of near-duplicates outranks a hub of marginal
+    * neighbors that the plain update would score identically. Companion
+    * to weighted [[labelPropagation]] on [[symmetrizeWeighted]]
+    * substrates. Same grids: every rank·w/outw term floors onto the
+    * 2^-48 grid before summation. Self-loops and zero/negative/null-
+    * weight edges are dropped ([[weightedEdges]]; they carry no walk
+    * mass). Designed for symmetrized weighted graphs, where every node
+    * has outgoing weight; an arbitrary directed list with
+    * weighted-dangling nodes is REFUSED loudly rather than silently
+    * leaking walk mass (the PPR stance) — use the unweighted dangling
+    * redistribution for those.
+    *
+    * `stop`:
+    *   - `Stop.Rounds(n)`: fixed rounds (not convergence-tested) keep
+    *     the round count — and thus the oracle's recursion depth —
+    *     identical across engines; this is the oracle tier for
+    *     graph_pagerank itself.
+    *   - `Stop.Converge(maxIters, tol)`: the 100 TB production mode —
+    *     iterate until the L1 delta `sum(|rank' - rank|)` falls to
+    *     `tol` or `maxIters` rounds, whichever first, on the shared
+    *     [[FixedPoint]] driver, with the same plan per round. At
+    *     `tol = 0.0` the delta rides each round's checkpoint job (no
+    *     probe job), otherwise one aggregate scan per round, never a
+    *     per-node driver loop. `tol = 0.0` runs to the EXACT fixed
+    *     point of the quantized update, with the driver's period-2
+    *     cycle stop on an even remaining budget (measured on the
+    *     1.6k-node supplier-customer graph: delta1 parks at 3 grid
+    *     cells from round 31 on while state(r) == state(r-2) exactly);
+    *     [[FixedPoint]] states why the result then equals the
+    *     `Rounds(maxIters)` run, converged or not — what makes the
+    *     watched tier oracle-checkable, weighted or not.
     *
     * `init` (incremental mode): seed from a prior (id, rank) table
     * instead of uniform — the production re-run path when edges change
@@ -430,24 +441,13 @@ object Graph {
     * may settle within a few 2^-quantBits cells of the cold result
     * rather than bit-identically on it (the unquantized fixed point is
     * unique; grid attractors differ by O(cell)). Warm starts follow a
-    * different trajectory, so they exist only on this watched tier;
-    * the fixed-round oracle tier always starts cold. */
-  def pageRankWatched(edges: DataFrame, damping: Double = 0.85,
-                      maxIters: Int = 50, tol: Double = 0.0,
-                      quantBits: Int = 30,
-                      init: Option[DataFrame] = None): (DataFrame, Int) =
-    pageRankLoop(edges, weighted = false, damping, maxIters,
-      watchTol = Some(tol), quantBits, init)
-
-  /** The PageRank tiers, plain and weighted. Plain reads (src, dst),
-    * keeps self-loops, spreads `rank / outdeg` and redistributes
-    * dangling mass; weighted reads (src, dst, w), drops self-loops and
-    * weights <= 0 ([[weightedEdges]]), spreads `rank * w / outw` and
-    * refuses dangling nodes. */
-  private def pageRankLoop(edges: DataFrame, weighted: Boolean,
-                           damping: Double, iters: Int,
-                           watchTol: Option[Double], quantBits: Int,
-                           init: Option[DataFrame] = None): (DataFrame, Int) = {
+    * different trajectory, so they exist only on the watched tier
+    * (`init` with `Stop.Rounds` is refused): the fixed-round oracle
+    * tier always starts cold. */
+  def pageRank(edges: DataFrame, stop: Stop, weighted: Boolean = false,
+               damping: Double = 0.85, quantBits: Int = 30,
+               init: Option[DataFrame] = None): (DataFrame, Int) = {
+    requireCold(stop, init)
     // Persist the raw edge list FIRST: deg, nodes, eout and the
     // dangling probe all derive from it, and an upstream edge source
     // can itself be expensive (the kNN graph) — without this cache
@@ -474,9 +474,9 @@ object Graph {
         .join(deg.withColumnRenamed("src", "id"), Seq("id"), "left_anti")
         .limit(1).count() > 0
       require(!(weighted && hasDangling),
-        "pageRankWeighted expects every node to carry outgoing weight " +
+        "weighted pageRank expects every node to carry outgoing weight " +
           "(a symmetrizeWeighted graph); dangling nodes would leak walk " +
-          "mass — use pageRank's dangling redistribution instead")
+          "mass — use the unweighted dangling redistribution instead")
       val teleport = (1.0 - damping) / n
       // State schema (r16): (id, rank, p1, p2) — the previous and
       // two-rounds-back ranks ride INSIDE the checkpointed state, so
@@ -508,9 +508,9 @@ object Graph {
           quant(lit(1.0 / n), quantBits).as("rank"),
           noPrev.as("p1"), noPrev.as("p2"))
       }
-      val watch = watchTol.map(FixedPoint.Watch(_,
+      val watch = stop.watchTol.map(FixedPoint.Watch(_,
         abs(col("rank") - col("p1")), abs(col("rank") - col("p2"))))
-      val (rank, rounds) = FixedPoint.run(rank0, iters, watch) { rank =>
+      val (rank, rounds) = FixedPoint.run(rank0, stop.maxIters, watch) { rank =>
         // Union-fused update (r17, guide §2.4 "two operations keyed the
         // same way can share one exchange"): the contribution aggregate
         // and the state join are BOTH id-keyed, so the state rows ride
@@ -546,6 +546,20 @@ object Graph {
       (rank.select(col("id"), col("rank")), rounds)
     } finally { nodes.unpersist(); eout.unpersist(); e.unpersist(); () }
   }
+
+  /** [[pageRank]] on the watched tier, unweighted. */
+  def pageRankWatched(edges: DataFrame, damping: Double = 0.85,
+                      maxIters: Int = 50, tol: Double = 0.0,
+                      quantBits: Int = 30,
+                      init: Option[DataFrame] = None): (DataFrame, Int) =
+    pageRank(edges, Stop.Converge(maxIters, tol), damping = damping,
+      quantBits = quantBits, init = init)
+
+  // Warm starts exist only on the watched tier (see pageRank).
+  private def requireCold(stop: Stop, init: Option[DataFrame]): Unit =
+    require(init.isEmpty || stop.watchTol.isDefined,
+      "warm start (init) requires Stop.Converge (--tol on the CLI): the " +
+        "fixed-round tier always starts cold (it is the oracle tier)")
 
   /** (src, dst) as longs: the edge list every unweighted loop reads. */
   private def srcDst(edges: DataFrame): DataFrame =
@@ -801,44 +815,6 @@ object Graph {
     (core, rounds)
   }
 
-  /** Similarity-WEIGHTED PageRank over a (src, dst, w) edge list: the
-    * random surfer follows edges in proportion to their weight
-    * (contribution = rank · w / outgoing-weight-sum), so centrality
-    * concentrates along STRONG similarity paths — on a kNN graph, a hub
-    * of near-duplicates outranks a hub of marginal neighbors that plain
-    * [[pageRank]] would score identically. Companion to
-    * [[labelPropagationWeighted]] on [[symmetrizeWeighted]] substrates.
-    *
-    * Same engine-portable grids as [[pageRank]]: every rank·w/outw term
-    * floors onto the 2^-48 grid before summation, states requantize
-    * onto 2^-quantBits per round. Zero/negative/null-weight edges are
-    * dropped (they carry no walk mass). Designed for symmetrized
-    * weighted graphs, where every node has outgoing weight; an
-    * arbitrary directed list with weighted-dangling nodes is REFUSED
-    * loudly rather than silently leaking walk mass (the PPR stance) —
-    * use [[pageRank]]'s dangling redistribution for those. */
-  def pageRankWeighted(edges: DataFrame, damping: Double = 0.85,
-                       iters: Int = 5, quantBits: Int = 30): DataFrame =
-    pageRankLoop(edges, weighted = true, damping, iters, watchTol = None,
-      quantBits)._1
-
-  /** Convergence-watched WEIGHTED PageRank — [[pageRankWatched]]'s
-    * contract (the [[FixedPoint]] L1 and period-2 watch, warm `init`
-    * with the same input checks and mass renormalization) over
-    * [[pageRankWeighted]]'s rank·w/outw update, closing the family
-    * asymmetry where the 100 TB watched mode stopped at the unweighted
-    * tier. `tol = 0.0` returns exactly the fixed-round run at
-    * `maxIters` — the fixed-round-replay oracle equality. The same
-    * no-weighted-dangling refusal applies (symmetrized inputs).
-    * Returns (ranks, roundsRun). */
-  def pageRankWeightedWatched(edges: DataFrame, damping: Double = 0.85,
-                              maxIters: Int = 50, tol: Double = 0.0,
-                              quantBits: Int = 30,
-                              init: Option[DataFrame] = None)
-      : (DataFrame, Int) =
-    pageRankLoop(edges, weighted = true, damping, maxIters,
-      watchTol = Some(tol), quantBits, init)
-
   /** [[symmetrize]] with the edge weight carried along: both directions
     * unioned, duplicate (src, dst) rows collapsed to the MAX weight —
     * deterministic whatever the caller's pair table contains (a cosine
@@ -852,44 +828,6 @@ object Graph {
         col(wCol).as("w")))
       .groupBy("src", "dst").agg(max("w").as("w"))
 
-  /** Weight-aware [[labelPropagation]] — what a SIMILARITY graph wants:
-    * each neighbor's vote counts its edge weight (the kNN cosine), so
-    * one 0.98-similar neighbor outvotes three 0.3-similar ones instead
-    * of losing 3:1. Same synchronous scaffold and total-order tie rule,
-    * with (max weight-sum, then min label) deciding each node.
-    *
-    * Engine-portable determinism (the graph-iteration stance): every
-    * weight floors onto the 2^-48 grid BEFORE summation ([[termQuant]]),
-    * so per-(node, label) vote sums are EXACT in doubles — order-
-    * independent across Spark scheduling and replaying engines — for
-    * degree x maxWeight up to ~2^4 at full precision (the kNN
-    * composition: degree <= k x tables, cosine <= 1). Ties after exact
-    * sums break to the smaller label; no float comparison ambiguity
-    * remains. Expects [[symmetrizeWeighted]] edges ((src, dst, w) rows,
-    * w > 0 — zero/negative/null-weight edges are dropped up front since
-    * they carry no vote). */
-  def labelPropagationWeighted(edges: DataFrame, iters: Int = 5): DataFrame =
-    lpaLoop(edges, weighted = true, iters, watched = false)._1
-
-  /** Convergence-watched WEIGHTED LPA — [[labelPropagationWatched]]'s
-    * contract over [[labelPropagationWeighted]]'s vote rule, closing
-    * the family asymmetry where the 100 TB watched mode stopped at the
-    * unweighted tier. Labels are integers and the 2^-48-floored vote
-    * sums are exact, so the watch counts changed labels exactly (a node
-    * that loses every vote counts as changed), and the [[FixedPoint]]
-    * stop rules make `watched(maxIters) == labelPropagationWeighted(maxIters)`
-    * at any knobs — the oracle contract the unweighted twin carries.
-    *
-    * `init` = warm start (the family's incremental mode): round 0
-    * labels from a prior (id, label) assignment; new nodes enter as
-    * their own label, departed ids drop. An unchanged graph confirms
-    * its prior communities in 1 round. */
-  def labelPropagationWeightedWatched(edges: DataFrame,
-                                      maxIters: Int = 50,
-                                      init: Option[DataFrame] = None)
-      : (DataFrame, Int) =
-    lpaLoop(edges, weighted = true, maxIters, watched = true, init)
-
   /** Unsupervised community detection by SYNCHRONOUS label propagation
     * (Raghavan et al. 2007) over an undirected (src, dst) edge list:
     * every node starts as its own community, and each round every node
@@ -898,11 +836,7 @@ object Graph {
     * is a total order, so unlike classic LPA's random tie-break and
     * asynchronous sweep — deliberately not ported — the update is a
     * pure function of the graph, exactly replayable by an independent
-    * engine (the oracle contract). Fixed `iters` rounds: synchronous
-    * LPA can 2-cycle on bipartite-ish structures, so a NAIVE fixpoint
-    * watch may never fire; bounded rounds keep the output total
-    * ([[labelPropagationWatched]] adds the cycle-aware watch for
-    * production runs — this fixed tier stays the oracle).
+    * engine (the oracle contract).
     *
     * Complements [[Dedup.connectedComponents]] on the same substrate:
     * CC answers "is there ANY path" (one bridge edge merges two
@@ -919,32 +853,47 @@ object Graph {
     * per-node struct-min; label state is one row per node, never
     * nodes x labels; localCheckpoint per round truncates lineage.
     * Expects a symmetrized edge list ([[symmetrize]]) so every node
-    * appears as src. Returns (id, label), label = a member id of the
-    * community. */
-  def labelPropagation(edges: DataFrame, iters: Int = 5): DataFrame =
-    lpaLoop(edges, weighted = false, iters, watched = false)._1
-
-  /** Convergence-watched LPA — the 100 TB community-detection mode.
+    * appears as src. Returns ((id, label), rounds run), label = a
+    * member id of the community.
     *
-    * The fixed-round tier's scaladoc names the reason it does NOT
-    * watch: synchronous LPA can 2-cycle (the canonical case is a
-    * single undirected edge — the two endpoints swap labels forever),
-    * so a naive fixpoint watch may never fire and the loop would run
-    * to its cap on exactly the structures that converged-in-spirit
-    * first. The [[FixedPoint]] driver's period-2 cycle rule closes that
-    * gap: stop on a true fixed point (zero labels changed), or on an
-    * EXACT revisit of the state two rounds back when the remaining
-    * budget is even — watched(maxIters) == labelPropagation(maxIters)
-    * at ANY knobs, the oracle contract (proof in [[FixedPoint]]).
+    * `weighted` = weight-aware LPA — what a SIMILARITY graph wants:
+    * each neighbor's vote counts its edge weight (the kNN cosine), so
+    * one 0.98-similar neighbor outvotes three 0.3-similar ones instead
+    * of losing 3:1. Same synchronous scaffold and total-order tie rule,
+    * with (max weight-sum, then min label) deciding each node. Every
+    * weight floors onto the 2^-48 grid BEFORE summation
+    * ([[termQuant]]), so per-(node, label) vote sums are EXACT in
+    * doubles — order-independent across Spark scheduling and replaying
+    * engines — for degree x maxWeight up to ~2^4 at full precision (the
+    * kNN composition: degree <= k x tables, cosine <= 1). Ties after
+    * exact sums break to the smaller label; no float comparison
+    * ambiguity remains. Expects [[symmetrizeWeighted]] edges
+    * ((src, dst, w) rows, w > 0 — zero/negative/null-weight edges are
+    * dropped up front since they carry no vote).
     *
-    * Labels are integers, so the watch is an exact changed-label count
-    * (no tol, no quantization) that rides each round's checkpoint job.
-    * A node that loses every vote (possible only on a non-symmetrized
-    * input) counts as changed, so a node-set drift can never
-    * masquerade as convergence. Returns ((id, label), rounds run).
+    * `stop` (at least one round either way):
+    *   - `Stop.Rounds(n)`: the oracle tier. Synchronous LPA can 2-cycle
+    *     on bipartite-ish structures (the canonical case is a single
+    *     undirected edge — the two endpoints swap labels forever), so a
+    *     NAIVE fixpoint watch may never fire; bounded rounds keep the
+    *     output total.
+    *   - `Stop.Converge(maxIters, _)`: the 100 TB community-detection
+    *     mode. The [[FixedPoint]] driver's period-2 cycle rule closes
+    *     the 2-cycle gap: stop on a true fixed point (zero labels
+    *     changed), or on an EXACT revisit of the state two rounds back
+    *     when the remaining budget is even — so `Converge(maxIters)`
+    *     equals `Rounds(maxIters)` at ANY knobs, weighted or not, the
+    *     oracle contract (proof in [[FixedPoint]]). Labels are integers
+    *     (and the weighted vote sums exact), so the watch is an exact
+    *     changed-label count that rides each round's checkpoint job:
+    *     the policy's `tol` is ignored, whatever its value. A node that
+    *     loses every vote (possible only on a non-symmetrized input)
+    *     counts as changed, so a node-set drift can never masquerade as
+    *     convergence.
     *
     * `init` = WARM START (the family's incremental mode, cf.
-    * [[pageRankWatched]]/[[kmeansAssignWarm]]): round 0 labels come
+    * [[pageRank]]/[[Cluster.kmeansAssign]]), watched tier only — the
+    * fixed-round oracle tier always starts cold: round 0 labels come
     * from a prior (id, label) assignment instead of each-node-its-own-
     * id; nodes new since the prior run enter as their own label,
     * departed ids drop (inner-joined against the current node set). An
@@ -952,18 +901,11 @@ object Graph {
     * perturbed one re-converges in rounds tracking the perturbation,
     * not the cold-start mixing. Not cold-equal by construction (a
     * different round-0 state is a different trajectory) — spec-pinned,
-    * not oracled, the labelSpreadWatched(init) stance. */
-  def labelPropagationWatched(edges: DataFrame,
-                              maxIters: Int = 50,
-                              init: Option[DataFrame] = None): (DataFrame, Int) =
-    lpaLoop(edges, weighted = false, maxIters, watched = true, init)
-
-  /** The LPA tiers; `weighted` votes `sum(termQuant(w))` over
-    * [[weightedEdges]] instead of counting neighbors. */
-  private def lpaLoop(edges: DataFrame, weighted: Boolean, iters: Int,
-                      watched: Boolean,
-                      init: Option[DataFrame] = None): (DataFrame, Int) = {
-    require(iters >= 1, s"iters must be >= 1, got $iters")
+    * not oracled, the [[labelSpread]] `init` stance. */
+  def labelPropagation(edges: DataFrame, stop: Stop, weighted: Boolean = false,
+                       init: Option[DataFrame] = None): (DataFrame, Int) = {
+    requireCold(stop, init)
+    require(stop.maxIters >= 1, s"iters must be >= 1, got ${stop.maxIters}")
     val e = (if (weighted) weightedEdges(edges)
       else srcDst(edges).filter(col("src") =!= col("dst")))
       .persist(StorageLevel.MEMORY_AND_DISK)
@@ -991,6 +933,7 @@ object Graph {
       // arbitrary directed inputs, warm starts included), so no id
       // ever returns, and a row whose label, p1 and p2 are all NULL is
       // dropped.
+      val watched = stop.watchTol.isDefined
       val labels0 =
         if (watched) base.select(col("id"), col("label"),
           nullL.as("p1"), nullL.as("p2"))
@@ -999,7 +942,7 @@ object Graph {
         when(col("label") <=> col(prev), 0.0).otherwise(1.0)
       val watch =
         Option.when(watched)(FixedPoint.Watch(0.0, changed("p1"), changed("p2")))
-      val (labels, rounds) = FixedPoint.run(labels0, iters, watch) { labels =>
+      val (labels, rounds) = FixedPoint.run(labels0, stop.maxIters, watch) { labels =>
         val votes = e
           .join(labels.where(col("label").isNotNull)
             .select(col("id").as("dst"), col("label").as("nl")), "dst")
@@ -1119,7 +1062,8 @@ object Graph {
     * seeds' graph neighborhood — the standard retrieval-expansion
     * primitive (start from the hits a query retrieved, walk the
     * similarity graph, surface related documents the retriever
-    * missed). Returns sparse (id, rank) over nodes the walk reached.
+    * missed). Returns (sparse (id, rank) over nodes the walk reached,
+    * rounds run).
     *
     * Update: r'(v) = quant(damping * sum_{u->v} r(u)/outdeg(u)
     * + (1 - damping) * [v in seeds]/|S|) — the seed term re-injected
@@ -1128,49 +1072,35 @@ object Graph {
     * Dangling nodes are rejected up front: in proper PPR their mass
     * returns to the seeds, a variant nothing here needs — a
     * symmetrized similarity graph has none, and silently leaking mass
-    * instead would skew every rank. */
-  def personalizedPageRank(edges: DataFrame, seeds: DataFrame,
-                           damping: Double = 0.85, iters: Int = 5,
-                           quantBits: Int = 30): DataFrame =
-    pprLoop(edges, seeds, damping, iters, watchTol = None, quantBits)._1
-
-  /** Convergence-watched personalized PageRank (the [[pageRankWatched]]
-    * stance, over PPR's SPARSE rank state): iterate until the L1 delta
-    * — rows absent from the previous state read as rank 0 — falls to
-    * `tol` or `maxIters`; tol = 0 runs to the exact grid fixed point,
-    * with the [[FixedPoint]] period-2 cycle stop, so the watched result
-    * is always identical to the fixed-`maxIters` run. Returns (ranks,
-    * roundsRun).
+    * instead would skew every rank.
+    *
+    * `stop`: `Stop.Rounds(n)` is the fixed-round oracle tier;
+    * `Stop.Converge(maxIters, tol)` is the [[pageRank]] watched stance
+    * over PPR's SPARSE rank state: iterate until the L1 delta — rows
+    * absent from the previous state read as rank 0 — falls to `tol` or
+    * `maxIters`; tol = 0 runs to the exact grid fixed point, with the
+    * [[FixedPoint]] period-2 cycle stop, so the watched result is
+    * always identical to the `Rounds(maxIters)` run.
     *
     * `init` (incremental mode — completes the watched family's
     * daily-increment coverage; reference analog: the incremental
     * `update` CLI, `/root/reference/src/cli/update.rs:58-242`): seed
     * from a prior sparse (id, rank) table instead of the 1/|S| seed
-    * mass, with [[pageRankWatched]]'s renormalized-seed discipline
-    * adapted to sparse state — prior rows are restricted to the
-    * CURRENT node set (a departed node's row would re-inject mass no
-    * edge can drain) and the kept mass renormalizes to total 1 (the
-    * same O(1) driver scalar; refuses an all-zero/disjoint seed
-    * loudly). NEW seeds need no explicit row: the per-round seed term
-    * injects their teleport mass from round one, so a changed seed set
-    * self-corrects — old-seed mass decays geometrically, new-seed mass
-    * builds — in the rounds the CHANGE needs, not the cold-start count.
-    * Warm starts follow a different trajectory, so they exist only on
-    * this watched tier; the fixed-round oracle tier always starts
-    * cold. */
-  def personalizedPageRankWatched(edges: DataFrame, seeds: DataFrame,
-                                  damping: Double = 0.85,
-                                  maxIters: Int = 50, tol: Double = 0.0,
-                                  quantBits: Int = 30,
-                                  init: Option[DataFrame] = None): (DataFrame, Int) =
-    pprLoop(edges, seeds, damping, maxIters, watchTol = Some(tol),
-      quantBits, init)
-
-  private def pprLoop(edges: DataFrame, seeds: DataFrame,
-                      damping: Double, iters: Int,
-                      watchTol: Option[Double],
-                      quantBits: Int,
-                      init: Option[DataFrame] = None): (DataFrame, Int) = {
+    * mass, with [[pageRank]]'s renormalized-seed discipline adapted to
+    * sparse state — prior rows are restricted to the CURRENT node set
+    * (a departed node's row would re-inject mass no edge can drain) and
+    * the kept mass renormalizes to total 1 (the same O(1) driver
+    * scalar; refuses an all-zero/disjoint seed loudly). NEW seeds need
+    * no explicit row: the per-round seed term injects their teleport
+    * mass from round one, so a changed seed set self-corrects —
+    * old-seed mass decays geometrically, new-seed mass builds — in the
+    * rounds the CHANGE needs, not the cold-start count. Warm starts
+    * follow a different trajectory, so they exist only on the watched
+    * tier; the fixed-round oracle tier always starts cold. */
+  def personalizedPageRank(edges: DataFrame, seeds: DataFrame, stop: Stop,
+                           damping: Double = 0.85, quantBits: Int = 30,
+                           init: Option[DataFrame] = None): (DataFrame, Int) = {
+    requireCold(stop, init)
     val e = srcDst(edges).persist(StorageLevel.MEMORY_AND_DISK)
     val sd = seeds.select(col("id").cast("long").as("id")).distinct()
       .where(col("id").isNotNull)
@@ -1223,9 +1153,9 @@ object Graph {
       }
       val moved = (prev: String) =>
         abs(col("rank") - coalesce(col(prev), lit(0.0)))
-      val watch = watchTol.map(FixedPoint.Watch(_, moved("p1"), moved("p2")))
-      val (rank, rounds) = FixedPoint.run(rank0, iters, watch) { rank =>
-        // Union-fused update (r17, see pageRankLoop): the contribution
+      val watch = stop.watchTol.map(FixedPoint.Watch(_, moved("p1"), moved("p2")))
+      val (rank, rounds) = FixedPoint.run(rank0, stop.maxIters, watch) { rank =>
+        // Union-fused update (r17, see pageRank): the contribution
         // aggregate, the seed-term re-injection and — on the watched
         // tier — the watch-column carry are ALL id-keyed, so seed and
         // state rows ride the contribution groupBy's exchange. Grouped
@@ -1243,7 +1173,7 @@ object Graph {
           col("seed").as("sd0"), nullD.as("r0"), nullD.as("q1"))
         val newRank = quant(lit(damping) * coalesce(col("contrib"), lit(0.0))
           + coalesce(col("seed"), lit(0.0)), quantBits)
-        if (watchTol.isDefined) {
+        if (watch.isDefined) {
           val stateRows = rank.select(col("id"), nullD.as("c"),
             nullD.as("sd0"), col("rank").as("r0"), col("p1").as("q1"))
           terms.union(seedRows).union(stateRows).groupBy("id")
@@ -1283,46 +1213,33 @@ object Graph {
     * engine portability,
     * localCheckpoint lineage truncation.
     *
-    * Returns (id, label, score) for every (node, label) the diffusion
-    * reached; argmax with a smaller-label tie-break gives the
-    * prediction (left to the caller/query so the full distribution
-    * stays available for confidence thresholds). */
-  def labelSpread(edges: DataFrame, seeds: DataFrame,
-                  alpha: Double = 0.85, iters: Int = 4,
-                  quantBits: Int = 30): DataFrame =
-    labelSpreadLoop(edges, seeds, alpha, iters, watchTol = None,
-      quantBits)._1
-
-  /** Convergence-watched label spreading (the [[pageRankWatched]]
-    * stance): iterate until the L1 delta over the sparse (id, label)
-    * state falls to `tol` or `maxIters`. The delta is FULL OUTER, with
-    * missing scores read as 0 — the state grows as the diffusion
-    * reaches new (node, label) cells, and a newly-reached cell IS delta
-    * mass, as is a cell that dies. `tol = 0.0` runs to the exact grid
-    * fixed point, making the watched result identical to a
-    * fixed-`maxIters` run whether or not it converges early (the
-    * [[FixedPoint]] stop rules). Returns (state, roundsRun).
+    * Returns ((id, label, score) for every (node, label) the diffusion
+    * reached, rounds run); argmax with a smaller-label tie-break gives
+    * the prediction (left to the caller/query so the full distribution
+    * stays available for confidence thresholds).
     *
-    * `init` (incremental mode, the [[pageRankWatched]] stance): seed
-    * the diffusion state from a prior run's (id, label, score) output
+    * `stop`: `Stop.Rounds(n)` is the fixed-round oracle tier;
+    * `Stop.Converge(maxIters, tol)` is the [[pageRank]] watched stance:
+    * iterate until the L1 delta over the sparse (id, label) state falls
+    * to `tol` or `maxIters`. The delta is FULL OUTER, with missing
+    * scores read as 0 — the state grows as the diffusion reaches new
+    * (node, label) cells, and a newly-reached cell IS delta mass, as is
+    * a cell that dies. `tol = 0.0` runs to the exact grid fixed point,
+    * making the watched result identical to the `Rounds(maxIters)` run
+    * whether or not it converges early (the [[FixedPoint]] stop rules).
+    *
+    * `init` (incremental mode, the [[pageRank]] stance; watched tier
+    * only — the fixed-round oracle tier always starts cold): seed the
+    * diffusion state from a prior run's (id, label, score) output
     * instead of the bare seed table — the re-spread path after a graph
     * or seed edit. Scores are NOT a distribution, so no
     * renormalization applies; the clamped seed term re-injects
     * unconditionally either way, which is what pulls a stale state
     * toward the new answer. */
-  def labelSpreadWatched(edges: DataFrame, seeds: DataFrame,
-                         alpha: Double = 0.85, maxIters: Int = 50,
-                         tol: Double = 0.0,
-                         quantBits: Int = 30,
-                         init: Option[DataFrame] = None): (DataFrame, Int) =
-    labelSpreadLoop(edges, seeds, alpha, maxIters, watchTol = Some(tol),
-      quantBits, init)
-
-  private def labelSpreadLoop(edges: DataFrame, seeds: DataFrame,
-                              alpha: Double, iters: Int,
-                              watchTol: Option[Double],
-                              quantBits: Int,
-                              init: Option[DataFrame] = None): (DataFrame, Int) = {
+  def labelSpread(edges: DataFrame, seeds: DataFrame, stop: Stop,
+                  alpha: Double = 0.85, quantBits: Int = 30,
+                  init: Option[DataFrame] = None): (DataFrame, Int) = {
+    requireCold(stop, init)
     val e = srcDst(edges).persist(StorageLevel.MEMORY_AND_DISK)
     val sd = seeds.select(col("id").cast("long").as("id"),
         col("label").cast("int").as("label"))
@@ -1340,7 +1257,7 @@ object Graph {
       // shed for several rounds), so a cell that dies stays two more
       // rounds with a NULL score: the full-outer deltas then count its
       // mass against p1 and p2 as rows of the round's own frame.
-      val carry = if (watchTol.isDefined) Seq(nullD.as("p1"), nullD.as("p2"))
+      val carry = if (stop.watchTol.isDefined) Seq(nullD.as("p1"), nullD.as("p2"))
         else Nil
       val state0 = init match {
         case Some(s0) => s0.select(Seq(col("id").cast("long").as("id"),
@@ -1355,9 +1272,9 @@ object Graph {
       }
       val moved = (prev: String) => abs(coalesce(col("score"), lit(0.0)) -
         coalesce(col(prev), lit(0.0)))
-      val watch = watchTol.map(FixedPoint.Watch(_, moved("p1"), moved("p2")))
-      val (state, rounds) = FixedPoint.run(state0, iters, watch) { state =>
-        // Union-fused update (r17, see pageRankLoop): the contribution
+      val watch = stop.watchTol.map(FixedPoint.Watch(_, moved("p1"), moved("p2")))
+      val (state, rounds) = FixedPoint.run(state0, stop.maxIters, watch) { state =>
+        // Union-fused update (r17, see pageRank): the contribution
         // aggregate and the clamped seed re-injection both key on
         // (id, label), so seed rows — and on the watched tier the state
         // rows carrying p1/p2 — ride the contribution groupBy's
@@ -1375,7 +1292,7 @@ object Graph {
         val live = col("contrib").isNotNull || col("seed").isNotNull
         val score = quant(lit(alpha) * coalesce(col("contrib"), lit(0.0))
           + coalesce(col("seed"), lit(0.0)), quantBits)
-        if (watchTol.isDefined) {
+        if (watch.isDefined) {
           val stateRows = state.select(col("id"), col("label"),
             col("score").as("r0"), col("p1").as("q1"))
           terms.union(seedRows).unionByName(stateRows, allowMissingColumns = true)

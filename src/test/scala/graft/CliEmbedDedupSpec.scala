@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Cluster, Dedup}
+import graft.operators.{Cluster, Dedup, Stop}
 
 /** The embedding arms of `Cli dedup` (--method embed|semantic): this
   * spec drives the exact composition the CLI builds — LSH-bucketed (or
@@ -60,7 +60,7 @@ class CliEmbedDedupSpec extends SparkSpec {
   }
 
   test("semantic method: k-means blocking + within-cluster pairs + quality survivors") {
-    val asg = Cluster.kmeansAssign(emb, "vec_id", "embedding", k = 4, iters = 5)
+    val asg = Cluster.kmeansAssign(emb, "vec_id", "embedding", k = 4, Stop.Rounds(5))._1
     val withCl = emb.join(asg.select(col("id").as("vid_asg"), col("cluster")),
       col("vec_id").cast("long") === col("vid_asg"))
     val pairs = Dedup.semanticPairs(withCl, "vec_id", "embedding",

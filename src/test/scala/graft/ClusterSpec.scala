@@ -10,7 +10,7 @@ import org.scalacheck.Prop.propBoolean
 
 import graft.functions.VectorFunctions.dot
 import graft.functions.expressions.{DotProduct, RoundHalfUp}
-import graft.operators.Cluster
+import graft.operators.{Cluster, Stop}
 
 class ClusterSpec extends SparkSpec {
   import spark.implicits._
@@ -69,7 +69,7 @@ class ClusterSpec extends SparkSpec {
       (3L, Seq(-0.1, 0.1)), (4L, Seq(9.9, -0.1)), (5L, Seq(0.1, 9.9)),
       (6L, Seq(0.0, -0.1)), (7L, Seq(10.0, 0.1)), (8L, Seq(-0.1, 10.0)))
     val asg = Cluster.kmeansAssign(toDf(pts), "vec_id", "embedding",
-        k = 3, iters = 4)
+        k = 3, Stop.Rounds(4))._1
       .as[(Long, Int, Double)].collect().map(t => t._1 -> t._2).toMap
     assert(asg(0L) == asg(3L) && asg(3L) == asg(6L))
     assert(asg(1L) == asg(4L) && asg(4L) == asg(7L))
@@ -83,10 +83,11 @@ class ClusterSpec extends SparkSpec {
     // trajectory — the contract that makes incremental re-clustering
     // safe for curation decisions
     val emb = Tables.embeddings(spark, "/root/testdata/sf0.001").limit(120)
-    val prior = Cluster.kmeansAssign(emb, "vec_id", "embedding", k = 4, iters = 2)
-    val warm = Cluster.kmeansAssignWarm(emb, "vec_id", "embedding", prior, iters = 1)
+    val prior = Cluster.kmeansAssign(emb, "vec_id", "embedding", k = 4, Stop.Rounds(2))._1
+    val warm = Cluster.kmeansAssign(emb, "vec_id", "embedding", k = 4, Stop.Rounds(1),
+        init = Some(prior))._1
       .as[(Long, Int, Double)].collect().sortBy(_._1).toSeq
-    val cold = Cluster.kmeansAssign(emb, "vec_id", "embedding", k = 4, iters = 4)
+    val cold = Cluster.kmeansAssign(emb, "vec_id", "embedding", k = 4, Stop.Rounds(4))._1
       .as[(Long, Int, Double)].collect().sortBy(_._1).toSeq
     assert(warm == cold, "warm(A2, 1) must equal cold(4) exactly")
   }
@@ -96,11 +97,11 @@ class ClusterSpec extends SparkSpec {
       (0L, Seq(0.0, 0.0)), (1L, Seq(10.0, 0.0)),
       (2L, Seq(0.2, 0.0)), (3L, Seq(9.8, 0.0)))
     val prior = Cluster.kmeansAssign(toDf(pts), "vec_id", "embedding",
-      k = 2, iters = 2)
+      k = 2, Stop.Rounds(2))._1
     // two new points arrive near each blob; warm from the OLD assignment
     val grown = pts ++ Seq((4L, Seq(0.1, 0.1)), (5L, Seq(9.9, 0.1)))
-    val warm = Cluster.kmeansAssignWarm(toDf(grown), "vec_id", "embedding",
-        prior, iters = 1)
+    val warm = Cluster.kmeansAssign(toDf(grown), "vec_id", "embedding",
+        k = 2, Stop.Rounds(1), init = Some(prior))._1
       .as[(Long, Int, Double)].collect().map(t => t._1 -> t._2).toMap
     assert(warm.size == 6, s"every vector must be assigned: $warm")
     assert(warm(4L) == warm(0L) && warm(5L) == warm(1L),
@@ -118,7 +119,7 @@ class ClusterSpec extends SparkSpec {
       emb, "vec_id", "embedding", k = 4, maxIters = 40, tol = 0.0)
     assert(rounds < 40, s"watch must fire before the cap, ran $rounds")
     val watched = asgDf.as[(Long, Int, Double)].collect().sortBy(_._1).toSeq
-    val cold = Cluster.kmeansAssign(emb, "vec_id", "embedding", k = 4, iters = 40)
+    val cold = Cluster.kmeansAssign(emb, "vec_id", "embedding", k = 4, Stop.Rounds(40))._1
       .as[(Long, Int, Double)].collect().sortBy(_._1).toSeq
     assert(watched == cold, "watched(tol=0) must equal cold(maxIters) exactly")
   }
@@ -144,20 +145,32 @@ class ClusterSpec extends SparkSpec {
 
   test("watched: production tol stops no later than tol=0 and assigns everything") {
     val emb = Tables.embeddings(spark, "/root/testdata/sf0.001").limit(150)
-    val (_, exact) = Cluster.fitCentroidsWatched(
-      emb, "vec_id", "embedding", k = 4, maxIters = 40, tol = 0.0)
+    val (_, exact) = Cluster.fitCentroids(
+      emb, "vec_id", "embedding", k = 4, Stop.Converge(40, 0.0))
     val (asg, loose) = Cluster.kmeansAssignWatched(
       emb, "vec_id", "embedding", k = 4, maxIters = 40, tol = 0.05)
     assert(loose <= exact, s"tol=0.05 ran $loose > tol=0's $exact rounds")
     assert(asg.count() == emb.count(), "every vector must be assigned")
   }
 
+  test("watched: rounds to stop over the full sf tables at k 4, cap 25") {
+    // tol 0.01 stops well inside the cap at every scale (the tol of the
+    // cluster_kmeans_watched_tol row); tol 0 fires at sf0.001 and sf0.01
+    // but needs the whole cap at sf0.1
+    for ((sf, loose, exact) <- Seq(("sf0.001", 14, 21), ("sf0.01", 17, 19), ("sf0.1", 12, 25))) {
+      val emb = Tables.embeddings(spark, s"/root/testdata/$sf")
+      def rounds(tol: Double) =
+        Cluster.fitCentroids(emb, "vec_id", "embedding", k = 4, Stop.Converge(25, tol))._2
+      assert((rounds(0.01), rounds(0.0)) == ((loose, exact)), sf)
+    }
+  }
+
   test("deterministic across runs and input order") {
     val emb = Tables.embeddings(spark, "/root/testdata/sf0.001").limit(100)
-    val a = Cluster.kmeansAssign(emb, "vec_id", "embedding", 4, 3)
+    val a = Cluster.kmeansAssign(emb, "vec_id", "embedding", 4, Stop.Rounds(3))._1
       .orderBy("id").as[(Long, Int, Double)].collect().toSeq
     val b = Cluster.kmeansAssign(emb.orderBy(desc("vec_id")), "vec_id",
-        "embedding", 4, 3)
+        "embedding", 4, Stop.Rounds(3))._1
       .orderBy("id").as[(Long, Int, Double)].collect().toSeq
     assert(a == b)
   }
@@ -170,10 +183,10 @@ class ClusterSpec extends SparkSpec {
       (0L, Seq(1.0, 1.0)), (1L, Seq(1.0, 1.0)), (2L, Seq(0.1, 0.0)),
       (3L, Seq(0.1, 0.1)), (4L, Seq(0.0, 0.1)))
     val cents = Cluster.fitCentroids(toDf(pts), "vec_id", "embedding",
-      k = 2, iters = 3)
+      k = 2, Stop.Rounds(3))._1
     assert(cents.size == 1, s"expected lone surviving centroid, got $cents")
     assert(cents.keySet == Set(0))
-    val asg = Cluster.kmeansAssign(toDf(pts), "vec_id", "embedding", 2, 3)
+    val asg = Cluster.kmeansAssign(toDf(pts), "vec_id", "embedding", 2, Stop.Rounds(3))._1
       .select("cluster").distinct().as[Int].collect().toSeq
     assert(asg == Seq(0))
   }
@@ -182,7 +195,7 @@ class ClusterSpec extends SparkSpec {
     val pts = Seq[(Long, Seq[Double])](
       (0L, Seq(0.0, 0.0)), (1L, Seq(1.0, 0.0)), (2L, Seq(0.9, 0.0)))
     val asg = Cluster.kmeansAssign(toDf(pts), "vec_id", "embedding",
-        k = 2, iters = 0)
+        k = 2, Stop.Rounds(0))._1
       .as[(Long, Int, Double)].collect().map(t => t._1 -> t._2).toMap
     assert(asg(0L) == 0 && asg(1L) == 1 && asg(2L) == 1)
   }
@@ -192,7 +205,7 @@ class ClusterSpec extends SparkSpec {
     val pts = Seq[(Long, Seq[Double])](
       (0L, Seq(1.0, 1.0)), (1L, Seq(1.0, 1.0)), (2L, Seq(2.0, 0.5)))
     val asg = Cluster.kmeansAssign(toDf(pts), "vec_id", "embedding",
-        k = 2, iters = 1)
+        k = 2, Stop.Rounds(1))._1
       .select("cluster").distinct().as[Int].collect().toSeq
     assert(asg == Seq(0))
   }
@@ -274,23 +287,23 @@ class ClusterSpec extends SparkSpec {
     val cents = Map(0 -> Array(1.0, 0.0), 1 -> Array(0.0, 1.0, 0.5))
     assert(refused(refUpdate(base, cents)))
     assert(refused(Cluster.lloydStep(base)(cents)))
-    assert(refused(Cluster.fitCentroids(toDf(pts), "vec_id", "embedding", k = 2, iters = 2)))
+    assert(refused(Cluster.fitCentroids(toDf(pts), "vec_id", "embedding", k = 2, Stop.Rounds(2))._1))
     // centroids from an assignment that puts both lengths in one cluster
-    assert(refused(Cluster.kmeansAssignWarm(toDf(pts), "vec_id", "embedding",
-      Seq((0L, 0), (1L, 0), (2L, 0)).toDF("id", "cluster"), iters = 1).count()))
+    assert(refused(Cluster.kmeansAssign(toDf(pts), "vec_id", "embedding", k = 2, Stop.Rounds(1),
+      init = Some(Seq((0L, 0), (1L, 0), (2L, 0)).toDF("id", "cluster")))._1.count()))
   }
 
   test("watched k-means costs one Spark job per Lloyd round") {
     // 40 points on a line from ids 0 and 1: the boundary creeps right
     // one step a round and settles only at round 7
     val line = toDf((0 until 40).map(i => (i.toLong, Seq(i.toDouble))))
-    def fit(maxIters: Int) = jobsOf(Cluster.fitCentroidsWatched(
-      line, "vec_id", "embedding", k = 2, maxIters = maxIters))
+    def fit(maxIters: Int) = jobsOf(Cluster.fitCentroids(
+      line, "vec_id", "embedding", k = 2, Stop.Converge(maxIters)))
     val ((_, r2), j2) = fit(2)
     val ((_, r3), j3) = fit(3)
     assert(r2 == 2 && r3 == 3, s"the input must not converge by the cap: $r2, $r3 rounds")
     assert(j3 == j2 + 1, s"$j2 jobs at 2 rounds, $j3 at 3")
-    assert(Cluster.fitCentroidsWatched(line, "vec_id", "embedding", k = 2, maxIters = 20)._2 == 7)
+    assert(Cluster.fitCentroids(line, "vec_id", "embedding", k = 2, Stop.Converge(20))._2 == 7)
   }
 
   test("the Lloyd loop releases its cache on return and on failure") {
@@ -303,18 +316,18 @@ class ClusterSpec extends SparkSpec {
       assert(spark.sharedState.cacheManager.isEmpty, "a cached plan outlived the call")
     }
     val pts = toDf(Seq((0L, Seq(0.0, 0.0)), (1L, Seq(1.0, 0.0)), (2L, Seq(0.9, 0.0))))
-    released(Cluster.fitCentroidsWatched(pts, "vec_id", "embedding", k = 2, maxIters = 5))
-    released(Cluster.fitCentroids(pts, "vec_id", "embedding", k = 2, iters = 2))
-    released(Cluster.kmeansAssignWarm(pts, "vec_id", "embedding",
-      Seq((0L, 0), (1L, 1), (2L, 1)).toDF("id", "cluster"), iters = 2).count())
+    released(Cluster.fitCentroids(pts, "vec_id", "embedding", k = 2, Stop.Converge(5)))
+    released(Cluster.fitCentroids(pts, "vec_id", "embedding", k = 2, Stop.Rounds(2))._1)
+    released(Cluster.kmeansAssign(pts, "vec_id", "embedding", k = 2, Stop.Rounds(2),
+      init = Some(Seq((0L, 0), (1L, 1), (2L, 1)).toDF("id", "cluster")))._1.count())
     // every vector null: the base is empty, so round 1 has no centroid
     val empty = pts.withColumn("embedding", lit(null).cast("array<double>"))
     val e = intercept[IllegalArgumentException](
-      Cluster.fitCentroidsWatched(empty, "vec_id", "embedding", k = 2, maxIters = 3))
+      Cluster.fitCentroids(empty, "vec_id", "embedding", k = 2, Stop.Converge(3)))
     assert(e.getMessage.contains("all clusters emptied"))
-    released(Cluster.fitCentroidsWatched(empty, "vec_id", "embedding", k = 2, maxIters = 3))
+    released(Cluster.fitCentroids(empty, "vec_id", "embedding", k = 2, Stop.Converge(3)))
     // a task failure after the cache filled
     val mixed = toDf(Seq((0L, Seq(0.0, 0.0)), (1L, Seq(1.0, 0.0, 1.0))))
-    released(Cluster.fitCentroidsWatched(mixed, "vec_id", "embedding", k = 2, maxIters = 3))
+    released(Cluster.fitCentroids(mixed, "vec_id", "embedding", k = 2, Stop.Converge(3)))
   }
 }

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.Graph
+import graft.operators.{Graph, Stop}
 
 class GraphSpec extends SparkSpec {
   import spark.implicits._
@@ -182,7 +182,7 @@ class GraphSpec extends SparkSpec {
     // recursive-CTE prototype of the same fixed-round update.
     val edges = Seq((1L, 2L), (2L, 1L), (2L, 3L), (3L, 2L), (3L, 1L),
       (1L, 3L), (4L, 1L), (1L, 4L)).toDF("src", "dst")
-    val pr = Graph.pageRank(edges, damping = 0.85, iters = 5)
+    val pr = Graph.pageRank(edges, Stop.Rounds(5), damping = 0.85)._1
       .as[(Long, Double)].collect().toMap
     assert(pr.keySet == Set(1L, 2L, 3L, 4L))
     assert(math.abs(pr(1L) - 0.380015) < 1e-6)
@@ -197,7 +197,7 @@ class GraphSpec extends SparkSpec {
     // 1 -> 2 only: node 2 is dangling. Without redistribution the total
     // mass decays toward the teleport floor; with it, mass stays 1.
     val edges = Seq((1L, 2L)).toDF("src", "dst")
-    val pr = Graph.pageRank(edges, damping = 0.85, iters = 10)
+    val pr = Graph.pageRank(edges, Stop.Rounds(10), damping = 0.85)._1
       .as[(Long, Double)].collect().toMap
     assert(math.abs(pr.values.sum - 1.0) < 1e-6,
       s"rank mass ${pr.values.sum} leaked despite dangling redistribution")
@@ -213,7 +213,7 @@ class GraphSpec extends SparkSpec {
       (i.toLong, v)
     }.toDF("vec_id", "embedding")
     val g = Graph.symmetrize(Graph.knnGraph(pts, "vec_id", "embedding", 3))
-    val ppr = Graph.personalizedPageRank(g, Seq(0L).toDF("id"), iters = 8)
+    val ppr = Graph.personalizedPageRank(g, Seq(0L).toDF("id"), Stop.Rounds(8))._1
       .as[(Long, Double)].collect().sortBy(r => (-r._2, r._1))
     assert(ppr.head._1 == 0L, "the seed itself must rank first")
     assert(ppr.take(10).forall(_._1 % 2 == 0),
@@ -230,12 +230,12 @@ class GraphSpec extends SparkSpec {
     }.toDF("vec_id", "embedding")
     val g = Graph.symmetrize(Graph.knnGraph(pts, "vec_id", "embedding", 3))
     val seeds = Seq(0L).toDF("id")
-    val (watched, rounds) = Graph.personalizedPageRankWatched(
-      g, seeds, damping = 0.5, maxIters = 60, tol = 0.0)
+    val (watched, rounds) = Graph.personalizedPageRank(
+      g, seeds, Stop.Converge(60, 0.0), damping = 0.5)
     assert(rounds < 60, s"never converged in $rounds rounds")
     assert(rounds > 1)
     val w = watched.as[(Long, Double)].collect().toMap
-    val fixed = Graph.personalizedPageRank(g, seeds, damping = 0.5, iters = 60)
+    val fixed = Graph.personalizedPageRank(g, seeds, Stop.Rounds(60), damping = 0.5)._1
       .as[(Long, Double)].collect().toMap
     assert(w == fixed)
   }
@@ -248,8 +248,8 @@ class GraphSpec extends SparkSpec {
     }.toDF("vec_id", "embedding")
     val g = Graph.symmetrize(Graph.knnGraph(pts, "vec_id", "embedding", 3))
     val seeds = Seq(0L).toDF("id")
-    val (cold, coldRounds) = Graph.personalizedPageRankWatched(
-      g, seeds, damping = 0.5, maxIters = 60, tol = 0.0)
+    val (cold, coldRounds) = Graph.personalizedPageRank(
+      g, seeds, Stop.Converge(60, 0.0), damping = 0.5)
     assert(coldRounds > 2)
     val prior = cold.cache()
     // warm AT the fixed point: the renormalizing division (kept mass
@@ -258,8 +258,8 @@ class GraphSpec extends SparkSpec {
     // 25 on this fixture — the pageRankWeightedWatched warm lesson),
     // so the contract is warm < cold rounds plus a tight node-wise
     // drift envelope, not an exact confirm count
-    val (warm, warmRounds) = Graph.personalizedPageRankWatched(
-      g, seeds, damping = 0.5, maxIters = 60, tol = 0.0, init = Some(prior))
+    val (warm, warmRounds) = Graph.personalizedPageRank(
+      g, seeds, Stop.Converge(60, 0.0), damping = 0.5, init = Some(prior))
     assert(warmRounds < coldRounds,
       s"fixed-point warm start took $warmRounds rounds, cold took $coldRounds")
     val wm = warm.as[(Long, Double)].collect().toMap
@@ -275,10 +275,10 @@ class GraphSpec extends SparkSpec {
     // lands in the same attractor basin as a cold run on the NEW seeds
     val tol = 1e-6
     val seeds2 = Seq(0L, 2L).toDF("id")
-    val (cold2, cold2Rounds) = Graph.personalizedPageRankWatched(
-      g, seeds2, damping = 0.5, maxIters = 60, tol = tol)
-    val (warm2, warm2Rounds) = Graph.personalizedPageRankWatched(
-      g, seeds2, damping = 0.5, maxIters = 60, tol = tol, init = Some(prior))
+    val (cold2, cold2Rounds) = Graph.personalizedPageRank(
+      g, seeds2, Stop.Converge(60, tol), damping = 0.5)
+    val (warm2, warm2Rounds) = Graph.personalizedPageRank(
+      g, seeds2, Stop.Converge(60, tol), damping = 0.5, init = Some(prior))
     assert(warm2Rounds <= cold2Rounds,
       s"warm seed-churn run ($warm2Rounds) exceeded cold ($cold2Rounds)")
     val w2 = warm2.as[(Long, Double)].collect().toMap
@@ -293,13 +293,13 @@ class GraphSpec extends SparkSpec {
     // renormalization — mass they carried never re-injects, and the
     // kept rows' result is identical with or without the stale rows
     val stale = prior.union(Seq((999L, 0.25), (998L, 0.25)).toDF("id", "rank"))
-    val (warm3, _) = Graph.personalizedPageRankWatched(
-      g, seeds, damping = 0.5, maxIters = 60, tol = 0.0, init = Some(stale))
+    val (warm3, _) = Graph.personalizedPageRank(
+      g, seeds, Stop.Converge(60, 0.0), damping = 0.5, init = Some(stale))
     assert(warm3.as[(Long, Double)].collect().toMap == wm,
       "stale departed-id rows must not change the warm result")
     // a seed with NO surviving mass refuses loudly (wrong-table guard)
     intercept[IllegalArgumentException] {
-      Graph.personalizedPageRankWatched(g, seeds, maxIters = 5, tol = 0.0,
+      Graph.personalizedPageRank(g, seeds, Stop.Converge(5, 0.0),
         init = Some(Seq((999L, 1.0)).toDF("id", "rank")))
     }
   }
@@ -307,7 +307,7 @@ class GraphSpec extends SparkSpec {
   test("personalized PageRank refuses dangling graphs") {
     val edges = Seq((1L, 2L)).toDF("src", "dst") // 2 has no out-edge
     intercept[IllegalArgumentException] {
-      Graph.personalizedPageRank(edges, Seq(1L).toDF("id"))
+      Graph.personalizedPageRank(edges, Seq(1L).toDF("id"), Stop.Rounds(5))._1
     }
   }
 
@@ -374,7 +374,7 @@ class GraphSpec extends SparkSpec {
     }.toDF("vec_id", "embedding")
     val g = Graph.knnGraph(pts, "vec_id", "embedding", k = 3)
     val seeds = Seq((0L, 0), (1L, 1)).toDF("id", "label")
-    val spread = Graph.labelSpread(Graph.symmetrize(g), seeds, iters = 10)
+    val spread = Graph.labelSpread(Graph.symmetrize(g), seeds, Stop.Rounds(10))._1
     val best = spread.as[(Long, Int, Double)].collect()
       .groupBy(_._1).map { case (id, rows) =>
         id -> rows.minBy(r => (-r._3, r._2))._2
@@ -406,7 +406,7 @@ class GraphSpec extends SparkSpec {
     // .limit here: a GlobalLimit would add its own SinglePartition
     // exchange and mask the property under test).
     val asg = graft.operators.Cluster.kmeansAssign(
-      emb, "vec_id", "embedding", k = 2, iters = 0)
+      emb, "vec_id", "embedding", k = 2, Stop.Rounds(0))._1
     val asgPlan = asg.queryExecution.executedPlan.toString
     assert(!asgPlan.contains("Exchange"),
       s"kmeans assignment should be shuffle-free:\n$asgPlan")
@@ -424,7 +424,7 @@ class GraphSpec extends SparkSpec {
     assert(rounds < 60, s"never converged in $rounds rounds")
     assert(rounds > 1)
     val w = watched.as[(Long, Double)].collect().toMap
-    val fixed = Graph.pageRank(edges, damping = 0.5, iters = 60)
+    val fixed = Graph.pageRank(edges, Stop.Rounds(60), damping = 0.5)._1
       .as[(Long, Double)].collect().toMap
     assert(w == fixed, s"watched $w != fixed-round $fixed")
     // a positive tol stops earlier and lands within tol of the fixed point
@@ -519,9 +519,9 @@ class GraphSpec extends SparkSpec {
     assert(r40 < 40 && r41 < 41, s"never stopped: $r40 / $r41")
     assert(r40 != r41,
       s"stop round must be maxIters-parity-dependent on a cycling fixture ($r40 == $r41)")
-    val f40 = Graph.pageRank(edges, damping = 0.5, iters = 40, quantBits = 14)
+    val f40 = Graph.pageRank(edges, Stop.Rounds(40), damping = 0.5, quantBits = 14)._1
       .as[(Long, Double)].collect().toMap
-    val f41 = Graph.pageRank(edges, damping = 0.5, iters = 41, quantBits = 14)
+    val f41 = Graph.pageRank(edges, Stop.Rounds(41), damping = 0.5, quantBits = 14)._1
       .as[(Long, Double)].collect().toMap
     assert(w40.as[(Long, Double)].collect().toMap == f40)
     assert(w41.as[(Long, Double)].collect().toMap == f41)
@@ -538,11 +538,11 @@ class GraphSpec extends SparkSpec {
     val g = Graph.symmetrize(Graph.knnGraph(pts, "vec_id", "embedding", 3))
     val seeds = Seq((0L, 0), (1L, 1)).toDF("id", "label")
     val (watched, rounds) =
-      Graph.labelSpreadWatched(g, seeds, alpha = 0.5, maxIters = 60, tol = 0.0)
+      Graph.labelSpread(g, seeds, Stop.Converge(60, 0.0), alpha = 0.5)
     assert(rounds < 60, s"never converged in $rounds rounds")
     val w = watched.as[(Long, Int, Double)].collect()
       .map(r => (r._1, r._2) -> r._3).toMap
-    val fixed = Graph.labelSpread(g, seeds, alpha = 0.5, iters = 60)
+    val fixed = Graph.labelSpread(g, seeds, Stop.Rounds(60), alpha = 0.5)._1
       .as[(Long, Int, Double)].collect()
       .map(r => (r._1, r._2) -> r._3).toMap
     assert(w == fixed)
@@ -557,12 +557,12 @@ class GraphSpec extends SparkSpec {
     val g = Graph.symmetrize(Graph.knnGraph(pts, "vec_id", "embedding", 3))
     val seeds = Seq((0L, 0), (1L, 1)).toDF("id", "label")
     val (cold, coldRounds) =
-      Graph.labelSpreadWatched(g, seeds, alpha = 0.5, maxIters = 60, tol = 0.0)
+      Graph.labelSpread(g, seeds, Stop.Converge(60, 0.0), alpha = 0.5)
     assert(coldRounds > 2)
     // re-spread seeded from the converged state: one confirming round,
     // identical sparse state (no renormalization to shift cells here)
-    val (warm, warmRounds) = Graph.labelSpreadWatched(g, seeds, alpha = 0.5,
-      maxIters = 60, tol = 0.0, init = Some(cold))
+    val (warm, warmRounds) = Graph.labelSpread(g, seeds,
+      Stop.Converge(60, 0.0), alpha = 0.5, init = Some(cold))
     assert(warmRounds == 1, s"fixed-point warm re-spread took $warmRounds rounds")
     val wm = warm.as[(Long, Int, Double)].collect()
       .map(r => (r._1, r._2) -> r._3).toMap
@@ -572,8 +572,8 @@ class GraphSpec extends SparkSpec {
     // a prior cell whose node left the graph dies in round 1; its mass
     // is delta, so the watch confirms one round later
     val stale = cold.union(Seq((999L, 0, 0.5)).toDF("id", "label", "score"))
-    val (warm2, warm2Rounds) = Graph.labelSpreadWatched(g, seeds,
-      alpha = 0.5, maxIters = 60, tol = 0.0, init = Some(stale))
+    val (warm2, warm2Rounds) = Graph.labelSpread(g, seeds, Stop.Converge(60, 0.0),
+      alpha = 0.5, init = Some(stale))
     assert(warm2Rounds == 2, s"stale-cell re-spread took $warm2Rounds rounds")
     assert(warm2.as[(Long, Int, Double)].collect()
       .map(r => (r._1, r._2) -> r._3).toMap == cm)
@@ -625,7 +625,7 @@ class GraphSpec extends SparkSpec {
     val cliqueB = for (i <- 10L to 13L; j <- 10L to 13L if i < j) yield (i, j)
     val pairs = (cliqueA ++ cliqueB :+ (3L, 10L)).toDF("id_a", "id_b")
     val sym = Graph.symmetrize(pairs, "id_a", "id_b")
-    val lpa = Graph.labelPropagation(sym, iters = 4)
+    val lpa = Graph.labelPropagation(sym, Stop.Rounds(4))._1
       .as[(Long, Long)].collect().toMap
     assert((0L to 3L).map(lpa).toSet.size == 1, "clique A must agree")
     assert((10L to 13L).map(lpa).toSet.size == 1, "clique B must agree")
@@ -636,7 +636,7 @@ class GraphSpec extends SparkSpec {
     assert(cc.values.toSet.size == 1, "CC merges across the bridge")
     // stability: the synchronous update reproduces the settled state,
     // so extra rounds change nothing (the fixed-round oracle contract)
-    val more = Graph.labelPropagation(sym, iters = 8)
+    val more = Graph.labelPropagation(sym, Stop.Rounds(8))._1
       .as[(Long, Long)].collect().toMap
     assert(more == lpa, "settled LPA labels must be round-count invariant")
   }
@@ -663,7 +663,7 @@ class GraphSpec extends SparkSpec {
     // score shape: both communities positive, total well above 0
     val bridged = Graph.symmetrize(
       (cliqueA ++ cliqueB :+ (3L, 10L)).toDF("id_a", "id_b"), "id_a", "id_b")
-    val lpa = Graph.labelPropagation(bridged, iters = 4)
+    val lpa = Graph.labelPropagation(bridged, Stop.Rounds(4))._1
     val qs = Graph.modularity(bridged, lpa)
       .as[(Long, Long, Long, Double)].collect().map(_._4)
     assert(qs.length == 2 && qs.sum > 0.4, s"LPA split must score high: ${qs.toSeq}")
@@ -711,10 +711,10 @@ class GraphSpec extends SparkSpec {
     val cliqueB = for (i <- 10L to 13L; j <- 10L to 13L if i < j) yield (i, j)
     val sym = Graph.symmetrize(
       (cliqueA ++ cliqueB :+ (3L, 10L)).toDF("id_a", "id_b"), "id_a", "id_b")
-    val (watchedDf, rounds) = Graph.labelPropagationWatched(sym, maxIters = 12)
+    val (watchedDf, rounds) = Graph.labelPropagation(sym, Stop.Converge(12))
     assert(rounds < 12, s"watch must fire before the cap, ran $rounds")
     val watched = watchedDf.as[(Long, Long)].collect().toMap
-    val fixed = Graph.labelPropagation(sym, iters = 12)
+    val fixed = Graph.labelPropagation(sym, Stop.Rounds(12))._1
       .as[(Long, Long)].collect().toMap
     assert(watched == fixed, "watched must equal the full fixed-round run")
   }
@@ -730,12 +730,12 @@ class GraphSpec extends SparkSpec {
     val sym = Graph.symmetrize(Seq((1L, 2L)).toDF("id_a", "id_b"),
       "id_a", "id_b")
     for (cap <- Seq(9, 10)) {
-      val (df, rounds) = Graph.labelPropagationWatched(sym, maxIters = cap)
+      val (df, rounds) = Graph.labelPropagation(sym, Stop.Converge(cap))
       val expect = if (cap % 2 == 0) 2 else 3
       assert(rounds == expect,
         s"cap $cap: 2-cycle must stop at round $expect, ran $rounds")
       val watched = df.as[(Long, Long)].collect().toMap
-      val fixed = Graph.labelPropagation(sym, iters = cap)
+      val fixed = Graph.labelPropagation(sym, Stop.Rounds(cap))._1
         .as[(Long, Long)].collect().toMap
       assert(watched == fixed,
         s"cap $cap: watched 2-cycle result must equal fixed($cap)")
@@ -747,9 +747,9 @@ class GraphSpec extends SparkSpec {
     val cliqueB = for (i <- 10L to 13L; j <- 10L to 13L if i < j) yield (i, j)
     val sym = Graph.symmetrize(
       (cliqueA ++ cliqueB :+ (3L, 10L)).toDF("id_a", "id_b"), "id_a", "id_b")
-    val (priorDf, _) = Graph.labelPropagationWatched(sym, maxIters = 12)
+    val (priorDf, _) = Graph.labelPropagation(sym, Stop.Converge(12))
     val prior = priorDf.cache()
-    val (warm, rounds) = Graph.labelPropagationWatched(sym, maxIters = 12,
+    val (warm, rounds) = Graph.labelPropagation(sym, Stop.Converge(12),
       init = Some(prior))
     assert(rounds == 1, s"converged prior must confirm in 1 round, ran $rounds")
     assert(warm.as[(Long, Long)].collect().toMap ==
@@ -760,7 +760,7 @@ class GraphSpec extends SparkSpec {
     val grown = Graph.symmetrize(
       (cliqueA ++ cliqueB ++ Seq((3L, 10L), (0L, 77L), (1L, 77L), (2L, 77L)))
         .toDF("id_a", "id_b"), "id_a", "id_b")
-    val (regrown, r2) = Graph.labelPropagationWatched(grown, maxIters = 12,
+    val (regrown, r2) = Graph.labelPropagation(grown, Stop.Converge(12),
       init = Some(prior))
     val m = regrown.as[(Long, Long)].collect().toMap
     assert(m(77L) == m(0L), s"the new node must join clique A's community: $m")
@@ -773,12 +773,12 @@ class GraphSpec extends SparkSpec {
     val cliqueA = for (i <- 0L to 3L; j <- 0L to 3L if i < j) yield (i, j)
     val cliqueB = for (i <- 10L to 13L; j <- 10L to 13L if i < j) yield (i, j)
     val pairs = (cliqueA ++ cliqueB :+ (3L, 10L)).toDF("id_a", "id_b")
-    val uni = Graph.labelPropagationWeighted(
+    val uni = Graph.labelPropagation(
       Graph.symmetrizeWeighted(pairs.withColumn("w", lit(1.0)),
-        "id_a", "id_b", "w"), iters = 4)
+        "id_a", "id_b", "w"), Stop.Rounds(4), weighted = true)._1
       .as[(Long, Long)].collect().toMap
     val plain = Graph.labelPropagation(
-      Graph.symmetrize(pairs, "id_a", "id_b"), iters = 4)
+      Graph.symmetrize(pairs, "id_a", "id_b"), Stop.Rounds(4))._1
       .as[(Long, Long)].collect().toMap
     assert(uni == plain, "uniform weights must reproduce unweighted LPA")
 
@@ -786,17 +786,17 @@ class GraphSpec extends SparkSpec {
     // would tie-break to label 1, the heavy edge must win instead
     val star = Seq((3L, 1L, 5.0), (3L, 2L, 1.0)).toDF("src", "dst", "w")
     val sym = star.union(star.select(col("dst"), col("src"), col("w")))
-    val one = Graph.labelPropagationWeighted(sym, iters = 1)
+    val one = Graph.labelPropagation(sym, Stop.Rounds(1), weighted = true)._1
       .as[(Long, Long)].collect().toMap
     assert(one(3L) == 1L, s"the w=5 neighbor must outvote: $one")
     val plainStar = Graph.labelPropagation(
-      sym.select(col("src"), col("dst")), iters = 1)
+      sym.select(col("src"), col("dst")), Stop.Rounds(1))._1
       .as[(Long, Long)].collect().toMap
     assert(plainStar(3L) == 1L && one(1L) == 3L && one(2L) == 3L, s"$plainStar $one")
     // flip the heavy edge: weighted follows it away from the min label
     val star2 = Seq((3L, 1L, 1.0), (3L, 2L, 5.0)).toDF("src", "dst", "w")
     val sym2 = star2.union(star2.select(col("dst"), col("src"), col("w")))
-    val two = Graph.labelPropagationWeighted(sym2, iters = 1)
+    val two = Graph.labelPropagation(sym2, Stop.Rounds(1), weighted = true)._1
       .as[(Long, Long)].collect().toMap
     assert(two(3L) == 2L,
       s"weighted vote must beat the min-label tie-break: $two")
@@ -807,27 +807,27 @@ class GraphSpec extends SparkSpec {
     // so the weighted operator must reproduce plain pageRank exactly
     // (symmetric graph => no dangling subplan on either side)
     val tri = Seq((1L, 2L), (2L, 3L), (1L, 3L), (3L, 4L)).toDF("id_a", "id_b")
-    val plain = Graph.pageRank(Graph.symmetrize(tri, "id_a", "id_b"), iters = 5)
+    val plain = Graph.pageRank(Graph.symmetrize(tri, "id_a", "id_b"), Stop.Rounds(5))._1
       .as[(Long, Double)].collect().toMap
-    val uni = Graph.pageRankWeighted(
+    val uni = Graph.pageRank(
       Graph.symmetrizeWeighted(tri.withColumn("w", lit(1.0)),
-        "id_a", "id_b", "w"), iters = 5)
+        "id_a", "id_b", "w"), Stop.Rounds(5), weighted = true)._1
       .as[(Long, Double)].collect().toMap
     assert(uni == plain, s"uniform weights must reproduce pageRank: $uni vs $plain")
 
     // weights-matter arm: z splits mass 3:1 between x and y — x must
     // outrank y although their degrees are identical
     val wpairs = Seq((100L, 1L, 3.0), (100L, 2L, 1.0)).toDF("id_a", "id_b", "w")
-    val wr = Graph.pageRankWeighted(
-      Graph.symmetrizeWeighted(wpairs, "id_a", "id_b", "w"), iters = 5)
+    val wr = Graph.pageRank(
+      Graph.symmetrizeWeighted(wpairs, "id_a", "id_b", "w"), Stop.Rounds(5), weighted = true)._1
       .as[(Long, Double)].collect().toMap
     assert(wr(1L) > wr(2L),
       s"the w=3 neighbor must accumulate more rank: $wr")
 
     // dangling refusal: a directed-only weighted edge list leaks mass
     val e = intercept[IllegalArgumentException] {
-      Graph.pageRankWeighted(
-        Seq((1L, 2L, 1.0)).toDF("src", "dst", "w"), iters = 1).count()
+      Graph.pageRank(
+        Seq((1L, 2L, 1.0)).toDF("src", "dst", "w"), Stop.Rounds(1), weighted = true)._1.count()
     }
     assert(e.getMessage.contains("outgoing weight"))
   }
@@ -844,10 +844,10 @@ class GraphSpec extends SparkSpec {
       (cliqueA ++ cliqueB :+ ((3L, 10L, 2.5)))
         .toDF("id_a", "id_b", "w"), "id_a", "id_b", "w")
     val (watchedDf, rounds) =
-      Graph.labelPropagationWeightedWatched(sym, maxIters = 12)
+      Graph.labelPropagation(sym, Stop.Converge(12), weighted = true)
     assert(rounds < 12, s"watch must fire before the cap, ran $rounds")
     val watched = watchedDf.as[(Long, Long)].collect().toMap
-    val fixed = Graph.labelPropagationWeighted(sym, iters = 12)
+    val fixed = Graph.labelPropagation(sym, Stop.Rounds(12), weighted = true)._1
       .as[(Long, Long)].collect().toMap
     assert(watched == fixed, "watched must equal the full fixed-round run")
     // warm start from the converged prior: the heavy 2.5 bridge
@@ -857,8 +857,8 @@ class GraphSpec extends SparkSpec {
     // remainder rule returns the revisited state, reproduces the
     // prior exactly; a true fixed point would confirm in 1
     val prior = watchedDf.cache()
-    val (warm, r2) = Graph.labelPropagationWeightedWatched(sym,
-      maxIters = 12, init = Some(prior))
+    val (warm, r2) = Graph.labelPropagation(sym,
+      Stop.Converge(12), weighted = true, init = Some(prior))
     assert(r2 <= 2, s"converged prior must confirm in <= 2 rounds, ran $r2")
     assert(warm.as[(Long, Long)].collect().toMap == watched,
       "re-running from the settled state must reproduce it")
@@ -872,12 +872,12 @@ class GraphSpec extends SparkSpec {
       Seq((1L, 2L, 0.5)).toDF("id_a", "id_b", "w"), "id_a", "id_b", "w")
     for (cap <- Seq(9, 10)) {
       val (df, rounds) =
-        Graph.labelPropagationWeightedWatched(sym, maxIters = cap)
+        Graph.labelPropagation(sym, Stop.Converge(cap), weighted = true)
       val expect = if (cap % 2 == 0) 2 else 3
       assert(rounds == expect,
         s"cap $cap: 2-cycle must stop at round $expect, ran $rounds")
       val watched = df.as[(Long, Long)].collect().toMap
-      val fixed = Graph.labelPropagationWeighted(sym, iters = cap)
+      val fixed = Graph.labelPropagation(sym, Stop.Rounds(cap), weighted = true)._1
         .as[(Long, Long)].collect().toMap
       assert(watched == fixed,
         s"cap $cap: watched 2-cycle result must equal fixed($cap)")
@@ -894,11 +894,11 @@ class GraphSpec extends SparkSpec {
     // damping 0.5 (the pageRankWatched spec's contraction rate): at
     // 0.85 the quantized weighted map can wander adjacent grid cells
     // for a long time before settling
-    val (watchedDf, rounds) = Graph.pageRankWeightedWatched(sym,
-      damping = 0.5, maxIters = 60, tol = 0.0)
+    val (watchedDf, rounds) = Graph.pageRank(sym, Stop.Converge(60, 0.0), weighted = true,
+      damping = 0.5)
     assert(rounds < 60, s"watch must fire before the cap, ran $rounds")
     val watched = watchedDf.as[(Long, Double)].collect().toMap
-    val fixed = Graph.pageRankWeighted(sym, damping = 0.5, iters = 60)
+    val fixed = Graph.pageRank(sym, Stop.Rounds(60), weighted = true, damping = 0.5)._1
       .as[(Long, Double)].collect().toMap
     assert(watched == fixed, "watched must equal the full fixed-round run")
     // warm start from the fixed point: the renormalizing division
@@ -907,8 +907,8 @@ class GraphSpec extends SparkSpec {
     // the contract here is warm <= cold rounds and a tight node-wise
     // drift envelope, not an exact round count
     val prior = watchedDf.cache()
-    val (warm, r2) = Graph.pageRankWeightedWatched(sym, damping = 0.5,
-      maxIters = 60, tol = 0.0, init = Some(prior))
+    val (warm, r2) = Graph.pageRank(sym,
+      Stop.Converge(60, 0.0), weighted = true, damping = 0.5, init = Some(prior))
     assert(r2 <= rounds,
       s"warm from the fixed point ($r2 rounds) must not exceed cold ($rounds)")
     val wm = warm.as[(Long, Double)].collect().toMap
@@ -928,8 +928,8 @@ class GraphSpec extends SparkSpec {
       "id_a", "id_b", "w")
     val prior = Seq((1L, 0.3), (2L, 0.3), (3L, 0.2)).toDF("id", "rank")
     def warm(init: org.apache.spark.sql.DataFrame) = {
-      val (df, rounds) = Graph.pageRankWeightedWatched(sym, damping = 0.5,
-        maxIters = 2, init = Some(init))
+      val (df, rounds) = Graph.pageRank(sym,
+        Stop.Converge(2), weighted = true, damping = 0.5, init = Some(init))
       (df.as[(Long, Double)].collect().toMap, rounds)
     }
     assert(warm(prior.union(Seq((4L, -0.5)).toDF("id", "rank"))) == warm(prior))
@@ -942,9 +942,9 @@ class GraphSpec extends SparkSpec {
     // must read round 3's drop as a change and stop after round 4
     val edges = (Seq((1L, 2L), (2L, 1L), (1L, 3L), (3L, 1L), (2L, 3L),
       (3L, 2L)) ++ Seq((10L, 11L), (11L, 12L), (12L, 13L))).toDF("src", "dst")
-    val (watched, rounds) = Graph.labelPropagationWatched(edges, maxIters = 12)
+    val (watched, rounds) = Graph.labelPropagation(edges, Stop.Converge(12))
     assert(rounds == 4)
-    val fixed = Graph.labelPropagation(edges, iters = 12)
+    val fixed = Graph.labelPropagation(edges, Stop.Rounds(12))._1
       .as[(Long, Long)].collect().toMap
     assert(watched.as[(Long, Long)].collect().toMap == fixed)
     assert(fixed == Map(1L -> 1L, 2L -> 1L, 3L -> 1L))
@@ -953,7 +953,7 @@ class GraphSpec extends SparkSpec {
   test("pageRank hubs rank above peripheral nodes on a star") {
     // star: 0 connected to 1..9 (symmetric) — hub must dominate
     val edges = (1L to 9L).flatMap(i => Seq((0L, i), (i, 0L))).toDF("src", "dst")
-    val pr = Graph.pageRank(edges, iters = 10).as[(Long, Double)].collect().toMap
+    val pr = Graph.pageRank(edges, Stop.Rounds(10))._1.as[(Long, Double)].collect().toMap
     assert(pr(0L) > 3 * pr(1L))
     assert((1L to 9L).map(pr).distinct.size == 1) // symmetric leaves tie
   }

@@ -88,4 +88,23 @@ class FixedPointSpec extends SparkSpec {
     assert(values(df) == Seq(6.0, 11.0) && rounds == 6)
     assert(jobs == rounds, s"$jobs jobs for $rounds rounds")
   }
+
+  test("Stop refuses a negative or NaN tol and a negative cap, so every entry does") {
+    def refusal(body: => Any): String = intercept[IllegalArgumentException](body).getMessage
+    val edges = Seq((1L, 2L), (2L, 1L)).toDF("src", "dst")
+    val emb = Seq((1L, Seq(0.0, 1.0))).toDF("vec_id", "embedding")
+    for (tol <- Seq(-1.0, Double.NaN)) {
+      assert(refusal(Stop.Converge(5, tol)).contains("tol >= 0"))
+      // the two tol-taking forwarders build their policy first
+      val (_, jobs) = jobsOf {
+        assert(refusal(Graph.pageRankWatched(edges, tol = tol)).contains("tol >= 0"))
+        assert(refusal(Cluster.kmeansAssignWatched(emb, "vec_id", "embedding",
+          k = 1, maxIters = 5, tol = tol)).contains("tol >= 0"))
+      }
+      assert(jobs == 0, s"refused before any job, ran $jobs")
+    }
+    assert(refusal(Stop.Converge(-1)).contains("maxIters >= 0"))
+    assert(refusal(Stop.Rounds(-1)).contains("n >= 0"))
+    assert(Stop.Converge(0).maxIters == 0 && Stop.Rounds(0).maxIters == 0)
+  }
 }
