@@ -138,8 +138,8 @@ object Cli {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
-    // SQL dot_product + the IvfTopKRewrite optimizer rule are part of
-    // the engine's surface; every CLI session gets them.
+    // The SQL functions (dot_product, minhash_sig, ...) are part of the
+    // engine's surface; every CLI session gets them.
     GraftExtensions.install(s)
     s
   }
@@ -286,8 +286,17 @@ object Cli {
       // warm starts exist only where an incremental re-run is defined
       "init" -> (loops + "components"),
       "tol" -> loops,
-      "weighted" -> Set("pagerank", "communities"))
+      "weighted" -> Set("pagerank", "communities"),
+      "iters" -> (loops + "kcore"),
+      "seeds" -> Set("ppr", "spread"),
+      "labels" -> Set("modularity"),
+      "min-degree" -> Set("kcore"),
+      "max-degree" -> Set("triangles"),
+      "clusters" -> Set("kmeans"))
   }
+
+  /** The kNN-build flags an `--edges` table makes moot. */
+  private val knnBuildFlags = Seq("k", "lsh", "bits", "tables", "block-col")
 
   /** The refusal message for an `analyze` flag combination that would
     * be silently ignored, or None when every flag is read. */
@@ -301,7 +310,8 @@ object Cli {
     else analyzeFlagOps.collectFirst {
       case (flag, ops) if flags.contains(flag) && !ops(op) =>
         s"--$flag applies to --op ${ops.toSeq.sorted.mkString("|")}, not --op $op"
-    }
+    }.orElse(knnBuildFlags.find(f => flags.contains("edges") && flags.contains(f)).map(f =>
+      s"--$f configures the kNN build, which --edges replaces; ignored by --op $op"))
 
   def main(args: Array[String]): Unit = {
     // TCP_NODELAY for any HttpServer this process creates (serve/mcp):

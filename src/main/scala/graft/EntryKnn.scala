@@ -54,18 +54,13 @@ private[graft] object EntryKnn {
     }),
 
     "knn_ivf_plan" -> ((s, dir) => {
-      // The Catalyst-extension ANN path: the query is the NAIVE exact
-      // plan (scan, dot_product vs a literal query vector, ORDER BY
-      // DESC LIMIT k) over the IVF layout; graft.plans.IvfTopKRewrite
-      // injects the centroid pruning during optimization. Clusters are
-      // label-assigned (not KMeans) so the SQL oracle can reproduce the
-      // probe set — semantics identical to knn_ivf.
-      GraftExtensions.install(s)
+      // The same stored-centroid probe as knn_ivf, kept as its own
+      // oracle-gated row: clusters are label-assigned (not KMeans) so
+      // the SQL oracle can reproduce the probe set.
       val out = ivfLayoutDir(s, dir)
-      s.conf.set("spark.graft.ivf.nprobe", "4")
       val qv = Tables.embeddings(s, dir).filter(col("vec_id") === 0)
         .select("embedding").head().getSeq[Float](0).toArray
-      graft.pipeline.Index.searchIvfDeclarative(s, out, qv, k = 10, idCol = "vec_id")
+      graft.pipeline.Index.searchIvf(s, out, qv, nprobe = 4, k = 10, idCol = "vec_id")
     }),
 
     "knn_batch" -> ((s, dir) => {
@@ -217,7 +212,7 @@ private[graft] object EntryKnn {
     // FORMULATION, Pq.seedCodebooks) let DuckDB rebuild the identical
     // model from the table and check encode + ADC bit-for-bit; the
     // production path trains per-subspace KMeans (Pq.trainCodebooks,
-    // pinned by PqSpec) and re-ranks exactly (Pq.ivfPqSearch).
+    // pinned by PqSpec) and re-ranks exactly (Index.searchPq).
     "knn_pq" -> ((s, dir) => {
       import graft.operators.Pq
       val emb = Tables.embeddings(s, dir)
@@ -320,14 +315,7 @@ private[graft] object EntryKnn {
       val emb = Tables.embeddings(s, dir)
       val qv = Tables.embeddings(s, dir).filter(col("vec_id") === 0)
         .select(asDouble(col("embedding")).as("qv"))
-      val byPos = emb
-        .select(col("label").as("cluster"), posexplode(asDouble(col("embedding"))).as(Seq("pos", "v")))
-        .groupBy("cluster", "pos").agg(avg("v").as("cv"))
-      val probed = byPos.join(broadcast(qv), expr("true"))
-        .groupBy("cluster")
-        .agg(round(sum(col("cv") * element_at(col("qv"), col("pos") + 1)), 6).as("cscore"))
-        .orderBy(desc("cscore"), col("cluster")).limit(4).select("cluster")
-      val pruned = emb.join(broadcast(probed), col("label") === col("cluster"), "left_semi")
+      val pruned = Knn.ivfCandidates(emb, qv, "label", nprobe = 4)
         .select(col("vec_id"), quantizeInt8(col("embedding")).as("q"))
         .select(col("vec_id"), dequantizeInt8(col("q")).as("dq"))
       pruned.crossJoin(broadcast(qv))
@@ -446,8 +434,7 @@ private[graft] object EntryKnn {
 
     "knn_ivf" -> ivfOracle,
 
-    // The declarative-plan variant probes the same label clusters with
-    // the same nprobe/k — one oracle covers both.
+    // The same Index.searchIvf call as knn_ivf — one oracle covers both.
     "knn_ivf_plan" -> ivfOracle,
 
     "knn_ivf_quantized" ->

@@ -27,7 +27,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     e.injectFunction(GraftExtensions.nfcDescriptor)
     e.injectFunction(GraftExtensions.phashDescriptor)
     e.injectFunction(GraftExtensions.audioFpDescriptor)
-    e.injectOptimizerRule(graft.plans.IvfTopKRewrite(_))
     e.injectPlannerStrategy(_ => graft.plans.AsofJoinStrategy)
     // NOTE: bounded_ids_20 (an Aggregator udaf) registers only through
     // install(spark) — SparkSessionExtensions' injectFunction path takes
@@ -200,10 +199,6 @@ object GraftExtensions {
     // cap 20 — SQL callers needing another cap register their own.
     spark.udf.register("bounded_ids_20", org.apache.spark.sql.functions.udaf(
       new graft.functions.BoundedIds(20), org.apache.spark.sql.Encoders.scalaLong))
-    val rule = graft.plans.IvfTopKRewrite(spark)
-    if (!spark.experimental.extraOptimizations.exists(_.isInstanceOf[graft.plans.IvfTopKRewrite]))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ rule
     ()
   }
 }

@@ -81,10 +81,9 @@ object Knn {
     * re-reads the FULL table per query: O(corpus) work that exists so
     * the DuckDB oracle SQL can reproduce the probe set without array
     * aggregation. Production queries go through the persisted-centroid
-    * paths — [[graft.pipeline.Index.searchIvf]] (stored `centroids`
-    * table + partition-pruned layout scan) or the declarative
-    * [[graft.plans.IvfTopKRewrite]] rule — where centroid ranking costs
-    * O(K·dims) regardless of corpus size.
+    * path — [[graft.pipeline.Index.searchIvf]] (stored `centroids`
+    * table + partition-pruned layout scan) — where centroid ranking
+    * costs O(K·dims) regardless of corpus size.
     */
   def ivfTopK(emb: DataFrame, query: DataFrame, clusterCol: String,
               nprobe: Int, k: Int): DataFrame =
@@ -101,7 +100,7 @@ object Knn {
     val centroidScores = centroidsByPos(emb, clusterCol)
       .join(broadcast(query), expr("true"))
       .groupBy(col("cluster"))
-      .agg(round6(sum(col("cv") * element_at(col("qv"), col("pos") + 1))).as("cscore"))
+      .agg(centroidScore(col("qv")).as("cscore"))
     val probed = centroidScores
       .orderBy(desc("cscore"), col("cluster"))
       .limit(nprobe)
@@ -110,6 +109,14 @@ object Knn {
     // nprobe values prunes to nprobe partitions before any vector math.
     emb.join(broadcast(probed), col(clusterCol) === col("cluster"), "left_semi")
   }
+
+  /** A centroid's score against the query vector `qv`, aggregated over
+    * its position-wise rows (`pos`, `cv`): round6(Σ cv·qv[pos]). The one
+    * ranking definition of every IVF probe — the oracle formulations
+    * here and [[graft.pipeline.Index.probeClusters]] over the stored
+    * `centroids` table. */
+  private[graft] def centroidScore(qv: Column): Column =
+    round6(sum(col("cv") * element_at(qv, col("pos") + 1)))
 
   /** avg embedding value per (cluster, position) — the
     * oracle-replayable centroid derivation both IVF formulations
@@ -188,8 +195,7 @@ object Knn {
     import spark.implicits._
     val cscore = centroidsByPos(emb, clusterCol).join(broadcast(queries))
       .groupBy(col("qid"), col("cluster"))
-      .agg(round6(sum(col("cv") * element_at(col("qv"), col("pos") + 1)))
-        .as("cscore"))
+      .agg(centroidScore(col("qv")).as("cscore"))
     // Q x K rows: the window is NOT a scale concern here (it ranks
     // centroids, not the corpus)
     val w = Window.partitionBy("qid").orderBy(desc("cscore"), col("cluster"))

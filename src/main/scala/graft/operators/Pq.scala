@@ -3,7 +3,6 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.functions.VectorFunctions
 import graft.functions.VectorFunctions.{asDouble, round6}
 
 /** Product quantization (PQ) for vector search at the 100 TB tier
@@ -152,67 +151,4 @@ object Pq {
         round6(adcScore(col(codesCol), adcLut(cb, q))).as("adc_score"))
       .orderBy(desc("adc_score"), col(idCol))
       .limit(k)
-
-  /** The IVF-PQ read path at the operator level: IVF pruning → ADC over
-    * codes only → exact re-rank of the survivors.
-    *
-    *  1. Rank cluster centroids against the query; keep `nprobe` ids.
-    *     Pass `centroids` (`clusterCol`, pos, cv — the persisted
-    *     layout's position-wise mean table) to make this O(K·dims
-    *     not counting its own tiny scan). When omitted
-    *     the means are DERIVED from the full table — an O(corpus)
-    *     per-query convenience/oracle formulation, same stance as
-    *     [[Knn.ivfTopK]]; the persisted-layout production entry point
-    *     is [[graft.pipeline.Index.searchPq]], which always ranks
-    *     stored centroids.
-    *  2. Scan ONLY the `codes` column of the probed partitions and ADC-
-    *     score them — with the table partitioned by `centroid_id` this
-    *     is partition pruning plus a bytes-not-floats scan.
-    *  3. Re-rank the top `rerank` candidates exactly: a broadcast
-    *     semi-join fetches just those rows' float vectors, then true
-    *     inner product orders the final k (the reference's recompute
-    *     stage, `src/index/recompute.rs:52-123`).
-    *
-    * With nprobe = all clusters and rerank >= corpus size this is
-    * *identical* to exact search (PqSpec pins that), so recall is
-    * tunable down from 1.0 by the two knobs, never silently broken.
-    */
-  def ivfPqSearch(assigned: DataFrame, idCol: String, vecCol: String,
-      clusterCol: String, cb: Codebooks, q: Array[Double],
-      nprobe: Int, k: Int, rerank: Int,
-      codesCol: Option[String] = None,
-      centroids: Option[DataFrame] = None): DataFrame = {
-    val spark = assigned.sparkSession
-    // 1. probe set from per-cluster mean vectors (scores rounded like
-    // Index.searchIvf so probe choice is deterministic)
-    val qdf = spark.range(1).select(typedLit(q.toSeq).as("qv"))
-    val cents = centroids
-      .map(_.select(col(clusterCol).as("__cl"), col("pos"), col("cv")))
-      .getOrElse(assigned
-        .select(col(clusterCol).as("__cl"), posexplode(asDouble(col(vecCol))).as(Seq("pos", "v")))
-        .groupBy(col("__cl"), col("pos")).agg(avg("v").as("cv")))
-    val probed = cents
-      .join(broadcast(qdf), expr("true"))
-      .groupBy("__cl")
-      .agg(round6(sum(col("cv") * element_at(col("qv"), col("pos") + 1))).as("cscore"))
-      .orderBy(desc("cscore"), col("__cl")).limit(nprobe)
-      .select(col("__cl"))
-    val pruned = assigned
-      .join(broadcast(probed), col(clusterCol) === col("__cl"), "left_semi")
-    // 2. cheap ADC pass over codes only. A stored codes column keeps the
-    // float vectors out of this scan entirely (the production layout
-    // writes codes at build time); encoding on the fly is the
-    // convenience path for un-materialized tables.
-    val codes = codesCol.fold(encodeCol(col(vecCol), cb))(col)
-    val candidates = adcTopK(
-        pruned.select(col(idCol), codes.as("__codes")),
-        idCol, "__codes", cb, q, rerank)
-      .select(col(idCol))
-    // 3. exact re-rank of the candidate set
-    assigned.join(broadcast(candidates), Seq(idCol), "left_semi")
-      .select(col(idCol),
-        round6(VectorFunctions.dot(col(vecCol), typedLit(q.toSeq))).as("score"))
-      .orderBy(desc("score"), col(idCol))
-      .limit(k)
-  }
 }

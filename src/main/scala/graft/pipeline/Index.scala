@@ -677,7 +677,8 @@ object Index {
     * `centroid_id` column: the embeddings table partitioned by cluster
     * (so a cluster filter becomes Parquet partition pruning) plus the
     * sibling `centroids` table (position-wise mean vector per cluster).
-    * This pair is the contract [[graft.plans.IvfTopKRewrite]] detects. */
+    * [[searchIvf]] and [[searchPq]] read this pair through
+    * [[probeClusters]]. */
   def writeIvfLayout(spark: SparkSession, assigned: DataFrame, dir: String): Unit = {
     assigned.write.mode(SaveMode.Overwrite)
       .partitionBy("centroid_id").parquet(s"$dir/embeddings_ivf")
@@ -700,45 +701,40 @@ object Index {
     }
   }
 
-  /** The *declarative* IVF search: exactly the naive exact-top-k plan —
-    * scan, score by `dot_product` against a literal query vector, order
-    * desc, limit k. With [[graft.GraftExtensions]] installed, the
-    * [[graft.plans.IvfTopKRewrite]] optimizer rule turns it into the
-    * centroid-pruned scan that [[searchIvf]] constructs manually; without
-    * the extension it still returns correct exact-over-full-scan results,
-    * just without pruning. */
-  def searchIvfDeclarative(spark: SparkSession, dir: String,
-                           queryVec: Array[Float], k: Int,
-                           idCol: String = "id",
-                           filter: Option[Column] = None): DataFrame = {
-    val qv = typedLit(queryVec.map(_.toDouble).toSeq)
-    val base = spark.read.parquet(s"$dir/embeddings_ivf")
-    filter.fold(base)(base.filter)
-      .select(col(idCol),
-        round6(VectorFunctions.dot(col("embedding"), qv)).as("score"))
-      .orderBy(desc("score"), col(idCol))
-      .limit(k)
-  }
+  /** Refuses a probe count below 1: probing no cluster would prune
+    * every partition and answer with zero rows. Shared by the Spark
+    * tier ([[probeClusters]], [[searchPq]]) and the warm tier
+    * (`WarmIndex`), so both refuse with one message. */
+  private[graft] def requireNprobe(nprobe: Int): Unit =
+    require(nprobe >= 1, s"nprobe must be >= 1 (got $nprobe): probing no cluster answers nothing")
 
-  /** IVF search against the partitioned layout: rank stored centroids,
-    * collect the nprobe winning cluster ids (a handful of ints — the
-    * one legitimate driver-side scalar in the plan), and filter the
-    * partitioned table with those literals so the Parquet source prunes
-    * to nprobe partitions before any vector math. */
-  def searchIvf(spark: SparkSession, dir: String, queryVec: Array[Float],
-                nprobe: Int, k: Int, idCol: String = "id"): DataFrame = {
-    val qdf = spark.range(1).select(
-      typedLit(queryVec.map(_.toDouble).toSeq).as("qv"))
-    val probed = spark.read.parquet(s"$dir/centroids")
-      .join(broadcast(qdf), expr("true"))
+  /** The IVF probe: rank the stored `centroids` table against the query
+    * ([[graft.operators.Knn.centroidScore]] desc, then centroid id) and
+    * collect the nprobe winning cluster ids — a handful of ints, the one
+    * legitimate driver-side scalar of an IVF query. */
+  private[graft] def probeClusters(spark: SparkSession, dir: String,
+                                   qv: Array[Double], nprobe: Int): Seq[Int] = {
+    requireNprobe(nprobe)
+    spark.read.parquet(s"$dir/centroids")
+      .join(broadcast(spark.range(1).select(typedLit(qv.toSeq).as("qv"))), expr("true"))
       .groupBy("centroid_id")
-      .agg(round6(sum(col("cv") * element_at(col("qv"), col("pos") + 1))).as("cscore"))
+      .agg(graft.operators.Knn.centroidScore(col("qv")).as("cscore"))
       .orderBy(desc("cscore"), col("centroid_id"))
       .limit(nprobe)
       .select("centroid_id")
-      .collect().map(_.getInt(0))
+      .collect().map(_.getInt(0)).toSeq
+  }
+
+  /** IVF search against the partitioned layout: [[probeClusters]], then
+    * filter the partitioned table with those literals so the Parquet
+    * source prunes to nprobe partitions before any vector math. */
+  def searchIvf(spark: SparkSession, dir: String, queryVec: Array[Float],
+                nprobe: Int, k: Int, idCol: String = "id"): DataFrame = {
+    val q = queryVec.map(_.toDouble)
+    val qdf = spark.range(1).select(typedLit(q.toSeq).as("qv"))
+    val probed = probeClusters(spark, dir, q, nprobe)
     val pruned = spark.read.parquet(s"$dir/embeddings_ivf")
-      .filter(col("centroid_id").isin(probed.map(Integer.valueOf).toSeq: _*))
+      .filter(col("centroid_id").isin(probed.map(Integer.valueOf): _*))
     pruned.crossJoin(broadcast(qdf))
       .select(col(idCol),
         round6(VectorFunctions.dot(col("embedding"), col("qv"))).as("score"))
@@ -868,19 +864,11 @@ object Index {
                nprobe: Int, k: Int, rerank: Int,
                idCol: String = "id"): DataFrame = {
     import graft.operators.Pq
+    requireNprobe(nprobe)
     val cb = loadPqCodebooks(spark, dir)
     val q = queryVec.map(_.toDouble)
     val haveIvf = tableExists(spark, s"$dir/centroids")
-    val probed: Option[Seq[Int]] = if (haveIvf) {
-      val qdf = spark.range(1).select(typedLit(q.toSeq).as("qv"))
-      Some(spark.read.parquet(s"$dir/centroids")
-        .join(broadcast(qdf), expr("true"))
-        .groupBy("centroid_id")
-        .agg(round6(sum(col("cv") * element_at(col("qv"), col("pos") + 1))).as("cscore"))
-        .orderBy(desc("cscore"), col("centroid_id"))
-        .limit(nprobe)
-        .collect().map(_.getInt(0)).toSeq)
-    } else None
+    val probed = if (haveIvf) Some(probeClusters(spark, dir, q, nprobe)) else None
     // prune only frames that actually carry the partition column: a PQ
     // tier built before the IVF layout is flat (no centroid_id) — its
     // ADC pass legally scans everything rather than crashing or, worse,

@@ -124,8 +124,10 @@ final class WarmIndex private (
     * centroids by round6(dot) desc, centroid id asc — the ranked-centroid
     * selection of [[Index.searchIvf]] and [[Index.searchPq]], so the
     * probe CHOICE matches the Spark plan's. Bucket positions are in
-    * centroid id order. */
-  private def probe(qv: Array[Double], nprobe: Int): Seq[Int] =
+    * centroid id order. An nprobe below 1 is refused with
+    * [[Index.requireNprobe]]'s message, as on the Spark tier. */
+  private def probe(qv: Array[Double], nprobe: Int): Seq[Int] = {
+    Index.requireNprobe(nprobe)
     if (nprobe >= numClusters || centroids.isEmpty) bucketIds.indices
     else bucketIds.indices.map { c =>
         var s = 0.0
@@ -134,6 +136,7 @@ final class WarmIndex private (
         while (i < dims) { s += cv(i) * qv(i); i += 1 }
         (c, RoundHalfUp.round(s, 6))
       }.sortBy { case (c, s) => (-s, c) }.take(nprobe).map(_._1)
+  }
 
   /** Top-k (id, round6(dot)) over the probed buckets — the
     * [[Index.search]] `scored.orderBy.limit` semantics. `allowed` (null

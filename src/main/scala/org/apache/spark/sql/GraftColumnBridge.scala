@@ -44,11 +44,11 @@ object GraftColumnBridge {
       case _ => df
     }
 
-  /** Materialize the optimizer rules a SparkSessionExtensions instance
-    * would inject — lets tests exercise the `spark.sql.extensions`
-    * class-registration path without tearing down the shared session. */
-  def optimizerRules(e: SparkSessionExtensions, spark: SparkSession)
-      : Seq[org.apache.spark.sql.catalyst.rules.Rule[
-        org.apache.spark.sql.catalyst.plans.logical.LogicalPlan]] =
-    e.buildOptimizerRules(spark)
+  /** Materialize the planner strategies a SparkSessionExtensions
+    * instance would inject — lets tests exercise the
+    * `spark.sql.extensions` class-registration path without tearing
+    * down the shared session. */
+  def plannerStrategies(e: SparkSessionExtensions, spark: SparkSession)
+      : Seq[org.apache.spark.sql.execution.SparkStrategy] =
+    e.buildPlannerStrategies(spark)
 }

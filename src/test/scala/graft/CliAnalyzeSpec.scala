@@ -35,7 +35,26 @@ class CliAnalyzeSpec extends SparkSpec {
       Seq("--op", "degrees", "--tol", "0") -> "--tol applies to",
       Seq("--op", "modularity", "--tol", "0") -> "--tol applies to",
       Seq("--op", "knn", "--tol", "0") -> "--tol applies to",
-      Seq("--op", "pca", "--tol", "0") -> "--tol applies to")
+      Seq("--op", "pca", "--tol", "0") -> "--tol applies to",
+      Seq("--op", "triangles", "--iters", "3") -> "--iters applies to",
+      Seq("--op", "components", "--iters", "3") -> "--iters applies to",
+      Seq("--op", "degrees", "--iters", "3") -> "--iters applies to",
+      Seq("--op", "modularity", "--iters", "3") -> "--iters applies to",
+      Seq("--op", "knn", "--iters", "3") -> "--iters applies to",
+      Seq("--op", "pca", "--iters", "3") -> "--iters applies to",
+      Seq("--op", "pagerank", "--seeds", "s") -> "--seeds applies to",
+      Seq("--op", "communities", "--seeds", "s") -> "--seeds applies to",
+      Seq("--op", "communities", "--labels", "l") -> "--labels applies to",
+      Seq("--op", "components", "--min-degree", "3") -> "--min-degree applies to",
+      Seq("--op", "degrees", "--max-degree", "4") -> "--max-degree applies to",
+      Seq("--op", "kcore", "--max-degree", "4") -> "--max-degree applies to",
+      Seq("--op", "pca", "--clusters", "4") -> "--clusters applies to",
+      Seq("--op", "pagerank", "--edges", "e", "--k", "3") -> "--k configures the kNN build",
+      Seq("--op", "triangles", "--edges", "e", "--lsh") -> "--lsh configures the kNN build",
+      Seq("--op", "kcore", "--edges", "e", "--bits", "12") -> "--bits configures the kNN build",
+      Seq("--op", "ppr", "--edges", "e", "--tables", "2") -> "--tables configures the kNN build",
+      Seq("--op", "communities", "--edges", "e", "--block-col", "c") ->
+        "--block-col configures the kNN build")
     for ((args, msg) <- refused) {
       val err = flagError(args: _*)
       assert(err.exists(_.startsWith(msg)), s"${args.mkString(" ")}: $err")

@@ -62,13 +62,13 @@ class ExtensionsSpec extends SparkSpec {
     assert(rows.toSeq == Seq(("a", Set(1L, 2L), 2L), ("b", Set(9L), 1L)))
   }
 
-  test("class registration (spark.sql.extensions) injects the optimizer rule") {
+  test("class registration (spark.sql.extensions) injects the planner strategy") {
     import org.apache.spark.sql.{GraftColumnBridge, SparkSessionExtensions}
     val e = new SparkSessionExtensions
     new GraftExtensions().apply(e)
-    val rules = GraftColumnBridge.optimizerRules(e, spark)
-    assert(rules.exists(_.isInstanceOf[graft.plans.IvfTopKRewrite]),
-      s"expected IvfTopKRewrite among injected rules: $rules")
+    val strategies = GraftColumnBridge.plannerStrategies(e, spark)
+    assert(strategies.contains(graft.plans.AsofJoinStrategy),
+      s"expected AsofJoinStrategy among injected strategies: $strategies")
   }
 
   test("wrong arity fails at analysis") {

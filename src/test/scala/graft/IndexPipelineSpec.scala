@@ -66,6 +66,27 @@ class IndexPipelineSpec extends SparkSpec {
     assert(e.getMessage.contains("ann-build"))
   }
 
+  test("nprobe 0 is refused on the Spark and warm tiers before any job runs") {
+    built
+    if (!new java.io.File(s"$dir/pq_codebooks/_SUCCESS").exists()) {
+      Index.buildIvf(spark, dir, numClusters = 2)
+      Index.buildPq(spark, dir, m = 8, k = 4)
+    }
+    val warm = graft.serve.WarmIndex.load(spark, dir, provider)
+    val qv = provider.embedOne("vector retrieval")
+    val calls = Seq[() => Any](
+      () => Index.searchIvf(spark, dir, qv, nprobe = 0, k = 2),
+      () => Index.searchPq(spark, dir, qv, nprobe = 0, k = 2, rerank = 10),
+      () => warm.searchAnn("vector retrieval", topK = 2, nprobe = 0))
+    for (call <- calls) {
+      val (_, jobs) = jobsOf {
+        val e = intercept[IllegalArgumentException](call())
+        assert(e.getMessage.contains("nprobe must be >= 1 (got 0)"), e.getMessage)
+      }
+      assert(jobs == 0, s"refused before any job, ran $jobs")
+    }
+  }
+
   test("export: passages round-trip through jsonl (the reference's native storage)") {
     built
     val out = s"$warehouse/export1"

@@ -16,6 +16,17 @@ class PqSpec extends SparkSpec {
   private lazy val emb = Tables.embeddings(spark, dir)
   private lazy val seedCb = Pq.seedCodebooks(emb, "vec_id", "embedding", m = 8, k = 16)
 
+  /** A fresh index directory holding `assigned`'s IVF layout and the
+    * PQ tier encoded with `cb` — the stored layout [[graft.pipeline.Index.searchPq]]
+    * reads. */
+  private def storedPq(assigned: DataFrame, cb: Pq.Codebooks): String = {
+    import graft.pipeline.Index
+    val d = java.nio.file.Files.createTempDirectory("graft-pq-stored").toString + "/idx"
+    Index.writeIvfLayout(spark, assigned, d)
+    Index.writePqLayout(spark, d, cb, idCol = "vec_id")
+    d
+  }
+
   private def vecOf(id: Long): Array[Double] =
     emb.filter(col("vec_id") === id)
       .select(graft.functions.VectorFunctions.asDouble(col("embedding")))
@@ -64,11 +75,11 @@ class PqSpec extends SparkSpec {
     assert(e.getMessage != null)
   }
 
-  test("ivfPqSearch at full nprobe + rerank IS exact search") {
-    val q = vecOf(7L)
+  test("searchPq at full nprobe + rerank IS exact search") {
+    val q = vecOf(7L).map(_.toFloat)
     val assigned = Knn.ivfAssign(emb, "embedding", numClusters = 8, seed = 1L)
-    val pq = Pq.ivfPqSearch(assigned, "vec_id", "embedding", "centroid_id",
-        seedCb, q, nprobe = 8, k = 10, rerank = 1000)
+    val pq = graft.pipeline.Index.searchPq(spark, storedPq(assigned, seedCb), q,
+        nprobe = 8, k = 10, rerank = 1000, idCol = "vec_id")
       .select("vec_id", "score").collect().map(r => (r.getLong(0), r.getDouble(1)))
     val exact = Knn.exactTopK(emb, Knn.queryVector(emb, 7L), 10)
       .collect().map(r => (r.getLong(0), r.getDouble(1)))
@@ -80,13 +91,15 @@ class PqSpec extends SparkSpec {
     val trainedCb = Pq.trainCodebooks(emb, "embedding", m = 8, k = 16, seed = 42L)
     val assigned = Knn.ivfAssign(emb, "embedding", numClusters = 8, seed = 1L)
 
-    def recall(cb: Pq.Codebooks, rerank: Int): Double = {
+    val (seedDir, trainedDir) = (storedPq(assigned, seedCb), storedPq(assigned, trainedCb))
+
+    def recall(idx: String, rerank: Int): Double = {
       val per = queryIds.map { qid =>
-        val q = vecOf(qid)
+        val q = vecOf(qid).map(_.toFloat)
         val exact = Knn.exactTopK(emb, Knn.queryVector(emb, qid), 10)
           .select("vec_id").as[Long].collect().toSet
-        val got = Pq.ivfPqSearch(assigned, "vec_id", "embedding", "centroid_id",
-            cb, q, nprobe = 8, k = 10, rerank = rerank)
+        val got = graft.pipeline.Index.searchPq(spark, idx, q,
+            nprobe = 8, k = 10, rerank = rerank, idCol = "vec_id")
           .select("vec_id").as[Long].collect().toSet
         (exact intersect got).size.toDouble / 10
       }
@@ -95,9 +108,9 @@ class PqSpec extends SparkSpec {
 
     // rerank recovers what quantization loses: exact re-rank of the ADC
     // top-100 (of 500) must dominate the raw ADC top-10
-    val adcOnlySeed = recall(seedCb, rerank = 10)
-    val rerankSeed = recall(seedCb, rerank = 100)
-    val rerankTrained = recall(trainedCb, rerank = 100)
+    val adcOnlySeed = recall(seedDir, rerank = 10)
+    val rerankSeed = recall(seedDir, rerank = 100)
+    val rerankTrained = recall(trainedDir, rerank = 100)
     info(f"recall@10 seed/adc-only=$adcOnlySeed%.2f seed/rerank100=$rerankSeed%.2f trained/rerank100=$rerankTrained%.2f")
     assert(rerankSeed >= adcOnlySeed - 1e-9)
     assert(rerankSeed >= 0.5, "rerank=100 of 500 should recover half the true top-10")
