@@ -1,9 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.functions.{col, length, lit}
+import org.apache.spark.storage.StorageLevel
 
 import graft.embedding.{EmbeddingProvider, HashEmbedder}
-import graft.operators.Stop
+import graft.operators.{CorpusClean, Dedup, Multimodal, Stop, TrainExport}
 import graft.pipeline.Index
 import graft.serve.SearchServer
 import graft.sources.FileIngest
@@ -29,17 +31,23 @@ import graft.sources.FileIngest
   *   graft.Cli compact <name>                 (small-file compaction)
   *   graft.Cli export-training <name> --out <dir> [--shards 8]
   *                    [--seed graft] [--pack-budget 2048]
-  *   graft.Cli clean  --docs <dir|corpus.jsonl> --out <dir>
-  *                    [--min-words 50] [--min-lm -9.0]
-  *   graft.Cli dedup  --docs <dir|corpus.jsonl|media dir|embeddings.parquet> --out <dir>
+  *   graft.Cli clean  --docs <dir|corpus.jsonl|parquet> --out <dir>
+  *                    [--id-col <col>] [--min-words 50] [--min-lm -9.0]
+  *   graft.Cli dedup  --docs <dir|corpus.jsonl|parquet|media dir|embeddings.parquet> --out <dir>
   *                    [--method exact|minhash|simhash|containment|phash|audiofp|embed|semantic]
-  *                    [--minj 0.8] [--max-dist 3] [--min-cosine 0.95]
-  *                    [--tau 0.95] [--clusters 8] [--quality-col <col>]
+  *                    [--id-col <col>] [--vec-col embedding] [--minj 0.8] [--max-dist 3]
+  *                    [--bits 16] [--min-cosine 0.95] [--tau 0.95] [--clusters 8]
+  *                    [--quality-col <col>]
   *   graft.Cli curate --docs <dir|corpus.jsonl|parquet> --out <dir>
-  *                    [--min-words 50] [--min-lm <f>]
+  *                    [--id-col <col>] [--min-words 50] [--min-lm <f>]
   *                    [--dedup minhash|exact|simhash|containment|none] [--minj 0.8]
   *                    [--max-dist 3] [--decontaminate <bench>]
   *                    [--ngram 5] [--max-overlap 0] [--report <dir>]
+  *   graft.Cli pretrain --docs <dir|corpus.jsonl|parquet> --out <dir>
+  *                    [curate's flags but --report]
+  *                    [--budget <chars> [--weights src=3,src2=1] [--max-rate 1.0]]
+  *                    [--merges 200] [--min-freq 2] [--pack-budget <toks>]
+  *                    [--shards 8] [--seed graft]
   *   graft.Cli scorecard --docs <dir|corpus.jsonl|parquet> --out <dir>
   *                    [--src-col source] [--text-col text] [--min-words 50]
   *   graft.Cli plan --docs <dir|corpus.jsonl|parquet> --out <dir>
@@ -48,9 +56,15 @@ import graft.sources.FileIngest
   *                    [--apply <dir> [--seed plan] [--id-col <col>]]
   *   graft.Cli overlap --docs <dir|corpus.jsonl|parquet> --out <dir>
   *                    [--sketch] [--n 3] [--hashes 64] [--src-col source] [--text-col text]
+  *   graft.Cli tokenize --docs <dir|corpus.jsonl|parquet> --out <dir>
+  *                    [--merges 200] [--min-freq 2] [--relaxed] [--batch-cap 64]
+  *   graft.Cli select-dsir --docs <dir|jsonl> --target <dir|jsonl> --k <rows>
+  *                    --out <dir> [--seed dsir] [--buckets 10000]
   *   graft.Cli analyze (--embeddings <parquet> | --edges <parquet>) --out <dir>
   *                    --op knn|pagerank|ppr|triangles|components|communities|kcore|modularity|spread|degrees|kmeans|pca
-  *                    [--k 3] [--lsh] [--weighted] [--clusters 8] [--iters n] [--tol t] [--init p]
+  *                    [--survivors-of <parquet>] [--id-col vec_id] [--vec-col embedding]
+  *                    [--k 3] [--lsh [--bits auto] [--tables 4] [--block-col <col>]]
+  *                    [--weighted] [--clusters 8] [--iters n] [--tol t] [--init <parquet>]
   *                    [--seeds <parquet>] [--labels <parquet>] [--min-degree 3] [--max-degree d]
   *   graft.Cli ann-build <name> [--clusters 16] [--pq-m 8] [--pq-k 16]
   *   graft.Cli ann-search <name> <query> [--top-k 5] [--nprobe 4] [--rerank 50] [--filter dsl]
@@ -177,15 +191,20 @@ object Cli {
     * else → recursive document ingest. One resolution rule for every
     * text arm so `clean | dedup | curate | scorecard` can't disagree
     * about what a `--docs` path means. */
-  private[graft] def ingestText(spark: SparkSession, path: String): org.apache.spark.sql.DataFrame = {
-    val f = new java.io.File(path)
-    val looksParquet = path.endsWith(".parquet") ||
-      (f.isDirectory && f.listFiles() != null && f.listFiles().exists(c =>
-        c.getName.endsWith(".parquet") || c.getName == "_SUCCESS"))
+  private[graft] def ingestText(spark: SparkSession, path: String): DataFrame =
     if (path.endsWith(".jsonl") || path.endsWith(".jsonl.gz"))
       FileIngest.readJsonl(spark, path)
-    else if (looksParquet) spark.read.parquet(path)
+    else if (looksParquet(path)) spark.read.parquet(path)
     else FileIngest.readDocuments(spark, path)
+
+  /** A `.parquet` path, or a directory holding part-files: a parquet
+    * DIRECTORY rarely ends in ".parquet", so detect by contents too —
+    * ingesting a table as opaque files would silently read nothing. */
+  private def looksParquet(path: String): Boolean = {
+    val f = new java.io.File(path)
+    path.endsWith(".parquet") ||
+      (f.isDirectory && f.listFiles() != null && f.listFiles().exists(c =>
+        c.getName.endsWith(".parquet") || c.getName == "_SUCCESS"))
   }
 
   /** Resolve the per-document id column for the doc-grained funnel arms
@@ -201,9 +220,9 @@ object Cli {
     * funnel's own ingest count already pays for in spirit) and a
     * non-unique grain fails loudly — including an explicit but typo'd
     * `--id-col`, which is the same silent corruption. */
-  private[graft] def resolveUniqueDocId(docs: org.apache.spark.sql.DataFrame,
+  private[graft] def resolveUniqueDocId(docs: DataFrame,
       flags: Map[String, String], arm: String): String = {
-    import org.apache.spark.sql.functions.{col, count, countDistinct, lit}
+    import org.apache.spark.sql.functions.{count, countDistinct}
     val idCol = flags.getOrElse("id-col",
       if (docs.columns.contains("doc_id")) "doc_id" else "source")
     if (!docs.columns.contains(idCol)) fail(
@@ -229,27 +248,26 @@ object Cli {
     * dropping the CONTAINED side (the near-superset read — minJ doubles
     * as the containment floor). One canonical survivor (min id) per
     * cluster/pair. */
-  private[graft] def textDedupSurvivors(docs: org.apache.spark.sql.DataFrame,
+  private[graft] def textDedupSurvivors(docs: DataFrame,
       idCol: String, textCol: String, method: String,
-      minJ: Double, maxDist: Int): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.functions.{col, greatest, when}
-    val D = graft.operators.Dedup
+      minJ: Double, maxDist: Int): DataFrame = {
+    import org.apache.spark.sql.functions.{greatest, when}
     method match {
       case "exact" =>
         val fp = graft.functions.TextFunctions.fingerprint(col(textCol))
-        docs.join(D.exactGroups(docs.filter(fp.isNotNull), idCol, textCol)
+        docs.join(Dedup.exactGroups(docs.filter(fp.isNotNull), idCol, textCol)
             .select(col("keep_id").as(idCol)),
           Seq(idCol), "left_semi")
           .union(docs.filter(fp.isNull))
       case "minhash" =>
-        val pairs = D.minhashDedup(docs, idCol, textCol, n = 3,
+        val pairs = Dedup.minhashDedup(docs, idCol, textCol, n = 3,
           numHashes = 16, bandSize = 4, minJ = minJ)
-        val losers = D.connectedComponents(pairs.select("id_a", "id_b"))
+        val losers = Dedup.connectedComponents(pairs.select("id_a", "id_b"))
           .filter(col("component") =!= col("id"))
           .select(col("id").as(idCol))
         docs.join(losers, Seq(idCol), "left_anti")
       case "simhash" =>
-        val clusters = D.simhashClusters(docs, idCol, textCol, maxDist = maxDist)
+        val clusters = Dedup.simhashClusters(docs, idCol, textCol, maxDist = maxDist)
         docs.join(clusters.filter(!col("keep")).select(col("id").as(idCol)),
           Seq(idCol), "left_anti")
       case "containment" =>
@@ -258,7 +276,7 @@ object Cli {
         // contain each other (near-identical), keep the smaller id —
         // the family's canonical-survivor convention. minJ doubles as
         // the containment floor.
-        val pairs = D.containmentPairs(docs, idCol, textCol, n = 3,
+        val pairs = Dedup.containmentPairs(docs, idCol, textCol, n = 3,
           minC = minJ, maxShingleDf = 20)
         val losers = pairs.select(
           when(col("c_a") >= minJ && col("c_b") >= minJ,
@@ -272,8 +290,228 @@ object Cli {
     }
   }
 
+  /** The stages of [[curateFunnel]]: `cleaned` and `deduped` are
+    * persisted (the caller unpersists them), `survivors` is not. */
+  private[graft] case class Funnel(cleaned: DataFrame, deduped: DataFrame,
+      survivors: DataFrame, n0: Long, n1: Long, n2: Long, ruleReport: DataFrame)
+
+  /** The curation funnel shared by `curate` and `pretrain`: quality
+    * clean (Gopher + repetition + optional `--min-lm` floor; survivors
+    * are PII-scrubbed, so dedup runs over the text that would ship) →
+    * `--dedup` tier ([[textDedupSurvivors]]) → benchmark
+    * decontamination (drop any doc sharing more than `--max-overlap`
+    * distinct `--ngram`-grams with the `--decontaminate` set; default 0:
+    * one shared n-gram is contamination). Every stage keys by one
+    * verified-unique doc id ([[resolveUniqueDocId]]). The two stage
+    * boundaries persist MEMORY_AND_DISK and are counted exactly once —
+    * at scale each is one materialization and the funnel numbers are
+    * its byproducts. `survivors` carries `source` ([[withSource]]). */
+  private[graft] def curateFunnel(docs: DataFrame,
+      flags: Map[String, String], arm: String): Funnel = {
+    val method = flags.getOrElse("dedup", "minhash")
+    if (!Set("minhash", "exact", "simhash", "containment", "none").contains(method))
+      fail(s"--dedup '$method' (minhash|exact|simhash|containment|none)")
+    Seq("source", "text").foreach { c =>
+      if (!docs.columns.contains(c)) fail(
+        s"--docs needs 'source' and 'text' columns " +
+          s"(have: ${docs.columns.mkString(", ")})")
+    }
+    val idCol = resolveUniqueDocId(docs, flags, arm)
+    val n0 = docs.count()
+    val (kept, ruleReport) = CorpusClean.cleanCorpus(docs, idCol, "text",
+      minWords = flags.get("min-words").map(_.toInt).getOrElse(50),
+      minLmScore = flags.get("min-lm").map(_.toDouble))
+    val cleaned = kept.persist(StorageLevel.MEMORY_AND_DISK)
+    val n1 = cleaned.count()
+    val deduped = (method match {
+      case "none" => cleaned
+      case m => textDedupSurvivors(cleaned, "doc_id", "text", m,
+        minJ = flags.get("minj").map(_.toDouble).getOrElse(0.8),
+        maxDist = flags.get("max-dist").map(_.toInt).getOrElse(3))
+    }).persist(StorageLevel.MEMORY_AND_DISK)
+    val n2 = deduped.count()
+    val survivors = flags.get("decontaminate") match {
+      case None => deduped
+      case Some(benchPath) =>
+        val bench = ingestText(docs.sparkSession, benchPath)
+        if (!bench.columns.contains("text")) fail(
+          s"--decontaminate $benchPath has no 'text' column " +
+            s"(have: ${bench.columns.mkString(", ")})")
+        val benchId =
+          if (bench.columns.contains("doc_id")) "doc_id" else "source"
+        val contaminated = CorpusClean.decontaminate(
+            deduped, "doc_id", "text", bench, benchId, "text",
+            n = flags.get("ngram").map(_.toInt).getOrElse(5))
+          .filter(col("n_overlap_grams") >
+            flags.get("max-overlap").map(_.toLong).getOrElse(0L))
+          .select("doc_id")
+        deduped.join(contaminated, Seq("doc_id"), "left_anti")
+    }
+    Funnel(cleaned, deduped, withSource(survivors, docs, idCol), n0, n1, n2, ruleReport)
+  }
+
+  /** cleanCorpus's output carries only the id (as `doc_id`) and the
+    * scrubbed text: re-attach `docs`' `source` by one doc-keyed join
+    * when the id is not `source`, so the output stays consumable by the
+    * source-grained siblings (scorecard, plan, overlap). */
+  private def withSource(kept: DataFrame, docs: DataFrame, idCol: String): DataFrame =
+    if (idCol == "source" || !docs.columns.contains("source")) kept
+    else kept.join(docs.select(col(idCol).as("doc_id"), col("source")),
+      Seq("doc_id"), "left")
+
+  /** The rows `dedup --method <m> --docs <path>` reads. Text methods:
+    * [[ingestText]]. Media methods (phash, audiofp): binary files keyed
+    * by path, or a (source, content) parquet table. Embedding methods
+    * (embed, semantic): an (id, vector[, quality]) parquet. */
+  private[graft] def dedupInput(spark: SparkSession, path: String,
+      method: String): DataFrame = method match {
+    case "embed" | "semantic" => spark.read.parquet(path)
+    case "phash" | "audiofp" =>
+      if (looksParquet(path))
+        spark.read.parquet(path).select(
+          col("source").cast("string").as("source"), col("content"))
+      else spark.read.format("binaryFile")
+        .option("recursiveFileLookup", "true").load(path)
+        .select(col("path").as("source"), col("content"))
+    case _ => ingestText(spark, path)
+  }
+
+  /** The survivors of `dedup --method <m>` (default minhash) over
+    * [[dedupInput]]'s rows. Text tiers: [[textDedupSurvivors]], keyed by
+    * [[resolveUniqueDocId]] as `clean` and `curate` key. Media tiers:
+    * class-level Hamming clustering of the image dHash (phash) or the
+    * banded-energy audio fingerprint (audiofp) — pixels/PCM never
+    * shuffle — minus the collapsed rows, so undecodable files always
+    * survive. Embedding tiers: cosine pairs, sign-LSH bucketed in one
+    * global pass (embed, `--bits`, `--min-cosine`) or k-means-blocked
+    * within each cluster (semantic, `--clusters`, `--iters`, `--tau`),
+    * then connected components and a QUALITY-KEYED survivor per
+    * cluster (resolveByQuality over `--quality-col`; absent, qualities
+    * tie and the smallest id survives). Every other tier keeps one
+    * canonical survivor (min id) per cluster. */
+  private[graft] def dedupSurvivors(docs: DataFrame,
+      flags: Map[String, String]): DataFrame = {
+    val maxDist = flags.get("max-dist").map(_.toInt).getOrElse(3)
+    def minusLosers(clusters: DataFrame) =
+      docs.join(clusters.filter(!col("keep")).select(col("id").as("source")),
+        Seq("source"), "left_anti")
+    flags.getOrElse("method", "minhash") match {
+      case m @ ("exact" | "minhash" | "simhash" | "containment") =>
+        textDedupSurvivors(docs, resolveUniqueDocId(docs, flags, "dedup"),
+          "text", m, minJ = flags.get("minj").map(_.toDouble).getOrElse(0.8),
+          maxDist = maxDist)
+      case "phash" =>
+        minusLosers(Multimodal.phashClusters(docs, "source", "content", maxDist = maxDist))
+      case "audiofp" =>
+        minusLosers(Multimodal.audioFpClusters(docs, "source", "content", maxDist = maxDist))
+      case m @ ("embed" | "semantic") =>
+        val idCol = flags.getOrElse("id-col", "vec_id")
+        val vecCol = flags.getOrElse("vec-col", "embedding")
+        Seq(idCol, vecCol).foreach { c =>
+          if (!docs.columns.contains(c)) fail(
+            s"--docs parquet has no '$c' column (have: ${docs.columns.mkString(", ")}); " +
+              "set --id-col/--vec-col for embedding dedup methods")
+        }
+        val pairs =
+          if (m == "embed") {
+            val head = docs.select(col(vecCol)).limit(1).collect()
+            if (head.isEmpty || head(0).isNullAt(0)) fail(
+              s"cannot derive embedding dims: ${flags.getOrElse("docs", "the input")} " +
+                s"is empty or its first '$vecCol' is null")
+            Dedup.embeddingLshPairs(docs, idCol, vecCol, head(0).getSeq[Any](0).size,
+              bits = flags.get("bits").map(_.toInt).getOrElse(16),
+              minCosine = flags.get("min-cosine").map(_.toDouble).getOrElse(0.95))
+          } else {
+            val (asg, _) = graft.operators.Cluster.kmeansAssign(docs, idCol, vecCol,
+              k = flags.get("clusters").map(_.toInt).getOrElse(8),
+              Stop.Rounds(flags.get("iters").map(_.toInt).getOrElse(5)))
+            val withCl = docs.join(
+              asg.select(col("id").as(idCol + "_asg"), col("cluster")),
+              col(idCol).cast("long") === col(idCol + "_asg"))
+            Dedup.semanticPairs(withCl, idCol, vecCol, "cluster",
+              tau = flags.get("tau").map(_.toDouble).getOrElse(0.95))
+          }
+        val comps = Dedup.connectedComponents(pairs.select("id_a", "id_b"))
+        val quality = docs.select(col(idCol).cast("long").as("id"),
+          flags.get("quality-col") match {
+            case Some(qc) =>
+              if (!docs.columns.contains(qc)) fail(
+                s"--quality-col '$qc' not in --docs parquet (have: ${docs.columns.mkString(", ")})")
+              col(qc).as("q")
+            case None => lit(0.0).as("q")
+          })
+        val losers = Dedup.resolveByQuality(comps, quality, "id", "q")
+          .filter(!col("keep")).select(col("id").as(idCol))
+        docs.join(losers, Seq(idCol), "left_anti")
+      case other => fail(
+        s"unknown dedup method '$other' (exact|minhash|simhash|containment|phash|audiofp|embed|semantic)")
+    }
+  }
+
+  /** `--weights src=3,src2=1` (raw weights, normalized by mixturePlan);
+    * omitted = uniform over the corpus's sources. Sources missing from
+    * an explicit list get weight 0 — visible in the plan. */
+  private def mixtureWeights(docs: DataFrame, srcCol: String,
+      flags: Map[String, String]): Map[String, Double] = flags.get("weights") match {
+    case Some(spec) => spec.split(",").map(_.trim).filter(_.nonEmpty)
+      .map { kv =>
+        val i = kv.lastIndexOf('=')
+        if (i <= 0) fail(s"--weights entry '$kv' is not src=w")
+        kv.substring(0, i) -> kv.substring(i + 1).toDouble
+      }.toMap
+    case None => docs.select(col(srcCol)).where(col(srcCol).isNotNull)
+      .distinct().collect().map(_.get(0).toString -> 1.0).toMap
+  }
+
+  /** `--max-rate` (default 1): above 1, capped sources UPSAMPLE (epoch
+    * repeats up to the cap) instead of stopping at their own supply. */
+  private def maxRate(flags: Map[String, String]): Double =
+    flags.get("max-rate").map(_.toDouble).getOrElse(1.0)
+
+  /** Write the water-filling mixture plan of `docs` at `budget` tokens
+    * to `planOut` (one file) and read it back: per-source allocations
+    * at the `--weights` targets, capped sources spilling their unfilled
+    * quota to the rest. */
+  private def writePlan(docs: DataFrame, srcCol: String, tokCol: String,
+      budget: Long, flags: Map[String, String], planOut: String): DataFrame = {
+    TrainExport.mixturePlan(docs, srcCol, tokCol, mixtureWeights(docs, srcCol, flags),
+      budget, maxRate = maxRate(flags))
+      .coalesce(1).write.mode("overwrite").parquet(planOut)
+    docs.sparkSession.read.parquet(planOut)
+  }
+
+  /** Draw each source of `docs` at its planned rate: rateSample's
+    * md5-hex-threshold keep, or with `--max-rate > 1` rateSampleEpochs'
+    * floor(rate) full copies + a fractional draw, the copy index in an
+    * `epoch` column. */
+  private def planDraw(docs: DataFrame, idCol: String, srcCol: String,
+      plan: DataFrame, seed: String, flags: Map[String, String]): DataFrame =
+    if (maxRate(flags) > 1.0) TrainExport.rateSampleEpochs(docs, idCol, srcCol, plan, seed)
+    else TrainExport.rateSample(docs, idCol, srcCol, plan, seed)
+
+  /** The directory of index `name` in the warehouse; refuses a missing one. */
+  private def indexDir(name: String): String =
+    Index.locate(warehouse, name).getOrElse(fail(s"no index '$name' in $warehouse"))
+
+  /** Print (id, score, text, source) search hits as numbered lines with
+    * a 100-char snippet. */
+  private def printHits(rows: Array[Row]): Unit = {
+    rows.zipWithIndex.foreach { case (r, i) =>
+      val text = r.getString(2)
+      val snippet = if (text.length > 100) text.take(100) + "…" else text
+      println(f"${i + 1}%2d. [${r.getDouble(1)}%.6f] ${r.getString(3)}%s  $snippet%s")
+    }
+    if (rows.isEmpty) println("(no results)")
+  }
+
   private val analyzeGraphOps = Set("pagerank", "ppr", "triangles", "components",
     "kcore", "modularity", "communities", "spread", "degrees")
+
+  /** The kNN-build flags: read only by the ops that build the graph
+    * and made moot by an `--edges` table; the `lshFlags` are read only
+    * by the `--lsh` build. */
+  private val lshFlags = Seq("bits", "tables", "block-col")
+  private val knnBuildFlags = Seq("k", "lsh") ++ lshFlags
 
   /** The `analyze` flags that only some ops read, with the ops that read
     * them. A flag passed to any other op is refused, not silently
@@ -292,11 +530,9 @@ object Cli {
       "labels" -> Set("modularity"),
       "min-degree" -> Set("kcore"),
       "max-degree" -> Set("triangles"),
-      "clusters" -> Set("kmeans"))
+      "clusters" -> Set("kmeans")) ++
+      knnBuildFlags.map(_ -> (analyzeGraphOps + "knn"))
   }
-
-  /** The kNN-build flags an `--edges` table makes moot. */
-  private val knnBuildFlags = Seq("k", "lsh", "bits", "tables", "block-col")
 
   /** The refusal message for an `analyze` flag combination that would
     * be silently ignored, or None when every flag is read. */
@@ -312,6 +548,9 @@ object Cli {
         s"--$flag applies to --op ${ops.toSeq.sorted.mkString("|")}, not --op $op"
     }.orElse(knnBuildFlags.find(f => flags.contains("edges") && flags.contains(f)).map(f =>
       s"--$f configures the kNN build, which --edges replaces; ignored by --op $op"))
+      .orElse(lshFlags.find(f => flags.contains(f) && !flags.contains("lsh"))
+        .map(f => s"--$f configures the --lsh kNN build; without --lsh, --op $op " +
+          "builds the exact graph"))
 
   def main(args: Array[String]): Unit = {
     // TCP_NODELAY for any HttpServer this process creates (serve/mcp):
@@ -323,8 +562,8 @@ object Cli {
     System.setProperty("sun.net.httpserver.nodelay", "true")
     if (args.isEmpty) fail(
       "usage: graft.Cli <build|search|ask|react|update|prune|list|remove" +
-      "|compact|export|import|clean|dedup|curate|scorecard|plan|analyze|overlap|tokenize|select-dsir|export-training" +
-      "|ann-build|ann-search|ann-rebalance|serve|mcp|config> ...")
+      "|compact|export|import|clean|dedup|curate|pretrain|scorecard|plan|analyze|overlap|tokenize|select-dsir" +
+      "|export-training|ann-build|ann-search|ann-rebalance|serve|mcp|config> ...")
     val (pos, flags) = parse(args.toSeq.tail)
     args.head match {
       case "build" | "update" =>
@@ -380,7 +619,7 @@ object Cli {
           case _ => fail("usage: search <index> <query> [--top-k N] [--filter dsl] " +
             "[--hybrid] [--alpha A] [--no-auto-hybrid] [--no-expand] [--format text|json]")
         }
-        val dir = Index.locate(warehouse, name).getOrElse(fail(s"no index '$name' in $warehouse"))
+        val dir = indexDir(name)
         val spark = session()
         // Reference search defaults (search.rs:39-45,147-148,173-186):
         // short queries (<= 3 words) auto-enable hybrid and are expanded
@@ -404,14 +643,7 @@ object Cli {
             scala.collection.immutable.ListMap(
               "id" -> r.getString(0), "score" -> r.getDouble(1),
               "text" -> r.getString(2), "source" -> r.getString(3)))))
-        } else {
-          rows.zipWithIndex.foreach { case (r, i) =>
-            val text = r.getString(2)
-            val snippet = if (text.length > 100) text.take(100) + "…" else text
-            println(f"${i + 1}%2d. [${r.getDouble(1)}%.6f] ${r.getString(3)}%s  $snippet%s")
-          }
-          if (rows.isEmpty) println("(no results)")
-        }
+        } else printHits(rows)
         spark.stop()
 
       case "ask" =>
@@ -420,7 +652,7 @@ object Cli {
         val name = pos.headOption.getOrElse(
           fail("usage: ask <index> [question] [--top-k N] [--interactive]"))
         val question = pos.drop(1).headOption
-        val dir = Index.locate(warehouse, name).getOrElse(fail(s"no index '$name' in $warehouse"))
+        val dir = indexDir(name)
         val spark = session()
         val topK = flags.get("top-k").map(_.toInt).getOrElse(5)
         // one provider for the whole session — re-evaluating the def per
@@ -443,7 +675,7 @@ object Cli {
           case Seq(n, q, _*) => (n, q)
           case _ => fail("usage: react <index> <question> [--top-k N] [--max-steps N]")
         }
-        val dir = Index.locate(warehouse, name).getOrElse(fail(s"no index '$name' in $warehouse"))
+        val dir = indexDir(name)
         val spark = session()
         val agent = new graft.llm.ReactAgent(spark, dir, provider,
           llmProvider,
@@ -454,12 +686,8 @@ object Cli {
 
       case "prune" =>
         val name = pos.headOption.getOrElse(fail("usage: prune <index>"))
-        Index.locate(warehouse, name) match {
-          case None => fail(s"no index '$name' in $warehouse")
-          case Some(dir) =>
-            Index.prune(dir)
-            println(s"prune: dropped embeddings of '$name' (recompute-on-read)")
-        }
+        Index.prune(indexDir(name))
+        println(s"prune: dropped embeddings of '$name' (recompute-on-read)")
 
       case "list" =>
         val idx = Index.listIndexes(warehouse)
@@ -476,29 +704,23 @@ object Cli {
 
       case "compact" =>
         val name = pos.headOption.getOrElse(fail("usage: compact <index>"))
-        Index.locate(warehouse, name) match {
-          case None => fail(s"no index '$name' in $warehouse")
-          case Some(dir) =>
-            val spark = session()
-            Index.compact(spark, dir)
-            println(s"compact: rewrote '$name' tables to target file size")
-            spark.stop()
-        }
+        val dir = indexDir(name)
+        val spark = session()
+        Index.compact(spark, dir)
+        println(s"compact: rewrote '$name' tables to target file size")
+        spark.stop()
 
       case "ann-rebalance" =>
         val name = pos.headOption.getOrElse(
           fail("usage: ann-rebalance <index> [--max-fraction 0.05]"))
-        Index.locate(warehouse, name) match {
-          case None => fail(s"no index '$name' in $warehouse")
-          case Some(dir) =>
-            val spark = session()
-            val frac = flags.get("max-fraction").map(_.toDouble).getOrElse(0.05)
-            val n = Index.rebalanceIvf(spark, dir, maxFraction = frac)
-            println(
-              if (n == 0) s"ann-rebalance: '$name' already within bounds"
-              else s"ann-rebalance: split $n hot cluster(s) in '$name'")
-            spark.stop()
-        }
+        val dir = indexDir(name)
+        val spark = session()
+        val frac = flags.get("max-fraction").map(_.toDouble).getOrElse(0.05)
+        val n = Index.rebalanceIvf(spark, dir, maxFraction = frac)
+        println(
+          if (n == 0) s"ann-rebalance: '$name' already within bounds"
+          else s"ann-rebalance: split $n hot cluster(s) in '$name'")
+        spark.stop()
 
       case "export" =>
         // Round-trip with the JSONL corpus source (`build --docs x.jsonl`):
@@ -507,24 +729,21 @@ object Cli {
         val name = pos.headOption.getOrElse(
           fail("usage: export <index> --out <dir> [--format jsonl|parquet|native]"))
         val out = flags.getOrElse("out", fail("--out <dir> required"))
-        Index.locate(warehouse, name) match {
-          case None => fail(s"no index '$name' in $warehouse")
-          case Some(dir) =>
-            val spark = session()
-            val passages = spark.read.parquet(s"$dir/passages")
-            flags.getOrElse("format", "jsonl") match {
-              case "jsonl" => passages.write.mode("overwrite").json(out)
-              case "parquet" => passages.write.mode("overwrite").parquet(out)
-              case "native" =>
-                // the reference's own on-disk layout (passages.jsonl +
-                // idx + ids.txt + flat-f32 embeddings + meta.json) —
-                // the inverse of `Cli import`
-                graft.sources.LeannImport.exportNative(spark, dir, out)
-              case other => fail(s"unknown export format '$other' (jsonl|parquet|native)")
-            }
-            println(s"export: wrote passages of '$name' to $out")
-            spark.stop()
+        val dir = indexDir(name)
+        val spark = session()
+        val passages = spark.read.parquet(s"$dir/passages")
+        flags.getOrElse("format", "jsonl") match {
+          case "jsonl" => passages.write.mode("overwrite").json(out)
+          case "parquet" => passages.write.mode("overwrite").parquet(out)
+          case "native" =>
+            // the reference's own on-disk layout (passages.jsonl +
+            // idx + ids.txt + flat-f32 embeddings + meta.json) —
+            // the inverse of `Cli import`
+            graft.sources.LeannImport.exportNative(spark, dir, out)
+          case other => fail(s"unknown export format '$other' (jsonl|parquet|native)")
         }
+        println(s"export: wrote passages of '$name' to $out")
+        spark.stop()
 
       case "import" =>
         // The inverse of export for the reference's NATIVE layout
@@ -555,38 +774,24 @@ object Cli {
         val spark = session()
         val docs = ingestText(spark, docsDir)
         val cleanIdCol = resolveUniqueDocId(docs, flags, "clean")
-        val (kept, report) = graft.operators.CorpusClean.cleanCorpus(
+        val (kept, report) = CorpusClean.cleanCorpus(
           docs, cleanIdCol, "text",
           minWords = flags.get("min-words").map(_.toInt).getOrElse(50),
           minLmScore = flags.get("min-lm").map(_.toDouble))
-        // keep the survivors consumable by the source-grained siblings
-        // (scorecard/plan/overlap) when the id grain wasn't source
-        val keptOut =
-          if (cleanIdCol == "source" || !docs.columns.contains("source")) kept
-          else kept.join(
-            docs.select(org.apache.spark.sql.functions.col(cleanIdCol)
-              .as("doc_id"), org.apache.spark.sql.functions.col("source")),
-            Seq("doc_id"), "left")
-        keptOut.write.mode("overwrite").parquet(out)
+        withSource(kept, docs, cleanIdCol).write.mode("overwrite").parquet(out)
         report.collect().foreach(r =>
           println(f"  ${r.getString(0)}%-16s ${r.getLong(1)}%8d"))
         println(s"clean: wrote surviving documents to $out")
         // Drain the deferred-release persist registry (lmScore et al.)
         // like Server/McpServer do — a REPL driving Cli.run repeatedly
         // must not accumulate one live cache entry per callsite.
-        graft.operators.Dedup.releaseCaches()
+        Dedup.releaseCaches()
         spark.stop()
 
       case "curate" =>
         // End-to-end curation funnel — the one-command RefinedWeb/
-        // Dolma-shaped pipeline: quality clean → dedup → benchmark
-        // decontamination, with a per-stage attrition report. Each
-        // stage reuses the standalone arm's operator (cleanCorpus,
-        // textDedupSurvivors, decontaminate) so the composed pipeline
-        // and the arms cannot drift. Stage boundaries persist
-        // MEMORY_AND_DISK and are counted exactly once — at 100 TB
-        // each boundary is one materialization, the funnel numbers are
-        // byproducts of it, and nothing upstream recomputes.
+        // Dolma-shaped pipeline (curateFunnel: quality clean → dedup →
+        // benchmark decontamination) with a per-stage attrition report.
         val usage = "usage: curate --docs <dir|corpus.jsonl|parquet> --out <dir> " +
           "[--id-col <unique doc id>] " +
           "[--min-words 50] [--min-lm <f>] [--dedup minhash|exact|simhash|containment|none] " +
@@ -594,79 +799,15 @@ object Cli {
           "[--ngram 5] [--max-overlap 0] [--report <dir>]"
         val docsDir = flags.getOrElse("docs", fail(usage))
         val out = flags.getOrElse("out", fail("--out <dir> required"))
-        val method = flags.getOrElse("dedup", "minhash")
-        if (!Set("minhash", "exact", "simhash", "containment", "none").contains(method))
-          fail(s"--dedup '$method' (minhash|exact|simhash|containment|none)")
         val spark = session()
-        import org.apache.spark.sql.functions.col
-        import org.apache.spark.storage.StorageLevel
-        val docs = ingestText(spark, docsDir)
-        Seq("source", "text").foreach { c =>
-          if (!docs.columns.contains(c)) fail(
-            s"--docs needs 'source' and 'text' columns " +
-              s"(have: ${docs.columns.mkString(", ")})")
-        }
-        // Every stage keys by ONE verified-unique doc id (doc_id when
-        // the corpus carries it, else source, else --id-col): on a
-        // multi-doc-per-source corpus the old source-keyed grain fanned
-        // the per-doc joins out quadratically within each source.
-        val idCol = resolveUniqueDocId(docs, flags, "curate")
-        val n0 = docs.count()
-        // Stage 1: quality clean (Gopher + repetition + optional LM
-        // floor; survivors are PII-scrubbed — dedup then runs over the
-        // text that would actually ship).
-        val (kept, ruleReport) = graft.operators.CorpusClean.cleanCorpus(
-          docs, idCol, "text",
-          minWords = flags.get("min-words").map(_.toInt).getOrElse(50),
-          minLmScore = flags.get("min-lm").map(_.toDouble))
-        val cleaned = kept.persist(StorageLevel.MEMORY_AND_DISK)
-        val n1 = cleaned.count()
-        // Stage 2: dedup over the cleaned corpus (doc_id = the ingest
-        // source key, same grain as the standalone dedup arm).
-        val deduped = (method match {
-          case "none" => cleaned
-          case m => textDedupSurvivors(cleaned, "doc_id", "text", m,
-            minJ = flags.get("minj").map(_.toDouble).getOrElse(0.8),
-            maxDist = flags.get("max-dist").map(_.toInt).getOrElse(3))
-        }).persist(StorageLevel.MEMORY_AND_DISK)
-        val n2 = deduped.count()
-        // Stage 3: benchmark decontamination — drop any doc sharing
-        // more than --max-overlap distinct --ngram-grams with the
-        // held-out set (default 0: one shared n-gram is contamination).
-        val survivors = flags.get("decontaminate") match {
-          case None => deduped
-          case Some(benchPath) =>
-            val bench = ingestText(spark, benchPath)
-            if (!bench.columns.contains("text")) fail(
-              s"--decontaminate $benchPath has no 'text' column " +
-                s"(have: ${bench.columns.mkString(", ")})")
-            val benchId =
-              if (bench.columns.contains("doc_id")) "doc_id" else "source"
-            val contaminated = graft.operators.CorpusClean.decontaminate(
-                deduped, "doc_id", "text", bench, benchId, "text",
-                n = flags.get("ngram").map(_.toInt).getOrElse(5))
-              .filter(col("n_overlap_grams") >
-                flags.get("max-overlap").map(_.toLong).getOrElse(0L))
-              .select("doc_id")
-            deduped.join(contaminated, Seq("doc_id"), "left_anti")
-        }
-        // Re-attach the source column when the funnel keyed by a
-        // separate doc id (cleanCorpus's output carries only the id +
-        // scrubbed text): the funnel's output stays consumable by the
-        // source-grained siblings (scorecard / plan / overlap). One
-        // doc-keyed join against the already-read input.
-        val survivorsOut =
-          if (idCol == "source") survivors
-          else survivors.join(
-            docs.select(col(idCol).as("doc_id"), col("source")),
-            Seq("doc_id"), "left")
-        survivorsOut.write.mode("overwrite").parquet(out)
+        val st = curateFunnel(ingestText(spark, docsDir), flags, "curate")
+        st.survivors.write.mode("overwrite").parquet(out)
         val n3 = spark.read.parquet(out).count()
         val funnel = Seq(
-          ("ingest", n0, n0, 0L),
-          ("clean", n0, n1, n0 - n1),
-          ("dedup", n1, n2, n1 - n2),
-          ("decontaminate", n2, n3, n2 - n3))
+          ("ingest", st.n0, st.n0, 0L),
+          ("clean", st.n0, st.n1, st.n0 - st.n1),
+          ("dedup", st.n1, st.n2, st.n1 - st.n2),
+          ("decontaminate", st.n2, n3, st.n2 - n3))
         println("stage            docs_in  docs_out   dropped")
         funnel.foreach { case (s, in, o, d) =>
           println(f"  $s%-14s $in%8d  $o%8d  $d%8d") }
@@ -674,13 +815,13 @@ object Cli {
           import spark.implicits._
           funnel.toDF("stage", "docs_in", "docs_out", "dropped")
             .coalesce(1).write.mode("overwrite").parquet(s"$rep/funnel")
-          ruleReport.coalesce(1).write.mode("overwrite")
+          st.ruleReport.coalesce(1).write.mode("overwrite")
             .parquet(s"$rep/clean_rules")
           println(s"curate: report -> $rep/funnel, $rep/clean_rules")
         }
-        println(s"curate: kept $n3 of $n0 documents -> $out")
-        cleaned.unpersist(); deduped.unpersist()
-        graft.operators.Dedup.releaseCaches() // see clean
+        println(s"curate: kept $n3 of ${st.n0} documents -> $out")
+        st.cleaned.unpersist(); st.deduped.unpersist()
+        Dedup.releaseCaches() // see clean
         spark.stop()
 
       case "scorecard" =>
@@ -696,7 +837,6 @@ object Cli {
         val srcCol = flags.getOrElse("src-col", "source")
         val textCol = flags.getOrElse("text-col", "text")
         val spark = session()
-        import org.apache.spark.sql.functions.{col, length}
         val docs0 = ingestText(spark, docsDir)
         Seq(srcCol, textCol).foreach { c =>
           if (!docs0.columns.contains(c)) fail(
@@ -741,45 +881,23 @@ object Cli {
           fail("--budget <tokens> required"))
         val srcCol = flags.getOrElse("src-col", "source")
         val spark = session()
-        import org.apache.spark.sql.functions.{col, length}
         val docs0 = ingestText(spark, docsDir)
         if (!docs0.columns.contains(srcCol)) fail(
           s"--docs has no '$srcCol' column (have: " +
             s"${docs0.columns.mkString(", ")}); set --src-col")
         // token column precedence: --tokens-col > n_tokens > n_chars >
         // text length (chars as the budget unit — documented fallback)
-        val tokCol = flags.get("tokens-col").getOrElse {
-          if (docs0.columns.contains("n_tokens")) "n_tokens"
-          else if (docs0.columns.contains("n_chars")) "n_chars"
-          else "n_chars"
-        }
+        val tokCol = flags.getOrElse("tokens-col",
+          if (docs0.columns.contains("n_tokens")) "n_tokens" else "n_chars")
         val docs =
           if (docs0.columns.contains(tokCol)) docs0
           else if (tokCol == "n_chars")
-            docs0.withColumn("n_chars",
-              length(col(flags.getOrElse("text-col", "text"))).cast("long"))
+            docs0.withColumn("n_chars", length(
+              col(flags.getOrElse("text-col", "text"))).cast("long"))
           else fail(s"--tokens-col $tokCol not in the corpus " +
             s"(have: ${docs0.columns.mkString(", ")})")
-        // --weights src=3,src2=1 (raw weights, normalized internally);
-        // omitted = uniform over the corpus's sources. Sources missing
-        // from an explicit list get weight 0 — visible in the output.
-        val weights: Map[String, Double] = flags.get("weights") match {
-          case Some(spec) => spec.split(",").map(_.trim).filter(_.nonEmpty)
-            .map { kv =>
-              val i = kv.lastIndexOf('=')
-              if (i <= 0) fail(s"--weights entry '$kv' is not src=w")
-              kv.substring(0, i) -> kv.substring(i + 1).toDouble
-            }.toMap
-          case None => docs.select(col(srcCol)).where(col(srcCol).isNotNull)
-            .distinct().collect().map(_.get(0).toString -> 1.0).toMap
-        }
-        // --max-rate > 1: capped sources UPSAMPLE (epoch repeats up to
-        // the cap) instead of stopping at their own supply
-        val maxRate = flags.get("max-rate").map(_.toDouble).getOrElse(1.0)
-        val plan = graft.operators.TrainExport.mixturePlan(
-          docs, srcCol, tokCol, weights, budget, maxRate = maxRate)
-        plan.coalesce(1).write.mode("overwrite").parquet(out)
-        val rows2 = spark.read.parquet(out).orderBy("source").collect()
+        val plan = writePlan(docs, srcCol, tokCol, budget, flags, out)
+        val rows2 = plan.orderBy("source").collect()
         println(f"${"source"}%-24s ${"available"}%12s ${"allocated"}%14s ${"rate"}%8s cap")
         rows2.take(20).foreach { r =>
           println(f"  ${r.getAs[String]("source")}%-22s ${r.getAs[Long]("available")}%12d " +
@@ -789,152 +907,33 @@ object Cli {
         if (rows2.length > 20) println(s"  ... ${rows2.length - 20} more sources")
         val planned = rows2.map(_.getAs[Double]("allocated")).sum
         println(f"plan: ${rows2.length} sources, $planned%.0f of $budget tokens planned -> $out")
-        // --apply <dir>: execute the plan — draw each source at its
-        // planned rate (rateSample's md5-hex-threshold keep) and write
-        // the surviving docs
+        // --apply <dir>: execute the plan and write the drawn docs
         flags.get("apply").foreach { applyOut =>
           val idc = flags.getOrElse("id-col",
             if (docs.columns.contains("doc_id")) "doc_id" else srcCol)
-          val drawn =
-            if (maxRate > 1.0)
-              // epoch-aware: floor(rate) full copies + a fractional
-              // draw, copy index in an `epoch` column
-              graft.operators.TrainExport.rateSampleEpochs(
-                docs, idc, srcCol, spark.read.parquet(out),
-                flags.getOrElse("seed", "plan"))
-            else graft.operators.TrainExport.rateSample(
-              docs, idc, srcCol, spark.read.parquet(out),
-              flags.getOrElse("seed", "plan"))
-          drawn.write.mode("overwrite").parquet(applyOut)
+          planDraw(docs, idc, srcCol, plan, flags.getOrElse("seed", "plan"), flags)
+            .write.mode("overwrite").parquet(applyOut)
           println(s"plan: drew ${spark.read.parquet(applyOut).count()} rows -> $applyOut")
         }
         spark.stop()
 
       case "dedup" =>
         // Corpus deduplication: fingerprint, resolve duplicate
-        // clusters, write the surviving documents. Text methods: exact
-        // (normalized md5 groups), minhash (MinHash-LSH candidates +
-        // true-Jaccard verify + connected components) and simhash
-        // (class-level Hamming clustering, Dedup.hammingClusters).
-        // Media methods: phash (image dHash) and audiofp (banded-energy
-        // audio fingerprint) over a directory of media files or a
-        // (source, content) parquet table — the same class-level Hamming
-        // clustering, pixels/PCM never shuffle. All methods keep one
-        // canonical survivor per cluster (min id); docs/files with no
-        // signal (token-less text, undecodable media) always survive.
-        val dedupUsage = "usage: dedup --docs <dir|corpus.jsonl|embeddings.parquet> --out <dir> " +
-          "[--method exact|minhash|simhash|containment|phash|audiofp|embed|semantic] " +
+        // clusters, write the surviving documents (dedupSurvivors has
+        // the per-method semantics, dedupInput what --docs means).
+        val dedupUsage = "usage: dedup --docs <dir|corpus.jsonl|parquet|media dir|embeddings.parquet> " +
+          "--out <dir> [--method exact|minhash|simhash|containment|phash|audiofp|embed|semantic] " +
           "[--minj 0.8] [--max-dist 3] [--id-col vec_id] [--vec-col embedding] " +
           "[--min-cosine 0.95] [--tau 0.95] [--clusters 8] [--quality-col <col>]"
         val docsDir = flags.getOrElse("docs", fail(dedupUsage))
         val out = flags.getOrElse("out", fail("--out <dir> required"))
-        val method = flags.getOrElse("method", "minhash")
-        val mediaMethod = method == "phash" || method == "audiofp"
-        // Embedding methods dedup an (id, vector[, quality]) parquet —
-        // the strongest tier (semantic near-dup), quality-keyed survivors
-        val embMethod = method == "embed" || method == "semantic"
         val spark = session()
-        import org.apache.spark.sql.functions.col
-        val docs =
-          if (embMethod) spark.read.parquet(docsDir)
-          else if (mediaMethod) {
-            // binary media rows keyed by path; a parquet table keeps its
-            // own (source, content) columns. A parquet DIRECTORY rarely
-            // ends in ".parquet", so detect by contents too — reading a
-            // parquet table as binaryFile would hash part-files instead
-            // of media and "dedup" nothing, silently.
-            val f = new java.io.File(docsDir)
-            val looksParquet = docsDir.endsWith(".parquet") ||
-              (f.isDirectory && f.listFiles() != null && f.listFiles().exists(c =>
-                c.getName.endsWith(".parquet") || c.getName == "_SUCCESS"))
-            if (looksParquet)
-              spark.read.parquet(docsDir).select(
-                col("source").cast("string").as("source"), col("content"))
-            else spark.read.format("binaryFile")
-              .option("recursiveFileLookup", "true").load(docsDir)
-              .select(col("path").as("source"), col("content"))
-          }
-          else if (docsDir.endsWith(".jsonl") || docsDir.endsWith(".jsonl.gz"))
-            FileIngest.readJsonl(spark, docsDir)
-          else FileIngest.readDocuments(spark, docsDir)
-        val D = graft.operators.Dedup
+        val docs = dedupInput(spark, docsDir, flags.getOrElse("method", "minhash"))
         val total = docs.count()
-        // Hamming-cluster losers -> survivors, shared by the simhash /
-        // phash / audiofp arms: rows not explicitly collapsed survive,
-        // so signature-less rows always pass the anti join.
-        def minusLosers(clusters: org.apache.spark.sql.DataFrame) =
-          docs.join(clusters.filter(!col("keep")).select(col("id").as("source")),
-            Seq("source"), "left_anti")
-        val maxDist = flags.get("max-dist").map(_.toInt).getOrElse(3)
-        val survivors = method match {
-          case "exact" | "minhash" | "simhash" | "containment" =>
-            // Shared text tiers (see textDedupSurvivors for the
-            // per-method semantics, incl. the NULL-signal stance).
-            textDedupSurvivors(docs, "source", "text", method,
-              minJ = flags.get("minj").map(_.toDouble).getOrElse(0.8),
-              maxDist = maxDist)
-          case "phash" =>
-            minusLosers(graft.operators.Multimodal.phashClusters(
-              docs, "source", "content", maxDist = maxDist))
-          case "audiofp" =>
-            minusLosers(graft.operators.Multimodal.audioFpClusters(
-              docs, "source", "content", maxDist = maxDist))
-          case "embed" | "semantic" =>
-            // Embedding near-dup over an (id, vector[, quality]) table:
-            //   embed    — sign-LSH bucketed cosine pairs (one global
-            //              pass, embeddingLshPairs)
-            //   semantic — k-means cluster blocking + within-cluster
-            //              cosine pairs (semanticPairs), the
-            //              IVF-co-partitioned 100 TB shape
-            // then connected components over the pair table and a
-            // QUALITY-KEYED survivor per cluster (resolveByQuality):
-            // --quality-col names the score column; absent, qualities
-            // tie and the resolver's smallest-id tie-break applies.
-            val idCol = flags.getOrElse("id-col", "vec_id")
-            val vecCol = flags.getOrElse("vec-col", "embedding")
-            Seq(idCol, vecCol).foreach { c =>
-              if (!docs.columns.contains(c)) fail(
-                s"--docs parquet has no '$c' column (have: ${docs.columns.mkString(", ")}); " +
-                  "set --id-col/--vec-col for embedding dedup methods")
-            }
-            val pairs =
-              if (method == "embed") {
-                val head = docs.select(col(vecCol)).limit(1).collect()
-                if (head.isEmpty || head(0).isNullAt(0)) fail(
-                  s"cannot derive embedding dims: $docsDir is empty or its first '$vecCol' is null")
-                val dims = head(0).getSeq[Any](0).size
-                D.embeddingLshPairs(docs, idCol, vecCol, dims,
-                  bits = flags.get("bits").map(_.toInt).getOrElse(16),
-                  minCosine = flags.get("min-cosine").map(_.toDouble).getOrElse(0.95))
-              } else {
-                val (asg, _) = graft.operators.Cluster.kmeansAssign(docs, idCol, vecCol,
-                  k = flags.get("clusters").map(_.toInt).getOrElse(8),
-                  Stop.Rounds(flags.get("iters").map(_.toInt).getOrElse(5)))
-                val withCl = docs.join(
-                  asg.select(col("id").as(idCol + "_asg"), col("cluster")),
-                  col(idCol).cast("long") === col(idCol + "_asg"))
-                D.semanticPairs(withCl, idCol, vecCol, "cluster",
-                  tau = flags.get("tau").map(_.toDouble).getOrElse(0.95))
-              }
-            val comps = D.connectedComponents(pairs.select("id_a", "id_b"))
-            val quality = flags.get("quality-col") match {
-              case Some(qc) =>
-                if (!docs.columns.contains(qc)) fail(
-                  s"--quality-col '$qc' not in --docs parquet (have: ${docs.columns.mkString(", ")})")
-                docs.select(col(idCol).cast("long").as("id"), col(qc).as("q"))
-              case None => docs.select(col(idCol).cast("long").as("id"),
-                org.apache.spark.sql.functions.lit(0.0).as("q"))
-            }
-            val losers = D.resolveByQuality(comps, quality, "id", "q")
-              .filter(!col("keep")).select(col("id").as(idCol))
-            docs.join(losers, Seq(idCol), "left_anti")
-          case other => fail(
-            s"unknown dedup method '$other' (exact|minhash|simhash|containment|phash|audiofp|embed|semantic)")
-        }
-        survivors.write.mode("overwrite").parquet(out)
+        dedupSurvivors(docs, flags).write.mode("overwrite").parquet(out)
         val kept = spark.read.parquet(out).count()
         println(s"dedup: kept $kept of $total documents -> $out")
-        graft.operators.Dedup.releaseCaches() // see clean
+        Dedup.releaseCaches() // see clean
         spark.stop()
 
       case "overlap" =>
@@ -960,13 +959,13 @@ object Cli {
         val docs = ingestText(spark, docsDir)
         val m =
           if (flags.contains("sketch"))
-            graft.operators.Dedup.sourceOverlapSketch(docs, textCol, srcCol,
+            Dedup.sourceOverlapSketch(docs, textCol, srcCol,
               n, numHashes = flags.get("hashes").map(_.toInt).getOrElse(64))
-          else graft.operators.Dedup.sourceOverlap(docs, textCol, srcCol, n)
+          else Dedup.sourceOverlap(docs, textCol, srcCol, n)
         m.orderBy("src_a", "src_b").write.mode("overwrite").parquet(out)
         val rows = spark.read.parquet(out).count()
         println(s"overlap: $rows source-pair rows -> $out")
-        graft.operators.Dedup.releaseCaches() // see clean
+        Dedup.releaseCaches() // see clean
         spark.stop()
 
       case "analyze" =>
@@ -1002,7 +1001,7 @@ object Cli {
           if (graphOp && flags.contains("edges")) "" else fail(usage)
         }
         val spark = session()
-        import org.apache.spark.sql.functions.{col, size}
+        import org.apache.spark.sql.functions.size
         // --survivors-of <parquet>: scope the analytics input to a
         // funnel's survivor table (a `curate`/`dedup` --out result) —
         // the measured dedup-first ordering (BASELINE.md /
@@ -1026,8 +1025,8 @@ object Cli {
         // scope BOTH endpoints: an edge to a dropped duplicate is
         // itself dropped). Counts are two cheap aggregates per run —
         // the manifest's amortization record.
-        def scoped(df: org.apache.spark.sql.DataFrame,
-                   on: String*): org.apache.spark.sql.DataFrame =
+        def scoped(df: DataFrame,
+                   on: String*): DataFrame =
           survivorIds match {
             case None => df
             case Some((ids, p)) =>
@@ -1053,7 +1052,7 @@ object Cli {
           }
         lazy val emb = scoped(spark.read.parquet(embPath), idCol)
         val G = graft.operators.Graph
-        def graph(): org.apache.spark.sql.DataFrame = flags.get("edges") match {
+        def graph(): DataFrame = flags.get("edges") match {
           case Some(p) =>
             val e = spark.read.parquet(p)
             // pass a weight column through when present ("score" or
@@ -1109,7 +1108,7 @@ object Cli {
         // --weighted: the edge similarity (score) weights the surfer's
         // steps / the votes
         val weighted = flags.contains("weighted")
-        def loopGraph(): org.apache.spark.sql.DataFrame =
+        def loopGraph(): DataFrame =
           if (weighted) {
             val g = graph()
             if (!g.columns.contains("score")) fail(
@@ -1119,7 +1118,7 @@ object Cli {
               "id", "nb", "score")
           } else G.symmetrize(graph())
         var roundsNote = ""
-        def looped(r: (org.apache.spark.sql.DataFrame, Int)) = {
+        def looped(r: (DataFrame, Int)) = {
           if (flags.contains("tol")) roundsNote = s", converged in ${r._2} rounds"
           r._1
         }
@@ -1164,8 +1163,8 @@ object Cli {
             val pairs = graph()
               .select(col("id").as("id_a"), col("nb").as("id_b"))
             init match {
-              case Some(prior) => graft.operators.Dedup.connectedComponentsWarm(pairs, prior)
-              case None => graft.operators.Dedup.connectedComponents(pairs)
+              case Some(prior) => Dedup.connectedComponentsWarm(pairs, prior)
+              case None => Dedup.connectedComponents(pairs)
             }
           case "modularity" =>
             // community-quality score over a persisted (id, label)
@@ -1281,7 +1280,7 @@ object Cli {
             .getBytes(java.nio.charset.StandardCharsets.UTF_8))
         println(s"tokenize: learned ${merges.length} merges, " +
           s"wrote encoded corpus to $out (_merges.json written)")
-        graft.operators.Dedup.releaseCaches() // see clean
+        Dedup.releaseCaches() // see clean
         spark.stop()
 
       case "select-dsir" =>
@@ -1298,11 +1297,11 @@ object Cli {
         val spark = session()
         def load(d: String) = ingestText(spark, d)
         val raw = load(docsDir)
-        val drawn = graft.operators.TrainExport.dsirSample(
+        val drawn = TrainExport.dsirSample(
           raw, "source", "text", load(targetDir), "text", k,
           seed = flags.getOrElse("seed", "dsir"),
           buckets = flags.get("buckets").map(_.toInt).getOrElse(10000))
-        val ids = drawn.select(org.apache.spark.sql.functions.col("id"))
+        val ids = drawn.select(col("id"))
         raw.join(ids, raw("source") === ids("id"), "left_semi")
           .write.mode("overwrite").parquet(out)
         // report the COUNT actually written, not k: duplicate source
@@ -1322,19 +1321,16 @@ object Cli {
           fail("usage: export-training <index> --out <dir> [--shards 8] " +
             "[--seed graft] [--pack-budget 2048]"))
         val out = flags.getOrElse("out", fail("--out <dir> required"))
-        Index.locate(warehouse, name) match {
-          case None => fail(s"no index '$name' in $warehouse")
-          case Some(dir) =>
-            val spark = session()
-            val nShards = flags.get("shards").map(_.toInt).getOrElse(8)
-            val perShard = graft.operators.TrainExport.writeTrainingShards(
-              spark.read.parquet(s"$dir/passages"), out, idCol = "id",
-              seed = flags.getOrElse("seed", "graft"), nShards = nShards,
-              packBudget = flags.get("pack-budget").map(_.toInt))
-            println(s"export-training: wrote ${perShard.values.sum} rows " +
-              s"across $nShards shards to $out (_manifest.json written)")
-            spark.stop()
-        }
+        val dir = indexDir(name)
+        val spark = session()
+        val nShards = flags.get("shards").map(_.toInt).getOrElse(8)
+        val perShard = TrainExport.writeTrainingShards(
+          spark.read.parquet(s"$dir/passages"), out, idCol = "id",
+          seed = flags.getOrElse("seed", "graft"), nShards = nShards,
+          packBudget = flags.get("pack-budget").map(_.toInt))
+        println(s"export-training: wrote ${perShard.values.sum} rows " +
+          s"across $nShards shards to $out (_manifest.json written)")
+        spark.stop()
 
       case "pretrain" =>
         // The one-command pretraining export: curate funnel → optional
@@ -1357,91 +1353,25 @@ object Cli {
           "[--merges 200] [--min-freq 2] [--pack-budget <toks>] [--shards 8] [--seed graft]"
         val docsDir = flags.getOrElse("docs", fail(ptUsage))
         val out = flags.getOrElse("out", fail("--out <dir> required"))
-        val method = flags.getOrElse("dedup", "minhash")
-        if (!Set("minhash", "exact", "simhash", "containment", "none").contains(method))
-          fail(s"--dedup '$method' (minhash|exact|simhash|containment|none)")
         val seed = flags.getOrElse("seed", "graft")
         val spark = session()
-        import org.apache.spark.sql.functions.{col, concat_ws, length}
-        import org.apache.spark.storage.StorageLevel
-        val docs = ingestText(spark, docsDir)
-        Seq("source", "text").foreach { c =>
-          if (!docs.columns.contains(c)) fail(
-            s"--docs needs 'source' and 'text' columns " +
-              s"(have: ${docs.columns.mkString(", ")})")
-        }
-        val idCol = resolveUniqueDocId(docs, flags, "pretrain")
-        val n0 = docs.count()
+        import org.apache.spark.sql.functions.concat_ws
         // Stages 1-3: the curate funnel (clean → dedup → decontaminate)
-        val (kept, _) = graft.operators.CorpusClean.cleanCorpus(
-          docs, idCol, "text",
-          minWords = flags.get("min-words").map(_.toInt).getOrElse(50),
-          minLmScore = flags.get("min-lm").map(_.toDouble))
-        val cleaned = kept.persist(StorageLevel.MEMORY_AND_DISK)
-        val n1 = cleaned.count()
-        val deduped = (method match {
-          case "none" => cleaned
-          case m => textDedupSurvivors(cleaned, "doc_id", "text", m,
-            minJ = flags.get("minj").map(_.toDouble).getOrElse(0.8),
-            maxDist = flags.get("max-dist").map(_.toInt).getOrElse(3))
-        }).persist(StorageLevel.MEMORY_AND_DISK)
-        val n2 = deduped.count()
-        val survivors = flags.get("decontaminate") match {
-          case None => deduped
-          case Some(benchPath) =>
-            val bench = ingestText(spark, benchPath)
-            if (!bench.columns.contains("text")) fail(
-              s"--decontaminate $benchPath has no 'text' column")
-            val benchId =
-              if (bench.columns.contains("doc_id")) "doc_id" else "source"
-            val contaminated = graft.operators.CorpusClean.decontaminate(
-                deduped, "doc_id", "text", bench, benchId, "text",
-                n = flags.get("ngram").map(_.toInt).getOrElse(5))
-              .filter(col("n_overlap_grams") >
-                flags.get("max-overlap").map(_.toLong).getOrElse(0L))
-              .select("doc_id")
-            deduped.join(contaminated, Seq("doc_id"), "left_anti")
-        }
-        // re-attach source (the curate rule): mixture + manifest need it
-        val curated = (if (idCol == "source") survivors
-          else survivors.join(
-            docs.select(col(idCol).as("doc_id"), col("source")),
-            Seq("doc_id"), "left"))
-          .persist(StorageLevel.MEMORY_AND_DISK)
+        val st = curateFunnel(ingestText(spark, docsDir), flags, "pretrain")
+        val curated = st.survivors.persist(StorageLevel.MEMORY_AND_DISK)
         curated.write.mode("overwrite").parquet(s"$out/curated")
         val n3 = curated.count()
         // Stage 4 (only with --budget): water-filling mixture plan +
-        // md5-threshold draw; epoch upsampling when --max-rate > 1
-        val maxRate = flags.get("max-rate").map(_.toDouble).getOrElse(1.0)
+        // md5-threshold draw
         var planRows = 0L
         val drawn = flags.get("budget").map(_.toLong) match {
           case None => curated
           case Some(budget) =>
             val withChars = curated.withColumn("n_chars",
               length(col("text")).cast("long"))
-            val weights: Map[String, Double] = flags.get("weights") match {
-              case Some(spec) => spec.split(",").map(_.trim).filter(_.nonEmpty)
-                .map { kv =>
-                  val i = kv.lastIndexOf('=')
-                  if (i <= 0) fail(s"--weights entry '$kv' is not src=w")
-                  kv.substring(0, i) -> kv.substring(i + 1).toDouble
-                }.toMap
-              case None => withChars.select(col("source"))
-                .where(col("source").isNotNull).distinct()
-                .collect().map(_.get(0).toString -> 1.0).toMap
-            }
-            val plan = graft.operators.TrainExport.mixturePlan(
-              withChars, "source", "n_chars", weights, budget,
-              maxRate = maxRate)
-            plan.coalesce(1).write.mode("overwrite").parquet(s"$out/plan")
-            planRows = spark.read.parquet(s"$out/plan").count()
-            if (maxRate > 1.0)
-              graft.operators.TrainExport.rateSampleEpochs(
-                withChars, "doc_id", "source",
-                spark.read.parquet(s"$out/plan"), seed)
-            else graft.operators.TrainExport.rateSample(
-              withChars, "doc_id", "source",
-              spark.read.parquet(s"$out/plan"), seed)
+            val plan = writePlan(withChars, "source", "n_chars", budget, flags, s"$out/plan")
+            planRows = plan.count()
+            planDraw(withChars, "doc_id", "source", plan, seed, flags)
         }
         // Stage 5: BPE — learn the vocab on the DRAWN corpus (the text
         // the model will actually see), encode to (id, tokens,
@@ -1466,20 +1396,19 @@ object Cli {
             .getBytes(java.nio.charset.StandardCharsets.UTF_8))
         // Stage 6: deterministic shuffle → (optional) GPT-style pack
         // over the REAL BPE token counts → round-robin shards
-        val shuffled = graft.operators.TrainExport.deterministicShuffle(
+        val shuffled = TrainExport.deterministicShuffle(
           encoded, "id", seed,
           nShards = flags.get("shards").map(_.toInt).getOrElse(8))
         val packBudget = flags.get("pack-budget").map(_.toInt)
         val laid = packBudget match {
           case None => shuffled
-          case Some(b) => graft.operators.TrainExport.packSequences(
+          case Some(b) => TrainExport.packSequences(
             shuffled, "pos", "n_tokens", b)
         }
         laid.write.mode("overwrite").partitionBy("shard")
           .parquet(s"$out/shards")
         val perShard = spark.read.parquet(s"$out/shards")
-          .groupBy("shard").agg(org.apache.spark.sql.functions.count(
-            org.apache.spark.sql.functions.lit(1)).as("n"))
+          .groupBy("shard").agg(org.apache.spark.sql.functions.count(lit(1)).as("n"))
           .collect().map(r => r.get(0).toString -> r.getLong(1))
           .sortBy(_._1).toList
         // ONE manifest for the whole export — funnel, plan, vocab,
@@ -1488,10 +1417,10 @@ object Cli {
         val manifest = scala.collection.immutable.ListMap(
           "seed" -> seed,
           "funnel" -> scala.collection.immutable.ListMap(
-            "ingest" -> n0, "clean" -> n1, "dedup" -> n2,
+            "ingest" -> st.n0, "clean" -> st.n1, "dedup" -> st.n2,
             "decontaminate" -> n3, "drawn" -> nDrawn),
           "plan_sources" -> planRows,
-          "max_rate" -> maxRate,
+          "max_rate" -> maxRate(flags),
           "merges" -> merges.length,
           "pack_budget" -> packBudget.getOrElse(0),
           "shards" -> flags.get("shards").map(_.toInt).getOrElse(8),
@@ -1502,32 +1431,29 @@ object Cli {
           graft.util.Json.write(manifest)
             .getBytes(java.nio.charset.StandardCharsets.UTF_8))
         println("stage            docs")
-        Seq(("ingest", n0), ("clean", n1), ("dedup", n2),
+        Seq(("ingest", st.n0), ("clean", st.n1), ("dedup", st.n2),
           ("decontaminate", n3), ("drawn", nDrawn)).foreach { case (s, v) =>
           println(f"  $s%-14s $v%8d") }
         println(s"pretrain: ${merges.length} merges, " +
           s"${perShard.map(_._2).sum} rows across ${perShard.length} " +
           s"shards -> $out (_manifest.json, _merges.json written)")
-        cleaned.unpersist(); deduped.unpersist(); curated.unpersist()
+        st.cleaned.unpersist(); st.deduped.unpersist(); curated.unpersist()
         keyed.unpersist()
-        graft.operators.Dedup.releaseCaches() // see clean
+        Dedup.releaseCaches() // see clean
         spark.stop()
 
       case "ann-build" =>
         val name = pos.headOption.getOrElse(
           fail("usage: ann-build <index> [--clusters 16] [--pq-m 8] [--pq-k 16]"))
-        Index.locate(warehouse, name) match {
-          case None => fail(s"no index '$name' in $warehouse")
-          case Some(dir) =>
-            val spark = session()
-            val clusters = flags.get("clusters").map(_.toInt).getOrElse(16)
-            Index.buildIvf(spark, dir, numClusters = clusters)
-            Index.buildPq(spark, dir,
-              m = flags.get("pq-m").map(_.toInt).getOrElse(8),
-              k = flags.get("pq-k").map(_.toInt).getOrElse(16))
-            println(s"ann-build: IVF($clusters) + PQ layout written for '$name'")
-            spark.stop()
-        }
+        val dir = indexDir(name)
+        val spark = session()
+        val clusters = flags.get("clusters").map(_.toInt).getOrElse(16)
+        Index.buildIvf(spark, dir, numClusters = clusters)
+        Index.buildPq(spark, dir,
+          m = flags.get("pq-m").map(_.toInt).getOrElse(8),
+          k = flags.get("pq-k").map(_.toInt).getOrElse(16))
+        println(s"ann-build: IVF($clusters) + PQ layout written for '$name'")
+        spark.stop()
 
       case "ann-search" =>
         val (name, query) = pos match {
@@ -1535,19 +1461,14 @@ object Cli {
           case _ => fail("usage: ann-search <index> <query> [--top-k 5] " +
             "[--nprobe 4] [--rerank 50] [--filter dsl]")
         }
-        val dir = Index.locate(warehouse, name).getOrElse(fail(s"no index '$name' in $warehouse"))
+        val dir = indexDir(name)
         val spark = session()
         val rows = Index.searchAnn(spark, dir, query, provider,
           topK = flags.get("top-k").map(_.toInt).getOrElse(5),
           nprobe = flags.get("nprobe").map(_.toInt).getOrElse(4),
           rerank = flags.get("rerank").map(_.toInt).getOrElse(50),
           filterStr = flags.get("filter")).collect()
-        rows.zipWithIndex.foreach { case (r, i) =>
-          val text = r.getString(2)
-          val snippet = if (text.length > 100) text.take(100) + "…" else text
-          println(f"${i + 1}%2d. [${r.getDouble(1)}%.6f] ${r.getString(3)}%s  $snippet%s")
-        }
-        if (rows.isEmpty) println("(no results)")
+        printHits(rows)
         spark.stop()
 
       case "config" =>

@@ -154,12 +154,6 @@ object TextFunctions {
   def md5Hash64(c: Column): Column =
     conv(substring(md5(c), 1, 15), 16, 10).cast("long")
 
-  /** SimHash-64 over the token multiset: per bit, sum +1/-1 weighted by
-    * token frequency; bit set when the sum is positive. Expressed with a
-    * 64-row explode + bit ops — no UDF, fully distributed and
-    * SQL-reproducible. Returns the plan fragment; see Dedup.simhash. */
-  def tokenHash(text: Column): Column = md5Hash64(explode(tokens(text)))
-
   /** Unicode NFC canonical composition (see
     * [[graft.functions.expressions.NfcNormalize]]). */
   def nfcNormalize(text: Column): Column =

@@ -108,7 +108,6 @@ final class WarmIndex private (
     val fingerprint: Long) {
 
   def numClusters: Int = bucketIds.length
-  def numVectors: Int = bucketIds.iterator.map(_.length).sum
   def hasBm25: Boolean = bm25.isDefined
   def hasPq: Boolean = pq.isDefined
 

@@ -54,7 +54,19 @@ class CliAnalyzeSpec extends SparkSpec {
       Seq("--op", "kcore", "--edges", "e", "--bits", "12") -> "--bits configures the kNN build",
       Seq("--op", "ppr", "--edges", "e", "--tables", "2") -> "--tables configures the kNN build",
       Seq("--op", "communities", "--edges", "e", "--block-col", "c") ->
-        "--block-col configures the kNN build")
+        "--block-col configures the kNN build",
+      Seq("--op", "pagerank", "--k", "3", "--bits", "12") -> "--bits configures the --lsh kNN build",
+      Seq("--op", "knn", "--tables", "2") -> "--tables configures the --lsh kNN build",
+      Seq("--op", "triangles", "--block-col", "c") -> "--block-col configures the --lsh kNN build",
+      Seq("--op", "pca", "--k", "3") -> "--k applies to",
+      Seq("--op", "pca", "--lsh") -> "--lsh applies to",
+      Seq("--op", "pca", "--bits", "12") -> "--bits applies to",
+      Seq("--op", "pca", "--tables", "2") -> "--tables applies to",
+      Seq("--op", "pca", "--block-col", "c") -> "--block-col applies to",
+      Seq("--op", "kmeans", "--lsh") -> "--lsh applies to",
+      Seq("--op", "kmeans", "--bits", "12") -> "--bits applies to",
+      Seq("--op", "kmeans", "--tables", "2") -> "--tables applies to",
+      Seq("--op", "kmeans", "--block-col", "c") -> "--block-col applies to")
     for ((args, msg) <- refused) {
       val err = flagError(args: _*)
       assert(err.exists(_.startsWith(msg)), s"${args.mkString(" ")}: $err")

@@ -2,10 +2,11 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-/** The `curate` funnel's building blocks, driven as the CLI composes
-  * them (Cli.textDedupSurvivors over the cleaned corpus, then the
-  * decontamination anti-join) — in-process, without Cli.main's session
-  * lifecycle. A true end-to-end `Cli curate` run lives in E2eDrive. */
+/** The text arms' dataflows as `Cli.main` runs them: the text dedup
+  * tiers (Cli.textDedupSurvivors), the `curate`/`pretrain` funnel
+  * (Cli.curateFunnel) and `dedup`'s input resolver over a parquet
+  * corpus — in-process, without Cli.main's session lifecycle. A true
+  * end-to-end `Cli curate` run lives in E2eDrive. */
 class CliCurateSpec extends SparkSpec {
   import spark.implicits._
 
@@ -61,24 +62,35 @@ class CliCurateSpec extends SparkSpec {
   }
 
   test("curate composition: clean -> dedup -> decontaminate funnel counts") {
-    val (kept, _) = graft.operators.CorpusClean.cleanCorpus(
-      docs, "source", "text", minWords = 5)
-    val n1 = kept.count()
-    assert(n1 == 4L, s"clean should drop only the symbol doc, kept $n1")
-    val deduped = Cli.textDedupSurvivors(kept, "doc_id", "text", "exact",
-      minJ = 0.8, maxDist = 3)
-    val n2 = deduped.count()
-    assert(n2 == 3L, s"exact dedup should drop s2, kept $n2")
-    val bench = Seq(("b1",
-      "yesterday they walked to the market and bought many things"))
-      .toDF("source", "text")
-    val hits = graft.operators.CorpusClean.decontaminate(
-        deduped, "doc_id", "text", bench, "source", "text", n = 5)
-      .filter(col("n_overlap_grams") > 0L).select("doc_id")
-    val survivors = deduped.join(hits, Seq("doc_id"), "left_anti")
-      .select("doc_id").as[String].collect().toSet
+    val benchDir = java.nio.file.Files.createTempDirectory("graft-curate-bench").toString
+    Seq(("b1", "yesterday they walked to the market and bought many things"))
+      .toDF("source", "text").write.mode("overwrite").parquet(s"$benchDir/bench")
+    val st = Cli.curateFunnel(docs, Map("min-words" -> "5", "dedup" -> "exact",
+      "decontaminate" -> s"$benchDir/bench"), "curate")
+    assert(st.n1 == 4L, s"clean should drop only the symbol doc, kept ${st.n1}")
+    assert(st.n2 == 3L, s"exact dedup should drop s2, kept ${st.n2}")
+    val survivors = st.survivors.select("doc_id").as[String].collect().toSet
+    st.cleaned.unpersist(); st.deduped.unpersist()
     assert(survivors == Set("s1", "s5"),
       s"decontamination should drop s4 only, got $survivors")
+  }
+
+  test("dedupSurvivors: a parquet corpus reads every row and keys by doc_id") {
+    // the sf documents table's shape: 500 rows, a unique doc_id, 20
+    // multi-doc sources, 5% exact copies (docs 475-499 repeat 0-24)
+    val path = java.nio.file.Files.createTempDirectory("graft-dedup-pq")
+      .toString + "/documents.parquet"
+    spark.range(500).select(col("id").as("doc_id"),
+        concat(lit("doc "), (col("id") % 475).cast("string"),
+          lit(" about rivers and gardens")).as("text"),
+        concat(lit("src"), (col("id") % 20).cast("string")).as("source"))
+      .write.parquet(path)
+    val docs = Cli.dedupInput(spark, path, "exact")
+    assert(docs.count() == 500L)
+    val kept = Cli.dedupSurvivors(docs, Map("method" -> "exact"))
+      .select("doc_id").as[Long].collect()
+    // one survivor, the smallest doc_id, per text
+    assert(kept.sorted.toSeq == (0L until 475L), s"kept ${kept.length}")
   }
 
   test("resolveUniqueDocId: prefers doc_id over the source fallback, --id-col wins") {

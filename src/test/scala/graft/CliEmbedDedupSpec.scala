@@ -2,15 +2,16 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Cluster, Dedup, Stop}
+import graft.operators.Dedup
 
 /** The embedding arms of `Cli dedup` (--method embed|semantic): this
-  * spec drives the exact composition the CLI builds — LSH-bucketed (or
-  * k-means-blocked) cosine pairs, connected components, and a
-  * QUALITY-KEYED survivor per near-dup cluster via resolveByQuality —
-  * against an in-memory embeddings fixture, so the CLI arm is covered
-  * without Cli.main's session lifecycle (it stops the shared session).
-  * A true end-to-end Cli.main run lives in E2eDrive. */
+  * spec calls Cli.dedupSurvivors, the function `Cli.main` runs —
+  * LSH-bucketed (or k-means-blocked) cosine pairs, connected
+  * components, and a QUALITY-KEYED survivor per near-dup cluster via
+  * resolveByQuality — against an in-memory embeddings fixture, without
+  * Cli.main's session lifecycle (it stops the shared session). The
+  * operator-level cases below pin the pair tiers themselves. A true
+  * end-to-end Cli.main run lives in E2eDrive. */
 class CliEmbedDedupSpec extends SparkSpec {
   import spark.implicits._
 
@@ -29,43 +30,26 @@ class CliEmbedDedupSpec extends SparkSpec {
     (8L, Seq(-1.0, 0.3, 0.0, 0.5), 0.6)
   ).toDF("vec_id", "embedding", "quality")
 
-  private def survivors(pairs: org.apache.spark.sql.DataFrame,
-                        qualityCol: Option[String]): Set[Long] = {
-    val comps = Dedup.connectedComponents(pairs.select("id_a", "id_b"))
-    val quality = qualityCol match {
-      case Some(qc) => emb.select(col("vec_id").cast("long").as("id"),
-        col(qc).as("q"))
-      case None => emb.select(col("vec_id").cast("long").as("id"),
-        lit(0.0).as("q"))
-    }
-    val losers = Dedup.resolveByQuality(comps, quality, "id", "q")
-      .filter(!col("keep")).select(col("id").as("vec_id"))
-    emb.join(losers, Seq("vec_id"), "left_anti")
+  /** The ids `Cli dedup --docs <emb> --method <method>` keeps. */
+  private def survivors(method: String, flags: (String, String)*): Set[Long] =
+    Cli.dedupSurvivors(emb, Map("method" -> method) ++ flags)
       .select("vec_id").as[Long].collect().toSet
-  }
 
   test("embed method: LSH pairs + CC + quality-keyed survivors") {
-    val pairs = Dedup.embeddingLshPairs(emb, "vec_id", "embedding",
-      dims = 4, bits = 8, minCosine = 0.99)
-    val kept = survivors(pairs, Some("quality"))
+    val kept = survivors("embed", "bits" -> "8", "min-cosine" -> "0.99",
+      "quality-col" -> "quality")
     // each family keeps its HIGHEST-QUALITY member, not its smallest id
     assert(kept == Set(2L, 4L, 5L, 7L, 8L), s"got $kept")
   }
 
   test("embed method without --quality-col falls back to smallest-id survivors") {
-    val pairs = Dedup.embeddingLshPairs(emb, "vec_id", "embedding",
-      dims = 4, bits = 8, minCosine = 0.99)
-    val kept = survivors(pairs, None)
+    val kept = survivors("embed", "bits" -> "8", "min-cosine" -> "0.99")
     assert(kept == Set(1L, 3L, 5L, 7L, 8L), s"got $kept")
   }
 
   test("semantic method: k-means blocking + within-cluster pairs + quality survivors") {
-    val asg = Cluster.kmeansAssign(emb, "vec_id", "embedding", k = 4, Stop.Rounds(5))._1
-    val withCl = emb.join(asg.select(col("id").as("vid_asg"), col("cluster")),
-      col("vec_id").cast("long") === col("vid_asg"))
-    val pairs = Dedup.semanticPairs(withCl, "vec_id", "embedding",
-      "cluster", tau = 0.99)
-    val kept = survivors(pairs, Some("quality"))
+    val kept = survivors("semantic", "clusters" -> "4", "iters" -> "5", "tau" -> "0.99",
+      "quality-col" -> "quality")
     // k-means blocking may split differently, but near-identical pairs
     // land in one cluster (cosine 0.9999 >> any centroid boundary):
     // every family must collapse to its highest-quality member

@@ -2,17 +2,15 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.functions._
-
 import graft.operators.Multimodal
 
 /** The media arms of `Cli dedup` (--method phash|audiofp): this spec
-  * drives the exact composition the CLI builds — a recursive binaryFile
-  * scan keyed by path, Hamming clustering over perceptual fingerprints,
-  * anti-join of the losers, parquet survivors — against generated
-  * on-disk media, so the CLI arm is covered without Cli.main's
-  * session lifecycle (it stops the shared session). A true end-to-end
-  * Cli.main run lives in E2eDrive. */
+  * calls the functions `Cli.main` runs — Cli.dedupInput (a recursive
+  * binaryFile scan keyed by path) and Cli.dedupSurvivors (Hamming
+  * clustering over perceptual fingerprints, anti-join of the losers) —
+  * against generated on-disk media, without Cli.main's session
+  * lifecycle (it stops the shared session). A true end-to-end Cli.main
+  * run lives in E2eDrive. */
 class CliMediaDedupSpec extends SparkSpec {
 
   private def px(seed: Int): Array[Int] =
@@ -36,14 +34,9 @@ class CliMediaDedupSpec extends SparkSpec {
   }
 
   test("phash media dedup collapses near-identical images, keeps distinct + undecodable") {
-    val media = spark.read.format("binaryFile")
-      .option("recursiveFileLookup", "true").load(mediaDir)
-      .select(col("path").as("source"), col("content"))
+    val media = Cli.dedupInput(spark, mediaDir, "phash")
     assert(media.count() == 9)
-    val clusters = Multimodal.phashClusters(media, "source", "content", maxDist = 3)
-    val survivors = media.join(
-      clusters.filter(!col("keep")).select(col("id").as("source")),
-      Seq("source"), "left_anti")
+    val survivors = Cli.dedupSurvivors(media, Map("method" -> "phash", "max-dist" -> "3"))
     val kept = survivors.select("source").collect().map(_.getString(0)).toSet
     // each family keeps exactly one member; singletons + corrupt survive
     assert(kept.size == 6, s"expected 6 survivors, got ${kept.size}: $kept")
@@ -67,12 +60,8 @@ class CliMediaDedupSpec extends SparkSpec {
       Files.write(Paths.get(s"$dir/au_${g}_b.wav"), Multimodal.pcmWav(variant))
     }
     Files.write(Paths.get(s"$dir/au_unique.wav"), Multimodal.pcmWav(samples(77)))
-    val media = spark.read.format("binaryFile").load(dir)
-      .select(col("path").as("source"), col("content"))
-    val clusters = Multimodal.audioFpClusters(media, "source", "content", maxDist = 3)
-    val survivors = media.join(
-      clusters.filter(!col("keep")).select(col("id").as("source")),
-      Seq("source"), "left_anti")
+    val media = Cli.dedupInput(spark, dir, "audiofp")
+    val survivors = Cli.dedupSurvivors(media, Map("method" -> "audiofp", "max-dist" -> "3"))
     val kept = survivors.select("source").collect().map(_.getString(0)).toSet
     assert(kept.size == 3, s"expected 3 survivors, got $kept")
     for (g <- 0 until 2)
