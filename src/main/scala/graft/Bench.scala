@@ -8,7 +8,7 @@ import org.apache.spark.sql.SparkSession
   *   "failed":[...],"sf":...}` (per-query MEDIANs; raw runs go to the
   * `bench_runs.json` sidecar + stderr). Because the harvester keeps
   * only the last ~2 KB of stdout and the full 100+-query line cannot
-  * fit that window, the same line is written whole to
+  * fit that window, a full-suite run writes the same line whole to
   * `bench_medians.json` (the authoritative record) and the very last
   * stdout bytes are a compact summary line — total/stat/failed plus a
   * `queries_file` pointer — sized to survive the tail capture and
@@ -95,22 +95,9 @@ object Bench {
     // Default suite = EVERY declared query: the per-round bench record
     // must keep all existing entries (the round contract forbids removing
     // or renaming rows, and cross-round totals are only comparable on the
-    // same set). The declared-quadratic oracle tiers below (BASELINE.md's
-    // canonical sweep-exclusion table) measure truth generators — exact
-    // n² kNN fixtures, all-pairs Jaccard truth, Q×n metrics harnesses —
-    // not production plans; SPARK_GRAFT_BENCH_PRODUCTION=1 opts in to a
-    // production-only subset for local iteration on production cost.
-    val oracleTiers = Set(
-      "graph_build", "knn_graph", "graph_pagerank", "graph_ppr",
-      "graph_triangles", "graph_triangles_capped", "graph_degree_profile",
-      "graph_label_spread", "eval_retrieval", "eval_retrieval_ivf",
-      "eval_retrieval_ivf_kmeans", "knn_hard_negatives",
-      "dedup_embed", "dedup_semantic", "dedup_eval")
-    val productionOnly =
-      sys.env.get("SPARK_GRAFT_BENCH_PRODUCTION").exists(_.nonEmpty) && only.isEmpty
+    // same set).
     val selected = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.contains(n)) }
-      .filter { case (n, _) => !productionOnly || !oracleTiers.contains(n) }
     // a typo'd/empty filter must not print total 0.0 — a gate comparing
     // totals would read that as a massive speedup
     require(selected.nonEmpty,
@@ -197,22 +184,21 @@ object Bench {
     // A SPARK_GRAFT_BENCH_ONLY subset must not be tagged "full": its
     // total is not comparable to genuine full-suite totals in the
     // harvested record (r17, the r16-advice fix).
-    val suiteTag =
-      if (only.isDefined) "subset"
-      else if (productionOnly) "production" else "full"
+    val suiteTag = if (only.isDefined) "subset" else "full"
     val resultLine =
       s"""{"metric":"total","value":${fmt(total)},"unit":"sec","stat":"median_quietest3","suite":"$suiteTag","queries":${qJson(medians)},"failed":$failed,"sf":"$sfDir"}"""
     // The stdout line travels through a tail-capture harvester that
     // keeps only the LAST ~2000 chars (observed in BENCH_r10's `tail`
-    // field): the full 101-query line is ~3.5 KB, so its head is cut
-    // and `parsed` lands null every round. The full line written whole
-    // to bench_medians.json is the durable machine-readable record;
+    // field): the full-suite line is several KB, so its head is cut
+    // and `parsed` lands null every round. A full-suite line written
+    // whole to bench_medians.json is the durable machine-readable record
+    // (a subset run leaves it alone, so it always holds a full map);
     // stdout gets the full line for humans/logs AND, as the absolute
     // final bytes (after spark.stop(), so no shutdown chatter can
     // follow), a compact self-contained summary line that FITS the
     // tail window whole and parses — total, stat, failures, and a
     // pointer to the per-query file.
-    writeFile("bench_medians.json", resultLine)
+    if (suiteTag == "full") writeFile("bench_medians.json", resultLine)
     // Per-configuration record (r17): every run ALSO writes a file
     // keyed by (cpus, sf, suite), so an ad-hoc or low-core run can
     // never clobber the 32-core full-suite record — the r16 judge

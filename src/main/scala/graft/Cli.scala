@@ -351,11 +351,13 @@ object Cli {
   }
 
   /** cleanCorpus's output carries only the id (as `doc_id`) and the
-    * scrubbed text: re-attach `docs`' `source` by one doc-keyed join
-    * when the id is not `source`, so the output stays consumable by the
-    * source-grained siblings (scorecard, plan, overlap). */
+    * scrubbed text: re-attach `docs`' `source` (a copy of `doc_id` when
+    * the id is `source`, else by one doc-keyed join), so the output
+    * stays consumable by the source-grained siblings (scorecard, plan,
+    * overlap). */
   private def withSource(kept: DataFrame, docs: DataFrame, idCol: String): DataFrame =
-    if (idCol == "source" || !docs.columns.contains("source")) kept
+    if (!docs.columns.contains("source")) kept
+    else if (idCol == "source") kept.withColumn("source", col("doc_id"))
     else kept.join(docs.select(col(idCol).as("doc_id"), col("source")),
       Seq("doc_id"), "left")
 
@@ -1004,8 +1006,8 @@ object Cli {
         import org.apache.spark.sql.functions.size
         // --survivors-of <parquet>: scope the analytics input to a
         // funnel's survivor table (a `curate`/`dedup` --out result) —
-        // the measured dedup-first ordering (BASELINE.md /
-        // DedupFirstDrive: the survivor graph cost 77 s where the
+        // the measured dedup-first ordering (BASELINE.md: the
+        // survivor graph cost 77 s where the
         // flooded graph cost 330 s at the 100x point; ONE quadratic
         // toll at the funnel's dedup stage instead of one per
         // analytic) as a one-command recipe instead of a hand-composed

@@ -341,7 +341,7 @@ private[graft] object EntryKnn {
     // blockCol, so the plan the 100 TB path actually runs — class
     // collapse keyed on (block, label, vector), candidates scoped to
     // the anchor's block — must be oracle-checked, not only
-    // drive-measured (HardNegDrive) and spec-pinned. The block is
+    // measured (BASELINE.md) and spec-pinned. The block is
     // vec_id modulo a CORPUS-SIZED block count (ceil(n/250) — the
     // auto-bits discipline: a FIXED count means block size grows with
     // the corpus and within-block pair mass grows n²; measured 186x at
@@ -389,13 +389,13 @@ private[graft] object EntryKnn {
 
     // The block-scoped LSH kNN graph as its own hash-gated row (r14):
     // blockCol is the documented past-16-bits scale path (bucket keys
-    // become (block, signature)), previously drive-measured
-    // (GraphBlockDrive) and spec-pinned but not oracle-gated. `label`
+    // become (block, signature)), previously measured (BASELINE.md)
+    // and spec-pinned but not oracle-gated. `label`
     // is a deterministic column of the table, so the oracle replays
     // the same block scoping by adding the label equality to the
     // bucket self-join. Since r15 auto bits size from the LARGEST
     // BLOCK's count (per-block occupancy <= 64 — recall 0.450 vs the
-    // global key's 0.312, GraphBlockDrive r14); the oracle's nb CTE
+    // global key's 0.312, BASELINE.md r14); the oracle's nb CTE
     // replays the same GROUP BY lbl + max scan.
     "knn_graph_lsh_blocked" -> ((s, dir) => {
       Graph.knnGraphLsh(Tables.embeddings(s, dir), "vec_id", "embedding",

@@ -314,7 +314,7 @@ private[graft] object BertMath {
     * rounding, so values can differ from the naive loop in the last
     * ULP — deterministic for a given shape, and exact on the kernel
     * spec's integer case. Measured ~3x end-to-end on the MiniLM-L6
-    * geometry (85 -> 250 tokens/s/thread; BertBenchDrive, BASELINE.md). */
+    * geometry (85 -> 250 tokens/s/thread; BASELINE.md). */
   def dense(x: Array[Float], rows: Int, in: Int,
             w: Array[Float], bias: Array[Float], out: Int): Array[Float] = {
     val y = new Array[Float](rows * out)

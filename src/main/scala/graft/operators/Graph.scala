@@ -141,8 +141,7 @@ object Graph {
     * auto key targets. Sizing from the GLOBAL count instead (the
     * pre-r15 default) runs occupancy at ~64/B for B same-sized blocks:
     * cheaper, but recall vs the exact graph measured 0.312 against the
-    * per-block recipe's 0.450 at +50% cost (GraphBlockDrive,
-    * BASELINE.md r14) — and the blocked tier is the recommended
+    * per-block recipe's 0.450 at +50% cost (BASELINE.md r14) — and the blocked tier is the recommended
     * 100 TB path, so its default buys recall, not the discount.
     * Callers who want the finer key back pass
     * `bits = autoLshBits(globalCount)` explicitly; pinned bits > 0

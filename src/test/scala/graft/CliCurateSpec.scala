@@ -75,6 +75,24 @@ class CliCurateSpec extends SparkSpec {
       s"decontamination should drop s4 only, got $survivors")
   }
 
+  test("curate funnel over a source-keyed jsonl corpus keeps source for the pretrain plan") {
+    // a jsonl corpus without doc_id keys by source; its survivors still
+    // carry `source`, which pretrain's --budget plan and draw group by
+    val path = java.nio.file.Files.createTempDirectory("graft-curate-jsonl")
+      .toString + "/corpus.jsonl"
+    docs.write.json(path)
+    val st = Cli.curateFunnel(Cli.ingestText(spark, path),
+      Map("min-words" -> "5", "dedup" -> "exact"), "pretrain")
+    val withChars = st.survivors.withColumn("n_chars", length(col("text")).cast("long"))
+    val plan = operators.TrainExport.mixturePlan(withChars, "source", "n_chars",
+      Map("s1" -> 1.0, "s4" -> 1.0, "s5" -> 1.0), budget = 1000L)
+    val drawn = operators.TrainExport.rateSample(withChars, "doc_id", "source", plan, "t")
+      .select("doc_id", "source").as[(String, String)].collect().toSet
+    st.cleaned.unpersist(); st.deduped.unpersist()
+    // the budget covers the whole corpus: every survivor is drawn
+    assert(drawn == Set(("s1", "s1"), ("s4", "s4"), ("s5", "s5")), s"got $drawn")
+  }
+
   test("dedupSurvivors: a parquet corpus reads every row and keys by doc_id") {
     // the sf documents table's shape: 500 rows, a unique doc_id, 20
     // multi-doc sources, 5% exact copies (docs 475-499 repeat 0-24)

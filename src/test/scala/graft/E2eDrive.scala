@@ -100,7 +100,7 @@ object E2eDrive {
     spark4.stop()
 
     // analyze --survivors-of: the measured dedup-first ordering
-    // (BASELINE.md / DedupFirstDrive: survivor graph 77 s vs flooded
+    // (BASELINE.md: survivor graph 77 s vs flooded
     // 330 s at the 100x point) as ONE command. Results must be
     // IDENTICAL to hand-composing the survivor join, and the output
     // manifest must record both corpus sizes.
@@ -108,7 +108,7 @@ object E2eDrive {
       .config("spark.ui.enabled", "false").getOrCreate()
     val embDf = sparkSv.read.parquet(emb)
     val survDir = s"$prOut/survivors"
-    // stage 1 of the funnel (DedupFirstDrive's): SemDeDup survivors
+    // stage 1 of the funnel: SemDeDup survivors
     val assigned = graft.operators.Knn.ivfAssign(embDf, "embedding",
       numClusters = 8, seed = 42L)
     graft.operators.Dedup.semanticDedup(assigned, "vec_id", "embedding",

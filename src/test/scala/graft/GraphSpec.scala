@@ -68,7 +68,7 @@ class GraphSpec extends SparkSpec {
     // r15 default: with blockCol set, bits <= 0 sizes the key from the
     // LARGEST block's count (per-block occupancy <= 64 — the measured
     // recall-over-cost point: 0.450 vs the global key's 0.312,
-    // GraphBlockDrive r14), not the global corpus count.
+    // BASELINE.md r14), not the global corpus count.
     val maxBlock = emb.groupBy("label").count()
       .agg(max("count")).head().getLong(0)
     val auto = Graph.knnGraphLsh(emb, "vec_id", "embedding", k = 3,
@@ -96,7 +96,7 @@ class GraphSpec extends SparkSpec {
   test("occupancy escape valve: a hot block escalates to exactly the replayed width, cold blocks keep the base key") {
     // One "hot" block of random vectors plus a small "cold" block; a
     // LOWERED cap forces the valve at spec scale (the default 256 needs
-    // a 100x pair-output corpus — GraphBlockDrive's job). The spec
+    // a 100x pair-output corpus). The spec
     // replays the selection rule driver-side (base width from the max
     // block count, occupancy = largest table-0 cell, smallest
     // base+e <= 16 with occ <= cap·2^e) and pins the valve run against

@@ -72,6 +72,7 @@ class ServerSpec extends SparkSpec {
       // error paths
       assert(http("GET", s"$base/search")._1 == 405)
       assert(http("POST", s"$base/search", Some("{}"))._1 == 400)
+      assert(http("POST", s"$base/search", Some("not json at all"))._1 == 400)
     } finally srv.stop()
   }
 

@@ -92,13 +92,21 @@ class StreamingSpec extends SparkSpec {
       .toDF("text", "source").write.parquet(s"$src/f1")
 
     val schema = spark.read.parquet(s"$src/f1").schema
-    Streaming.runAvailableNow(Streaming.dedupIngest(
-      spark, s"$src/*", idx, schema, provider, s"$root/ckpt"))
-
-    val sources = spark.read.parquet(s"$idx/passages")
-      .select("metadata.source").as[String].collect().toSet
-    assert(sources == Set("orig.md", "new1.md", "new2.md"))
+    def ingest(): Set[String] = {
+      Streaming.runAvailableNow(Streaming.dedupIngest(
+        spark, s"$src/*", idx, schema, provider, s"$root/ckpt"))
+      spark.read.parquet(s"$idx/passages")
+        .select("metadata.source").as[String].collect().toSet
+    }
+    assert(ingest() == Set("orig.md", "new1.md", "new2.md"))
     assert(Index.readMeta(idx).passageCount == 3)
+
+    // a later run of the same query: a doc the first run ingested is
+    // dropped, a new one lands
+    Seq(("A genuinely new   document", "new1again.md"), ("brand new beta", "new3.md"))
+      .toDF("text", "source").write.parquet(s"$src/f2")
+    assert(ingest() == Set("orig.md", "new1.md", "new2.md", "new3.md"))
+    assert(Index.readMeta(idx).passageCount == 4)
   }
 
   test("dedup ingest drops a re-sent multi-chunk document (doc-level fp)") {
