@@ -45,7 +45,13 @@ object Stop {
   * round counter and `maxIters` cap, the eager serialized checkpoint
   * ([[Ckpt]]) of every DataFrame round, the convergence probe, the stop
   * rule and the returned (state, roundsRun). Fixed-round tiers run the
-  * same loop with no watch.
+  * same loop with no watch. Three arms, one per kind of state:
+  *   - [[run]], a DataFrame state: PPR, LPA and label spreading;
+  *   - [[runJobs]], a state each round materializes in one Spark job
+  *     that also returns the round's movement: PageRank ([[RankKernel]]);
+  *   - [[runLocal]], a driver-resident state: Lloyd k-means.
+  * [[Graph.kCore]] and [[Dedup.connectedComponents]] run their own
+  * loops: they throw at the cap instead of returning a partial state.
   *
   * ==Stop rule==
   * After round `r` (0-based) a watch reads two distances: `d1` between
@@ -83,8 +89,13 @@ object Stop {
   *   - `tol > 0`: an inflated sum could miss `d1 <= tol` and change the
   *     stop round, so the sums come from one aggregate scan of the
   *     checkpointed frame instead.
-  * A driver-resident state ([[runLocal]]) is compared on the driver,
-  * with no job at all. */
+  * A state materialized by one job per round ([[runJobs]]) has its
+  * `d1`/`d2` summed inside that job, one partial per partition, and the
+  * job's result is the probe: no accumulator and no aggregate scan. A
+  * job's result comes from the one successful attempt of each task, so
+  * this arm needs no re-execution argument, at any `tol`. A
+  * driver-resident state ([[runLocal]]) is compared on the driver, with
+  * no job at all. */
 private[operators] object FixedPoint {
 
   /** Watch of a DataFrame loop: stop tolerance plus the per-row
@@ -126,6 +137,18 @@ private[operators] object FixedPoint {
             (r.getDouble(0), r.getDouble(1))
           })
         }
+    }
+
+  /** Runs a loop whose every round is one Spark job: `round` materializes
+    * the next state and returns it with the (d1, d2) that same job
+    * returned, which is the probe. `release` frees each superseded state,
+    * and the current one when a round throws. */
+  def runJobs[S](init: S, maxIters: Int, tol: Option[Double], release: S => Unit)
+                (round: S => (S, (Double, Double))): (S, Int) =
+    loop(init, maxIters, tol) { s =>
+      val (next, d) = try round(s) catch { case e: Throwable => release(s); throw e }
+      release(s)
+      (next, () => d)
     }
 
   /** Runs `step` over a driver-resident state (no checkpoint, no job). */

@@ -376,16 +376,22 @@ object Graph {
     *
     * Dangling nodes (in-edges only) leak rank mass under the naive
     * update; the standard fix redistributes their mass uniformly. That
-    * mass is a per-round GLOBAL scalar, but it never touches the
-    * driver: a 1-row aggregate cross-joined back in broadcast, so the
-    * loop stays fully declarative. Each round is one shuffle on dst
-    * plus the node-table join; `localCheckpoint` truncates the
-    * per-round lineage exactly as in [[Dedup.connectedComponents]] —
-    * at SERIALIZED storage (r15, the [[kCore]] heap-cliff lesson:
-    * the default deserialized checkpoint holds each partition as an
-    * in-heap object array, ~3.5x the serialized bytes; node-scale
-    * state on a billion-node graph hits the same cliff kCore's
-    * edge-scale state hit at the 100x sweep).
+    * mass is a per-round GLOBAL scalar: each round's job returns it
+    * with the round's movement, and the next round receives it as a
+    * driver scalar (one double, the nprobe stance).
+    *
+    * Execution ([[RankKernel]]): one setup job hash-partitions the
+    * edges by `src` into cached per-partition primitive arrays and
+    * counts the nodes and the dangling ones; each round is then ONE
+    * Spark job, one shuffle of at most P² per-partition term arrays
+    * (P = `spark.sql.shuffle.partitions`), whose output state is
+    * persisted and locally checkpointed so the lineage stays one round
+    * deep. The state is one record of primitive arrays per partition,
+    * so deserialized storage costs no per-row objects (the r15 heap
+    * cliff of a deserialized ROW checkpoint does not arise). The
+    * kernel's arithmetic is the DataFrame update's, bit for bit; the
+    * specs keep that DataFrame round as its reference. An edge with a
+    * null end names no node and is dropped.
     *
     * `weighted` = similarity-WEIGHTED PageRank over a (src, dst, w)
     * edge list: the random surfer follows edges in proportion to their
@@ -411,9 +417,8 @@ object Graph {
     *   - `Stop.Converge(maxIters, tol)`: the 100 TB production mode —
     *     iterate until the L1 delta `sum(|rank' - rank|)` falls to
     *     `tol` or `maxIters` rounds, whichever first, on the shared
-    *     [[FixedPoint]] driver, with the same plan per round. At
-    *     `tol = 0.0` the delta rides each round's checkpoint job (no
-    *     probe job), otherwise one aggregate scan per round, never a
+    *     [[FixedPoint]] driver. The delta is part of each round's job
+    *     result, at any tol: no probe job, no accumulator, never a
     *     per-node driver loop. `tol = 0.0` runs to the EXACT fixed
     *     point of the quantized update, with the driver's period-2
     *     cycle stop on an even remaining budget (measured on the
@@ -447,103 +452,8 @@ object Graph {
                damping: Double = 0.85, quantBits: Int = 30,
                init: Option[DataFrame] = None): (DataFrame, Int) = {
     requireCold(stop, init)
-    // Persist the raw edge list FIRST: deg, nodes, eout and the
-    // dangling probe all derive from it, and an upstream edge source
-    // can itself be expensive (the kNN graph) — without this cache
-    // each derivation would re-run that upstream plan.
-    val e = (if (weighted) weightedEdges(edges) else srcDst(edges))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val (deg, term) =
-      if (weighted) (e.groupBy("src").agg(sum("w").as("outw")),
-        col("rank") * col("w") / col("outw"))
-      else (e.groupBy("src").agg(count(lit(1)).cast("double").as("outdeg")),
-        col("rank") / col("outdeg"))
-    val eout = outEdges(e, deg)
-    val nodes = e.select(col("src").as("id"))
-      .union(e.select(col("dst").as("id"))).distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      // Two one-time driver scalars (the nprobe stance): n sizes the
-      // teleport term; hasDangling decides ONCE whether the per-round
-      // dangling-mass subplan exists at all — a symmetrized similarity
-      // graph never has dangling nodes, and dropping the subplan saves
-      // two stages per round.
-      val n = nodes.count().toDouble
-      val hasDangling = nodes
-        .join(deg.withColumnRenamed("src", "id"), Seq("id"), "left_anti")
-        .limit(1).count() > 0
-      require(!(weighted && hasDangling),
-        "weighted pageRank expects every node to carry outgoing weight " +
-          "(a symmetrizeWeighted graph); dangling nodes would leak walk " +
-          "mass — use the unweighted dangling redistribution instead")
-      val teleport = (1.0 - damping) / n
-      // State schema (r16): (id, rank, p1, p2) — the previous and
-      // two-rounds-back ranks ride INSIDE the checkpointed state, so
-      // the watch terms are per-row columns of the frame each round
-      // materializes (see FixedPoint), and the final select drops them.
-      val noPrev = lit(null).cast("double")
-      val rank0 = init match {
-        case Some(r0) =>
-          // Warm start (scaladoc): LEFT-joined onto the CURRENT node set
-          // so rank stays a distribution whatever the caller hands in.
-          val seeded = nodes.join(
-            r0.select(col("id").cast("long").as("id"),
-              col("rank").cast("double").as("r0"))
-              .where(col("id").isNotNull && col("r0").isNotNull &&
-                col("r0") >= 0),
-            Seq("id"), "left")
-            .select(col("id"), coalesce(col("r0"), lit(1.0 / n)).as("r0"))
-          // RENORMALIZE to total mass 1 (one O(1) driver scalar, the
-          // n/hasDangling stance; refuses an all-zero seed loudly) — the
-          // division's cell-shift cost is one extra confirming round
-          // when the seed was already the fixed point.
-          val t = seeded.agg(sum(col("r0"))).head().getDouble(0)
-          require(t > 0, "pageRank warm start needs positive total mass")
-          seeded.select(col("id"),
-              quant(col("r0") / lit(t), quantBits).as("rank"),
-              noPrev.as("p1"), noPrev.as("p2"))
-            .ckptSer()
-        case None => nodes.select(col("id"),
-          quant(lit(1.0 / n), quantBits).as("rank"),
-          noPrev.as("p1"), noPrev.as("p2"))
-      }
-      val watch = stop.watchTol.map(FixedPoint.Watch(_,
-        abs(col("rank") - col("p1")), abs(col("rank") - col("p2"))))
-      val (rank, rounds) = FixedPoint.run(rank0, stop.maxIters, watch) { rank =>
-        // Union-fused update (r17, guide §2.4 "two operations keyed the
-        // same way can share one exchange"): the contribution aggregate
-        // and the state join are BOTH id-keyed, so the state rows ride
-        // the same groupBy exchange as the per-edge terms instead of
-        // paying a second id-keyed join (broadcast build or shuffle)
-        // per round. Terms keep the 2^-48 grid, so the per-id sum is
-        // EXACT and order-independent — rows moving between partial
-        // aggregates cannot change it; the state columns pass through
-        // as max() over exactly one non-null value per id (the state
-        // has one row per node). Row set: contrib ids ⊆ nodes = state
-        // ids, so the grouped set is exactly the node set.
-        val terms = eout
-          .join(rank.select(col("id").as("src"), col("rank")), "src")
-          .select(col("dst").as("id"), termQuant(term).as("c"),
-            noPrev.as("r0"), noPrev.as("q1"))
-        val stateRows = rank.select(col("id"), noPrev.as("c"),
-          col("rank").as("r0"), col("p1").as("q1"))
-        val agg = terms.union(stateRows).groupBy("id")
-          .agg(sum(col("c")).as("contrib"), max(col("r0")).as("pr1"),
-            max(col("q1")).as("pr2"))
-        val contrib = coalesce(col("contrib"), lit(0.0))
-        val (withDm, mass) =
-          if (hasDangling) {
-            val dangling = rank.select(col("id"), col("rank"))
-              .join(deg.withColumnRenamed("src", "id"), Seq("id"), "left_anti")
-              .agg(coalesce(sum("rank"), lit(0.0)).as("dm"))
-            (agg.crossJoin(broadcast(dangling)), contrib + col("dm") / lit(n))
-          } else (agg, contrib)
-        withDm.select(col("id"),
-          quant(lit(teleport) + lit(damping) * mass, quantBits).as("rank"),
-          col("pr1").as("p1"), col("pr2").as("p2"))
-      }
-      (rank.select(col("id"), col("rank")), rounds)
-    } finally { nodes.unpersist(); eout.unpersist(); e.unpersist(); () }
+    RankKernel.pageRank(if (weighted) weightedEdges(edges) else srcDst(edges),
+      weighted, stop, damping, quantBits, init)
   }
 
   /** [[pageRank]] on the watched tier, unweighted. */
@@ -572,9 +482,9 @@ object Graph {
         col("dst").cast("long").as("dst"), col("w").cast("double").as("w"))
       .filter(col("src") =!= col("dst") && col("w").isNotNull && col("w") > 0)
 
-  /** The loop-invariant edge table of the rank loops: each edge joined
-    * to its source's out-degree (or out-weight) row, materialized once
-    * instead of re-joined every round.
+  /** The loop-invariant edge table of the DataFrame rank loops (PPR and
+    * label spreading): each edge joined to its source's out-degree row,
+    * materialized once instead of re-joined every round.
     *
     * NOT pre-partitioned by src (r16 tested-and-reverted): hash-
     * clustering the cache by the per-round join key removes the
@@ -586,7 +496,10 @@ object Graph {
     * the plain cache AQE picks per round from runtime sizes: broadcast
     * while ranks fit, sort-merge with the edge exchange when they
     * don't — the right call at every scale without a hand-rolled
-    * threshold. */
+    * threshold. That result is about AQE's join selection, so it does
+    * not carry over to [[pageRank]]'s kernel ([[RankKernel]]), which
+    * partitions its edges by src and plans no join at all: a round
+    * zips each edge partition with the rank partition it needs. */
   private def outEdges(e: DataFrame, deg: DataFrame): DataFrame =
     e.join(deg, "src").persist(StorageLevel.MEMORY_AND_DISK)
 
@@ -846,7 +759,7 @@ object Graph {
     * e.g. balancing a training mixture by similarity community rather
     * than by source metadata).
     *
-    * Scale shape = the [[pageRank]] scaffold: per round, ONE
+    * Scale shape = the DataFrame loop of [[personalizedPageRank]]: per round, ONE
     * (node, label)-keyed count aggregation (map-side combinable — hub
     * fan-in is exactly what partial aggregation absorbs) plus a
     * per-node struct-min; label state is one row per node, never
@@ -1154,7 +1067,8 @@ object Graph {
         abs(col("rank") - coalesce(col(prev), lit(0.0)))
       val watch = stop.watchTol.map(FixedPoint.Watch(_, moved("p1"), moved("p2")))
       val (rank, rounds) = FixedPoint.run(rank0, stop.maxIters, watch) { rank =>
-        // Union-fused update (r17, see pageRank): the contribution
+        // Union-fused update (r17, guide §2.4 "two operations keyed the
+        // same way can share one exchange"): the contribution
         // aggregate, the seed-term re-injection and — on the watched
         // tier — the watch-column carry are ALL id-keyed, so seed and
         // state rows ride the contribution groupBy's exchange. Grouped
@@ -1206,7 +1120,7 @@ object Graph {
     *
     * with seed(v, l) = 1 for v's seed label — seeds keep injecting
     * their identity (the clamping that distinguishes spreading from
-    * plain diffusion). Same execution scaffold as [[pageRank]]: the
+    * plain diffusion). Same execution scaffold as [[personalizedPageRank]]: the
     * edge+degree join hoisted and cached, one dst-keyed shuffle per
     * round, per-round binary-grid requantization ([[quant]]) for
     * engine portability,
@@ -1273,7 +1187,7 @@ object Graph {
         coalesce(col(prev), lit(0.0)))
       val watch = stop.watchTol.map(FixedPoint.Watch(_, moved("p1"), moved("p2")))
       val (state, rounds) = FixedPoint.run(state0, stop.maxIters, watch) { state =>
-        // Union-fused update (r17, see pageRank): the contribution
+        // Union-fused update (r17, see personalizedPageRank): the contribution
         // aggregate and the clamped seed re-injection both key on
         // (id, label), so seed rows — and on the watched tier the state
         // rows carrying p1/p2 — ride the contribution groupBy's

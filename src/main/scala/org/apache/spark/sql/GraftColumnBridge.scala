@@ -17,6 +17,21 @@ object GraftColumnBridge {
              plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
+  /** A DataFrame over an RDD of catalyst rows that match `schema`
+    * (`SparkSession.internalCreateDataFrame` is `private[sql]`). */
+  def internalCreateDataFrame(spark: SparkSession,
+                              rows: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow],
+                              schema: org.apache.spark.sql.types.StructType): DataFrame =
+    spark.asInstanceOf[classic.SparkSession].internalCreateDataFrame(rows, schema)
+
+  /** Drop a persisted RDD's blocks, as the context cleaner drops an
+    * unreachable one (`SparkContext.unpersistRDD` is `private[spark]`).
+    * `RDD.unpersist` does the same but warns on every locally
+    * checkpointed RDD, which a loop that drops its superseded round
+    * states would log once per round. */
+  def dropRdd(rdd: org.apache.spark.rdd.RDD[_]): Unit =
+    rdd.sparkContext.unpersistRDD(rdd.id, blocking = false)
+
   /** Re-anchor an eagerly-checkpointed Dataset's statistics.
     *
     * `Dataset.localCheckpoint` rewrites the new `LogicalRDD`'s stats

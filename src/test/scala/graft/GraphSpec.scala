@@ -1,8 +1,14 @@
 package graft
 
-import org.apache.spark.sql.functions._
+import scala.util.{Failure, Success, Try}
 
-import graft.operators.{Graph, Stop}
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
+import org.scalacheck.{Gen, Prop, Test => PropTest}
+import org.scalacheck.Prop.propBoolean
+
+import graft.operators.{Graph, PageRankReference, Stop}
 
 class GraphSpec extends SparkSpec {
   import spark.implicits._
@@ -802,7 +808,7 @@ class GraphSpec extends SparkSpec {
       s"weighted vote must beat the min-label tie-break: $two")
   }
 
-  test("pageRankWeighted: uniform weights == pageRank; heavy edges attract mass") {
+  test("pageRank weighted, Stop.Rounds: uniform weights == unweighted; heavy edges attract mass") {
     // parity arm: w = 1 everywhere makes rank*w/outw == rank/outdeg,
     // so the weighted operator must reproduce plain pageRank exactly
     // (symmetric graph => no dangling subplan on either side)
@@ -884,7 +890,7 @@ class GraphSpec extends SparkSpec {
     }
   }
 
-  test("pageRankWeightedWatched: early-stop == fixed-round; warm confirms fast") {
+  test("pageRank weighted, Stop.Converge: early-stop == Stop.Rounds; warm confirms fast") {
     // dyadic-weight triangle+extra so vote terms are grid-exact; the
     // tol=0 watch must reach the quantized fixed point before a
     // 40-round cap and equal the fixed-round run at that cap
@@ -920,7 +926,7 @@ class GraphSpec extends SparkSpec {
     }
   }
 
-  test("pageRankWeightedWatched warm start ignores negative prior ranks") {
+  test("pageRank weighted, Stop.Converge: warm start ignores negative prior ranks") {
     // the plain tier's input checks: a negative prior row is dropped
     // and its node seeded like a node missing from the prior
     val sym = Graph.symmetrizeWeighted(Seq((1L, 2L, 0.5), (2L, 3L, 1.0),
@@ -956,5 +962,149 @@ class GraphSpec extends SparkSpec {
     val pr = Graph.pageRank(edges, Stop.Rounds(10))._1.as[(Long, Double)].collect().toMap
     assert(pr(0L) > 3 * pr(1L))
     assert((1L to 9L).map(pr).distinct.size == 1) // symmetric leaves tie
+  }
+
+  private val edgeSchema = StructType(Seq(StructField("src", LongType),
+    StructField("dst", LongType), StructField("w", DoubleType)))
+
+  // a (src, dst, w) edge table in exactly `parts` input partitions
+  private def edgesOf(es: Seq[(Long, Long)], parts: Int): DataFrame =
+    spark.createDataFrame(spark.sparkContext.parallelize(es.map { case (a, b) =>
+      Row(a, b, (1 + Math.floorMod(a + b, 3L)) * 0.25) }, parts), edgeSchema)
+
+  private def ranksOf(df: DataFrame): Seq[(Long, Long)] =
+    df.as[(Long, Double)].collect().toSeq.sorted
+      .map { case (id, r) => (id, java.lang.Double.doubleToRawLongBits(r)) }
+
+  test("PageRank kernel == the DataFrame round on generated graphs") {
+    // ids spread over the long range so the hash partitioning mixes
+    // them; duplicate edges and self-loops ride along; half the graphs
+    // are symmetrized (no dangling node). Weights are the oracle
+    // fixture's dyadic (1 + (a+b) mod 3)/4, so every summation order gives
+    // the same out-weight. Warm priors cover every node with dyadic
+    // ranks (a node the prior lacks is seeded 1/n, whose sum may round
+    // differently in another order), plus rows the seed must ignore.
+    val sample = for {
+      m <- Gen.choose(1, 10)
+      ids <- Gen.listOfN(m, Gen.choose(-1000000L, 1000000L)).map(_.distinct)
+      k <- Gen.choose(1, 24)
+      raw <- Gen.listOfN(k, Gen.zip(Gen.oneOf(ids), Gen.oneOf(ids)))
+      sym <- Gen.oneOf(true, false)
+      weighted <- Gen.oneOf(true, false)
+      stop <- Gen.oneOf(Gen.choose(0, 6).map(Stop.Rounds(_)),
+        Gen.choose(1, 12).map(Stop.Converge(_)),
+        Gen.zip(Gen.choose(1, 12), Gen.oneOf(1e-3, 1e-5)).map { case (c, t) => Stop.Converge(c, t) })
+      warm <- Gen.oneOf(true, false).map(_ && stop.isInstanceOf[Stop.Converge])
+      prior <- Gen.listOfN(ids.size, Gen.choose(0, 8).map(_ / 64.0))
+      damping <- Gen.oneOf(0.5, 0.85)
+      bits <- Gen.oneOf(14, 20, 30)
+      parts <- Gen.choose(1, 4)
+    } yield {
+      val es = if (sym) (raw ++ raw.map(_.swap)).distinct else raw
+      // a departed node, a negative and a null rank: rows the seed ignores
+      val init = Option.when(warm)(ids.zip(prior.map(Option(_))) ++
+        Seq((7777777L, Some(0.5)), (ids.head, Some(-0.25)), (ids.head, None)))
+      (es, weighted, stop, init, damping, bits, parts)
+    }
+
+    var seen = Map.empty[String, Int].withDefaultValue(0)
+    def saw(c: String, cond: Boolean): Unit = if (cond) seen += c -> (seen(c) + 1)
+    val prop = Prop.forAllNoShrink(sample) { case (es, weighted, stop, init, damping, bits, parts) =>
+      val prior = init.map(_.toDF("id", "rank"))
+      def run(f: (DataFrame, Stop, Boolean, Double, Int, Option[DataFrame]) => (DataFrame, Int)) =
+        Try { val (df, r) = f(edgesOf(es, parts), stop, weighted, damping, bits, prior); (ranksOf(df), r) }
+      val want = run(PageRankReference.pageRank(_, _, _, _, _, _))
+      val got = run(Graph.pageRank(_, _, _, _, _, _))
+      val dangling = es.map(_._2).toSet.exists(d => !es.exists(_._1 == d))
+      saw("dangling", dangling && !weighted)
+      saw("selfLoop", es.exists(e => e._1 == e._2))
+      saw("weighted", weighted && want.isSuccess)
+      saw("refused", want.isFailure)
+      saw("warm", init.isDefined && want.isSuccess)
+      saw("multiPartition", parts > 1 && es.size > 1)
+      stop match {
+        case Stop.Rounds(_) => saw("rounds", true)
+        case Stop.Converge(c, t) =>
+          saw(if (t == 0.0) "tol0" else "tolPositive", true)
+          saw("stoppedEarly", want.toOption.exists(_._2 < c))
+      }
+      // weighted, every edge a self-loop: no node is left, and a warm
+      // start has no mass; the reference then fails reading a null sum
+      val noNodes = weighted && es.forall(e => e._1 == e._2)
+      (want, got) match {
+        case (Success(w), Success(g)) => (w == g) :| s"reference $w kernel $g"
+        case (Failure(w), Failure(g)) =>
+          (noNodes || w.getClass == g.getClass && g.getMessage.startsWith(w.getMessage)) :|
+            s"reference $w kernel $g"
+        case (w, g) => false :| s"reference $w kernel $g"
+      }
+    }
+    val r = PropTest.check(PropTest.Parameters.default.withMinSuccessfulTests(80), prop)
+    assert(r.passed, r.status.toString)
+    val cases = Seq("dangling", "selfLoop", "weighted", "refused", "warm", "multiPartition",
+      "rounds", "tol0", "tolPositive", "stoppedEarly")
+    assert(cases.forall(seen(_) > 0), s"generator missed a case: $seen")
+    info(s"cases seen: ${cases.map(c => s"$c=${seen(c)}").mkString(", ")}")
+  }
+
+  test("PageRank costs one Spark job per round plus one setup job") {
+    // a 40-node path with both directions: the rank field is still
+    // moving at round 3, so neither cap stops early
+    val line = (0L until 40L).flatMap(i => Seq((i, i + 1), (i + 1, i))).toDF("src", "dst")
+    def run(stop: Stop, init: Option[DataFrame] = None) =
+      jobsOf(Graph.pageRank(line, stop, init = init)._2)
+    val (r2, j2) = run(Stop.Converge(2))
+    val (r3, j3) = run(Stop.Converge(3))
+    assert(r2 == 2 && r3 == 3, s"the input must not converge by the cap: $r2, $r3 rounds")
+    assert(j2 == r2 + 1 && j3 == r3 + 1, s"$j2 jobs at 2 rounds, $j3 at 3")
+    assert(run(Stop.Rounds(3)) == ((3, 4)))
+    // a warm start sums its seed in one job and materializes it in another
+    val prior = (0L to 40L).map(i => (i, 1.0 / 64)).toDF("id", "rank")
+    assert(run(Stop.Converge(3), Some(prior)) == ((3, 6)))
+  }
+
+  test("PageRank releases its edge table and superseded ranks on return and on failure") {
+    val sc = spark.sparkContext
+    spark.catalog.clearCache()
+    // on return the one RDD left is the final rank state that backs the
+    // returned frame; dropping it restores the prior set
+    def released(body: => DataFrame): Unit = {
+      val before = sc.getPersistentRDDs.keySet
+      val out = Try(body)
+      val left = sc.getPersistentRDDs.filter { case (id, _) => !before(id) }.values.toSeq
+      out match {
+        case Success(df) =>
+          assert(left.size <= 1 && left.forall(_.name == "pageRank.rank"),
+            s"persisted RDDs outlived the call: ${left.map(_.name)}")
+          assert(df.count() > 0)
+          left.foreach(_.unpersist())
+        case Failure(_) => assert(left.isEmpty, s"a persisted RDD outlived the failure: ${left.map(_.name)}")
+      }
+      assert(sc.getPersistentRDDs.keySet == before)
+      assert(spark.sharedState.cacheManager.isEmpty, "a cached plan outlived the call")
+    }
+    // a symmetric triangle, plus 4 -> 1 and 3 -> 5: node 5 is dangling
+    val tri = Seq((1L, 2L), (2L, 1L), (2L, 3L), (3L, 2L), (3L, 1L), (1L, 3L))
+      .toDF("src", "dst")
+    val leaky = tri.union(Seq((4L, 1L), (3L, 5L)).toDF("src", "dst"))
+    val prior = (1L to 5L).map(i => (i, 0.25)).toDF("id", "rank")
+    released(Graph.pageRank(leaky, Stop.Converge(5))._1)
+    released(Graph.pageRank(leaky, Stop.Rounds(3))._1)
+    released(Graph.pageRank(leaky, Stop.Rounds(0))._1)
+    released(Graph.pageRank(leaky, Stop.Converge(5), init = Some(prior))._1)
+    released(Graph.pageRank(tri.withColumn("w", lit(0.5)), Stop.Converge(5), weighted = true)._1)
+    // refused after the setup job: node 5 has no outgoing weight
+    val e = intercept[IllegalArgumentException](Graph.pageRank(
+      leaky.withColumn("w", lit(0.5)), Stop.Rounds(2), weighted = true))
+    assert(e.getMessage.contains("outgoing weight"))
+    released(Graph.pageRank(leaky.withColumn("w", lit(0.5)), Stop.Rounds(2), weighted = true)._1)
+    // refused after the seed-sum job, and inside a seed task
+    released(Graph.pageRank(leaky, Stop.Converge(5),
+      init = Some(prior.withColumn("rank", lit(0.0))))._1)
+    val dup = intercept[Exception](Graph.pageRank(leaky, Stop.Converge(5),
+      init = Some(prior.union(prior))))
+    assert(Iterator.iterate[Throwable](dup)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains("more than once")))
+    released(Graph.pageRank(leaky, Stop.Converge(5), init = Some(prior.union(prior)))._1)
   }
 }

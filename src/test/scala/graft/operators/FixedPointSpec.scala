@@ -89,6 +89,30 @@ class FixedPointSpec extends SparkSpec {
     assert(jobs == rounds, s"$jobs jobs for $rounds rounds")
   }
 
+  test("runJobs: the round's own (d1, d2) is the probe; superseded states are released") {
+    // a state is (round, value); each round halves the distance to 4
+    // and reports |new - old| as d1 and |new - two back| as d2
+    var released = Vector.empty[Int]
+    def jobs(maxIters: Int, tol: Option[Double])(f: Double => Double) = {
+      released = Vector.empty
+      FixedPoint.runJobs[(Int, Double, Double)]((0, 0.0, Double.NaN), maxIters, tol,
+        s => released :+= s._1) { case (r, v, p) =>
+        val next = f(v)
+        ((r + 1, next, v), (math.abs(next - v), if (p.isNaN) 0.0 else math.abs(next - p)))
+      }
+    }
+    val ((r, v, _), rounds) = jobs(10, Some(0.0))(x => math.min(x + 1, 3.0))
+    assert((v, rounds, r) == ((3.0, 4, 4)) && released == Vector(0, 1, 2, 3))
+    // period-2 cycle: the same even-remainder rule as the other arms
+    for ((cap, stop) <- Seq(10 -> 2, 9 -> 3))
+      assert(jobs(cap, Some(0.0))(1.0 - _)._2 == stop, s"cap $cap")
+    assert(jobs(5, None)(1.0 - _)._2 == 5)
+    // a throwing round releases the state it was handed
+    intercept[IllegalStateException](jobs(5, None)(x =>
+      if (x >= 2.0) throw new IllegalStateException("boom") else x + 1))
+    assert(released == Vector(0, 1, 2))
+  }
+
   test("Stop refuses a negative or NaN tol and a negative cap, so every entry does") {
     def refusal(body: => Any): String = intercept[IllegalArgumentException](body).getMessage
     val edges = Seq((1L, 2L), (2L, 1L)).toDF("src", "dst")
