@@ -603,9 +603,15 @@ object Cli {
             Index.build(docs, dir, provider,
               strategy = flags.getOrElse("strategy", "auto"),
               chunkSize = chunkSize, chunkOverlap = chunkOverlap)
-          else Index.update(docs, dir, provider,
-            strategy = flags.getOrElse("strategy", "auto"),
-            chunkSize = chunkSize, chunkOverlap = chunkOverlap)
+          else {
+            val m = Index.update(docs, dir, provider,
+              strategy = flags.getOrElse("strategy", "auto"),
+              chunkSize = chunkSize, chunkOverlap = chunkOverlap)
+            // an IVF/PQ tier built by ann-build must cover the appended
+            // passages, or ann-search never returns them
+            Index.maintainAnnTiers(spark, dir)
+            m
+          }
         println(s"${args.head}: index '$name' at $dir — " +
           s"${meta.passageCount} passages, ${meta.dimensions} dims")
         // Per-extension diagnostics (ref build.rs:290-308 prints the same

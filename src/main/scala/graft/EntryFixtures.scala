@@ -13,7 +13,7 @@ import graft.operators.{BM25, Dedup, Expansion, Graph, Knn}
 private[graft] object EntryFixtures {
 
   /** Build-once cache of the label-assigned IVF layout (partitioned
-    * embeddings + centroids table) that knn_ivf / knn_ivf_plan probe
+    * embeddings + centroids table) that knn_ivf probes
     * through `Index.searchIvf` and the stored PQ/1-bit rows extend.
     * Keyed by (path, source mtime): regenerated testdata at the same
     * path must not reuse a stale layout. */

@@ -44,19 +44,11 @@ private[graft] object EntryKnn {
       // The persisted-centroid production path: rank the STORED
       // centroids table (nprobe driver-side ints), then scan only the
       // probed partitions of the centroid-partitioned layout —
-      // sub-linear in the corpus. (Knn.ivfTopK, which re-derives
-      // centroids from the full table, remains the oracle-reproducible
-      // formulation only — see its scaladoc.)
-      val out = ivfLayoutDir(s, dir)
-      val qv = Tables.embeddings(s, dir).filter(col("vec_id") === 0)
-        .select("embedding").head().getSeq[Float](0).toArray
-      graft.pipeline.Index.searchIvf(s, out, qv, nprobe = 4, k = 10, idCol = "vec_id")
-    }),
-
-    "knn_ivf_plan" -> ((s, dir) => {
-      // The same stored-centroid probe as knn_ivf, kept as its own
-      // oracle-gated row: clusters are label-assigned (not KMeans) so
-      // the SQL oracle can reproduce the probe set.
+      // sub-linear in the corpus. Clusters are label-assigned (not
+      // KMeans) so the SQL oracle can reproduce the probe set.
+      // (Knn.ivfTopK, which re-derives centroids from the full table,
+      // remains the oracle-reproducible formulation only — see its
+      // scaladoc.)
       val out = ivfLayoutDir(s, dir)
       val qv = Tables.embeddings(s, dir).filter(col("vec_id") === 0)
         .select("embedding").head().getSeq[Float](0).toArray
@@ -433,9 +425,6 @@ private[graft] object EntryKnn {
         |LIMIT 10""".stripMargin,
 
     "knn_ivf" -> ivfOracle,
-
-    // The same Index.searchIvf call as knn_ivf — one oracle covers both.
-    "knn_ivf_plan" -> ivfOracle,
 
     "knn_ivf_quantized" ->
       """WITH q AS (SELECT embedding::DOUBLE[] AS qv FROM embeddings WHERE vec_id = 0),

@@ -330,7 +330,7 @@ private[graft] object OracleCtes {
       |LIMIT 1000""".stripMargin
 
   /** Label-clustered IVF probe + exact search within probed clusters
-    * (nprobe=4, k=10) — shared by knn_ivf and knn_ivf_plan. */
+    * (nprobe=4, k=10) — the knn_ivf oracle. */
   val ivfOracle =
     """WITH q AS (SELECT embedding::DOUBLE[] AS qv FROM embeddings WHERE vec_id = 0),
       |cent AS (

@@ -115,16 +115,6 @@ object Safetensors {
     }
   }
 
-  private[graft] def floatToF16(f: Float): Short = {
-    val bits = java.lang.Float.floatToIntBits(f)
-    val sign = (bits >>> 16) & 0x8000
-    val exp = ((bits >>> 23) & 0xff) - 127 + 15
-    val mant = (bits >>> 13) & 0x3ff
-    if (exp <= 0) sign.toShort // flush tiny values to signed zero (test fixtures only)
-    else if (exp >= 0x1f) (sign | 0x7c00).toShort
-    else (sign | (exp << 10) | mant).toShort
-  }
-
   /** Writes F32 tensors in spec layout (test fixtures + checkpoint
     * export). Insertion order preserved; offsets packed contiguously. */
   def write(path: Path, tensors: Seq[(String, Tensor)],

@@ -29,8 +29,6 @@ final class WordPiece(vocab: Map[String, Int], val lowercase: Boolean,
   val padId: Int = vocab.getOrElse("[PAD]", 0)
   def size: Int = vocab.size
 
-  def idOf(token: String): Option[Int] = vocab.get(token)
-
   /** `[CLS] pieces... [SEP]`, truncated so the result fits `maxLen`
     * (matching the crate's truncation-before-specials behavior for
     * single sequences). */

@@ -186,12 +186,6 @@ object MetadataFilterDsl {
       case None    => (c.cast("double"), lit(d))
     } else (c.cast("double"), lit(d))
 
-  private def litOf(v: Value): Column = v match {
-    case VNum(d)  => lit(d)
-    case VBool(b) => lit(b)
-    case VStr(s)  => lit(s)
-  }
-
   /** Typed equality per `values_equal` (ref filter.rs:390-400): numbers
     * compare as doubles; cross-type comparisons are false. */
   private def eqCol(c: Column, dt: DataType, v: Value): Column = (dt, v) match {

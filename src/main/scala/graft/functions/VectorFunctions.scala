@@ -6,8 +6,7 @@ import org.apache.spark.sql.functions._
 /** Dense-vector column functions over `ARRAY<FLOAT>` / `ARRAY<DOUBLE>`.
   *
   * Re-expresses the reference's vector math (dot product
-  * `src/index/recompute.rs:137-139`, L2 normalize
-  * `src/embedding/candle.rs:218-225`) as Catalyst higher-order-function
+  * `src/index/recompute.rs:137-139`) as Catalyst higher-order-function
   * expressions — codegen-friendly, no UDF, no driver-side loops.
   *
   * All arithmetic is done in Double with a per-row *sequential* fold
@@ -56,13 +55,6 @@ object VectorFunctions {
       lit(0.0),
       (acc, x) => acc + x)
 
-  /** L2-normalized copy of the vector (zero vectors pass through unchanged,
-    * matching the reference's epsilon guard in candle.rs:218-225). */
-  def l2Normalize(a: Column): Column = {
-    val n = l2Norm(a)
-    transform(asDouble(a), x => when(n > 1e-12, x / n).otherwise(x))
-  }
-
   /** Per-vector symmetric int8 scalar quantization: scale = max|x|/127,
     * code_i = round(x_i/scale). 4x smaller storage than FLOAT at ~0.3%
     * dot-product error — the storage-tier trade for 100 TB of vectors.
@@ -70,7 +62,7 @@ object VectorFunctions {
     * HALF_UP like the SQL oracle's. Zero vectors quantize to scale 0 +
     * zero codes. Computed by the single-pass
     * [[graft.functions.expressions.QuantizeInt8]] expression — the HOF
-    * formulation ([[quantizeInt8Columns]], kept as the parity oracle)
+    * formulation (kept in FunctionsSpec as the parity oracle)
     * re-evaluates the scale fold per element once CollapseProject
     * inlines it into downstream lambdas. */
   def quantizeInt8(v: Column): Column = {
@@ -86,21 +78,4 @@ object VectorFunctions {
     GraftColumnBridge.column(graft.functions.expressions.DequantizeInt8(
       GraftColumnBridge.expression(q)))
   }
-
-  /** The composable-Column formulation of [[quantizeInt8]] — identical
-    * values; kept as the parity oracle (FunctionsSpec pins the
-    * expression against it). */
-  private[graft] def quantizeInt8Columns(v: Column): Column = {
-    val d = asDouble(v)
-    val maxAbs = aggregate(d, lit(0.0), (acc, x) => greatest(acc, abs(x)))
-    val scale = maxAbs / 127.0
-    struct(
-      scale.as("scale"),
-      transform(d, x => when(scale > 0, round(x / scale).cast("int"))
-        .otherwise(lit(0))).as("codes"))
-  }
-
-  /** Column-formulation parity oracle for [[dequantizeInt8]]. */
-  private[graft] def dequantizeInt8Columns(q: Column): Column =
-    transform(q.getField("codes"), c => c.cast("double") * q.getField("scale"))
 }

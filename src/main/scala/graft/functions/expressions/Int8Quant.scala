@@ -12,11 +12,11 @@ import org.apache.spark.sql.types._
   * vector: scale = max|x|/127, code_i = round(x_i/scale) — the
   * storage-tier trade (4x smaller) for 100 TB of vectors.
   *
-  * Bit-identical to the composable Column formulation
-  * ([[graft.functions.VectorFunctions.quantizeInt8Columns]]): that one
-  * is built from higher-order functions whose lambdas evaluate
-  * interpreted — and worse, after `CollapseProject` inlines the struct
-  * fields into downstream consumers, the max|x| fold re-evaluates PER
+  * Bit-identical to the composable Column formulation (FunctionsSpec
+  * keeps it as the parity oracle): that one is built from higher-order
+  * functions whose lambdas evaluate interpreted — and worse, after
+  * `CollapseProject` inlines the struct fields into downstream
+  * consumers, the max|x| fold re-evaluates PER
   * ELEMENT of every lambda that references `scale`, turning an O(d) map
   * into O(d²) per row (at 768-1536 production dims that's the whole
   * query budget). This expression computes the struct once per row in

@@ -90,18 +90,6 @@ object CorpusClean {
           col("pass_symbol") && col("pass_stops"))
   }
 
-  /** Corpus-repeated n-grams: distinct token n-grams that appear in at
-    * least `minDocs` distinct documents — the boilerplate/repeated-
-    * passage inventory of Lee et al. 2021 at n-gram granularity.
-    * One shuffle (groupBy gram over the distinct (doc, gram) pairs).
-    * Returns (gram, n_docs, example_doc = min doc id). */
-  def repeatedNgrams(docs: DataFrame, idCol: String, textCol: String,
-      n: Int, minDocs: Int): DataFrame =
-    Dedup.shingleTable(docs, idCol, textCol, n)
-      .groupBy(col("sh").as("gram"))
-      .agg(count(lit(1)).as("n_docs"), min("id").as("example_doc"))
-      .filter(col("n_docs") >= minDocs)
-
   /** Per-document boilerplate coverage: the fraction of a doc's distinct
     * n-grams that are corpus-repeated (appear in >= minDocs docs). The
     * pipeline filter drops docs above a coverage threshold. Two shuffles
@@ -153,29 +141,6 @@ object CorpusClean {
     val benchGrams = Dedup.shingleTable(bench, benchId, benchText, n)
       .select("sh").distinct()
     corpusGrams
-      .join(broadcast(benchGrams), Seq("sh"))
-      .groupBy(col("id").as("doc_id"))
-      .agg(count(lit(1)).as("n_overlap_grams"))
-  }
-
-  /** [[decontaminate]] with a Bloom pre-gate, for when the benchmark
-    * gram set outgrows a comfortable broadcast (a full eval-suite
-    * union): build a [[Bloom]] filter over the bench grams (m/64 longs
-    * — KBs — shipped as a literal), drop corpus grams the filter
-    * definitely hasn't seen BEFORE the join, then verify the survivors
-    * exactly against the real gram set. No false negatives means the
-    * result is IDENTICAL to [[decontaminate]] (pinned in spec); the
-    * gate just shrinks the join's corpus-side input to the
-    * false-positive rate. */
-  def decontaminateBloom(corpus: DataFrame, corpusId: String,
-      corpusText: String, bench: DataFrame, benchId: String,
-      benchText: String, n: Int, mBits: Int = 1 << 20,
-      kHashes: Int = 4): DataFrame = {
-    val benchGrams = Dedup.shingleTable(bench, benchId, benchText, n)
-      .select("sh").distinct()
-    val bloom = Bloom.build(benchGrams, "sh", mBits, kHashes)
-    Dedup.shingleTable(corpus, corpusId, corpusText, n)
-      .filter(Bloom.mightContain(col("sh"), bloom, kHashes))
       .join(broadcast(benchGrams), Seq("sh"))
       .groupBy(col("id").as("doc_id"))
       .agg(count(lit(1)).as("n_overlap_grams"))

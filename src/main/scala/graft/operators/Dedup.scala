@@ -686,8 +686,7 @@ object Dedup {
     * popcount-of-xor distance verifies — banded, never quadratic in
     * the JOIN, and the exchanges carry 8-byte signatures only.
     * Complete for `maxDist <= nBands - 1`; callers wanting a larger
-    * radius must raise `nBands`. Shared by [[simhashPairs]] (4 x
-    * 15-bit segments of a 60-bit text simhash),
+    * radius must raise `nBands`. Shared by [[hammingClusters]],
     * [[Multimodal.phashPairs]] (4 x 16-bit segments of a 64-bit image
     * dHash) and [[Multimodal.audioFpPairs]].
     *
@@ -747,14 +746,6 @@ object Dedup {
       .select(least(col("ia"), col("ib")).as("id_a"),
         greatest(col("ia"), col("ib")).as("id_b"), col("dist"))
   }
-
-  /** SimHash near-dup pairs with Hamming distance <= maxDist. Candidate
-    * generation blocks on 4 x 15-bit simhash segments (a pair within
-    * Hamming distance 3 of a 60-bit hash must agree on at least one of
-    * 4 segments), so the join is banded, not quadratic. */
-  def simhashPairs(docs: DataFrame, idCol: String, textCol: String, maxDist: Int): DataFrame =
-    hammingBandedPairs(simhash(docs, idCol, textCol), "simhash",
-      segBits = 15, nBands = 4, maxDist = maxDist)
 
   /** Hamming near-dup CLUSTERS with linear output under mass
     * duplication — the scale path next to [[hammingBandedPairs]]'s

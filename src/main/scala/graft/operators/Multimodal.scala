@@ -189,14 +189,6 @@ object Multimodal {
   def sizeBytes(content: Column): Column = length(content)
   def contentDigest(content: Column): Column = md5(content)
 
-  /** Resize plan: rewrites the metadata struct for a target box,
-    * preserving aspect ratio — metadata-only; [[resizeImages]] is the
-    * pixel-level companion. */
-  def resizeMeta(width: Column, height: Column, maxDim: Int): (Column, Column) = {
-    val scale = least(lit(maxDim) / greatest(width, height), lit(1.0))
-    ((width * scale).cast("int"), (height * scale).cast("int"))
-  }
-
   /** Exact integer block-average downscale of one decoded image — the
     * [[PHash64]] grid rule generalized to RGB and arbitrary target
     * dims: target pixel (c, r) averages the source block
@@ -276,14 +268,6 @@ object Multimodal {
     }(Encoders.row(outSchema))
       .toDF(idCol, "resized")
   }
-
-  /** Frame-sampling plan: which frame indices to extract for a video of
-    * `nFrames` at stride `everyN` — as an array column the decode stage
-    * consumes. */
-  def frameSampleIndices(nFrames: Column, everyN: Int): Column =
-    when(nFrames >= 1,
-      sequence(lit(0), greatest(nFrames - 1, lit(0)), lit(everyN)))
-      .otherwise(array().cast("array<int>"))
 
   // ---- perceptual near-dup tier (image dHash) -------------------------
 

@@ -95,25 +95,19 @@ object Index {
             sourceCol: String = "source", chunkSize: Int = 256,
             chunkOverlap: Int = 128): IndexMeta = {
     val spark = docs.sparkSession
-    // One persisted snapshot of the source feeds chunking AND the doc
-    // fingerprints — a non-deterministic source re-evaluated twice could
-    // otherwise fingerprint text that was never indexed.
-    val src = snapshotSource(docs, textCol, sourceCol)
-    val chunks = chunkDocs(src, "text", "source", strategy,
+    val chunks = chunkDocs(docs, textCol, sourceCol, strategy,
       chunkSize, chunkOverlap).persist()
     // Materialize the chunk cache once, then let the independent writes
-    // (passages, embeddings, doc fingerprints) run as concurrent jobs —
-    // they share the cached frames and touch disjoint output tables.
+    // (passages, embeddings) run as concurrent jobs — they share the
+    // cached chunks and touch disjoint output tables.
     val n = chunks.count()
     inParallel(
       () => chunks.write.mode(SaveMode.Overwrite).parquet(s"$dir/passages"),
       () => embedChunks(chunks, provider)
-        .write.mode(SaveMode.Overwrite).parquet(s"$dir/embeddings"),
-      () => writeDocFps(src, dir, "text", SaveMode.Overwrite))
+        .write.mode(SaveMode.Overwrite).parquet(s"$dir/embeddings"))
     // Stats read the cached chunks directly — no passages re-read.
     buildBm25Stats(spark, dir, Some(chunks.toDF()))
     chunks.unpersist()
-    src.unpersist()
     val cfg = ModelRegistry.getModelConfig(provider.modelName)
     val meta = IndexMeta(version = 1, backendName = "spark-exact",
       embeddingModel = provider.modelName, embeddingMode = "provider",
@@ -122,41 +116,6 @@ object Index {
       queryPromptTemplate = cfg.queryPrefix, buildPromptTemplate = cfg.documentPrefix)
     writeMeta(dir, meta)
     meta
-  }
-
-  /** Persisted (text, source) snapshot of an input documents frame, so
-    * every consumer in a build/update sees the same evaluation of a
-    * possibly non-deterministic source. */
-  private def snapshotSource(docs: DataFrame, textCol: String,
-                             sourceCol: String): DataFrame =
-    docs.select(col(textCol).as("text"), col(sourceCol).cast("string").as("source"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-
-  /** Sidecar table of *source-document* fingerprints (`<dir>/doc_fps`).
-    * Passage fingerprints can't answer "was this document ingested?" —
-    * a multi-chunk document never equals any one of its chunks — so the
-    * dedup gate ([[graft.streaming.Streaming.dedupIngest]]) anti-joins
-    * against this table instead. */
-  def writeDocFps(docs: DataFrame, dir: String, textCol: String,
-                  mode: SaveMode): Unit =
-    docs.select(graft.functions.TextFunctions.fingerprint(col(textCol)).as("fp"))
-      .distinct()
-      .write.mode(mode).parquet(s"$dir/doc_fps")
-
-  /** The stored document-fingerprint set. When the sidecar is absent
-    * (an index built by an older version), falls back to fingerprinting
-    * the stored passages — weaker (only single-chunk documents can
-    * match) but never a silent no-op; the sidecar is written on the
-    * next build/update. */
-  def docFps(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    if (tableExists(spark, s"$dir/doc_fps"))
-      spark.read.parquet(s"$dir/doc_fps")
-    else if (tableExists(spark, s"$dir/passages"))
-      spark.read.parquet(s"$dir/passages")
-        .select(graft.functions.TextFunctions.fingerprint(col("text")).as("fp"))
-        .distinct()
-    else Seq.empty[String].toDF("fp")
   }
 
   /** Recompute and persist the BM25 statistics tables; `passagesOpt`
@@ -182,8 +141,11 @@ object Index {
     * Chunk ids are deterministic (`source#idx`), so re-delivering an
     * already-indexed source would duplicate ids in every table and skew
     * the merged statistics; an anti join against the existing passage
-    * ids drops colliding chunks first (first write wins — the id-level
-    * idempotency guard under the content-level [[docFps]] gate). */
+    * ids drops colliding chunks first (first write wins).
+    *
+    * Only the base tables are appended; an IVF/PQ tier built over them
+    * goes stale until [[maintainAnnTiers]] runs (the CLI's `update`
+    * calls it right after). */
   def update(newDocs: DataFrame, dir: String, provider: EmbeddingProvider,
              strategy: String = "auto", textCol: String = "text",
              sourceCol: String = "source", chunkSize: Int = 256,
@@ -198,10 +160,6 @@ object Index {
       throw new IllegalArgumentException(
         s"Embedding dimension mismatch: index has ${meta00.dimensions}, " +
         s"provider '${provider.modelName}' has ${provider.dimensions}")
-    // Snapshot + persist for the same reason as build(): several
-    // consumers, and a re-executed non-deterministic source could
-    // otherwise diverge between passages, embeddings and fingerprints.
-    val src = snapshotSource(newDocs, textCol, sourceCol)
     // The fresh-chunk set is MATERIALIZED to a staging dir before
     // anything is appended: its plan reads the passages table (the anti
     // join), and appending to passages invalidates/recomputes any
@@ -210,25 +168,17 @@ object Index {
     // own rows. Reading the staged parquet cuts that lineage; the
     // passages "append" itself is then just moving the staged files in.
     val staging = s"$dir/passages.delta"
-    chunkDocs(src, "text", "source", strategy, chunkSize, chunkOverlap)
+    chunkDocs(newDocs, textCol, sourceCol, strategy, chunkSize, chunkOverlap)
       .join(spark.read.parquet(s"$dir/passages").select("id"), Seq("id"), "left_anti")
       .write.mode(SaveMode.Overwrite).parquet(staging)
     val fresh = spark.read.parquet(staging)
     val nFresh = fresh.count()
     if (nFresh > 0) {
-      inParallel(
-        () => embedChunks(fresh.as[Chunk], provider)
-          .write.mode(SaveMode.Append).parquet(s"$dir/embeddings"),
-        () => writeDocFps(src, dir, "text", SaveMode.Append))
+      embedChunks(fresh.as[Chunk], provider)
+        .write.mode(SaveMode.Append).parquet(s"$dir/embeddings")
       mergeBm25Stats(spark, dir, fresh)
       moveTableFiles(spark, staging, s"$dir/passages")
-    } else {
-      // No fresh passages — still record the doc fingerprints (the docs
-      // ARE in the index; this also upgrades pre-sidecar indexes).
-      writeDocFps(src, dir, "text", SaveMode.Append)
-      deleteDir(spark, staging)
-    }
-    src.unpersist()
+    } else deleteDir(spark, staging)
     val meta0 = readMeta(dir)
     val n = spark.read.parquet(s"$dir/passages").count()
     val meta = meta0.copy(passageCount = n)
@@ -331,16 +281,14 @@ object Index {
     ()
   }
 
-  /** Compact an index's tables: micro-batch ingest (`Streaming.
-    * indexIngest` / repeated `update`) accumulates one small file per
-    * batch, and at scale the file count — not the byte count — becomes
-    * the scan bottleneck (task-per-file scheduling, footer reads, NN
-    * pressure). Rewrites each table to ~`targetFileBytes` files via the
+  /** Compact an index's tables: repeated `update`s accumulate small
+    * files, one set per batch, and at scale the file count — not the
+    * byte count — becomes the scan bottleneck (task-per-file
+    * scheduling, footer reads, NN pressure). Rewrites each table to ~`targetFileBytes` files via the
     * staged swap; row content is unchanged. */
   def compact(spark: SparkSession, dir: String,
               targetFileBytes: Long = 128L * 1024 * 1024): Unit = {
-    val tables = Seq("passages", "embeddings", "bm25_tf", "bm25_dl",
-      "bm25_df", "doc_fps")
+    val tables = Seq("passages", "embeddings", "bm25_tf", "bm25_dl", "bm25_df")
     val thunks = tables.flatMap { t =>
       val path = s"$dir/$t"
       val p = new org.apache.hadoop.fs.Path(path)
@@ -828,7 +776,7 @@ object Index {
     * IVF assignment for the new vectors, then PQ codes from the
     * persisted codebooks — each only if its layout exists (for PQ: both
     * the codebooks AND the codes table, so a build that died mid-encode
-    * is skipped instead of crash-looping the stream). The encode/assign
+    * is skipped instead of failing every later update). The encode/assign
     * work is O(delta); the delta discovery is an anti-join that scans
     * the ID COLUMN of the existing tier (column-pruned Parquet scan —
     * bytes proportional to row count, not table width). A pipeline that

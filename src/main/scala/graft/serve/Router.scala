@@ -54,8 +54,8 @@ private[serve] object SearchRequest {
   * request runs on it or on the Spark path.
   *
   * Staleness contract: a [[WarmIndex]] is an immutable snapshot, but the
-  * index DIRECTORY can move under a long-lived server (Index.update /
-  * appendIvf). Every request probes the directory fingerprint (a stat
+  * index DIRECTORY can move under a long-lived server (`Cli update`:
+  * Index.update, then maintainAnnTiers). Every request probes the directory fingerprint (a stat
   * walk, microseconds) and RELOADS on drift. A failed load (over the RAM
   * budget, no persisted embeddings, a table mid-write) is cached against
   * its fingerprint — that request and later ones with the same

@@ -311,7 +311,6 @@ object LeannImport {
       case _ => false // pruned index (no embeddings file): passages-only import is the contract
     }
     Index.buildBm25Stats(spark, toDir, Some(written))
-    Index.writeDocFps(written, toDir, "text", org.apache.spark.sql.SaveMode.Overwrite)
     val meta = nativeMeta.copy(
       version = 1,
       dimensions = dims.getOrElse(0),

@@ -195,13 +195,6 @@ object PdfCrypt {
         else plain)
     }
 
-  private[graft] def aesEncryptForTest(key: Array[Byte], iv: Array[Byte],
-                                         plain: Array[Byte]): Array[Byte] = {
-    val pad = 16 - (plain.length % 16)
-    val padded = plain ++ Array.fill(pad)(pad.toByte)
-    iv ++ aesCbc(Cipher.ENCRYPT_MODE, key, iv, padded)
-  }
-
   // ---- R2-R4: Algorithm 2 file key + per-object keys -------------------
 
   /** Algorithm 2: file encryption key for the EMPTY user password. */

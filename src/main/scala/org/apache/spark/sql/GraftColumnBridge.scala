@@ -58,12 +58,4 @@ object GraftColumnBridge {
             lr.isStreaming, lr.stream)(cls, None, None))
       case _ => df
     }
-
-  /** Materialize the planner strategies a SparkSessionExtensions
-    * instance would inject — lets tests exercise the
-    * `spark.sql.extensions` class-registration path without tearing
-    * down the shared session. */
-  def plannerStrategies(e: SparkSessionExtensions, spark: SparkSession)
-      : Seq[org.apache.spark.sql.execution.SparkStrategy] =
-    e.buildPlannerStrategies(spark)
 }

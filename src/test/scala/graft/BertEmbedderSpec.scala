@@ -96,8 +96,20 @@ class BertEmbedderSpec extends SparkSpec {
     assert(back("vec").data.toSeq == b.data.toSeq)
   }
 
+  /** Float → IEEE 754 half, the inverse [[Safetensors]] never needs:
+    * truncating, tiny values flushed to signed zero. */
+  private def floatToF16(f: Float): Short = {
+    val bits = java.lang.Float.floatToIntBits(f)
+    val sign = (bits >>> 16) & 0x8000
+    val exp = ((bits >>> 23) & 0xff) - 127 + 15
+    val mant = (bits >>> 13) & 0x3ff
+    if (exp <= 0) sign.toShort
+    else if (exp >= 0x1f) (sign | 0x7c00).toShort
+    else (sign | (exp << 10) | mant).toShort
+  }
+
   test("f16 conversion: exact halves, rounding, specials") {
-    import Safetensors.{f16ToFloat, floatToF16}
+    import Safetensors.f16ToFloat
     for (v <- Seq(0f, 1f, -1f, 0.5f, 2.5f, -65504f, 65504f))
       assert(f16ToFloat(floatToF16(v)) === v)
     // subnormal half: 2^-24 is the smallest positive f16

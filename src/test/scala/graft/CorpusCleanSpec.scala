@@ -69,15 +69,6 @@ class CorpusCleanSpec extends SparkSpec {
     assert(cov(3L) === 0.0)
     assert(cov(4L) === 0.0)
     assert(out.filter(_.getLong(0) == 4L).head.getAs[Long]("n_grams") === 0L)
-
-    // the repeated-gram inventory agrees: the boilerplate sentence has
-    // 9 tokens -> 5 distinct 5-grams shared by docs 1 and 2... plus the
-    // grams straddling the unique prefix differ, so exactly the 5
-    // fully-inside grams repeat.
-    val rep = CorpusClean.repeatedNgrams(docs, "doc_id", "text", n = 5, minDocs = 2)
-      .collect()
-    assert(rep.length === 5)
-    assert(rep.forall(_.getAs[Long]("n_docs") === 2L))
   }
 
   test("piiScrub: redacts emails, phones, IPv4 and counts each") {

@@ -515,5 +515,37 @@ object E2eDrive {
       s"packed columns missing: ${shardRows.columns.mkString(",")}")
     println(s"CLI_PRETRAIN rows=$nrows shards=$nsh manifest=${new String(mA).take(160)}")
     spark10.stop()
+
+    // update -> ann-search through Cli.main: a passage appended after
+    // ann-build must come back from the IVF/PQ tier (update maintains
+    // it). The index lives in the CLI's warehouse under a fresh name.
+    val updRoot = java.nio.file.Files.createTempDirectory("e2e-update")
+    def writeDoc(dir: String, name: String, text: String): Unit = {
+      val d = updRoot.resolve(dir)
+      java.nio.file.Files.createDirectories(d)
+      java.nio.file.Files.write(d.resolve(name), text.getBytes("UTF-8"))
+    }
+    Seq("a.md" -> "alpha doc about spark executors",
+        "b.md" -> "beta doc about shuffle plans",
+        "c.md" -> "gamma doc about parquet files",
+        "d.md" -> "delta doc about broadcast joins")
+      .foreach { case (n, t) => writeDoc("base", n, t) }
+    writeDoc("more", "e.md", "epsilon doc about watermarks")
+    val updIdx = s"e2e-update-${System.nanoTime()}"
+    Cli.main(Array("build", "--docs", s"$updRoot/base", "--index", updIdx,
+      "--strategy", "simple"))
+    Cli.main(Array("ann-build", updIdx, "--clusters", "2", "--pq-m", "8", "--pq-k", "4"))
+    Cli.main(Array("update", "--docs", s"$updRoot/more", "--index", updIdx,
+      "--strategy", "simple"))
+    val annOut = new java.io.ByteArrayOutputStream()
+    Console.withOut(annOut) {
+      Cli.main(Array("ann-search", updIdx, "epsilon doc about watermarks",
+        "--top-k", "1", "--nprobe", "2", "--rerank", "10"))
+    }
+    val annTop = annOut.toString("UTF-8").trim
+    graft.pipeline.Index.remove(
+      sys.env.getOrElse("GRAFT_WAREHOUSE", "graft-warehouse"), updIdx)
+    assert(annTop.contains("e.md"), s"ann-search must return the updated passage: $annTop")
+    println(s"CLI_UPDATE_ANN $annTop")
   }
 }

@@ -63,10 +63,10 @@ class ExtensionsSpec extends SparkSpec {
   }
 
   test("class registration (spark.sql.extensions) injects the planner strategy") {
-    import org.apache.spark.sql.{GraftColumnBridge, SparkSessionExtensions}
+    import org.apache.spark.sql.{GraftTestBridge, SparkSessionExtensions}
     val e = new SparkSessionExtensions
     new GraftExtensions().apply(e)
-    val strategies = GraftColumnBridge.plannerStrategies(e, spark)
+    val strategies = GraftTestBridge.plannerStrategies(e, spark)
     assert(strategies.contains(graft.plans.AsofJoinStrategy),
       s"expected AsofJoinStrategy among injected strategies: $strategies")
   }

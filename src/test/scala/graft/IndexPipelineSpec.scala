@@ -33,6 +33,17 @@ class IndexPipelineSpec extends SparkSpec {
     assert(spark.read.parquet(s"$dir/embeddings").count() == 4)
     assert(spark.read.parquet(s"$dir/bm25_df").count() > 0)
     assert(Index.readMeta(dir).embeddingModel == "hash-embedder-32")
+    // the exact table set, on an index of its own: build and update
+    // write the base tables and the BM25 statistics, nothing else
+    val d = s"$warehouse/tables"
+    def tables: Set[String] =
+      new java.io.File(d).listFiles().filter(_.isDirectory).map(_.getName).toSet
+    val want = Set("passages", "embeddings", "bm25_tf", "bm25_dl", "bm25_df", "bm25_g")
+    Index.build(docs, d, provider, strategy = "simple")
+    assert(tables == want)
+    Index.update(Seq(("appended doc about joins", "joins.md")).toDF("text", "source"),
+      d, provider, strategy = "simple")
+    assert(tables == want)
   }
 
   test("search returns k results with text resolved") {
@@ -150,6 +161,33 @@ class IndexPipelineSpec extends SparkSpec {
     val meta = Index.update(more, dir, provider, strategy = "simple")
     assert(meta.passageCount == 5)
     assert(spark.read.parquet(s"$dir/embeddings").count() == 5)
+  }
+
+  test("update then maintainAnnTiers: searchAnn returns the appended passage") {
+    val d = s"${Files.createTempDirectory("graft-ann-upd")}/idx"
+    Index.build(Seq(
+        ("alpha doc about spark executors", "a.md"),
+        ("beta doc about shuffle plans", "b.md"),
+        ("gamma doc about parquet files", "c.md"),
+        ("delta doc about broadcast joins", "d.md")).toDF("text", "source"),
+      d, provider, strategy = "simple")
+    Index.buildIvf(spark, d, numClusters = 2)
+    Index.buildPq(spark, d, m = 8, k = 4)
+    Index.update(Seq(("epsilon doc about watermarks", "e.md"),
+        ("zeta doc about state stores", "f.md")).toDF("text", "source"),
+      d, provider, strategy = "simple")
+    def annTop: String = Index.searchAnn(spark, d, "epsilon doc about watermarks",
+        provider, topK = 1, nprobe = 2, rerank = 10)
+      .select("source").as[String].head()
+    // update alone leaves the ANN tier on the old passages
+    assert(annTop != "e.md")
+    Index.maintainAnnTiers(spark, d)
+    // every tier tracks the base table: 6 embeddings = 6 ivf rows = 6 code rows
+    val n = spark.read.parquet(s"$d/embeddings").count()
+    assert(n === 6L)
+    assert(spark.read.parquet(s"$d/embeddings_ivf").count() === n)
+    assert(spark.read.parquet(s"$d/pq_codes").count() === n)
+    assert(annTop == "e.md")
   }
 
   test("incremental stats merge equals a full rebuild (multi-batch)") {

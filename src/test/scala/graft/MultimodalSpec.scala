@@ -90,23 +90,6 @@ class MultimodalSpec extends SparkSpec {
     assert(out.map(_._2).distinct.length == 3)
   }
 
-  test("resize preserves aspect ratio and never upscales") {
-    val df = Seq((1024, 512), (100, 50)).toDF("w", "h")
-    val (nw, nh) = Multimodal.resizeMeta(col("w"), col("h"), 256)
-    val r = df.select(nw.as("nw"), nh.as("nh")).as[(Int, Int)].collect()
-    assert(r(0) == ((256, 128)))
-    assert(r(1) == ((100, 50)))
-  }
-
-  test("frame sampling indices") {
-    val df = Seq(10, 1, 0).toDF("n")
-    val r = df.select(Multimodal.frameSampleIndices(col("n"), 4).as("idx"))
-      .as[Seq[Int]].collect()
-    assert(r(0) == Seq(0, 4, 8))
-    assert(r(1) == Seq(0))
-    assert(r(2) == Seq.empty)
-  }
-
   // ---- perceptual hash (dHash) near-dup tier --------------------------
 
   /** Independent dHash reference: a straight re-derivation of the spec

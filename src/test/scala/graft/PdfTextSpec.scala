@@ -205,6 +205,19 @@ class PdfTextSpec extends SparkSpec {
   private def hex(b: Array[Byte]): String =
     b.map(x => f"${x & 0xFF}%02X").mkString
 
+  /** AES-CBC encrypt a PDF crypt payload: PKCS#5 padding, 16-byte IV
+    * prefix (the inverse of `PdfCrypt`'s decrypt). */
+  private def aesEncrypt(key: Array[Byte], iv: Array[Byte],
+                         plain: Array[Byte]): Array[Byte] = {
+    import javax.crypto.Cipher
+    import javax.crypto.spec.{IvParameterSpec, SecretKeySpec}
+    val pad = 16 - (plain.length % 16)
+    val padded = plain ++ Array.fill(pad)(pad.toByte)
+    val c = Cipher.getInstance("AES/CBC/NoPadding")
+    c.init(Cipher.ENCRYPT_MODE, new SecretKeySpec(key, "AES"), new IvParameterSpec(iv))
+    iv ++ c.doFinal(padded)
+  }
+
   /** A complete single-page PDF whose content stream (object 4) holds
     * `payload` and whose trailer carries the given /Encrypt dict. */
   private def encryptedPdf(payload: Array[Byte], encDict: String): Array[Byte] = {
@@ -254,7 +267,7 @@ class PdfTextSpec extends SparkSpec {
     val key = PdfCrypt.fileKeyR234(4, 16, oEntry, -44, fileId, encryptMetadata = true)
     val u = PdfCrypt.computeU(4, key, fileId)
     val iv = Array.tabulate(16)(i => (i * 31 + 5).toByte)
-    val payload = PdfCrypt.aesEncryptForTest(
+    val payload = aesEncrypt(
       PdfCrypt.objectKey(key, 4, 0, aes = true), iv,
       "BT /F1 12 Tf (AES sealed words) Tj ET".getBytes(StandardCharsets.ISO_8859_1))
     val dict = s"<< /Filter /Standard /V 4 /R 4 /Length 128 /P -44 " +
@@ -271,10 +284,10 @@ class PdfTextSpec extends SparkSpec {
     val ik = PdfCrypt.hash2B(Array.emptyByteArray, kSalt)
     // UE = AES-256-CBC(ik, IV=0, fileKey), no padding: reuse the test
     // encryptor and strip its IV prefix + the one padding block.
-    val ue = PdfCrypt.aesEncryptForTest(ik, new Array[Byte](16), fileKey)
+    val ue = aesEncrypt(ik, new Array[Byte](16), fileKey)
       .slice(16, 48)
     val iv = Array.tabulate(16)(i => (i * 29 + 11).toByte)
-    val payload = PdfCrypt.aesEncryptForTest(fileKey, iv,
+    val payload = aesEncrypt(fileKey, iv,
       "BT /F1 12 Tf (PDF twenty secret) Tj ET".getBytes(StandardCharsets.ISO_8859_1))
     val oEntry48 = Array.tabulate(48)(i => (i * 3 + 2).toByte)
     val dict = s"<< /Filter /Standard /V 5 /R 6 /Length 256 /P -44 " +
@@ -328,9 +341,9 @@ class PdfTextSpec extends SparkSpec {
     val kSalt = Array.tabulate(8)(i => (i + 80).toByte)
     val uEntry = PdfCrypt.hash2B(Array.emptyByteArray, vSalt) ++ vSalt ++ kSalt
     val ik = PdfCrypt.hash2B(Array.emptyByteArray, kSalt)
-    val ue = PdfCrypt.aesEncryptForTest(ik, new Array[Byte](16), fileKey).slice(16, 48)
+    val ue = aesEncrypt(ik, new Array[Byte](16), fileKey).slice(16, 48)
     val iv = Array.tabulate(16)(i => (i * 29 + 11).toByte)
-    val payload = PdfCrypt.aesEncryptForTest(fileKey, iv,
+    val payload = aesEncrypt(fileKey, iv,
       "BT (ue first ordering) Tj ET".getBytes(StandardCharsets.ISO_8859_1))
     val oEntry48 = Array.tabulate(48)(i => (i * 3 + 2).toByte)
     val dict = s"<< /Filter /Standard /V 5 /R 6 /Length 256 " +

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Knn, Pq}
+import graft.operators.{Knn, Pq, PqReference}
 
 /** Product quantization: encoder expression parity against the driver
   * reference, ADC scoring parity, the exact-search identity at full
@@ -46,7 +46,7 @@ class PqSpec extends SparkSpec {
           .collect()
           .map(r => r.getLong(0) -> r.getSeq[Int](1).toArray).toMap
         for ((id, v) <- rows)
-          assert(got(id).toSeq === Pq.encodeRef(v, seedCb).toSeq,
+          assert(got(id).toSeq === PqReference.encodeRef(v, seedCb).toSeq,
             s"codes diverge for vec $id (wholeStage=$wholeStage)")
       } finally spark.conf.unset("spark.sql.codegen.wholeStage")
     }
@@ -229,7 +229,7 @@ class PqSpec extends SparkSpec {
       val got = df.select(col("id"), Pq.encodeCol(col("v"), cb).as("codes"))
         .collect().map(r => r.getLong(0) -> r.getSeq[Int](1).toSeq).toMap
       vecs.zipWithIndex.forall { case (v, i) =>
-        got(i.toLong) == Pq.encodeRef(v.toArray, cb).toSeq
+        got(i.toLong) == PqReference.encodeRef(v.toArray, cb).toSeq
       }
     }
     val r = PropTest.check(PropTest.Parameters.default.withMinSuccessfulTests(40), prop)
@@ -243,7 +243,7 @@ class PqSpec extends SparkSpec {
       .collect().map(_.getSeq[Double](0).toArray)
     def mse(cb: Pq.Codebooks): Double = {
       val errs = vecs.map { v =>
-        val rec = Pq.decodeRef(Pq.encodeRef(v, cb), cb)
+        val rec = PqReference.decodeRef(PqReference.encodeRef(v, cb), cb)
         v.zip(rec).map { case (a, b) => (a - b) * (a - b) }.sum / v.length
       }
       errs.sum / errs.length
