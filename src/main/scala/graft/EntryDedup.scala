@@ -502,7 +502,7 @@ private[graft] object EntryDedup {
     // The three pair generators replayed (capped jaccard = truth,
     // banded minhash with uncapped verify, winnow fingerprint pairs),
     // then scalar-subquery counts per method; f1 computed FROM the
-    // rounded precision/recall exactly as pairMetrics does.
+    // rounded precision/recall exactly as pairMetricsMany does.
     // "precision" is quoted — bare, DuckDB reads it as the DOUBLE
     // PRECISION type keyword.
     "dedup_eval" ->

@@ -46,7 +46,7 @@ private[graft] object EntryKnn {
       // probed partitions of the centroid-partitioned layout —
       // sub-linear in the corpus. Clusters are label-assigned (not
       // KMeans) so the SQL oracle can reproduce the probe set.
-      // (Knn.ivfTopK, which re-derives centroids from the full table,
+      // (Knn.ivfCandidates, which re-derives centroids from the full table,
       // remains the oracle-reproducible formulation only — see its
       // scaladoc.)
       val out = ivfLayoutDir(s, dir)

@@ -15,10 +15,7 @@ object Tables {
   def lineitem(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "lineitem")
   def orders(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "orders")
   def customer(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "customer")
-  def supplier(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "supplier")
   def part(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "part")
-  def nation(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "nation")
-  def region(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "region")
   def events(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "events")
 
   /** `events` with its TIMESTAMP(NANOS) column usable as a session-TZ

@@ -13,8 +13,9 @@ final case class IdsAcc(ids: Seq[Long], n: Long)
   * `max + 1` of them plus the EXACT group count, with map-side partial
   * aggregation.
   *
-  * Why this exists next to `collect_list`: the df-capped inverted-index
-  * pair counter (Dedup.pairCounts) only ever consumes posting
+  * Why this exists next to `collect_list`: a df-capped inverted-index
+  * pair counter (SQL's `bounded_ids_20`; the DataFrame posting tier the
+  * specs keep as `PairCountsReference`) only ever consumes posting
   * lists of groups with `n <= max` — but a plain
   * `collect_list` + `filter(count <= max)` plan materializes and
   * shuffles the FULL list of every hot key first, which on a boilerplate

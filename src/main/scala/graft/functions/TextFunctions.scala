@@ -49,9 +49,6 @@ object TextFunctions {
     ).otherwise(array().cast("array<string>"))
   }
 
-  /** Word n-gram shingles of a text (see [[kgrams]]). */
-  def shingles(text: Column, n: Int): Column = kgrams(tokens(text), n)
-
   /** Whitespace-word count (the cheap "token count" a pipeline reports). */
   def wordCount(text: Column): Column =
     size(filter(split(text, "\\s+"), t => length(t) > 0))

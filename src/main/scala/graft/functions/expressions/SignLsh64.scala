@@ -11,7 +11,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType}
   * sign bit per plane.
   *
   * Bit-identical to the Column formulation
-  * ([[graft.operators.Knn.signLshKeyColumns]]): same splitmix64-style
+  * (KnnReference.signLshKeyColumns in the specs): same splitmix64-style
   * plane derivation, same left-to-right projection summation, same
   * strict `proj > 0` bit test. The Column form builds a bits × dims
   * expression tree (`element_at` × dims × bits ≈ 1k nodes at test

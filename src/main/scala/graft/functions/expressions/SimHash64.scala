@@ -83,7 +83,7 @@ case class SimHash64(child: Expression, bits: Int = 60)
 object SimHash64 {
   /** Shared with MinHashSig; sourced from the single tokenizer constant
     * so the Column/expression/oracle paths can never drift. */
-  private[expressions] val tokenPattern =
+  private[graft] val tokenPattern =
     Pattern.compile(graft.functions.TextFunctions.TokenRegex)
 
   private val digest: ThreadLocal[MessageDigest] =
@@ -92,7 +92,7 @@ object SimHash64 {
   /** First 15 hex chars of md5 as a 60-bit long — identical to
     * `conv(substring(md5(t),1,15),16,10)`: the big-endian value of the
     * first 8 digest bytes, dropping the 16th nibble. */
-  private[expressions] def md5Hex15(term: String): Long = {
+  private[graft] def md5Hex15(term: String): Long = {
     val d = digest.get()
     d.reset()
     val b = d.digest(term.getBytes(java.nio.charset.StandardCharsets.UTF_8))

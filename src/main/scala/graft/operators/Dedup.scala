@@ -2,21 +2,24 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ByteType, DoubleType, IntegerType, LongType, ShortType,
+  StructField, StructType}
 
 import graft.functions.TextFunctions._
 import graft.functions.VectorFunctions
 import graft.functions.VectorFunctions.round6
+import graft.functions.expressions.RoundHalfUp
 import graft.operators.Ckpt.CkptOps
 
 /** Deduplication operators for large-scale training-data pipelines:
   * exact (content fingerprint), n-gram Jaccard, MinHash+LSH banding,
   * SimHash, and embedding-cosine near-dup — all as shuffle-conscious
-  * DataFrame plans (no driver-side pairwise loops).
+  * plans (no driver-side pairwise loops).
   *
   * Scale design: pairwise similarity is never computed all-vs-all.
-  * Jaccard goes through a shingle inverted-index join (optionally
+  * Jaccard goes through a shingle inverted index (optionally
   * frequency-capped: a shingle appearing in more than `maxShingleDf`
-  * docs is boilerplate and is dropped before the join — the standard
+  * docs is boilerplate and is dropped before pairing — the standard
   * guard against quadratic hot-key blowup). MinHash reduces each doc to
   * a constant-size signature, and candidate generation joins on banded
   * signature keys, so the shuffle is O(docs × bands), not O(docs²).
@@ -26,6 +29,17 @@ import graft.operators.Ckpt.CkptOps
   * All hashes derive from md5 (deterministic, engine-portable); Jaccard
   * and cosine are small-integer/Double arithmetic rounded to 6 decimals,
   * so every operator here is DuckDB-oracle-checkable.
+  *
+  * Codegen working set: Spark caches generated classes by (class
+  * loader, code), 100 entries by default, and the driver and the
+  * executor threads load each whole-stage or projection body under
+  * their own loader, so every distinct body takes two entries. A
+  * workload that runs about 50 distinct bodies per pass (the analytics
+  * pass of shingle dedup plus the graph loops did) overflows the cache,
+  * recompiles nearly every body each pass and re-JITs the result. An
+  * operator that runs many small stages over small data should count
+  * the bodies it adds; the capped pair counters run as one RDD DAG
+  * ([[PairKernel]]) for that reason.
   */
 object Dedup {
   /** Deferred-release persist for intermediates that must stay lazy
@@ -96,45 +110,45 @@ object Dedup {
         round6(col("inter") / (col("sz_a") + col("sz_b") - col("inter"))).as("jaccard"))
       .filter(col("jaccard") >= minJ)
 
-  /** The inverted-index pair counter behind [[jaccardPairs]],
-    * [[containmentPairs]] and [[winnowPairs]]. Input: a DISTINCT
-    * `(id, <key>)` table. Output: `(id_a, id_b, <cnt>)` for every
-    * id_a < id_b sharing a retained key, and the per-id retained set
-    * sizes `(id, sz)` (lazy — a caller that ignores them pays nothing).
-    * `cap > 0` drops keys held by more than `cap` ids from BOTH outputs
-    * (boilerplate shingles, the quadratic hot-key corner), so a score
-    * built from the two is the consistent one over the retained set
-    * (capped intersections over full-set sizes would underestimate).
+  /** The tier of the inverted-index pair counters [[jaccardPairs]],
+    * [[containmentPairs]] and [[winnowPairs]], which follows the inputs:
+    *  - `cap > 0` with an integral id (Long/Int/Short/Byte), "postings":
+    *    [[PairKernel]], one RDD DAG from the docs to the scored pairs.
+    *    Posting lists are bounded at cap+1 ids, so boilerplate keys never
+    *    materialize theirs, and pairs expand from the lists (O(cap^2) per
+    *    key). Ids come out as Long.
+    *  - `cap <= 0`, "selfjoin": [[pairCounts]]' key self-join.
+    *  - `cap > 0` with any other id type (the CLI's string ids),
+    *    "dffilter": keys over the cap leave through a df-count left-anti
+    *    join, then the self-join.
     *
-    * The tier follows the inputs; each holds its intermediates under
-    * `"<op>.<tier>"` registry keys, so every operator keeps its own
-    * slots:
-    *  - `cap <= 0`, "selfjoin": the table cached once (it feeds both
-    *    join sides and the sizes agg), then the key self-join.
-    *  - `cap > 0` with an integral id, "postings": ONE corpus-scale
-    *    exchange — the key groupBy through [[graft.functions.BoundedIds]]
-    *    (partial buffers bounded at cap+1 ids, so boilerplate keys never
-    *    materialize posting lists) — then pairs expand map-side from the
-    *    cached postings (O(cap^2) rows per key) and sizes come from the
-    *    same lists. The earlier df-count agg + keep-set join + two
-    *    self-join sides paid five key-scale passes for this answer (the
-    *    r13 sf1p sweep: 9.2× on 10× data vs the postings' 3.9×).
-    *  - `cap > 0` with any other id type, "dffilter": keys over the cap
-    *    leave through a df-count left-anti join, then the self-join.
-    *
-    * Id contract, for every caller: any id column type works at any
-    * cap, with the same pairs. BoundedIds binds a Long encoder, so only
-    * Long/Int/Short/Byte ids take the posting tier (and come out as
-    * Long); string ids (the CLI's corpora) take the df-filter tier. */
-  private def pairCounts(t: DataFrame, key: String, cnt: String, cap: Long,
-                         op: String): (DataFrame, DataFrame) = {
-    import org.apache.spark.sql.types._
+    * Id contract, for every tier: any id column type works at any cap,
+    * with the same pairs; a null id is dropped; an id on several rows
+    * holds the union of their keys, each counted once (set semantics,
+    * so no score exceeds 1). */
+  private def postingTier(docs: DataFrame, idCol: String, cap: Long, op: String): Boolean = {
     require(cap <= Int.MaxValue,
       s"$op: the df cap must fit in Int (posting lists are cap-bounded in memory): $cap")
-    val integralId = t.schema("id").dataType match {
+    cap > 0 && (docs.schema(idCol).dataType match {
       case LongType | IntegerType | ShortType | ByteType => true
       case _ => false
-    }
+    })
+  }
+
+  /** The DataFrame tiers of [[postingTier]]. Input: an `(id, <key>)`
+    * table; null ids are dropped and repeated rows counted once here.
+    * Output: `(id_a, id_b, <cnt>)` for every id_a < id_b sharing a
+    * retained key, and the per-id retained set sizes `(id, sz)` (lazy —
+    * a caller that ignores them pays nothing). `cap > 0` drops keys held
+    * by more than `cap` ids from BOTH outputs (boilerplate shingles, the
+    * quadratic hot-key corner), so a score built from the two is the
+    * consistent one over the retained set (capped intersections over
+    * full-set sizes would underestimate). Each tier holds its
+    * intermediates under `"<op>.<tier>"` registry keys, so every
+    * operator keeps its own slots. */
+  private def pairCounts(t0: DataFrame, key: String, cnt: String, cap: Long,
+                         op: String): (DataFrame, DataFrame) = {
+    val t = t0.where(col("id").isNotNull).distinct()
     def selfJoin(kept: DataFrame): (DataFrame, DataFrame) =
       (kept.select(col(key), col("id").as("id_a"))
         .join(kept.select(col(key), col("id").as("id_b")), key)
@@ -142,21 +156,7 @@ object Dedup {
         .groupBy("id_a", "id_b").agg(count(lit(1)).as(cnt)),
         shingleSizes(kept))
     if (cap <= 0) selfJoin(holdCached(s"$op.selfjoin", t))
-    else if (integralId) {
-      val boundedIds = udaf(new graft.functions.BoundedIds(cap.toInt),
-        org.apache.spark.sql.Encoders.scalaLong)
-      val posting = holdCached(s"$op.postings",
-        t.groupBy(key).agg(boundedIds(col("id")).as("acc"))
-          .filter(col("acc.n") <= cap)
-          .select(col("acc.ids").as("ids")))
-      (posting
-        .select(explode(col("ids")).as("id_a"), col("ids"))
-        .select(col("id_a"), explode(col("ids")).as("id_b"))
-        .filter(col("id_a") < col("id_b"))
-        .groupBy("id_a", "id_b").agg(count(lit(1)).as(cnt)),
-        posting.select(explode(col("ids")).as("id"))
-          .groupBy("id").agg(count(lit(1)).as("sz")))
-    } else {
+    else {
       val all = holdCached(s"$op.selfjoin", t)
       selfJoin(holdCached(s"$op.dffilter",
         all.join(all.groupBy(key).agg(count(lit(1)).as("shdf"))
@@ -165,17 +165,32 @@ object Dedup {
     }
   }
 
-  /** Pairs with n-gram Jaccard >= minJ, from the [[pairCounts]]
-    * inverted index over [[shingleTable]]. `maxShingleDf` drops
-    * shingles shared by more than that many docs (0 = keep all) from
-    * intersections AND sizes, so the reported value is the consistent
-    * Jaccard over retained shingles. Ids: see [[pairCounts]]. */
+  /** Pairs with n-gram Jaccard >= minJ over the docs' shingle sets
+    * ([[shingleTable]]), counted by the [[postingTier]] inverted index.
+    * `maxShingleDf` drops shingles shared by more than that many docs
+    * (0 = keep all) from intersections AND sizes, so the reported value
+    * is the consistent Jaccard over retained shingles. Ids and set
+    * semantics: see [[postingTier]]. */
   def jaccardPairs(docs: DataFrame, idCol: String, textCol: String,
-                   n: Int, minJ: Double, maxShingleDf: Long = 0L): DataFrame = {
-    val (inter, sz) = pairCounts(shingleTable(docs, idCol, textCol, n),
-      "sh", "inter", maxShingleDf, "jaccardPairs")
-    verifyJaccard(inter, sz, minJ)
-  }
+                   n: Int, minJ: Double, maxShingleDf: Long = 0L): DataFrame =
+    if (postingTier(docs, idCol, maxShingleDf, "jaccardPairs"))
+      PairKernel.pairs(docs, idCol, textCol, PairKernel.Shingles(n), maxShingleDf.toInt,
+        pairSchema(StructField("jaccard", DoubleType))) { (a, b, inter, szA, szB, row) =>
+        val j = RoundHalfUp.round(inter.toDouble / (szA + szB - inter).toDouble, 6)
+        row.setLong(0, a); row.setLong(1, b); row.setDouble(2, j)
+        j >= minJ
+      }
+    else {
+      val (inter, sz) = pairCounts(shingleTable(docs, idCol, textCol, n),
+        "sh", "inter", maxShingleDf, "jaccardPairs")
+      verifyJaccard(inter, sz, minJ)
+    }
+
+  /** `(id_a: Long, id_b: Long, <scores>)`, the posting tier's result
+    * schema; the scores' nullability is the DataFrame tiers'. */
+  private def pairSchema(scores: StructField*): StructType =
+    StructType(Seq(StructField("id_a", LongType, nullable = false),
+      StructField("id_b", LongType, nullable = false)) ++ scores)
 
   /** Asymmetric CONTAINMENT pairs: for each candidate pair, c_a =
     * |A∩B| / |A| (the fraction of A's shingles inside B) and the
@@ -185,22 +200,32 @@ object Dedup {
     * jaccard ≈ |B|/|A| → 0 as the wrapper grows, while c_b stays 1.0
     * (the [[sourceOverlap]] asymmetry argument at DOC grain — the
     * contained side is the redundant one). Same shingle grammar,
-    * capped-SET semantics and [[pairCounts]] tiers as [[jaccardPairs]],
+    * capped-SET semantics and [[postingTier]] tiers as [[jaccardPairs]],
     * but candidate generation must stay inverted-index (NOT MinHash
     * banding: banding approximates JACCARD, and the asymmetric pairs
     * this operator exists for — tiny doc inside a huge wrapper — have
     * jaccard → 0, so banding would structurally miss exactly them). */
   def containmentPairs(docs: DataFrame, idCol: String, textCol: String,
                        n: Int, minC: Double,
-                       maxShingleDf: Long = 0L): DataFrame = {
-    val (inter, sz) = pairCounts(shingleTable(docs, idCol, textCol, n),
-      "sh", "inter", maxShingleDf, "containmentPairs")
-    withSizes(inter, sz)
-      .select(col("id_a"), col("id_b"),
-        round6(col("inter") / col("sz_a")).as("c_a"),
-        round6(col("inter") / col("sz_b")).as("c_b"))
-      .filter(greatest(col("c_a"), col("c_b")) >= minC)
-  }
+                       maxShingleDf: Long = 0L): DataFrame =
+    if (postingTier(docs, idCol, maxShingleDf, "containmentPairs"))
+      PairKernel.pairs(docs, idCol, textCol, PairKernel.Shingles(n), maxShingleDf.toInt,
+        pairSchema(StructField("c_a", DoubleType), StructField("c_b", DoubleType))) {
+        (a, b, inter, szA, szB, row) =>
+          val ca = RoundHalfUp.round(inter.toDouble / szA.toDouble, 6)
+          val cb = RoundHalfUp.round(inter.toDouble / szB.toDouble, 6)
+          row.setLong(0, a); row.setLong(1, b); row.setDouble(2, ca); row.setDouble(3, cb)
+          math.max(ca, cb) >= minC
+      }
+    else {
+      val (inter, sz) = pairCounts(shingleTable(docs, idCol, textCol, n),
+        "sh", "inter", maxShingleDf, "containmentPairs")
+      withSizes(inter, sz)
+        .select(col("id_a"), col("id_b"),
+          round6(col("inter") / col("sz_a")).as("c_a"),
+          round6(col("inter") / col("sz_b")).as("c_b"))
+        .filter(greatest(col("c_a"), col("c_b")) >= minC)
+    }
 
   /** Wide-form MinHash signatures: one row per id, one `m<s>` column
     * per seed. The family is universal hashing over the shingle's
@@ -260,9 +285,12 @@ object Dedup {
       minhashBands(docs, idCol, textCol, "id", n, numHashes, bandSize),
       Seq("band", "b_lo", "b_hi"))
     // deferred-release persist: the shingle table feeds both
-    // verification joins and the sizes agg
+    // verification joins and the sizes agg. Distinct, so an id on
+    // several rows holds each shingle once (set semantics); hashed by
+    // id first, so that one exchange also serves the id_a join and the
+    // sizes agg (a bare distinct added an exchange and a job)
     val sh = holdCached("minhashDedup.shingles",
-      shingleTable(docs, idCol, textCol, n))
+      shingleTable(docs, idCol, textCol, n).repartition(col("id")).distinct())
     verifyJaccard(pairIntersections(cands, sh), shingleSizes(sh), minJ)
   }
 
@@ -635,16 +663,6 @@ object Dedup {
         init.select(col("id").as("id_a"), col("component").as("id_b"))),
       maxIter)
 
-  /** Near-dup clusters: Jaccard pairs -> connected components -> one
-    * surviving canonical doc (min id) per cluster. The complete dedup
-    * decision: `keep = (component == id)`. */
-  def dupClusters(docs: DataFrame, idCol: String, textCol: String,
-                  n: Int, minJ: Double): DataFrame = {
-    val pairs = jaccardPairs(docs, idCol, textCol, n, minJ)
-    connectedComponents(pairs)
-      .withColumn("keep", col("component") === col("id"))
-  }
-
   /** Cluster resolution keeping the highest-QUALITY member instead of
     * the smallest id: what a real pretraining pipeline wants — when
     * near-duplicates collapse, survive the best-written copy, not the
@@ -809,7 +827,7 @@ object Dedup {
     * threshold expand back to member pairs afterwards, so expansion
     * volume is proportional to the TRUE pair output — inherent to the
     * pairs contract (callers wanting linear output under mass
-    * duplication compose with [[dupClusters]] / [[hammingClusters]]'
+    * duplication compose with [[connectedComponents]] / [[hammingClusters]]'
     * ownership shape instead). */
   def embeddingLshPairs(emb: DataFrame, idCol: String, vecCol: String,
                         dims: Int, bits: Int, minCosine: Double): DataFrame = {
@@ -864,7 +882,7 @@ object Dedup {
     * paper's keep-one-per-ε-group (every non-first member of a mutually
     * similar group has an earlier τ-neighbor). For exact
     * connected-component survivor semantics compose the pair output of
-    * [[embeddingTopPairs]]/[[embeddingLshPairs]] with [[dupClusters]];
+    * [[embeddingTopPairs]]/[[embeddingLshPairs]] with [[connectedComponents]];
     * at SemDeDup's operating τ (≈0.95+) ε-groups are near-cliques and
     * the two policies coincide.
     *
@@ -928,21 +946,24 @@ object Dedup {
   /** Winnowing window INSTANCES: one row per full w-window of k-gram
     * hashes, carrying the window's start position (0-based shingle =
     * token index) and its min hash. [[winnowFingerprints]] is the
-    * distinct (id, fp) view; [[removeSharedSpans]] needs the positions. */
+    * distinct (id, fp) view; [[removeSharedSpans]] needs the positions.
+    * Windows never span two input rows, so an id on several rows
+    * fingerprints each of its texts on its own. */
   private[graft] def winnowWindows(docs: DataFrame, idCol: String,
       textCol: String, k: Int, w: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    // token array behind a projection boundary (see kgrams)
-    val sh = docs.select(col(idCol).as("id"), tokens(col(textCol)).as("toks"))
-      .select(col("id"), posexplode(kgrams(col("toks"), k)).as(Seq("pos", "s")))
-      .select(col("id"), col("pos"), md5Hash64(col("s")).as("h"))
-    val win = Window.partitionBy("id").orderBy("pos")
-      .rowsBetween(Window.currentRow, w - 1)
-    sh.select(col("id"), col("pos"),
-        min("h").over(win).as("fp"),
-        count(lit(1)).over(win).as("wn"))
-      .filter(col("wn") === w) // full windows only
-      .select("id", "pos", "fp")
+    // the token array, then the k-gram hash array, each behind a
+    // projection boundary (see kgrams): the window mins slice `h` once
+    // per window
+    val h = docs.select(col(idCol).as("id"), tokens(col(textCol)).as("toks"))
+      .select(col("id"), transform(kgrams(col("toks"), k), md5Hash64(_)).as("h"))
+    // full windows only; guarded like kgrams, since sequence(1, x) with
+    // x <= 0 would count down
+    val nWin = size(col("h")) - (w - 1)
+    val mins = when(nWin >= 1,
+      transform(sequence(lit(1), greatest(nWin, lit(1))),
+        s => array_min(slice(col("h"), s, lit(w))))
+    ).otherwise(array().cast("array<bigint>"))
+    h.select(col("id"), posexplode(mins).as(Seq("pos", "fp")))
   }
 
   /** Winnowing document fingerprints (Schleimer, Wilkerson & Aiken
@@ -958,8 +979,8 @@ object Dedup {
     * Selection keeps the window min VALUE (the paper's rightmost-min
     * position refinement only matters when positions survive into the
     * set; here they don't) — min is associative and engine-portable.
-    * Plan: shingle hashes behind a projection boundary, ONE doc-keyed
-    * window pass (sliding min, frame state = w rows), distinct. */
+    * Plan: shingle hashes behind a projection boundary, the window
+    * minima as an array map over each row (no exchange), distinct. */
   def winnowFingerprints(docs: DataFrame, idCol: String, textCol: String,
                          k: Int = 3, w: Int = 4): DataFrame =
     winnowWindows(docs, idCol, textCol, k, w).select("id", "fp").distinct()
@@ -980,7 +1001,7 @@ object Dedup {
     * removed (ownership counts distinct docs) — that's
     * CorpusClean.repetitionFlags' job.
     *
-    * Plan shape: the winnow window pass (1 doc-keyed window), an
+    * Plan shape: the winnow windows (a map over each row), an
     * fp-keyed ownership aggregate, an fp-keyed join back (LINEAR in
     * window instances — no pair join, so hot boilerplate fps are fine
     * here, unlike winnowPairs), a bounded mark explosion (≤ w+k-1
@@ -1071,15 +1092,23 @@ object Dedup {
   }
 
   /** Pairs sharing at least `minShared` winnow fingerprints — partial-
-    * overlap candidates, counted by the [[pairCounts]] inverted index
-    * over [[winnowFingerprints]]: the shuffle carries posting lists,
-    * never the all-pairs product; `maxFpDf > 0` drops fingerprints
-    * appearing in more docs than that (boilerplate runs, the quadratic
-    * corner). Ids: see [[pairCounts]]. */
+    * overlap candidates, counted by the [[postingTier]] inverted index
+    * over each doc's fingerprint SET ([[winnowFingerprints]]): the
+    * shuffle carries posting lists, never the all-pairs product;
+    * `maxFpDf > 0` drops fingerprints appearing in more docs than that
+    * (boilerplate runs, the quadratic corner). Ids and set semantics:
+    * see [[postingTier]]. */
   def winnowPairs(docs: DataFrame, idCol: String, textCol: String,
                   k: Int = 3, w: Int = 4, minShared: Long = 2,
                   maxFpDf: Int = 0): DataFrame =
-    pairCounts(winnowFingerprints(docs, idCol, textCol, k, w),
+    if (postingTier(docs, idCol, maxFpDf, "winnowPairs"))
+      PairKernel.pairs(docs, idCol, textCol, PairKernel.Winnow(k, w), maxFpDf,
+        pairSchema(StructField("shared", LongType, nullable = false))) {
+        (a, b, shared, _, _, row) =>
+          row.setLong(0, a); row.setLong(1, b); row.setLong(2, shared)
+          shared >= minShared
+      }
+    else pairCounts(winnowFingerprints(docs, idCol, textCol, k, w),
       "fp", "shared", maxFpDf, "winnowPairs")._1
       .filter(col("shared") >= minShared)
 

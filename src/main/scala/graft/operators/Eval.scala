@@ -80,29 +80,25 @@ object Eval {
           .otherwise(0.0), 6).as("ndcg"))
   }
 
-  /** Pair-set quality of an approximate dedup method against exact
+  /** Pair-set quality of approximate dedup methods against ONE exact
     * ground truth — the dedup ladder's counterpart of
     * [[retrievalMetrics]] (run exact Jaccard once as truth, any
-    * banded/fingerprint tier as the candidate, read precision/recall).
-    * Both inputs are (id_a, id_b) pair frames; orientation and
-    * duplicates are normalized before comparison. One summary row:
-    * (method, n_truth, n_cand, n_hit, precision, recall, f1), ratios
-    * rounded to 6 (f1 computed FROM the rounded precision/recall so
-    * any md5-capable engine replays it exactly).
+    * banded/fingerprint tier as a candidate, read precision/recall).
+    * All inputs are (id_a, id_b) pair frames; orientation and
+    * duplicates are normalized before comparison. One summary row per
+    * method: (method, n_truth, n_cand, n_hit, precision, recall, f1),
+    * ratios rounded to 6 (f1 computed FROM the rounded
+    * precision/recall so any md5-capable engine replays it exactly).
+    *
+    * The normalized truth pair set is computed once and cached
+    * (deferred-release registry, drained with `Dedup.releaseCaches()`),
+    * and each method's counts come from a single full-outer join — so
+    * every input frame's plan (often an expensive dedup operator)
+    * executes exactly once, instead of once per count aggregate.
     *
     * Scale: pair frames are report-sized (the corpus-scale work
-    * happened in the dedup operator being measured); the semi-join and
+    * happened in the dedup operator being measured); the joins and
     * count aggregates here touch only those outputs. */
-  def pairMetrics(method: String, candidates: DataFrame, truth: DataFrame,
-      idA: String = "id_a", idB: String = "id_b"): DataFrame =
-    pairMetricsMany(truth, Seq(method -> candidates), idA, idB)
-
-  /** [[pairMetrics]] for several methods against ONE ground truth: the
-    * normalized truth pair set is computed once and cached (deferred-
-    * release registry, drained with `Dedup.releaseCaches()`), and each
-    * method's counts come from a single full-outer join — so every
-    * input frame's plan (often an expensive dedup operator) executes
-    * exactly once, instead of once per count aggregate. */
   def pairMetricsMany(truth: DataFrame, methods: Seq[(String, DataFrame)],
       idA: String = "id_a", idB: String = "id_b"): DataFrame = {
     require(methods.nonEmpty,

@@ -73,8 +73,11 @@ object Knn {
   def filteredTopK(emb: DataFrame, query: DataFrame, pred: Column, k: Int): DataFrame =
     exactTopK(emb.filter(pred), query, k)
 
-  /** IVF-pruned top-k: rank cluster centroids (mean vector per
-    * `clusterCol`), keep the best `nprobe`, search only those clusters.
+  /** The probed-cluster SUBSET of `emb`: rank cluster centroids (mean
+    * vector per `clusterCol`), keep the best `nprobe`, and semi-join
+    * `emb` to those clusters — the candidate frame IVF-tier compositions
+    * re-rank instead of the full corpus (e.g. [[mmrRerank]] over the
+    * probed partitions, the knn_mmr_ivf row).
     *
     * ==ORACLE FORMULATION ONLY — not a production entry point.==
     * The centroid derivation here (explode → avg per (cluster, pos))
@@ -83,18 +86,7 @@ object Knn {
     * aggregation. Production queries go through the persisted-centroid
     * path — [[graft.pipeline.Index.searchIvf]] (stored `centroids`
     * table + partition-pruned layout scan) — where centroid ranking
-    * costs O(K·dims) regardless of corpus size.
-    */
-  def ivfTopK(emb: DataFrame, query: DataFrame, clusterCol: String,
-              nprobe: Int, k: Int): DataFrame =
-    exactTopK(ivfCandidates(emb, query, clusterCol, nprobe), query, k)
-
-  /** The probed-cluster SUBSET of `emb` — [[ivfTopK]]'s centroid
-    * ranking + nprobe semi-join without the final top-k: the candidate
-    * frame IVF-tier compositions re-rank instead of the full corpus
-    * (e.g. [[mmrRerank]] over the probed partitions, the knn_mmr_ivf
-    * row). Same oracle-formulation caveat as [[ivfTopK]]: production
-    * compositions prune via the persisted-centroid layout. */
+    * costs O(K·dims) regardless of corpus size. */
   def ivfCandidates(emb: DataFrame, query: DataFrame, clusterCol: String,
                     nprobe: Int): DataFrame = {
     val centroidScores = centroidsByPos(emb, clusterCol)
@@ -120,7 +112,7 @@ object Knn {
 
   /** avg embedding value per (cluster, position) — the
     * oracle-replayable centroid derivation both IVF formulations
-    * ([[ivfTopK]], [[batchIvfTopK]]) share; changing its arithmetic in
+    * ([[ivfCandidates]], [[batchIvfTopK]]) share; changing its arithmetic in
     * one place keeps the tiers and their DuckDB replays in lockstep. */
   private def centroidsByPos(emb: DataFrame, clusterCol: String): DataFrame =
     emb.select(col(clusterCol).as("cluster"),
@@ -361,7 +353,7 @@ object Knn {
 
   /** Real IVF build: KMeans over the embedding column assigns a
     * `centroid_id` — at scale this becomes the table's partition column
-    * (`.write.partitionBy("centroid_id")`), so `ivfTopK`'s cluster
+    * (`.write.partitionBy("centroid_id")`), so `ivfCandidates`' cluster
     * filter prunes partitions instead of scanning 100 TB. Seeded →
     * deterministic. */
   def ivfAssign(emb: DataFrame, vecCol: String, numClusters: Int,
@@ -381,8 +373,7 @@ object Knn {
     * the hyperplanes are deterministic so bucketing is reproducible
     * across runs and engines. Computed by the single-pass
     * [[graft.functions.expressions.SignLsh64]] expression — the Column
-    * formulation ([[signLshKeyColumns]], kept as the parity oracle)
-    * builds a bits × dims expression tree that blows past codegen
+    * formulation (kept in the specs as the parity oracle) builds a bits × dims expression tree that blows past codegen
     * limits at production dims. */
   def signLshKey(vecCol: Column, dims: Int, bits: Int, seed: Long = 42L): Column = {
     import org.apache.spark.sql.GraftColumnBridge
@@ -469,21 +460,5 @@ object Knn {
       out += ((rank, cands(next)._1, mmr(next)))
     }
     out.toSeq.toDF("rank", "vec_id", "score")
-  }
-
-  /** The composable-Column formulation of [[signLshKey]] — identical
-    * values; kept as the parity oracle (KnnSpec pins the expression
-    * against it). */
-  private[graft] def signLshKeyColumns(vecCol: Column, dims: Int, bits: Int,
-                                       seed: Long = 42L): Column = {
-    val planes: Seq[Seq[Double]] = (0 until bits).map(b =>
-      (0 until dims).map(d =>
-        graft.functions.expressions.SignLsh64.mix(seed + b * 1000003L + d)
-          .toDouble / Long.MaxValue))
-    val v = asDouble(vecCol)
-    planes.zipWithIndex.map { case (p, i) =>
-      val proj = (0 until dims).map(d => element_at(v, d + 1) * p(d)).reduce(_ + _)
-      when(proj > 0, lit(1L << i)).otherwise(lit(0L))
-    }.reduce(_ + _)
   }
 }

@@ -12,8 +12,9 @@ import org.apache.spark.sql.types._
   * Decode tiers: [[decode]] runs REAL codecs for the formats the JDK
   * itself ships — `javax.imageio` for PNG/JPEG/BMP/GIF (true
   * width/height + pixel features) and `javax.sound.sampled` for WAV
-  * (true sample rate/duration) — and falls back to the deterministic
-  * [[decodeStub]] for containers the JVM can't parse (video, exotic
+  * (true sample rate/duration) — and falls back to deterministic stub
+  * properties (byte-hash dimensions, [[byteFeature16]]) for containers
+  * the JVM can't parse (video, exotic
   * codecs; a real deployment swaps that arm for ffmpeg/PIL workers,
   * same batch shape). Everything Spark-side is shared and real — the
   * schema, the mapPartitions batch shape (mirroring how a Python
@@ -35,35 +36,6 @@ object Multimodal {
       StructField("duration_ms", LongType, nullable = true),
       StructField("codec", StringType, nullable = true))), nullable = true)))
 
-  final case class DecodedMedia(media_id: Long, media_type: String,
-      width: Int, height: Int, n_frames: Int, feature: Array[Float])
-
-  /** STUB decode: deterministic pseudo-properties + a 16-dim feature
-    * vector derived from the content bytes. A real deployment swaps the
-    * body for an image/audio decoder; the batch shape (one partition's
-    * rows grouped into fixed-size batches, heavy native work amortized
-    * per batch) is exactly what the real decoder needs. */
-  def decodeStub(media: DataFrame, batchSize: Int = 32): DataFrame = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.select(col("media_id"), col("media_type"), col("content"))
-      .as[(Long, String, Array[Byte])]
-      .mapPartitions { it =>
-        it.grouped(batchSize).flatMap { batch =>
-          // (real decoder: one native call per batch goes here)
-          batch.iterator.map { case (id, mt, bytes) =>
-            val h = java.util.Arrays.hashCode(bytes)
-            val feat = byteFeature16(bytes)
-            DecodedMedia(id, mt,
-              width = 64 + math.floorMod(h, 1024),
-              height = 64 + math.floorMod(h >> 10, 1024),
-              n_frames = if (mt == "video") 1 + math.floorMod(h >> 20, 300) else 1,
-              feature = feat)
-          }
-        }
-      }.toDF()
-  }
-
   final case class DecodedMediaFull(media_id: Long, media_type: String,
       decoded: Boolean, width: Int, height: Int, n_frames: Int,
       sample_rate: Int, duration_ms: Long, feature: Array[Float])
@@ -78,8 +50,8 @@ object Multimodal {
     * [[Mp4Meta]] (movie duration, video-track dimensions and sample
     * count — no frame decode; the frame work stays in a codec worker
     * stage). Anything else (non-BMFF video, unsupported codecs,
-    * corrupt bytes): the [[decodeStub]] properties, never a task
-    * failure. */
+    * corrupt bytes): the stub properties (byte-hash dimensions and
+    * [[byteFeature16]]), never a task failure. */
   def decode(media: DataFrame, batchSize: Int = 32): DataFrame = {
     val spark = media.sparkSession
     import spark.implicits._

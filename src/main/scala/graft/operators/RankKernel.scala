@@ -212,7 +212,7 @@ private[operators] object RankKernel {
   }
 
   // sorts `a` in place and returns its distinct prefix
-  private def sortedDistinct(a: Array[Long]): Array[Long] = {
+  private[operators] def sortedDistinct(a: Array[Long]): Array[Long] = {
     java.util.Arrays.sort(a)
     var k = 0
     var i = 0

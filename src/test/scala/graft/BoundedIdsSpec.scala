@@ -69,28 +69,6 @@ class BoundedIdsSpec extends SparkSpec {
     })
   }
 
-  test("capped winnowPairs builds postings in ONE corpus-scale exchange (plan shape)") {
-    val docs = Tables.documents(spark, "/root/testdata/sf0.001")
-    // winnow: window pass (doc-keyed) + posting groupBy + pair agg = 3
-    // exchanges. The pre-r8 formulation (df-count agg + keep-set join +
-    // two self-join sides) needed 5+; a regression re-introducing it
-    // shows up as extra Exchange nodes here. jaccard and containment
-    // run the same capped pair counter; their bound is the Exchange
-    // match count of their plans before winnow shared that counter (8).
-    Seq(
-      ("winnowPairs", 3, Dedup.winnowPairs(docs, "doc_id", "text",
-        k = 3, w = 4, minShared = 2, maxFpDf = 20)),
-      ("jaccardPairs", 8, Dedup.jaccardPairs(docs, "doc_id", "text",
-        n = 3, minJ = 0.5, maxShingleDf = 20)),
-      ("containmentPairs", 8, Dedup.containmentPairs(docs, "doc_id", "text",
-        n = 3, minC = 0.8, maxShingleDf = 20))
-    ).foreach { case (op, bound, df) =>
-      val plan = df.queryExecution.executedPlan.toString
-      val exchanges = "Exchange".r.findAllIn(plan).size
-      assert(exchanges <= bound, s"capped $op plan grew to $exchanges exchanges:\n$plan")
-    }
-  }
-
   test("capped jaccardPairs agrees with the uncapped join formulation under a high cap") {
     // With the cap above every shingle's df, the capped (posting-list)
     // and uncapped (self-join) tiers must produce identical pair sets —

@@ -78,12 +78,12 @@ class EvalSpec extends SparkSpec {
     // -> n_cand 3, hits 2: precision 2/3, recall 2/3, f1 = 2pr/(p+r)
     val truth = Seq((1L, 2L), (1L, 3L), (2L, 4L)).toDF("id_a", "id_b")
     val cand = Seq((2L, 1L), (1L, 2L), (2L, 4L), (3L, 5L)).toDF("id_a", "id_b")
-    val m = Eval.pairMetrics("mh", cand, truth)
+    val m = Eval.pairMetricsMany(truth, Seq("mh" -> cand))
       .as[(String, Long, Long, Long, Double, Double, Double)].collect().head
     val p = BigDecimal(2.0 / 3).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
     assert(m === (("mh", 3L, 3L, 2L, p, p, p))) // p == r -> f1 == p
     // empty candidate set: all-zero ratios, not NaN/missing
-    val z = Eval.pairMetrics("none", truth.limit(0), truth)
+    val z = Eval.pairMetricsMany(truth, Seq("none" -> truth.limit(0)))
       .as[(String, Long, Long, Long, Double, Double, Double)].collect().head
     assert(z === (("none", 3L, 0L, 0L, 0.0, 0.0, 0.0)))
   }

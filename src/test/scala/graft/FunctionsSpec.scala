@@ -117,7 +117,7 @@ class TextFunctionsSpec extends SparkSpec {
 
   test("shingles: guarded below n tokens") {
     val df = Seq("aa bb cc dd", "aa bb", "").toDF("t")
-    val sh = df.select(TextFunctions.shingles(col("t"), 3)).as[Seq[String]].collect()
+    val sh = df.select(TextFunctions.kgrams(TextFunctions.tokens(col("t")), 3)).as[Seq[String]].collect()
     assert(sh(0) == Seq("aa bb cc", "bb cc dd"))
     assert(sh(1) == Seq.empty)
     assert(sh(2) == Seq.empty)
@@ -607,7 +607,9 @@ class DedupSpec extends SparkSpec {
     val d = Seq((5L, t), (9L, t), (2L, t),
       (7L, "completely different words about spark engines and shuffles here now"))
       .toDF("doc_id", "text")
-    val out = Dedup.dupClusters(d, "doc_id", "text", 3, 0.9)
+    // Jaccard pairs -> connected components -> keep the min id
+    val out = Dedup.connectedComponents(Dedup.jaccardPairs(d, "doc_id", "text", 3, 0.9))
+      .withColumn("keep", col("component") === col("id"))
       .as[(Long, Long, Boolean)].collect()
     val keep = out.filter(_._3).map(_._1).toSet
     assert(keep == Set(2L)) // min id of the triplet survives

@@ -7,7 +7,7 @@ import graft.operators.{Dedup, Eval, Multimodal}
 /** Recall gate for the banded-Hamming near-dup tiers (pHash / audio
   * fingerprint), the way the ANN ladder has RecallSpec: candidates from
   * the shipped banding knobs (4 x 16-bit segments) measured with
-  * [[Eval.pairMetrics]] against the EXACT Hamming-distance ground truth
+  * [[Eval.pairMetricsMany]] against the EXACT Hamming-distance ground truth
   * (all-pairs XOR popcount — fine at fixture scale; at corpus scale the
   * banded plan is the point).
   *
@@ -36,7 +36,7 @@ class HammingRecallSpec extends SparkSpec {
       .filter(col("sig").isNotNull)
     val truth = exactTruth(sig, 3)
     val cand = Dedup.hammingBandedPairs(sig, "sig", segBits = 16, nBands = 4, maxDist = 3)
-    val m = Eval.pairMetrics("phash_banded", cand, truth).collect().head
+    val m = Eval.pairMetricsMany(truth, Seq("phash_banded" -> cand)).collect().head
     assert(m.getAs[Long]("n_truth") > 0, "fixture must contain near-dup pairs")
     assert(m.getAs[Double]("recall") == 1.0,
       s"banded recall ${m.getAs[Double]("recall")} < 1 at maxDist<=3 — banding broke completeness")
@@ -60,7 +60,7 @@ class HammingRecallSpec extends SparkSpec {
       .filter(col("sig").isNotNull)
     val truth = exactTruth(sig, 3)
     val cand = Dedup.hammingBandedPairs(sig, "sig", segBits = 16, nBands = 4, maxDist = 3)
-    val m = Eval.pairMetrics("audiofp_banded", cand, truth).collect().head
+    val m = Eval.pairMetricsMany(truth, Seq("audiofp_banded" -> cand)).collect().head
     assert(m.getAs[Long]("n_truth") > 0, "audio fixture must contain near-dup pairs")
     assert(m.getAs[Double]("recall") == 1.0 && m.getAs[Double]("precision") == 1.0)
     Dedup.releaseCaches()

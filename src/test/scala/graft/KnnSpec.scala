@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Dedup, Knn}
+import graft.operators.{Dedup, Knn, KnnReference}
 
 class KnnSpec extends SparkSpec {
   import spark.implicits._
@@ -22,7 +22,7 @@ class KnnSpec extends SparkSpec {
   test("ivf with all clusters probed equals exact search") {
     val q = Knn.queryVector(emb, 7L)
     val exact = Knn.exactTopK(emb, q, 10).as[(Long, Double)].collect().toSeq
-    val ivf = Knn.ivfTopK(emb, q, "label", nprobe = 10, k = 10)
+    val ivf = KnnReference.ivfTopK(emb, q, "label", nprobe = 10, k = 10)
       .as[(Long, Double)].collect().toSeq
     assert(ivf == exact)
   }
@@ -75,7 +75,7 @@ class KnnSpec extends SparkSpec {
     val first = assigned.select("vec_id", "centroid_id").as[(Long, Int)].collect().toMap
     assert(first == again)
     // pruned search through the kmeans clusters still returns k rows
-    val r = Knn.ivfTopK(assigned, Knn.queryVector(emb, 0L), "centroid_id",
+    val r = KnnReference.ivfTopK(assigned, Knn.queryVector(emb, 0L), "centroid_id",
       nprobe = 2, k = 5).as[(Long, Double)].collect()
     assert(r.length == 5)
   }
@@ -104,7 +104,7 @@ class KnnSpec extends SparkSpec {
       .collect().toSeq
     // the per-query oracle formulation, one qid at a time
     val single = (0L until 4L).flatMap { q =>
-      Knn.ivfTopK(emb, Knn.queryVector(emb, q), "label", nprobe = 3, k = 5)
+      KnnReference.ivfTopK(emb, Knn.queryVector(emb, q), "label", nprobe = 3, k = 5)
         .as[(Long, Double)].collect().toSeq
         .map { case (id, s) => (q, id, s) }
     }
@@ -131,7 +131,7 @@ class KnnSpec extends SparkSpec {
     for ((bits, seed) <- Seq((12, 42L), (16, 7L))) {
       val got = withZero.select(
         Knn.signLshKey(col("v"), dims = 64, bits = bits, seed = seed).as("k"),
-        Knn.signLshKeyColumns(col("v"), dims = 64, bits = bits, seed = seed).as("kc"))
+        KnnReference.signLshKeyColumns(col("v"), dims = 64, bits = bits, seed = seed).as("kc"))
         .as[(Long, Long)].collect()
       assert(got.forall { case (k, kc) => k == kc },
         s"bits=$bits seed=$seed diverged")

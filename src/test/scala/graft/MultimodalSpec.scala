@@ -14,8 +14,8 @@ class MultimodalSpec extends SparkSpec {
     .toDF("media_id", "media_type", "content")
 
   test("decode stub: deterministic, batched, 16-dim features") {
-    val a = Multimodal.decodeStub(media).orderBy("media_id").collect()
-    val b = Multimodal.decodeStub(media).orderBy("media_id").collect()
+    val a = Multimodal.decode(media).orderBy("media_id").collect()
+    val b = Multimodal.decode(media).orderBy("media_id").collect()
     assert(a.toSeq == b.toSeq)
     assert(a.length == 3)
     val feat = a.head.getAs[scala.collection.Seq[Float]]("feature")
@@ -70,7 +70,7 @@ class MultimodalSpec extends SparkSpec {
     // decode -> 16-dim feature column -> exact top-k: media similarity
     // search runs on the SAME operators as text embeddings (no special
     // media path needed; the feature is just another vector column).
-    val feats = Multimodal.decodeStub(media)
+    val feats = Multimodal.decode(media)
       .select(col("media_id").as("vec_id"), col("feature").as("embedding"))
     val near = graft.operators.Knn.cosineTopK(feats,
       graft.operators.Knn.queryVector(feats, 0L), k = 2)

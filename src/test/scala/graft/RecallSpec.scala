@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.operators.Knn
+import graft.operators.{Knn, KnnReference}
 
 /** Recall of the approximate search paths against the exact-kNN oracle
   * (the reference's own ground truth is exact recompute search,
@@ -23,7 +23,7 @@ class RecallSpec extends SparkSpec {
   private def recallAt(nprobe: Int): Double = {
     val scores = queryIds.map { q =>
       val exact = topIds(Knn.exactTopK(emb, Knn.queryVector(emb, q), k))
-      val approx = topIds(Knn.ivfTopK(emb, Knn.queryVector(emb, q), "label", nprobe, k))
+      val approx = topIds(KnnReference.ivfTopK(emb, Knn.queryVector(emb, q), "label", nprobe, k))
       (exact intersect approx).size.toDouble / k
     }
     scores.sum / scores.size
@@ -81,7 +81,7 @@ class RecallSpec extends SparkSpec {
     // hide.
     val degraded = queryIds.map { q =>
       val exact = topIds(Knn.exactTopK(emb, Knn.queryVector(emb, q), k))
-      val approx = topIds(Knn.ivfTopK(emb, Knn.queryVector(emb, q), "label", 2, k))
+      val approx = topIds(KnnReference.ivfTopK(emb, Knn.queryVector(emb, q), "label", 2, k))
       (exact intersect approx).size.toDouble / k
     }.sum / queryIds.size
     info(f"induced-drop check (random-label layout, nprobe=2): $degraded%.2f")
