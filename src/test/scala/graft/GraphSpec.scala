@@ -228,7 +228,7 @@ class GraphSpec extends SparkSpec {
     assert(math.abs(ppr.map(_._2).sum - 1.0) < 1e-3)
   }
 
-  test("personalizedPageRankWatched: early-stops, matching fixed-round exactly") {
+  test("personalizedPageRank, Stop.Converge: early-stops, matching Stop.Rounds exactly") {
     val pts = (0 until 40).map { i =>
       val j = i * 0.01
       val v = if (i % 2 == 0) Seq(1.0, j) else Seq(j, 1.0)
@@ -246,7 +246,7 @@ class GraphSpec extends SparkSpec {
     assert(w == fixed)
   }
 
-  test("personalizedPageRankWatched warm start: fast confirm, seed churn, departed ids") {
+  test("personalizedPageRank, Stop.Converge: warm start confirms fast; seed churn, departed ids") {
     val pts = (0 until 40).map { i =>
       val j = i * 0.01
       val v = if (i % 2 == 0) Seq(1.0, j) else Seq(j, 1.0)
@@ -535,7 +535,7 @@ class GraphSpec extends SparkSpec {
     assert(f40 != f41, "fixture stopped cycling — pick new knobs")
   }
 
-  test("labelSpreadWatched: early-stops at the grid fixed point, matching fixed-round") {
+  test("labelSpread, Stop.Converge: early-stops at the grid fixed point, matching Stop.Rounds") {
     val pts = (0 until 40).map { i =>
       val j = i * 0.01
       val v = if (i % 2 == 0) Seq(1.0, j) else Seq(j, 1.0)
@@ -554,7 +554,7 @@ class GraphSpec extends SparkSpec {
     assert(w == fixed)
   }
 
-  test("labelSpreadWatched warm start: prior state confirms fast and matches cold labels") {
+  test("labelSpread, Stop.Converge: warm start confirms fast and matches cold labels") {
     val pts = (0 until 40).map { i =>
       val j = i * 0.01
       val v = if (i % 2 == 0) Seq(1.0, j) else Seq(j, 1.0)
@@ -710,7 +710,7 @@ class GraphSpec extends SparkSpec {
     assert(core.count() == 0L, "a path has no 2-core")
   }
 
-  test("labelPropagationWatched: early-stop == fixed-round on a settling graph") {
+  test("labelPropagation, Stop.Converge: early-stop == Stop.Rounds on a settling graph") {
     // the clique fixture settles in ~2 rounds; the watch must fire
     // before a 12-round cap and reproduce labelPropagation(12) exactly
     val cliqueA = for (i <- 0L to 3L; j <- 0L to 3L if i < j) yield (i, j)
@@ -725,7 +725,7 @@ class GraphSpec extends SparkSpec {
     assert(watched == fixed, "watched must equal the full fixed-round run")
   }
 
-  test("labelPropagationWatched: the canonical 2-cycle stops on even remainder only") {
+  test("labelPropagation, Stop.Converge: the canonical 2-cycle stops on even remainder only") {
     // a single undirected edge is synchronous LPA's textbook 2-cycle:
     // the endpoints swap labels forever, so a naive fixpoint watch
     // never fires. The cycle watch first sees state(2) == state(0) at
@@ -748,7 +748,7 @@ class GraphSpec extends SparkSpec {
     }
   }
 
-  test("labelPropagationWatched + init: an unchanged graph confirms its prior in 1 round") {
+  test("labelPropagation, Stop.Converge: warm start on an unchanged graph confirms its prior in 1 round") {
     val cliqueA = for (i <- 0L to 3L; j <- 0L to 3L if i < j) yield (i, j)
     val cliqueB = for (i <- 10L to 13L; j <- 10L to 13L if i < j) yield (i, j)
     val sym = Graph.symmetrize(
@@ -773,7 +773,7 @@ class GraphSpec extends SparkSpec {
     assert(r2 <= 4, s"a local perturbation must re-converge fast, ran $r2")
   }
 
-  test("labelPropagationWeighted: uniform weights == unweighted; weights decide ties") {
+  test("labelPropagation weighted: uniform weights == unweighted; weights decide ties") {
     // parity arm: weight 1.0 everywhere must reproduce the unweighted
     // operator exactly (count IS the uniform-weight sum)
     val cliqueA = for (i <- 0L to 3L; j <- 0L to 3L if i < j) yield (i, j)
@@ -838,7 +838,7 @@ class GraphSpec extends SparkSpec {
     assert(e.getMessage.contains("outgoing weight"))
   }
 
-  test("labelPropagationWeightedWatched: early-stop == fixed-round; warm confirms in 1 round") {
+  test("labelPropagation weighted, Stop.Converge: early-stop == Stop.Rounds; warm confirms in 1 round") {
     // weighted clique fixture (heavy bridge so weights matter): the
     // watch must fire before the cap and reproduce the fixed-round run
     // exactly — the unweighted twin's oracle contract
@@ -870,7 +870,7 @@ class GraphSpec extends SparkSpec {
       "re-running from the settled state must reproduce it")
   }
 
-  test("labelPropagationWeightedWatched: the weighted 2-cycle stops on even remainder only") {
+  test("labelPropagation weighted, Stop.Converge: the weighted 2-cycle stops on even remainder only") {
     // one weighted undirected edge — synchronous LPA's textbook
     // 2-cycle is weight-independent, so the weighted watch needs the
     // same even-remainder stop rule to preserve fixed-round equality
@@ -941,7 +941,7 @@ class GraphSpec extends SparkSpec {
     assert(warm(prior.union(Seq((4L, -0.5)).toDF("id", "rank"))) == warm(prior))
   }
 
-  test("labelPropagationWatched: a node losing every vote counts as a change") {
+  test("labelPropagation, Stop.Converge: a node losing every vote counts as a change") {
     // a settling clique plus a directed chain 10 -> 11 -> 12 -> 13 whose
     // end is never a src: 12, 11 and 10 lose every vote in rounds 1-3
     // while the clique is already stable from round 2, so the watch
