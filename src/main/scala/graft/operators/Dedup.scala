@@ -566,18 +566,11 @@ object Dedup {
     var labels = edges.select(col("src").as("id")).distinct()
       .withColumn("component", col("id"))
     // Convergence probe fused into the round's ONE materialization job:
-    // each row carries a `_chg` flag (new label != last round's) whose
-    // evaluation — forced by the eager localCheckpoint over the full
-    // frame — bumps this accumulator, so the round costs zero extra
-    // jobs (the kCore discipline; previously a separate driver-sync
-    // join+count per round, the r11 bench-gate breach). Retry/
-    // speculation over-count is harmless: min-label propagation is
-    // MONOTONE (labels only ever decrease), so a truly-converged round
-    // has _chg=false on EVERY row and the accumulator stays 0 under
-    // any re-execution; a non-zero value can only over-state genuine
-    // change, never invent convergence.
-    val acc = pairs.sparkSession.sparkContext.longAccumulator("cc_changed")
-    val markChg = udf { c: Boolean => if (c) acc.add(1L); c }.asNondeterministic()
+    // each row carries a `_chg` flag (new label != last round's), and
+    // the job that completes the round's checkpoint (Ckpt's
+    // `materialize`) returns the count of set flags, so the probe costs
+    // no job of its own. A job result comes from one successful attempt
+    // per task, so the count is exact under retry and speculation.
     var converged = false
     var i = 0
     try {
@@ -606,22 +599,21 @@ object Dedup {
       // flooded doc count, exactly where dedup runs. Pointer jumping
       // NEEDS the truncation (the self-join doubles lineage per
       // round), so the fix is the storage level, not a persist.
-      acc.reset()
-      val next = propagated.join(
+      val (next, changed) = propagated.join(
           propagated.select(col("id").as("component"), col("component").as("jump")),
           Seq("component"), "left")
         .select(col("id"),
           coalesce(col("jump"), col("component")).as("component"),
-          markChg(coalesce(col("jump"), col("component")) =!= col("_old")).as("_chg"))
-        // ckptSer (r16): serialized eager checkpoint + stats re-anchor —
+          (coalesce(col("jump"), col("component")) =!= col("_old")).as("_chg"))
+        // materialize (r16): serialized checkpoint + stats re-anchor —
         // this round plan references the previous checkpoint FOUR times
         // (neighbor-min, propagate, both pointer-jump sides), so the
         // inherited size estimate compounds 4x per round; deep peels
         // (maxIter raised for long chains) would hit the BigInteger
         // overflow the 60-cap PPR arm measured. See operators.Ckpt.
-        .ckptSer()
+        .materialize(col("_chg"))
       labels = next.drop("_chg")
-      converged = acc.value == 0L
+      converged = changed(0) == 0.0
       i += 1
     }
     // finally, not fall-through: an exception mid-loop must not leave

@@ -3,7 +3,6 @@ package graft.operators
 import scala.annotation.tailrec
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.functions.{coalesce, lit, sum, udf}
 
 import graft.operators.Ckpt.CkptOps
 
@@ -42,13 +41,14 @@ object Stop {
   * LPA and label spreading in [[Graph]], Lloyd k-means in [[Cluster]]).
   * An operator supplies its update step and, on its watched tier, how a
   * round's movement is measured; the driver owns everything else: the
-  * round counter and `maxIters` cap, the eager serialized checkpoint
-  * ([[Ckpt]]) of every DataFrame round, the convergence probe, the stop
+  * round counter and `maxIters` cap, the convergence probe, the stop
   * rule and the returned (state, roundsRun). Fixed-round tiers run the
-  * same loop with no watch. Three arms, one per kind of state:
-  *   - [[run]], a DataFrame state: PPR, LPA and label spreading;
-  *   - [[runJobs]], a state each round materializes in one Spark job
-  *     that also returns the round's movement: PageRank ([[RankKernel]]);
+  * same loop with no watch. Three entries, one per kind of state, share
+  * that loop:
+  *   - [[run]], a DataFrame state: PPR, LPA and label spreading. Each
+  *     round is checkpointed by one job, [[Ckpt]]'s `materialize`;
+  *   - [[runJobs]], a state the operator materializes in one Spark job
+  *     of its own: PageRank ([[RankKernel]]);
   *   - [[runLocal]], a driver-resident state: Lloyd k-means.
   * [[Graph.kCore]] and [[Dedup.connectedComponents]] run their own
   * loops: they throw at the cap instead of returning a partial state.
@@ -75,25 +75,16 @@ object Stop {
   * watch would never fire.
   *
   * ==Probe==
-  * The probe only decides whether to continue, so the final round has
-  * none. A DataFrame state carries its previous values as columns, so
-  * `d1`/`d2` are sums of non-negative per-row terms over the frame the
-  * round just materialized ([[Watch]]).
-  *   - `tol = 0`: the only question is whether a sum is EXACTLY zero, and
-  *     accumulator bumps made while the checkpoint job materializes the
-  *     frame answer it with no probe job. That decision is safe under
-  *     re-execution: a retried or speculative task can only add its
-  *     non-negative terms again, which inflates a non-zero sum but never
-  *     makes it zero, and a truly zero sum has every term 0 however often
-  *     its rows are recounted.
-  *   - `tol > 0`: an inflated sum could miss `d1 <= tol` and change the
-  *     stop round, so the sums come from one aggregate scan of the
-  *     checkpointed frame instead.
-  * A state materialized by one job per round ([[runJobs]]) has its
-  * `d1`/`d2` summed inside that job, one partial per partition, and the
-  * job's result is the probe: no accumulator and no aggregate scan. A
+  * The probe only decides whether to continue, so the final round reads
+  * none. A state that lives in Spark is probed one way, at every `tol`:
+  * the job that materializes a round also returns its `d1`/`d2`, one
+  * partial per partition added in partition-index order, and that job
+  * result is the probe, with no further job. A DataFrame state carries
+  * its previous values as columns, so its `d1`/`d2` are sums of
+  * non-negative per-row terms ([[Watch]]) over the frame its checkpoint
+  * job computes; a [[runJobs]] round sums them inside its own job. A
   * job's result comes from the one successful attempt of each task, so
-  * this arm needs no re-execution argument, at any `tol`. A
+  * a retried or speculative task cannot count its rows twice. A
   * driver-resident state ([[runLocal]]) is compared on the driver, with
   * no job at all. */
 private[operators] object FixedPoint {
@@ -108,36 +99,17 @@ private[operators] object FixedPoint {
     * moved from `a` — non-negative, 0 only when they are identical. */
   final case class LocalWatch[S](tol: Double, dist: (S, S) => Double)
 
-  /** Runs `step` over a DataFrame state, checkpointing every round. */
+  /** Runs `step` over a DataFrame state. Each round is checkpointed by
+    * one job ([[Ckpt]]'s `materialize`), which also returns the watch's
+    * (d1, d2): that job result is the probe. */
   def run(init: DataFrame, maxIters: Int, watch: Option[Watch])
-         (step: DataFrame => DataFrame): (DataFrame, Int) =
-    watch match {
-      case None =>
-        loop(init, maxIters, None)(s => (step(s).ckptSer(), () => (0.0, 0.0)))
-      case Some(Watch(tol, d1, d2)) if tol == 0.0 =>
-        val sc = init.sparkSession.sparkContext
-        val acc1 = sc.doubleAccumulator("fixedpoint_d1")
-        val acc2 = sc.doubleAccumulator("fixedpoint_d2")
-        val mark = udf { (a: java.lang.Double, b: java.lang.Double) =>
-          if (a != null) acc1.add(a)
-          if (b != null) acc2.add(b)
-          true
-        }.asNondeterministic()
-        loop(init, maxIters, Some(tol)) { s =>
-          acc1.reset(); acc2.reset()
-          val next = step(s).withColumn("_moved", mark(d1, d2)).ckptSer()
-          (next, () => (acc1.value.doubleValue, acc2.value.doubleValue))
-        }
-      case Some(Watch(tol, d1, d2)) =>
-        loop(init, maxIters, Some(tol)) { s =>
-          val next = step(s).ckptSer()
-          (next, () => {
-            val r = next.agg(coalesce(sum(d1), lit(0.0)),
-              coalesce(sum(d2), lit(0.0))).head()
-            (r.getDouble(0), r.getDouble(1))
-          })
-        }
+         (step: DataFrame => DataFrame): (DataFrame, Int) = {
+    val terms = watch.toSeq.flatMap(w => Seq(w.d1, w.d2))
+    loop(init, maxIters, watch.map(_.tol)) { s =>
+      val (next, d) = step(s).materialize(terms: _*)
+      (next, () => (d(0), d(1)))
     }
+  }
 
   /** Runs a loop whose every round is one Spark job: `round` materializes
     * the next state and returns it with the (d1, d2) that same job

@@ -980,7 +980,7 @@ object Graph {
     * Update: r'(v) = quant(damping * sum_{u->v} r(u)/outdeg(u)
     * + (1 - damping) * [v in seeds]/|S|) — the seed term re-injected
     * every round (the [[labelSpread]] pattern), per-round binary-grid
-    * requantization, cached edge+degree, eager per-round checkpoints.
+    * requantization, cached edge+degree, per-round checkpoints.
     * Dangling nodes are rejected up front: in proper PPR their mass
     * returns to the seeds, a variant nothing here needs — a
     * symmetrized similarity graph has none, and silently leaking mass

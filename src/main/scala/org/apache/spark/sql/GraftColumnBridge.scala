@@ -32,7 +32,7 @@ object GraftColumnBridge {
   def dropRdd(rdd: org.apache.spark.rdd.RDD[_]): Unit =
     rdd.sparkContext.unpersistRDD(rdd.id, blocking = false)
 
-  /** Re-anchor an eagerly-checkpointed Dataset's statistics.
+  /** Re-anchor a locally checkpointed Dataset's statistics.
     *
     * `Dataset.localCheckpoint` rewrites the new `LogicalRDD`'s stats
     * from the ORIGINAL (pre-checkpoint) plan

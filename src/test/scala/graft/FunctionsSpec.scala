@@ -435,6 +435,25 @@ class DedupSpec extends SparkSpec {
     assert(e.getMessage.contains("did not converge"))
   }
 
+  test("connected components: one job per round, and still throws at maxIter") {
+    // with AQE and broadcast joins off, a round's shuffles run inside
+    // the one job that checkpoints it, and that job also counts the
+    // labels that moved: no other job runs
+    val chain = (0L until 40L).map(i => (i, i + 1)).toDF("id_a", "id_b")
+    val confs = Seq("spark.sql.adaptive.enabled" -> "false",
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1")
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try {
+      // the 40-hop chain needs 6 rounds, so every cap below throws
+      val jobs = (1 to 4).map(maxIter => jobsOf {
+        val e = intercept[IllegalStateException](
+          Dedup.connectedComponents(chain, maxIter = maxIter))
+        assert(e.getMessage.contains(s"within $maxIter rounds"))
+      }._2)
+      assert(jobs == (1 to 4), s"jobs at maxIter 1 to 4: $jobs")
+    } finally confs.foreach { case (k, _) => spark.conf.unset(k) }
+  }
+
   test("sourceOverlap: asymmetric containment, zero-overlap pairs absent") {
     val docs = Seq(
       ("a", "one two three four"), // shingles: "one two three", "two three four"

@@ -1063,6 +1063,31 @@ class GraphSpec extends SparkSpec {
     assert(run(Stop.Converge(3), Some(prior)) == ((3, 6)))
   }
 
+  test("personalizedPageRank and labelSpread, Stop.Converge: tol > 0 runs no more jobs than tol = 0") {
+    // the job that checkpoints a round returns its movement at every
+    // tol, so a run that stops at round r by tol > 0 costs what r rounds
+    // of the same watched step cost at tol = 0, which FixedPointSpec
+    // pins at one job per round over the step's own
+    val pts = (0 until 40).map { i =>
+      val j = i * 0.01
+      val v = if (i % 2 == 0) Seq(1.0, j) else Seq(j, 1.0)
+      (i.toLong, v)
+    }.toDF("vec_id", "embedding")
+    val g = Graph.symmetrize(Graph.knnGraph(pts, "vec_id", "embedding", 3)).localCheckpoint()
+    val entries = Seq[(String, Stop => Int)](
+      "personalizedPageRank" -> (stop => Graph.personalizedPageRank(
+        g, Seq(0L).toDF("id"), stop, damping = 0.5)._2),
+      "labelSpread" -> (stop => Graph.labelSpread(
+        g, Seq((0L, 0), (1L, 1)).toDF("id", "label"), stop, alpha = 0.5)._2))
+    for ((name, entry) <- entries) {
+      val (rounds, tolJobs) = jobsOf(entry(Stop.Converge(60, 1e-3)))
+      assert(rounds > 2 && rounds < 60, s"$name: stopped after $rounds rounds")
+      val (exactRounds, exactJobs) = jobsOf(entry(Stop.Converge(rounds, 0.0)))
+      assert(exactRounds == rounds, s"$name: tol = 0 stopped after $exactRounds rounds")
+      assert(tolJobs <= exactJobs, s"$name: $tolJobs jobs at tol > 0, $exactJobs at tol = 0")
+    }
+  }
+
   test("PageRank releases its edge table and superseded ranks on return and on failure") {
     val sc = spark.sparkContext
     spark.catalog.clearCache()

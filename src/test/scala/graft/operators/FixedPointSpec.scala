@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -58,16 +59,28 @@ class FixedPointSpec extends SparkSpec {
     }
   }
 
-  test("tol > 0 stops in the aggregate-probe arm") {
+  test("tol > 0 stops on the sums its checkpoint jobs return") {
     // two rows halving from 1.0: d1 after round r is 2^-r, first <= 0.1 at r = 4
     val halve = (v: Column) => v / 2
     val ((df, rounds), jobs) = jobsOf(loop(state(1.0, 1.0), 50, Some(0.1))(halve))
     assert(rounds == 5 && values(df) == Seq(0.03125, 0.03125))
     // at tol = 0 the same loop never reaches an exact fixed point
     assert(run(state(1.0, 1.0), 8, Some(0.0))(halve)._2 == 8)
-    // every round paid a probe job on top of its checkpoint job
-    val (_, fixedJobs) = jobsOf(loop(state(1.0, 1.0), 5, None)(halve))
-    assert(jobs >= fixedJobs + rounds, s"$jobs jobs vs $fixedJobs unwatched")
+    // the job that checkpoints a round is its probe: no probe job
+    assert(jobs == rounds, s"$jobs jobs for $rounds rounds")
+  }
+
+  test("a round's state is a checkpoint of exactly the step's columns") {
+    val grow = (v: Column) => v + 1
+    for (tol <- Seq(None, Some(0.0), Some(0.5))) {
+      val (df, rounds) = loop(state(0.0, 5.0), 3, tol)(grow)
+      assert(rounds == 3 && values(df) == Seq(3.0, 8.0), s"tol $tol")
+      assert(df.columns.toSeq == Seq("id", "v", "p1", "p2"), s"tol $tol")
+      df.queryExecution.logical match {
+        case lr: LogicalRDD => assert(lr.rdd.isCheckpointed, s"tol $tol")
+        case plan => fail(s"tol $tol: the state is not a checkpoint: $plan")
+      }
+    }
   }
 
   test("no probe on the final round") {

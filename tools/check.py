@@ -8,18 +8,22 @@ mismatch).
 Usage: python3 tools/check.py [sfDir] [outDir] [--skip-verify]
 """
 import json, math, subprocess, sys
+from pathlib import Path
 import duckdb
 import pandas as pd
 
+# --skip-verify may come anywhere, so it never lands in a positional slot
+SKIP_VERIFY = "--skip-verify" in sys.argv
+sys.argv = [a for a in sys.argv if a != "--skip-verify"]
 SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 OUT = sys.argv[2] if len(sys.argv) > 2 else "/tmp/verify_out"
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
 
-if "--skip-verify" not in sys.argv:
+if not SKIP_VERIFY:
     r = subprocess.run(
         ["sbt", "--error", f'runMain graft.Verify {SF_DIR} {OUT}'],
-        cwd="/root/repo", capture_output=True, text=True, timeout=1200)
+        cwd=Path(__file__).resolve().parents[1], capture_output=True, text=True, timeout=1200)
     sys.stdout.write(r.stdout[-4000:])
     sys.stderr.write(r.stderr[-4000:])
     if r.returncode != 0:
