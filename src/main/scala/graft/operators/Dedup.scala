@@ -10,6 +10,7 @@ import graft.functions.VectorFunctions
 import graft.functions.VectorFunctions.round6
 import graft.functions.expressions.RoundHalfUp
 import graft.operators.Ckpt.CkptOps
+import graft.util.DfCache
 
 /** Deduplication operators for large-scale training-data pipelines:
   * exact (content fingerprint), n-gram Jaccard, MinHash+LSH banding,
@@ -42,27 +43,16 @@ import graft.operators.Ckpt.CkptOps
   * ([[PairKernel]]) for that reason.
   */
 object Dedup {
-  /** Deferred-release persist for intermediates that must stay lazy
-    * (they back a returned frame, so an in-function try/finally would
-    * unpersist before the caller's action runs) but whose plan loses
-    * measurably to localCheckpoint (corpus-scale block writes). The
-    * mechanism lives in [[graft.util.DfCache]] (shared with Eval's
-    * metric harness); each callsite key holds at most ONE cached
-    * intermediate. Explicit drain for request boundaries:
-    * [[releaseCaches]]. */
-  private def holdCached(key: String, df: DataFrame): DataFrame =
-    graft.util.DfCache.holdCached(key, df)
-
   /** Release every deferred-release intermediate across the engine
     * (idempotent; call at request boundaries in long-lived sessions —
     * the serving layer drains after every request/tool-call so an
     * endpoint that reaches a dedup operator can't pin corpus-scale
     * cache blocks between requests). */
-  def releaseCaches(): Unit = graft.util.DfCache.releaseAll()
+  def releaseCaches(): Unit = DfCache.releaseAll()
 
   /** Live deferred-release entries (test/observability hook for the
     * request-boundary drain contract). */
-  def heldCount: Int = graft.util.DfCache.heldCount
+  def heldCount: Int = DfCache.heldCount
 
   /** Exact duplicate groups keyed by the whitespace/case-insensitive
     * content fingerprint. `n_dups > 1` marks a group to collapse;
@@ -155,10 +145,10 @@ object Dedup {
         .filter(col("id_a") < col("id_b"))
         .groupBy("id_a", "id_b").agg(count(lit(1)).as(cnt)),
         shingleSizes(kept))
-    if (cap <= 0) selfJoin(holdCached(s"$op.selfjoin", t))
+    if (cap <= 0) selfJoin(DfCache.holdCached(s"$op.selfjoin", t))
     else {
-      val all = holdCached(s"$op.selfjoin", t)
-      selfJoin(holdCached(s"$op.dffilter",
+      val all = DfCache.holdCached(s"$op.selfjoin", t)
+      selfJoin(DfCache.holdCached(s"$op.dffilter",
         all.join(all.groupBy(key).agg(count(lit(1)).as("shdf"))
             .filter(col("shdf") > cap).select(key),
           Seq(key), "left_anti")))
@@ -289,7 +279,7 @@ object Dedup {
     // several rows holds each shingle once (set semantics); hashed by
     // id first, so that one exchange also serves the id_a join and the
     // sizes agg (a bare distinct added an exchange and a job)
-    val sh = holdCached("minhashDedup.shingles",
+    val sh = DfCache.holdCached("minhashDedup.shingles",
       shingleTable(docs, idCol, textCol, n).repartition(col("id")).distinct())
     verifyJaccard(pairIntersections(cands, sh), shingleSizes(sh), minJ)
   }
@@ -329,7 +319,7 @@ object Dedup {
     // projection boundary is load-bearing (an inlined tokens() call
     // re-evaluates the regex split per element_at: the dedup_jaccard
     // 28 s -> 4.1 s lesson in BASELINE.md).
-    val bySh = holdCached("sourceOverlap.bySh",
+    val bySh = DfCache.holdCached("sourceOverlap.bySh",
       shingleTable(docs.where(col(srcCol).isNotNull && col(textCol).isNotNull),
           srcCol, textCol, n)
         .groupBy("sh").agg(collect_set(col("id")).as("srcs")))
@@ -442,7 +432,7 @@ object Dedup {
     // deferred-release persist: band rows and both estimate sides read
     // the S-row signature table; without it the corpus-scale signature
     // exchange would run once per consumer
-    val sigs = holdCached("sourceOverlapBanded.sigs",
+    val sigs = DfCache.holdCached("sourceOverlapBanded.sigs",
       minhashSignaturesWide(sh, numHashes))
     val bandStructs = (0 until numBands).map { b =>
       struct((b * bandSize until (b + 1) * bandSize)
@@ -484,8 +474,8 @@ object Dedup {
       .join(broadcast(minhashBands(bench, benchId, benchText, "id_b", n, numHashes, bandSize)),
         Seq("band", "b_lo", "b_hi"))
       .select("id_a", "id_b").distinct()
-    // deferred-release persists — see holdCached
-    val candsC = holdCached("minhashDecontaminate.cands", cands)
+    // deferred-release persists — see DfCache.holdCached
+    val candsC = DfCache.holdCached("minhashDecontaminate.cands", cands)
     // Corpus DOCS restricted to candidate ids BEFORE shingling: the
     // semi-join sits below the explode, so the verification pass
     // tokenizes O(candidate) docs, not O(corpus). (Semi-joining the
@@ -494,9 +484,9 @@ object Dedup {
     // Generate.) The bench shingle table is eval-sized and broadcasts.
     val candDocs = corpus.join(
       candsC.select(col("id_a").as(corpusId)).distinct(), Seq(corpusId), "left_semi")
-    val shA = holdCached("minhashDecontaminate.shA",
+    val shA = DfCache.holdCached("minhashDecontaminate.shA",
       shingleTable(candDocs, corpusId, corpusText, n))
-    val shB = holdCached("minhashDecontaminate.shB",
+    val shB = DfCache.holdCached("minhashDecontaminate.shB",
       shingleTable(bench, benchId, benchText, n))
     val inter = candsC
       .join(shA.withColumnRenamed("id", "id_a"), "id_a")
@@ -728,7 +718,7 @@ object Dedup {
     // serving request — the registry keys it to this callsite (each
     // call evicts the previous) and releaseCaches() drains it at
     // request boundaries.
-    val sig = holdCached("hammingBandedPairs.sig",
+    val sig = DfCache.holdCached("hammingBandedPairs.sig",
       sig0.select(col("id"), col(sigCol)))
     val segs = sig.sparkSession.range(nBands).select(col("id").cast("int").as("seg"))
     val mask = (1L << segBits) - 1
@@ -783,7 +773,7 @@ object Dedup {
     // upstream fingerprint expression must not re-decode per consumer.
     // Registry-held (r17) so releaseCaches() covers it — see the
     // hammingBandedPairs note.
-    val s = holdCached("hammingClusters.s",
+    val s = DfCache.holdCached("hammingClusters.s",
       sig.select(col("id"), col(sigCol).as("__sig")))
     val reps = s.groupBy("__sig").agg(min(col("id")).as("rep"))
     val classPairs = hammingBandedPairs(
@@ -1006,8 +996,8 @@ object Dedup {
     // table must stay a LAZY persist (measured: localCheckpoint's
     // eager corpus-scale block write runs ~3x this query; recomputing
     // the window pass per branch ~4x) — deferred release via
-    // holdCached keeps the session cache bounded at one entry.
-    val wins = holdCached("removeSharedSpans",
+    // DfCache.holdCached keeps the session cache bounded at one entry.
+    val wins = DfCache.holdCached("removeSharedSpans",
       winnowWindows(docs, idCol, textCol, k, w))
     val owners = wins.select("id", "fp").distinct()
       .groupBy("fp")

@@ -482,27 +482,6 @@ object Graph {
         col("dst").cast("long").as("dst"), col("w").cast("double").as("w"))
       .filter(col("src") =!= col("dst") && col("w").isNotNull && col("w") > 0)
 
-  /** The loop-invariant edge table of the DataFrame rank loops (PPR and
-    * label spreading): each edge joined to its source's out-degree row,
-    * materialized once instead of re-joined every round.
-    *
-    * NOT pre-partitioned by src (r16 tested-and-reverted): hash-
-    * clustering the cache by the per-round join key removes the
-    * per-round edge exchange from the STATIC plan, but it also removes
-    * the query-stage boundary AQE needs to convert each round's join
-    * into a broadcast hash join of the (much smaller) rank side —
-    * measured +30-45% per watched row at sf0.1 (SMJ sort+merge every
-    * round instead of a broadcast probe of the in-place cache). With
-    * the plain cache AQE picks per round from runtime sizes: broadcast
-    * while ranks fit, sort-merge with the edge exchange when they
-    * don't — the right call at every scale without a hand-rolled
-    * threshold. That result is about AQE's join selection, so it does
-    * not carry over to [[pageRank]]'s kernel ([[RankKernel]]), which
-    * partitions its edges by src and plans no join at all: a round
-    * zips each edge partition with the rank partition it needs. */
-  private def outEdges(e: DataFrame, deg: DataFrame): DataFrame =
-    e.join(deg, "src").persist(StorageLevel.MEMORY_AND_DISK)
-
   /** Symmetrize a (id, nb) neighbor table into a distinct directed edge
     * list carrying both directions — the adjacency a cosine kNN graph
     * means (similarity is symmetric even when top-k membership isn't). */
@@ -759,11 +738,12 @@ object Graph {
     * e.g. balancing a training mixture by similarity community rather
     * than by source metadata).
     *
-    * Scale shape = the DataFrame loop of [[personalizedPageRank]]: per round, ONE
-    * (node, label)-keyed count aggregation (map-side combinable — hub
-    * fan-in is exactly what partial aggregation absorbs) plus a
-    * per-node struct-min; label state is one row per node, never
-    * nodes x labels; localCheckpoint per round truncates lineage.
+    * Scale shape, on the same [[FixedPoint.run]] round as [[diffuse]]:
+    * per round, ONE (node, label)-keyed count aggregation (map-side
+    * combinable — hub fan-in is exactly what partial aggregation
+    * absorbs) plus a per-node struct-min; label state is one row per
+    * node, never nodes x labels; localCheckpoint per round truncates
+    * lineage.
     * Expects a symmetrized edge list ([[symmetrize]]) so every node
     * appears as src. Returns ((id, label), rounds run), label = a
     * member id of the community.
@@ -978,11 +958,10 @@ object Graph {
     * rounds run).
     *
     * Update: r'(v) = quant(damping * sum_{u->v} r(u)/outdeg(u)
-    * + (1 - damping) * [v in seeds]/|S|) — the seed term re-injected
-    * every round (the [[labelSpread]] pattern), per-round binary-grid
-    * requantization, cached edge+degree, per-round checkpoints.
-    * Dangling nodes are rejected up front: in proper PPR their mass
-    * returns to the seeds, a variant nothing here needs — a
+    * + (1 - damping) * [v in seeds]/|S|) — label spreading with one
+    * class, run by the same loop ([[diffuse]]), starting from 1/|S| on
+    * each seed. Dangling nodes are rejected up front: in proper PPR
+    * their mass returns to the seeds, a variant nothing here needs — a
     * symmetrized similarity graph has none, and silently leaking mass
     * instead would skew every rank.
     *
@@ -1006,9 +985,11 @@ object Graph {
     * no explicit row: the per-round seed term injects their teleport
     * mass from round one, so a changed seed set self-corrects —
     * old-seed mass decays geometrically, new-seed mass builds — in the
-    * rounds the CHANGE needs, not the cold-start count. Warm starts
-    * follow a different trajectory, so they exist only on the watched
-    * tier; the fixed-round oracle tier always starts cold. */
+    * rounds the CHANGE needs, not the cold-start count. A prior row
+    * that no kept row reaches and that is no seed loses its mass in
+    * round one, and that loss counts as movement. Warm starts follow a
+    * different trajectory, so they exist only on the watched tier; the
+    * fixed-round oracle tier always starts cold. */
   def personalizedPageRank(edges: DataFrame, seeds: DataFrame, stop: Stop,
                            damping: Double = 0.85, quantBits: Int = 30,
                            init: Option[DataFrame] = None): (DataFrame, Int) = {
@@ -1017,34 +998,19 @@ object Graph {
     val sd = seeds.select(col("id").cast("long").as("id")).distinct()
       .where(col("id").isNotNull)
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val deg = e.groupBy("src").agg(count(lit(1)).cast("double").as("outdeg"))
-    val eout = outEdges(e, deg)
     try {
       val nodes = e.select(col("src").as("id"))
         .union(e.select(col("dst").as("id"))).distinct()
-      require(nodes.join(deg.withColumnRenamed("src", "id"), Seq("id"),
+      require(nodes.join(e.select(col("src").as("id")), Seq("id"),
           "left_anti").limit(1).count() == 0,
         "personalizedPageRank requires a graph with no dangling nodes " +
           "(symmetrize the edge list)")
       val nSeeds = sd.count().toDouble // documented O(1) driver scalar
       require(nSeeds > 0, "personalizedPageRank needs at least one seed")
-      val seedTerm = sd.select(col("id"),
-        lit((1.0 - damping) / nSeeds).as("seed"))
-      // Watch columns ride inside the sparse state (r16): (id, rank,
-      // p1, p2), carried from the previous state's row of the same id.
-      // Sound because the reached set GROWS MONOTONICALLY on the
-      // (required) symmetrized dangling-free graph: state_t =
-      // N(state_{t-1}) ∪ seeds ⊇ state_{t-1} by induction, so no row
-      // ever drops and the carry loses no delta mass — newly reached
-      // rows enter with p1/p2 null, which the watch reads as prior
-      // rank 0.
-      val nullD = lit(null).cast("double")
       val rank0 = init match {
         case Some(r0) =>
           // sparse warm start (scaladoc above): keep only prior rows
-          // whose node still exists, renormalize the kept mass to 1.
-          // New seeds carry no row — the seed term below injects their
-          // teleport mass every round regardless.
+          // whose node still exists, renormalize the kept mass to 1
           val kept = r0.select(col("id").cast("long").as("id"),
               col("rank").cast("double").as("r0"))
             .where(col("id").isNotNull && col("r0").isNotNull &&
@@ -1055,52 +1021,14 @@ object Graph {
           require(t > 0,
             "personalizedPageRank warm start needs positive total mass " +
               "on the current node set")
-          kept.select(col("id"),
-              quant(col("r0") / lit(t), quantBits).as("rank"),
-              nullD.as("p1"), nullD.as("p2"))
+          kept.select(col("id"), quant(col("r0") / lit(t), quantBits).as("score"))
             .ckptSer()
-        case None => sd.select(col("id"),
-          quant(lit(1.0 / nSeeds), quantBits).as("rank"),
-          nullD.as("p1"), nullD.as("p2"))
+        case None => sd.select(col("id"), quant(lit(1.0 / nSeeds), quantBits).as("score"))
       }
-      val moved = (prev: String) =>
-        abs(col("rank") - coalesce(col(prev), lit(0.0)))
-      val watch = stop.watchTol.map(FixedPoint.Watch(_, moved("p1"), moved("p2")))
-      val (rank, rounds) = FixedPoint.run(rank0, stop.maxIters, watch) { rank =>
-        // Union-fused update (r17, guide §2.4 "two operations keyed the
-        // same way can share one exchange"): the contribution
-        // aggregate, the seed-term re-injection and — on the watched
-        // tier — the watch-column carry are ALL id-keyed, so seed and
-        // state rows ride the contribution groupBy's exchange. Grouped
-        // ids = contrib ∪ seed ∪ (watched) state ids, and the filter
-        // below drops state-only ids — which the monotone-frontier
-        // argument above proves cannot exist on the required
-        // dangling-free graph, so the filter is an unconditional
-        // row-set guarantee, not a behavior change.
-        val terms = eout
-          .join(rank.select(col("id").as("src"), col("rank")), "src")
-          .select(col("dst").as("id"),
-            termQuant(col("rank") / col("outdeg")).as("c"),
-            nullD.as("sd0"), nullD.as("r0"), nullD.as("q1"))
-        val seedRows = seedTerm.select(col("id"), nullD.as("c"),
-          col("seed").as("sd0"), nullD.as("r0"), nullD.as("q1"))
-        val newRank = quant(lit(damping) * coalesce(col("contrib"), lit(0.0))
-          + coalesce(col("seed"), lit(0.0)), quantBits)
-        if (watch.isDefined) {
-          val stateRows = rank.select(col("id"), nullD.as("c"),
-            nullD.as("sd0"), col("rank").as("r0"), col("p1").as("q1"))
-          terms.union(seedRows).union(stateRows).groupBy("id")
-            .agg(sum(col("c")).as("contrib"), max(col("sd0")).as("seed"),
-              max(col("r0")).as("pc1"), max(col("q1")).as("pc2"))
-            .filter(col("contrib").isNotNull || col("seed").isNotNull)
-            .select(col("id"), newRank.as("rank"),
-              col("pc1").as("p1"), col("pc2").as("p2"))
-        } else terms.union(seedRows).groupBy("id")
-          .agg(sum(col("c")).as("contrib"), max(col("sd0")).as("seed"))
-          .select(col("id"), newRank.as("rank"))
-      }
-      (rank.select(col("id"), col("rank")), rounds)
-    } finally { eout.unpersist(); sd.unpersist(); e.unpersist(); () }
+      val seedRows = sd.select(col("id"), lit((1.0 - damping) / nSeeds).as("seed"))
+      val (rank, rounds) = diffuse(e, Seq("id"), seedRows, rank0, stop, damping, quantBits)
+      (rank.withColumnRenamed("score", "rank"), rounds)
+    } finally { sd.unpersist(); e.unpersist(); () }
   }
 
   /** Label spreading over a directed edge list (Zhou et al. 2004,
@@ -1113,18 +1041,14 @@ object Graph {
     *
     * State is the SPARSE (id, label, score) table — only labels that
     * have reached a node carry rows, so state is O(reached nodes x
-    * nearby labels), never nodes x labels. Each round:
+    * nearby labels), never nodes x labels. Each round ([[diffuse]]):
     *
     *   score'(v, l) = quant(alpha * sum_{u->v} score(u, l)/outdeg(u)
     *                        + (1 - alpha) * seed(v, l), quantBits)
     *
     * with seed(v, l) = 1 for v's seed label — seeds keep injecting
     * their identity (the clamping that distinguishes spreading from
-    * plain diffusion). Same execution scaffold as [[personalizedPageRank]]: the
-    * edge+degree join hoisted and cached, one dst-keyed shuffle per
-    * round, per-round binary-grid requantization ([[quant]]) for
-    * engine portability,
-    * localCheckpoint lineage truncation.
+    * plain diffusion).
     *
     * Returns ((id, label, score) for every (node, label) the diffusion
     * reached, rounds run); argmax with a smaller-label tie-break gives
@@ -1158,70 +1082,100 @@ object Graph {
         col("label").cast("int").as("label"))
       .where(col("id").isNotNull && col("label").isNotNull)
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val deg = e.groupBy("src").agg(count(lit(1)).cast("double").as("outdeg"))
-    val eout = outEdges(e, deg)
     try {
-      val nullD = lit(null).cast("double")
-      val seedTerm = sd.select(col("id"), col("label"),
-        lit(1.0 - alpha).as("seed"))
-      // Watched state carries (score, p1, p2) per (id, label) cell, the
-      // previous and two-rounds-back scores (see FixedPoint). With a
-      // warm `init` the reached set is NOT monotone (stale cells can
-      // shed for several rounds), so a cell that dies stays two more
-      // rounds with a NULL score: the full-outer deltas then count its
-      // mass against p1 and p2 as rows of the round's own frame.
-      val carry = if (stop.watchTol.isDefined) Seq(nullD.as("p1"), nullD.as("p2"))
-        else Nil
       val state0 = init match {
-        case Some(s0) => s0.select(Seq(col("id").cast("long").as("id"),
+        case Some(s0) => s0.select(col("id").cast("long").as("id"),
             col("label").cast("int").as("label"),
-            col("score").cast("double").as("score")) ++ carry: _*)
+            col("score").cast("double").as("score"))
           .where(col("id").isNotNull && col("label").isNotNull &&
             col("score").isNotNull && col("score") >= 0)
           .ckptSer()
-        case None =>
-          sd.select(Seq(col("id"), col("label"), lit(1.0).as("score")) ++
-            carry: _*)
+        case None => sd.select(col("id"), col("label"), lit(1.0).as("score"))
       }
-      val moved = (prev: String) => abs(coalesce(col("score"), lit(0.0)) -
-        coalesce(col(prev), lit(0.0)))
-      val watch = stop.watchTol.map(FixedPoint.Watch(_, moved("p1"), moved("p2")))
-      val (state, rounds) = FixedPoint.run(state0, stop.maxIters, watch) { state =>
-        // Union-fused update (r17, see personalizedPageRank): the contribution
-        // aggregate and the clamped seed re-injection both key on
-        // (id, label), so seed rows — and on the watched tier the state
-        // rows carrying p1/p2 — ride the contribution groupBy's
-        // exchange. Terms stay on the 2^-48 grid — the shared sum is
-        // exact and order-independent — and the live cell set is
-        // contrib ∪ seed.
+      val seedRows = sd.select(col("id"), col("label"), lit(1.0 - alpha).as("seed"))
+      diffuse(e, Seq("id", "label"), seedRows, state0, stop, alpha, quantBits)
+    } finally { sd.unpersist(); e.unpersist(); () }
+  }
+
+  /** The seeded-diffusion loop of [[personalizedPageRank]] and
+    * [[labelSpread]]: over the sparse state (`keys`, score), where
+    * `keys` is "id" followed by any class columns, each round computes
+    *
+    *   score'(k) = quant(alpha * sum_{u->v} score(u, ..)/outdeg(u)
+    *                     + seed(k), quantBits)
+    *
+    * and returns ((`keys`, score) over the live cells, rounds run).
+    * `seedRows` (`keys`, seed) is re-injected every round; `state0`
+    * (`keys`, score) is round 0's state.
+    *
+    * The edge table joined to each source's out-degree is materialized
+    * once. It is NOT pre-partitioned by src (r16 tested-and-reverted):
+    * hash-clustering the cache by the per-round join key removes the
+    * per-round edge exchange from the STATIC plan, but it also removes
+    * the query-stage boundary AQE needs to convert each round's join
+    * into a broadcast hash join of the (much smaller) state side —
+    * measured +30-45% per watched row at sf0.1 (SMJ sort+merge every
+    * round instead of a broadcast probe of the in-place cache). With
+    * the plain cache AQE picks per round from runtime sizes: broadcast
+    * while the state fits, sort-merge with the edge exchange when it
+    * doesn't. That result is about AQE's join selection, so it does not
+    * carry over to [[pageRank]]'s kernel ([[RankKernel]]), which
+    * partitions its edges by src and plans no join at all.
+    *
+    * Union-fused update (r17, guide §2.4 "two operations keyed the
+    * same way can share one exchange"): the contribution aggregate, the
+    * seed re-injection and — on the watched tier — the watch-column
+    * carry all key on `keys`, so seed and state rows ride the
+    * contribution groupBy's exchange. Terms stay on the 2^-48 grid
+    * ([[termQuant]]), so the shared sum is exact and order-independent.
+    * A cell is live when a contribution or a seed reaches it.
+    *
+    * The watched state carries (score, p1, p2) per cell, the previous
+    * and two-rounds-back scores (see [[FixedPoint]]). A cell that dies
+    * stays two more rounds with a NULL score, so the deltas count its
+    * mass against p1 and p2 as rows of the round's own frame. On a cold
+    * start no cell dies: the live set is N(state) ∪ seeds, which holds
+    * state by induction from state_0 = the seeds. A warm state can shed
+    * cells for several rounds. */
+  private def diffuse(e: DataFrame, keys: Seq[String], seedRows: DataFrame,
+                      state0: DataFrame, stop: Stop, alpha: Double,
+                      quantBits: Int): (DataFrame, Int) = {
+    val deg = e.groupBy("src").agg(count(lit(1)).cast("double").as("outdeg"))
+    val eout = e.join(deg, "src").persist(StorageLevel.MEMORY_AND_DISK)
+    try {
+      val (k, classes) = (keys.map(col), keys.tail.map(col))
+      val nullD = lit(null).cast("double")
+      val watch = stop.watchTol.map { tol =>
+        val moved = (prev: String) => abs(coalesce(col("score"), lit(0.0)) -
+          coalesce(col(prev), lit(0.0)))
+        FixedPoint.Watch(tol, moved("p1"), moved("p2"))
+      }
+      val s0 = if (watch.isEmpty) state0
+        else state0.select(k ++ Seq(col("score"), nullD.as("p1"), nullD.as("p2")): _*)
+      val (state, rounds) = FixedPoint.run(s0, stop.maxIters, watch) { state =>
         val terms = eout
-          .join(state.where(col("score").isNotNull).select(
-            col("id").as("src"), col("label"), col("score")), "src")
-          .select(col("dst").as("id"), col("label"),
-            termQuant(col("score") / col("outdeg")).as("c"),
-            nullD.as("sd0"))
-        val seedRows = seedTerm.select(col("id"), col("label"),
-          nullD.as("c"), col("seed").as("sd0"))
+          .join(state.where(col("score").isNotNull)
+            .select(col("id").as("src") +: classes :+ col("score"): _*), "src")
+          .select(col("dst").as("id") +: classes :+
+            termQuant(col("score") / col("outdeg")).as("c") :+ nullD.as("sd0"): _*)
+        val seeds = seedRows.select(k :+ nullD.as("c") :+ col("seed").as("sd0"): _*)
         val live = col("contrib").isNotNull || col("seed").isNotNull
         val score = quant(lit(alpha) * coalesce(col("contrib"), lit(0.0))
           + coalesce(col("seed"), lit(0.0)), quantBits)
         if (watch.isDefined) {
-          val stateRows = state.select(col("id"), col("label"),
-            col("score").as("r0"), col("p1").as("q1"))
-          terms.union(seedRows).unionByName(stateRows, allowMissingColumns = true)
-            .groupBy("id", "label")
+          val stateRows = state.select(k :+ col("score").as("r0") :+ col("p1").as("q1"): _*)
+          terms.union(seeds).unionByName(stateRows, allowMissingColumns = true)
+            .groupBy(k: _*)
             .agg(sum(col("c")).as("contrib"), max(col("sd0")).as("seed"),
               max(col("r0")).as("pc1"), max(col("q1")).as("pc2"))
             .filter(live || col("pc1").isNotNull || col("pc2").isNotNull)
-            .select(col("id"), col("label"), when(live, score).as("score"),
-              col("pc1").as("p1"), col("pc2").as("p2"))
-        } else terms.union(seedRows)
-          .groupBy("id", "label")
+            .select(k :+ when(live, score).as("score") :+
+              col("pc1").as("p1") :+ col("pc2").as("p2"): _*)
+        } else terms.union(seeds).groupBy(k: _*)
           .agg(sum(col("c")).as("contrib"), max(col("sd0")).as("seed"))
-          .select(col("id"), col("label"), score.as("score"))
+          .select(k :+ score.as("score"): _*)
       }
-      (state.where(col("score").isNotNull)
-        .select(col("id"), col("label"), col("score")), rounds)
-    } finally { eout.unpersist(); sd.unpersist(); e.unpersist(); () }
+      (state.where(col("score").isNotNull).select(k :+ col("score"): _*), rounds)
+    } finally { eout.unpersist(); () }
   }
 }

@@ -114,7 +114,7 @@ final class SearchServer(spark: SparkSession, warehouse: String, indexName: Stri
     } finally {
       // Request boundary: drain the dedup deferred-release registry so a
       // long-lived server never pins a request's corpus-scale cache
-      // blocks past its response (Dedup.holdCached holds one live
+      // blocks past its response (DfCache.holdCached holds one live
       // intermediate per callsite by design between calls).
       graft.operators.Dedup.releaseCaches()
     }

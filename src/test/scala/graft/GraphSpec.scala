@@ -8,7 +8,7 @@ import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType
 import org.scalacheck.{Gen, Prop, Test => PropTest}
 import org.scalacheck.Prop.propBoolean
 
-import graft.operators.{Graph, PageRankReference, Stop}
+import graft.operators.{DiffusionReference, Graph, PageRankReference, Stop}
 
 class GraphSpec extends SparkSpec {
   import spark.implicits._
@@ -1047,6 +1047,93 @@ class GraphSpec extends SparkSpec {
     info(s"cases seen: ${cases.map(c => s"$c=${seen(c)}").mkString(", ")}")
   }
 
+  test("personalizedPageRank and labelSpread == the reference loops on generated graphs") {
+    // symmetrized graphs (PPR refuses dangling nodes) with self-loops,
+    // ids spread over the long range, 1-4 input partitions. A warm PPR
+    // prior is closed — every kept row is a seed or has a kept
+    // neighbor, as any PPR output is — because the reference drops a
+    // prior row that dies in round one without counting its mass, while
+    // the shared loop counts it; an open prior follows the same states,
+    // so it is compared whenever both stop at the same round. Every
+    // prior also holds a departed id, a negative and a null score.
+    val sample = for {
+      m <- Gen.choose(1, 8)
+      ids <- Gen.listOfN(m, Gen.choose(-1000000L, 1000000L)).map(_.distinct)
+      k <- Gen.choose(1, 16)
+      raw <- Gen.listOfN(k, Gen.zip(Gen.oneOf(ids), Gen.oneOf(ids)))
+      spread <- Gen.oneOf(true, false)
+      seeds <- Gen.listOf(Gen.zip(Gen.oneOf(ids), Gen.choose(0, 2))).map(_.take(4))
+      stop <- Gen.oneOf(Gen.choose(0, 6).map(Stop.Rounds(_)),
+        Gen.choose(1, 10).map(Stop.Converge(_)),
+        Gen.zip(Gen.choose(1, 10), Gen.oneOf(1e-3, 1e-5)).map { case (c, t) => Stop.Converge(c, t) })
+      warm <- Gen.oneOf(true, false).map(_ && stop.isInstanceOf[Stop.Converge])
+      closed <- Gen.oneOf(true, false)
+      picked <- Gen.someOf(ids)
+      scores <- Gen.listOfN(ids.size, Gen.zip(Gen.choose(0, 8).map(_ / 64.0), Gen.choose(0, 2)))
+      alpha <- Gen.oneOf(0.5, 0.85)
+      bits <- Gen.oneOf(14, 20, 30)
+      parts <- Gen.choose(1, 4)
+    } yield {
+      val es = (raw ++ raw.map(_.swap)).distinct
+      val nbs = es.groupBy(_._1).map { case (a, out) => a -> out.map(_._2) }
+      val rows = if (spread || !closed) picked.toSet
+        else picked.toSet ++ picked.flatMap(nbs.getOrElse(_, Nil))
+      val prior = Option.when(warm)(ids.zip(scores).collect {
+          case (id, (s, l)) if rows(id) => (id, l, Option(s)) } ++
+        Seq((7777777L, 1, Some(0.5)), (ids.head, 0, Some(-0.25)), (ids.head, 1, None)))
+      (es, spread, seeds, stop, prior, closed, alpha, bits, parts)
+    }
+
+    var seen = Map.empty[String, Int].withDefaultValue(0)
+    def saw(c: String, cond: Boolean): Unit = if (cond) seen += c -> (seen(c) + 1)
+    val prop = Prop.forAllNoShrink(sample) {
+      case (es, spread, seeds, stop, prior, closed, alpha, bits, parts) =>
+        val g = edgesOf(es, parts)
+        type Entry = (DataFrame, DataFrame, Stop, Double, Int, Option[DataFrame]) => (DataFrame, Int)
+        val (ref, got, sd, init): (Entry, Entry, DataFrame, Option[DataFrame]) =
+          if (spread) (DiffusionReference.labelSpread(_, _, _, _, _, _),
+            Graph.labelSpread(_, _, _, _, _, _), seeds.toDF("id", "label"),
+            prior.map(_.toDF("id", "label", "score")))
+          else (DiffusionReference.personalizedPageRank(_, _, _, _, _, _),
+            Graph.personalizedPageRank(_, _, _, _, _, _), seeds.map(_._1).toDF("id"),
+            prior.map(_.map(r => (r._1, r._3)).toDF("id", "rank")))
+        def run(f: Entry) = Try {
+          val (df, r) = f(g, sd, stop, alpha, bits, init)
+          val rows = df.collect().toSeq.map(r => (r.getLong(0), if (spread) r.getInt(1) else 0,
+            java.lang.Double.doubleToRawLongBits(r.getDouble(r.size - 1))))
+          (rows.sorted, r)
+        }
+        val (want, have) = (run(ref), run(got))
+        val open = prior.isDefined && !spread && !closed
+        saw(if (spread) "spread" else "ppr", want.isSuccess)
+        saw(if (spread) "spreadWarm" else if (closed) "pprWarm" else "pprWarmOpen",
+          prior.isDefined && want.isSuccess)
+        saw("selfLoop", es.exists(e => e._1 == e._2))
+        saw("refused", want.isFailure)
+        saw("multiPartition", parts > 1 && es.size > 1)
+        stop match {
+          case Stop.Rounds(_) => saw("rounds", true)
+          case Stop.Converge(c, t) =>
+            saw(if (t == 0.0) "tol0" else "tolPositive", true)
+            saw("stoppedEarly", want.toOption.exists(_._2 < c))
+        }
+        (want, have) match {
+          case (Success(w), Success(h)) if open && w._2 != h._2 =>
+            saw("openMoved", true); Prop.passed
+          case (Success(w), Success(h)) => (w == h) :| s"reference $w loop $h"
+          case (Failure(w), Failure(h)) =>
+            (w.getClass == h.getClass && w.getMessage == h.getMessage) :| s"reference $w loop $h"
+          case (w, h) => false :| s"reference $w loop $h"
+        }
+    }
+    val r = PropTest.check(PropTest.Parameters.default.withMinSuccessfulTests(100), prop)
+    assert(r.passed, r.status.toString)
+    val cases = Seq("ppr", "spread", "pprWarm", "pprWarmOpen", "spreadWarm", "selfLoop",
+      "refused", "multiPartition", "rounds", "tol0", "tolPositive", "stoppedEarly")
+    assert(cases.forall(seen(_) > 0), s"generator missed a case: $seen")
+    info(s"cases seen: ${(cases :+ "openMoved").map(c => s"$c=${seen(c)}").mkString(", ")}")
+  }
+
   test("PageRank costs one Spark job per round plus one setup job") {
     // a 40-node path with both directions: the rank field is still
     // moving at round 3, so neither cap stops early
@@ -1067,24 +1154,43 @@ class GraphSpec extends SparkSpec {
     // the job that checkpoints a round returns its movement at every
     // tol, so a run that stops at round r by tol > 0 costs what r rounds
     // of the same watched step cost at tol = 0, which FixedPointSpec
-    // pins at one job per round over the step's own
+    // pins at one job per round over the step's own. The ceilings are
+    // the jobs each entry ran before the two shared one loop (PPR 19 at
+    // 1 round and 37 at 7, label spreading 10 and 31 at 8 on the fixed
+    // tier). Cold label spreading's round-0 state is a projection of the
+    // persisted seed table, which round 0 scans twice, and a third time
+    // for the watched tier's state rows; AQE gives each scan of the
+    // not-yet-filled cache its own job, so that tier runs one job more.
+    // PPR counts its seeds first, which fills the cache.
     val pts = (0 until 40).map { i =>
       val j = i * 0.01
       val v = if (i % 2 == 0) Seq(1.0, j) else Seq(j, 1.0)
       (i.toLong, v)
     }.toDF("vec_id", "embedding")
     val g = Graph.symmetrize(Graph.knnGraph(pts, "vec_id", "embedding", 3)).localCheckpoint()
-    val entries = Seq[(String, Stop => Int)](
-      "personalizedPageRank" -> (stop => Graph.personalizedPageRank(
-        g, Seq(0L).toDF("id"), stop, damping = 0.5)._2),
-      "labelSpread" -> (stop => Graph.labelSpread(
-        g, Seq((0L, 0), (1L, 1)).toDF("id", "label"), stop, alpha = 0.5)._2))
-    for ((name, entry) <- entries) {
+    val entries = Seq[(String, Stop => Int, Map[Int, Int], Int)](
+      ("personalizedPageRank", stop => Graph.personalizedPageRank(
+        g, Seq(0L).toDF("id"), stop, damping = 0.5)._2, Map(1 -> 19, 7 -> 37), 0),
+      ("labelSpread", stop => Graph.labelSpread(
+        g, Seq((0L, 0), (1L, 1)).toDF("id", "label"), stop, alpha = 0.5)._2,
+        Map(1 -> 10, 8 -> 31), 1))
+    for ((name, entry, ceiling, seedFill) <- entries) {
       val (rounds, tolJobs) = jobsOf(entry(Stop.Converge(60, 1e-3)))
-      assert(rounds > 2 && rounds < 60, s"$name: stopped after $rounds rounds")
+      assert(ceiling.contains(rounds), s"$name: stopped after $rounds rounds")
       val (exactRounds, exactJobs) = jobsOf(entry(Stop.Converge(rounds, 0.0)))
       assert(exactRounds == rounds, s"$name: tol = 0 stopped after $exactRounds rounds")
       assert(tolJobs <= exactJobs, s"$name: $tolJobs jobs at tol > 0, $exactJobs at tol = 0")
+      val fixedJobs = jobsOf(entry(Stop.Rounds(rounds)))._2
+      val (oneRound, oneJobs) = jobsOf(entry(Stop.Converge(1, 1e-3)))
+      val oneFixed = jobsOf(entry(Stop.Rounds(1)))._2
+      assert(oneRound == 1)
+      assert(oneJobs == oneFixed + seedFill && tolJobs == fixedJobs + seedFill,
+        s"$name: watched $oneJobs and $tolJobs jobs, fixed $oneFixed and $fixedJobs " +
+          s"at 1 and $rounds rounds")
+      assert(oneFixed <= ceiling(1) && fixedJobs <= ceiling(rounds),
+        s"$name: $oneFixed and $fixedJobs jobs at 1 and $rounds rounds")
+      info(s"$name: fixed $oneFixed jobs at 1 round and $fixedJobs at $rounds; " +
+        s"watched $oneJobs and $tolJobs")
     }
   }
 
